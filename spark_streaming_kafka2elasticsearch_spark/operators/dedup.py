@@ -37,6 +37,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from spark_streaming_kafka2elasticsearch_spark.functions.text import md5_hash64, tokens
+from spark_streaming_kafka2elasticsearch_spark.operators.twins import (
+    _csr_gather,
+    _isin_sorted,
+    _pack_pairs,
+    collect_ids,
+)
 
 # ---------------------------------------------------------------------------
 # exact / fingerprint dedup
@@ -477,39 +483,6 @@ def minhash_lsh_candidate_pairs(
     for staged in (banded, pairs, relc):
         staged.unpersist()
     return final
-
-
-def jaccard_by_inverted_index(shingled: DataFrame) -> DataFrame:
-    """Exact set Jaccard for every co-shingle pair via inverted index:
-    explode (id, shingle), self-join on shingle, count matches per pair
-    → |A∩B|; then |A∪B| = |A|+|B|−|A∩B|.  All codegen'd join/agg — no
-    interpreted per-pair array intersection.  Pairs sharing nothing
-    never materialize (their Jaccard is 0).  Input: (_id, _sh, and any
-    blocking columns already applied upstream)."""
-    sizes = shingled.select("_id", F.size("_sh").alias("_sz"))
-    tok = shingled.select("_id", F.explode("_sh").alias("_s"))
-    a = tok.select(F.col("_id").alias("id_a"), F.col("_s"))
-    b = tok.select(F.col("_id").alias("id_b"), F.col("_s"))
-    inter = (
-        a.join(b, ["_s"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("_inter"))
-    )
-    sz_a = sizes.select(F.col("_id").alias("id_a"), F.col("_sz").alias("_sz_a"))
-    sz_b = sizes.select(F.col("_id").alias("id_b"), F.col("_sz").alias("_sz_b"))
-    return (
-        inter.join(sz_a, "id_a")
-        .join(sz_b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("_inter").cast("double")
-                / (F.col("_sz_a") + F.col("_sz_b") - F.col("_inter")).cast("double")
-            ).alias("jaccard"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1047,6 +1020,8 @@ def connected_components(
     several — so hitting ``max_iter`` with changes still flowing raises
     ``RuntimeError`` instead of returning truncated labels.
     """
+    if checkpoint_every < 1:
+        raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
     fast = _cc_local_or_none(edges, nodes, id_a, id_b, node_col, max_iter)
     if fast is not None:
         return fast
@@ -1185,51 +1160,14 @@ def connected_components(
     return final.select(F.col("_n").alias(node_col), F.col("_lbl").alias("component"))
 
 
-def _cc_collect_or_none(edges, nodes, id_a, id_b, node_col):
-    """Shared gate for the CC local twins: bounded Arrow collect of
-    the pair relation and the node relation into int64 arrays (node
-    multiplicity preserved — the output carries one row per input
-    node row, exactly like the join pipeline), or None when the gate
-    fails (oversized, NULLs, non-integral or 31-bit-unrepresentable
-    ids, or the kill switch)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_CC_LOCAL", "1") == "0":
-        return None
-    import numpy as np
-
-    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
-        _pair_score_broadcast_bytes,
-    )
-
-    cap = _pair_score_broadcast_bytes() // 16
-    et = edges.select(id_a, id_b).limit(cap + 1).toArrow()
-    if et.num_rows > cap:
-        return None
-    if et.column(0).null_count or et.column(1).null_count:
-        return None
-    nt = nodes.select(node_col).limit(cap + 1).toArrow()
-    if nt.num_rows > cap or nt.column(0).null_count:
-        return None
-    try:
-        ea = et.column(0).to_numpy(zero_copy_only=False).astype(
-            np.int64, casting="safe"
-        )
-        eb = et.column(1).to_numpy(zero_copy_only=False).astype(
-            np.int64, casting="safe"
-        )
-        nn = nt.column(0).to_numpy(zero_copy_only=False).astype(
-            np.int64, casting="safe"
-        )
-    except (TypeError, ValueError):
-        return None
-    vals = [x for x in (ea, eb, nn) if len(x)]
-    if vals and (
-        min(v.min() for v in vals) < 0
-        or max(v.max() for v in vals) >= (1 << 31)
-    ):
-        return None
-    return ea, eb, nn
+def _collect_graph(edges, nodes, id_a, id_b, node_col):
+    """Edge and node id arrays ``(ea, eb, nn)`` for the graph twins
+    (node multiplicity kept: the output carries one row per input node
+    row, exactly like the join pipeline), or None when
+    :func:`collect_ids` declines either relation."""
+    e = collect_ids(edges, id_a, id_b)
+    n = collect_ids(nodes, node_col) if e is not None else None
+    return None if n is None else (*e, *n)
 
 
 def _cc_local_or_none(edges, nodes, id_a, id_b, node_col, max_iter):
@@ -1247,7 +1185,7 @@ def _cc_local_or_none(edges, nodes, id_a, id_b, node_col, max_iter):
     import numpy as np
     import pyarrow as pa
 
-    got = _cc_collect_or_none(edges, nodes, id_a, id_b, node_col)
+    got = _collect_graph(edges, nodes, id_a, id_b, node_col)
     if got is None:
         return None
     ea, eb, nn = got
@@ -1299,11 +1237,7 @@ def _cc_star_local_or_none(edges, nodes, id_a, id_b, node_col, max_iter):
     import numpy as np
     import pyarrow as pa
 
-    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
-        _pack_pairs,
-    )
-
-    got = _cc_collect_or_none(edges, nodes, id_a, id_b, node_col)
+    got = _collect_graph(edges, nodes, id_a, id_b, node_col)
     if got is None:
         return None
     ea, eb, nn = got
@@ -1496,49 +1430,10 @@ def connected_components_star(
     return out
 
 
-def _edges_collect_or_none(edges, id_a, id_b):
-    """Bounded Arrow collect of a pair relation into int64 arrays for
-    the iterative-graph local twins, or None (gate/kill switch)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_CC_LOCAL", "1") == "0":
-        return None
-    import numpy as np
-
-    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
-        _pair_score_broadcast_bytes,
-    )
-
-    cap = _pair_score_broadcast_bytes() // 16
-    et = edges.select(id_a, id_b).limit(cap + 1).toArrow()
-    if et.num_rows > cap:
-        return None
-    if et.column(0).null_count or et.column(1).null_count:
-        return None
-    try:
-        ea = et.column(0).to_numpy(zero_copy_only=False).astype(
-            np.int64, casting="safe"
-        )
-        eb = et.column(1).to_numpy(zero_copy_only=False).astype(
-            np.int64, casting="safe"
-        )
-    except (TypeError, ValueError):
-        return None
-    if len(ea) and (
-        min(ea.min(), eb.min()) < 0 or max(ea.max(), eb.max()) >= (1 << 31)
-    ):
-        return None
-    return ea, eb
-
-
 def _sym_unique(ea, eb):
     """Symmetrized distinct directed edge arrays (the explode+distinct
     result), sorted by src."""
     import numpy as np
-
-    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
-        _pack_pairs,
-    )
 
     p = np.unique(
         np.concatenate([_pack_pairs(ea, eb), _pack_pairs(eb, ea)])
@@ -1553,15 +1448,6 @@ def _csr_of(src_sorted, dst):
     return keys, np.append(starts, len(src_sorted)), dst
 
 
-def _neighbors_of(keys, indptr, dst, lookup):
-    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
-        _csr_gather,
-    )
-
-    owner, vals, _ = _csr_gather(keys, indptr, dst, lookup)
-    return owner, vals
-
-
 def _kcore_local_or_none(edges, k, id_a, id_b, rounds):
     """Gated driver-side twin of :func:`kcore`'s fixed-round peel —
     integer degree census + dead-set drop per round, value-identical
@@ -1570,7 +1456,7 @@ def _kcore_local_or_none(edges, k, id_a, id_b, rounds):
     import numpy as np
     import pyarrow as pa
 
-    got = _edges_collect_or_none(edges, id_a, id_b)
+    got = collect_ids(edges, id_a, id_b)
     if got is None:
         return None
     ea, eb = got
@@ -1582,7 +1468,7 @@ def _kcore_local_or_none(edges, k, id_a, id_b, rounds):
         dead = uu[cnt < k]
         if len(dead) == 0:
             break  # fixed point: remaining rounds are no-ops
-        m = ~_np_isin_sorted(su, dead) & ~_np_isin_sorted(sv, dead)
+        m = ~_isin_sorted(su, dead) & ~_isin_sorted(sv, dead)
         su, sv = su[m], sv[m]
     uu, cnt = np.unique(su, return_counts=True)
     out = pa.table(
@@ -1594,14 +1480,6 @@ def _kcore_local_or_none(edges, k, id_a, id_b, rounds):
     return edges.sparkSession.createDataFrame(out)
 
 
-def _np_isin_sorted(x, sorted_arr):
-    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
-        _isin_sorted,
-    )
-
-    return _isin_sorted(x, sorted_arr)
-
-
 def _bfs_local_or_none(edges, seeds, id_a, id_b, seed_col, max_hops):
     """Gated driver-side twin of :func:`bfs_hops`' level-synchronous
     frontier loop (same prev-two anti-join semantics, same early
@@ -1609,20 +1487,11 @@ def _bfs_local_or_none(edges, seeds, id_a, id_b, seed_col, max_hops):
     import numpy as np
     import pyarrow as pa
 
-    got = _edges_collect_or_none(edges, id_a, id_b)
-    if got is None:
+    got = collect_ids(edges, id_a, id_b)
+    seeds_got = collect_ids(seeds, seed_col) if got is not None else None
+    if seeds_got is None:
         return None
-    st = seeds.select(seed_col).limit(1_000_001).toArrow()
-    if st.num_rows > 1_000_000 or st.column(0).null_count:
-        return None
-    try:
-        s0 = np.unique(
-            st.column(0).to_numpy(zero_copy_only=False).astype(
-                np.int64, casting="safe"
-            )
-        )
-    except (TypeError, ValueError):
-        return None
+    s0 = np.unique(seeds_got[0])
     su, sv = _sym_unique(*got)
     keys, indptr, dst = _csr_of(su, sv)
     out_n = [s0]
@@ -1630,11 +1499,11 @@ def _bfs_local_or_none(edges, seeds, id_a, id_b, seed_col, max_hops):
     prev2 = None
     frontier = s0
     for h in range(1, max_hops + 1):
-        _, vals = _neighbors_of(keys, indptr, dst, frontier)
+        _, vals, _ = _csr_gather(keys, indptr, dst, frontier)
         nxt = np.unique(vals)
-        nxt = nxt[~_np_isin_sorted(nxt, frontier)]
+        nxt = nxt[~_isin_sorted(nxt, frontier)]
         if prev2 is not None:
-            nxt = nxt[~_np_isin_sorted(nxt, prev2)]
+            nxt = nxt[~_isin_sorted(nxt, prev2)]
         if len(nxt) == 0:
             break
         out_n.append(nxt)
@@ -1656,11 +1525,7 @@ def _lpa_local_or_none(edges, nodes, id_a, id_b, node_col, rounds):
     import numpy as np
     import pyarrow as pa
 
-    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
-        _pack_pairs,
-    )
-
-    got = _cc_collect_or_none(edges, nodes, id_a, id_b, node_col)
+    got = _collect_graph(edges, nodes, id_a, id_b, node_col)
     if got is None:
         return None
     ea, eb, nn = got
@@ -1670,7 +1535,7 @@ def _lpa_local_or_none(edges, nodes, id_a, id_b, node_col, rounds):
     su, sv = _sym_unique(ea, eb)
     # votes flow dst-label -> src; both endpoints must be labeled
     # (inner join on _dst, left join back on _src restricted to spine)
-    m = _np_isin_sorted(sv, uniq) & _np_isin_sorted(su, uniq)
+    m = _isin_sorted(sv, uniq) & _isin_sorted(su, uniq)
     vs, vd = su[m], sv[m]
     vd_idx = np.searchsorted(uniq, vd)
     vs_idx = np.searchsorted(uniq, vs)
@@ -1706,12 +1571,7 @@ def _triangles_local_or_none(edges, id_a, id_b):
     import numpy as np
     import pyarrow as pa
 
-    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
-        _csr_gather,
-        _pack_pairs,
-    )
-
-    got = _edges_collect_or_none(edges, id_a, id_b)
+    got = collect_ids(edges, id_a, id_b)
     if got is None:
         return None
     ea, eb = got
@@ -1726,7 +1586,7 @@ def _triangles_local_or_none(edges, id_a, id_b):
     ownW, c_arr, _ = _csr_gather(keys, indptr, b, b)
     wa = a[ownW]
     wb = b[ownW]
-    closed = _np_isin_sorted(_pack_pairs(wa, c_arr), packed_set)
+    closed = _isin_sorted(_pack_pairs(wa, c_arr), packed_set)
     ta, tb, tc = wa[closed], wb[closed], c_arr[closed]
     nodes_all = np.concatenate([ta, tb, tc])
     uu, cnt = np.unique(nodes_all, return_counts=True)
@@ -2470,16 +2330,12 @@ def _pagerank_local_or_none(
     is value-identical to the shuffle.  Output strings follow the
     General Decimal Arithmetic to-string rule, the same rule Java
     BigDecimal.toString applies to Spark's Decimal(18,16)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_CC_LOCAL", "1") == "0":
-        return None
     from decimal import ROUND_HALF_UP, Decimal
 
     import numpy as np
     import pyarrow as pa
 
-    got = _cc_collect_or_none(edges, nodes, id_a, id_b, node_col)
+    got = _collect_graph(edges, nodes, id_a, id_b, node_col)
     if got is None:
         return None
     ea, eb, nn = got
@@ -2516,7 +2372,7 @@ def _pagerank_local_or_none(
         (deg2inv[int(dv)] for dv in dcnt), dtype=np.int64, count=len(dcnt)
     )
     # contributions flow src→dst, both endpoints spine members
-    m = _np_isin_sorted(su, uniq) & _np_isin_sorted(sv, uniq)
+    m = _isin_sorted(su, uniq) & _isin_sorted(sv, uniq)
     cs, cd = su[m], sv[m]
     cs_pos = np.searchsorted(uniq, cs)
     cd_pos = np.searchsorted(uniq, cd)
@@ -2634,6 +2490,8 @@ def pagerank(
     round count, and rank ordering stabilizes well inside 8 rounds on
     census-capped dedup graphs.
     """
+    if checkpoint_every < 1:
+        raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
     from decimal import ROUND_HALF_UP, Decimal
 
     n = nodes.count()
@@ -2752,6 +2610,8 @@ def label_propagation(
     ``checkpoint_every`` rounds, and the loop ends in one eager
     materialization that releases the edge blocks.
     """
+    if checkpoint_every < 1:
+        raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
     fast = _lpa_local_or_none(edges, nodes, id_a, id_b, node_col, rounds)
     if fast is not None:
         return fast

@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spark_streaming_kafka2elasticsearch_spark.operators.partitioning import fan_out_small_scan
+
 # ---------------------------------------------------------------------------
 # Pure stdlib+numpy PNG codec (decoder + filter-0 encoder)
 # ---------------------------------------------------------------------------
@@ -511,25 +513,6 @@ def _synth_y4m(media_id: int) -> bytes:
     return y4m_encode(frames, fps=(10, 1))
 
 
-def _fan_out_ids(ids: DataFrame) -> DataFrame:
-    """Spread a (typically tiny) id relation across the session's task
-    slots before a CPU-bound Python synth stage (guide §2.2/§6 — scan
-    parallelism).  The sf-scale documents scan is one sub-128 MB split,
-    so without this every downstream ``mapInPandas`` — the synthesis
-    AND the decode stage that inherits its partitioning — ran as ONE
-    Python task regardless of core count (the r14 scaling block's
-    0.29–0.33 decode inversions at local[32]).  Scale-adaptive, never
-    a constant: it only fans OUT (a source already at
-    ``defaultParallelism`` partitions or more is returned untouched —
-    at 100 TB the scan is already parallel and this is a no-op), and
-    what shuffles is the bare id column, never a media payload."""
-    sc = ids.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if ids.rdd.getNumPartitions() >= target:
-        return ids
-    return ids.repartition(target)
-
-
 def synth_y4m_table(df: DataFrame, id_col: str) -> DataFrame:
     """Real-Y4M media table: one deterministic gradient clip per input
     id, generated Arrow-batched (same ingest shape as synth_png_table)."""
@@ -545,7 +528,7 @@ def synth_y4m_table(df: DataFrame, id_col: str) -> DataFrame:
                 }
             )
 
-    return _fan_out_ids(df.select(id_col)).mapInPandas(
+    return fan_out_small_scan(df.select(id_col)).mapInPandas(
         gen, schema=_MEDIA_TABLE_SCHEMA
     )
 
@@ -670,7 +653,7 @@ def synth_png_table(df: DataFrame, id_col: str) -> DataFrame:
                 }
             )
 
-    return _fan_out_ids(
+    return fan_out_small_scan(
         df.select(F.col(id_col).cast("long").alias(id_col))
     ).mapInPandas(gen, schema=_MEDIA_TABLE_SCHEMA)
 
@@ -747,7 +730,7 @@ def synth_png_pair_table(df: DataFrame, id_col: str) -> DataFrame:
             rows["mime"] = ["image/png"] * len(rows["media_id"])
             yield pd.DataFrame(rows)
 
-    return _fan_out_ids(
+    return fan_out_small_scan(
         df.select(F.col(id_col).cast("long").alias(id_col))
     ).mapInPandas(gen, schema=_MEDIA_TABLE_SCHEMA)
 
@@ -771,7 +754,7 @@ def synth_wav_table(df: DataFrame, id_col: str, wave_kind: str = "sine") -> Data
                 }
             )
 
-    return _fan_out_ids(
+    return fan_out_small_scan(
         df.select(F.col(id_col).cast("long").alias(id_col))
     ).mapInPandas(gen, schema=_MEDIA_TABLE_SCHEMA)
 

@@ -25,6 +25,17 @@ from spark_streaming_kafka2elasticsearch_spark.functions.vectors import (
     l2_norm,
     literal_l2_norm,
 )
+from spark_streaming_kafka2elasticsearch_spark.operators import twins
+from spark_streaming_kafka2elasticsearch_spark.operators.twins import (
+    _csr_gather,
+    _in_id_range,
+    _integral_id_cols,
+    _isin_sorted,
+    _pack_pairs,
+    _pair_score_broadcast_bytes,
+    collect_ids,
+    collect_vectors,
+)
 
 
 def brute_force_topk(
@@ -448,7 +459,7 @@ def _cell_assign_arrow_or_none(
     per-centroid ``aggregate`` folds are CodegenFallback and run
     interpreted per row — the PQ-encode-kernel argument, applied to
     the coarse quantizer).  Returns the DataFrame or None (kill
-    switch ``SPARK_GRAFT_PROBE_ARROW=0``).
+    switch ``SPARK_GRAFT_TWINS=0``).
 
     Bit-equality with the struct expressions, term by term:
 
@@ -473,9 +484,7 @@ def _cell_assign_arrow_or_none(
       tie-break in both; the kernel detects those rows via the Arrow
       offsets/validity and emits ``sorted(cids)[:n_probe]`` directly.
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_PROBE_ARROW", "1") == "0":
+    if not twins.enabled():
         return None
     import numpy as np
 
@@ -785,7 +794,7 @@ def knn_graph(
     # per-pair HOF fold (guide §2.3 / §4.2).  Above the ceiling the
     # original vector-carrying join + hoisted fold runs verbatim (the
     # 100 TB path).
-    scorer = _bounded_matrix_scorer(
+    scorer = _broadcast_matrix_scorer(
         base.select(
             "_id", F.col("_vec").cast("array<double>").alias("_v"), "_n"
         )
@@ -884,47 +893,6 @@ def knn_graph(
     )
 
 
-#: Collected-(id, vec, norm) byte ceiling below which candidate-pair
-#: cosine scoring runs through the broadcast-matrix Arrow kernel
-#: instead of two vector-attach joins + the interpreted HOF dot fold.
-#: The gate is DATA-SIZE derived (n·(dim+2)·8 bytes — the same
-#: "collect the small side" contract as the k-means/centroid
-#: collects), never a core-count constant: at 100 TB the corpus blows
-#: the ceiling and the join path runs unchanged.  Env-tunable for
-#: clusters with bigger executors.
-_PAIR_SCORE_BROADCAST_BYTES = 64 << 20
-
-
-def _pair_score_broadcast_bytes() -> int:
-    import os
-
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_PAIR_SCORE_BROADCAST_BYTES",
-            str(_PAIR_SCORE_BROADCAST_BYTES),
-        )
-    )
-
-
-def _integral_id_cols(df: DataFrame, *cols: str) -> bool:
-    """True iff every named column is a Catalyst integral type.  The
-    kernel gates collect ids with ``np.fromiter(..., dtype=int64)``,
-    which silently TRUNCATES doubles (2.5 → 2) instead of raising —
-    a fractional id space would produce wrong kernel edges where the
-    join path is exact (ADVICE r14).  Checking the schema costs
-    nothing and is exact; non-integral id spaces keep the distributed
-    plan."""
-    from pyspark.sql import types as T
-
-    return all(
-        isinstance(
-            df.schema[c].dataType,
-            (T.LongType, T.IntegerType, T.ShortType, T.ByteType),
-        )
-        for c in cols
-    )
-
-
 def _make_pair_topk(base: DataFrame, n: int, dim: int):
     """Factory for the descent-family ``_topk(cand, kk, with_rank)``:
     score an id-pair relation ``(src, dst)`` against ``base``
@@ -973,7 +941,7 @@ def _make_pair_topk(base: DataFrame, n: int, dim: int):
 
     scorer = None
     if n * (dim + 2) * 8 <= _pair_score_broadcast_bytes():
-        scorer = _broadcast_matrix_scorer(base)
+        scorer = _broadcast_matrix_scorer(base, dim)
 
     def _score(cand: DataFrame) -> DataFrame:
         if scorer is not None:
@@ -1003,71 +971,27 @@ def _make_pair_topk(base: DataFrame, n: int, dim: int):
     return _topk
 
 
-def _broadcast_matrix_scorer(base: DataFrame):
-    """Build the broadcast-matrix Arrow scorer over ``base``
-    (``_id``, ``_v``, ``_n``), or return None when the collected state
-    contains NULLs (vector, element, or norm) — the join+fold path
-    must handle those through Catalyst's NULL algebra."""
-    if not _integral_id_cols(base, "_id"):
-        return None
-    rows = base.select("_id", "_v", "_n").collect()
-    return _scorer_from_rows(base.sparkSession, rows)
-
-
-def _bounded_matrix_scorer(base: DataFrame):
-    """Gate + build the broadcast-matrix Arrow scorer for callers that
-    do NOT already know ``|base|`` (the quantizer-graph family, whose
-    operators never count the corpus): a ``limit(max_n + 1)`` collect
-    bounded by :func:`_pair_score_broadcast_bytes` decides the strategy
-    without a separate count job — if the corpus exceeds the ceiling
-    the bounded collect is abandoned (≤ the ceiling in bytes, by
-    construction) and the caller keeps the vector-carrying join plan
-    (the 100 TB path).  Returns a scorer or None."""
-    if not _integral_id_cols(base, "_id"):
-        return None
-    head = base.select("_v").take(1)
-    if not head or head[0]["_v"] is None:
-        return None
-    dim = len(head[0]["_v"])
-    max_n = _pair_score_broadcast_bytes() // ((dim + 2) * 8)
-    rows = base.select("_id", "_v", "_n").limit(max_n + 1).collect()
-    if len(rows) > max_n:
-        return None
-    return _scorer_from_rows(base.sparkSession, rows)
-
-
-def _scorer_from_rows(spark, rows):
-    """The broadcast-matrix Arrow scorer over pre-collected
-    ``(_id, _v, _n)`` rows (see :func:`_make_pair_topk` for the
-    bit-equality contract), or None when the state contains NULLs."""
+def _broadcast_matrix_scorer(base: DataFrame, dim: int | None = None):
+    """Gate + build the broadcast-matrix Arrow scorer over ``base``
+    (``_id``, ``_v``, ``_n``; see :func:`_make_pair_topk` for the
+    bit-equality contract), or None when :func:`collect_vectors`
+    declines the state — NULLs must go through Catalyst's NULL algebra
+    on the join+fold path, and an over-ceiling corpus (the 100 TB
+    path) keeps the vector-carrying join plan.  Callers that do not
+    know ``dim`` (the quantizer-graph family) let the gate probe it."""
     import numpy as np
 
-    if not rows or any(r["_v"] is None or r["_n"] is None for r in rows):
+    st = collect_vectors(base, "_id", dim=dim)
+    if st is None:
         return None
-    try:
-        ids = np.fromiter(
-            (r["_id"] for r in rows), dtype=np.int64, count=len(rows)
-        )
-    except (TypeError, ValueError):  # non-integral id space
-        return None
-    order = np.argsort(ids, kind="stable")
-    ids = ids[order]
-    try:
-        mat = np.array([rows[i]["_v"] for i in order], dtype=np.float64)
-    except (TypeError, ValueError):  # element-level NULL
-        return None
-    norms = np.fromiter(
-        (rows[order[i]]["_n"] for i in range(len(rows))),
-        dtype=np.float64,
-        count=len(rows),
-    )
+    ids, norms = st["ids"], st["norms"]
     # Transposed, contiguous layout: the fold gathers matT[j][idx]
     # (a 16 KB-ish row, cache-resident) instead of striding over
     # row-major columns — measured 28x on the j-order fold, same
     # float64 values in the same IEEE order.
-    mat_t = np.ascontiguousarray(mat.T)
-    b_state = spark.sparkContext.broadcast((ids, mat_t, norms))
-    n_ids = len(rows)
+    mat_t = np.ascontiguousarray(st["mat"].T)
+    b_state = base.sparkSession.sparkContext.broadcast((ids, mat_t, norms))
+    n_ids = len(ids)
 
     def scorer(cand: DataFrame) -> DataFrame:
         pair = cand.select(
@@ -1116,101 +1040,22 @@ def _scorer_from_rows(spark, rows):
     return scorer
 
 
-def _pack_pairs(a, b):
-    """(src, dst) -> one sortable int64 key; requires 0 <= id < 2^31
-    (checked by the kernel gate)."""
-    return (a.astype("int64") << 32) | b.astype("int64")
-
-
-def _isin_sorted(x, sorted_arr):
-    import numpy as np
-
-    if len(sorted_arr) == 0:
-        return np.zeros(len(x), dtype=bool)
-    pos = np.searchsorted(sorted_arr, x)
-    np.clip(pos, 0, len(sorted_arr) - 1, out=pos)
-    return sorted_arr[pos] == x
-
-
-def _csr_gather(keys, indptr, values, lookup):
-    """For each element of ``lookup``, the concatenated ``values``
-    segment of its key (empty when absent).  Returns
-    ``(seg_owner_index, gathered_values, extra_per_key)`` where
-    ``seg_owner_index[i]`` is the index into ``lookup`` owning row i.
-    ``extra_per_key`` is the per-lookup segment length."""
-    import numpy as np
-
-    pos = np.searchsorted(keys, lookup)
-    np.clip(pos, 0, max(len(keys) - 1, 0), out=pos)
-    found = (keys[pos] == lookup) if len(keys) else np.zeros(len(lookup), bool)
-    starts = np.where(found, indptr[pos], 0)
-    cnt = np.where(found, indptr[pos + 1] - indptr[pos], 0)
-    total = int(cnt.sum())
-    if total == 0:
-        return (
-            np.empty(0, dtype=np.int64),
-            values[:0],
-            cnt,
-        )
-    offs = np.cumsum(cnt) - cnt
-    idx = (
-        np.arange(total, dtype=np.int64)
-        - np.repeat(offs, cnt)
-        + np.repeat(starts, cnt)
-    )
-    owner = np.repeat(np.arange(len(lookup), dtype=np.int64), cnt)
-    return owner, values[idx], cnt
-
-
 def _collect_corpus_state(base: DataFrame, n: int, dim: int):
-    """Bounded collect of the descent base relation
-    (``_id``, ``_v``, ``_n``, ``_bucket``) into sorted numpy state for
-    the gated kernels — or None when the gate fails (over the
-    broadcast ceiling, NULLs, non-integral/duplicate ids, ids outside
-    the 31-bit pair-packing range, ragged dims).  Norms and buckets
-    are the Catalyst-computed column values verbatim."""
+    """The descent base relation (``_id``, ``_v``, ``_n``, ``_bucket``)
+    as sorted numpy state for the gated kernels — or None when
+    :func:`collect_vectors` declines it or an id is outside the
+    31-bit pair-packing range.  Norms and buckets are the
+    Catalyst-computed column values verbatim."""
     import numpy as np
+    import pyarrow.compute as pc
 
     if n * (dim + 2) * 8 > _pair_score_broadcast_bytes():
+        return None  # |base| is known: skip the gate's bounded collect
+    st = collect_vectors(base, "_id", extra=("_bucket",), dim=dim)
+    if st is None or len(st["ids"]) != n or not _in_id_range(st["ids"]):
         return None
-    if not _integral_id_cols(base, "_id"):
-        return None
-    rows = base.select("_id", "_v", "_n", "_bucket").collect()
-    if len(rows) != n:
-        return None
-    if any(
-        r["_id"] is None or r["_v"] is None or r["_n"] is None for r in rows
-    ):
-        return None
-    try:
-        ids = np.fromiter((r["_id"] for r in rows), dtype=np.int64, count=n)
-    except (TypeError, ValueError):
-        return None
-    if len(ids) and (ids.min() < 0 or ids.max() >= (1 << 31)):
-        return None  # pair packing needs 31-bit non-negative ids
-    order = np.argsort(ids, kind="stable")
-    ids = ids[order]
-    if len(ids) > 1 and (ids[1:] == ids[:-1]).any():
-        return None
-    try:
-        mat = np.array([rows[i]["_v"] for i in order], dtype=np.float64)
-    except (TypeError, ValueError):
-        return None
-    if mat.shape[1] != dim:
-        return None
-    norms = np.fromiter(
-        (rows[order[i]]["_n"] for i in range(n)), dtype=np.float64, count=n
-    )
-    buckets = np.fromiter(
-        (
-            -1
-            if rows[order[i]]["_bucket"] is None
-            else rows[order[i]]["_bucket"]
-            for i in range(n)
-        ),
-        dtype=np.int64,
-        count=n,
-    )
+    ids, mat = st["ids"], st["mat"]
+    buckets = pc.fill_null(st["_bucket"], -1).to_numpy().astype(np.int64)
     # bucket CSR over id POSITIONS (sorted-id order)
     border = np.argsort(buckets, kind="stable")
     bsorted = buckets[border]
@@ -1225,7 +1070,7 @@ def _collect_corpus_state(base: DataFrame, n: int, dim: int):
         ids=ids,
         mat=mat,
         mat_t=np.ascontiguousarray(mat.T),
-        norms=norms,
+        norms=st["norms"],
         buckets=buckets,
         pos2grp=pos2grp,
         bindptr=bindptr,
@@ -1361,10 +1206,6 @@ def _nn_descent_kernel_or_none(
 
     Returns the final ``(src, dst, rank, mutual)`` DataFrame or None.
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_DESCENT_KERNEL", "1") == "0":
-        return None
     import numpy as np
     import pyarrow as pa
 
@@ -1909,50 +1750,20 @@ def knn_graph_persist(
 
 
 def _maintain_gate_state(base, n, dim, old_edges):
-    """Shared gate for the maintain-op fast paths: corpus state +
-    collected old edge list (``toArrow`` — n·k rows, bounded by the
-    same ceiling), or None."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_DESCENT_KERNEL", "1") == "0":
-        return None
+    """Shared gate for the maintain-op fast paths: corpus state + the
+    old edge list (n·k rows, bounded by the same ceiling), or None.
+    ``rank`` passes :func:`collect_ids`' range check before its int32
+    cast, so it cannot wrap."""
     import numpy as np
 
     st = _collect_corpus_state(base, n, dim)
     if st is None:
         return None
-    if not _integral_id_cols(old_edges, "src", "dst", "rank"):
+    got = collect_ids(old_edges, "src", "dst", "rank")
+    if got is None:
         return None
-    max_e = _pair_score_broadcast_bytes() // 24
-    tbl = old_edges.select("src", "dst", "rank").limit(max_e + 1).toArrow()
-    if tbl.num_rows > max_e:
-        return None
-    if (
-        tbl.column("src").null_count
-        or tbl.column("dst").null_count
-        or tbl.column("rank").null_count
-    ):
-        return None
-    try:
-        o_src = tbl.column("src").to_numpy(zero_copy_only=False).astype(
-            np.int64, casting="safe"
-        )
-        o_dst = tbl.column("dst").to_numpy(zero_copy_only=False).astype(
-            np.int64, casting="safe"
-        )
-        o_rank = (
-            tbl.column("rank")
-            .to_numpy(zero_copy_only=False)
-            .astype(np.int32, casting="same_kind")
-        )
-    except (TypeError, ValueError):
-        return None
-    if len(o_src) and (
-        min(o_src.min(), o_dst.min()) < 0
-        or max(o_src.max(), o_dst.max()) >= (1 << 31)
-    ):
-        return None
-    st["o_src"], st["o_dst"], st["o_rank"] = o_src, o_dst, o_rank
+    st["o_src"], st["o_dst"], o_rank = got
+    st["o_rank"] = o_rank.astype(np.int32)
     return st
 
 
@@ -2024,23 +1835,10 @@ def _nn_descent_refresh_local_or_none(
     import numpy as np
 
     st = _maintain_gate_state(base, n, dim, old_edges)
-    if st is None:
+    got = collect_ids(delta_ids, "_did") if st is not None else None
+    if got is None:
         return None
-    if not _integral_id_cols(delta_ids, "_did"):
-        return None
-    drows = delta_ids.collect()
-    if any(r["_did"] is None for r in drows):
-        return None
-    try:
-        dids = np.unique(
-            np.fromiter(
-                (r["_did"] for r in drows), dtype=np.int64, count=len(drows)
-            )
-        )
-    except (TypeError, ValueError):
-        return None
-    if len(dids) and (dids.min() < 0 or dids.max() >= (1 << 31)):
-        return None
+    dids = np.unique(got[0])
     ids = st["ids"]
     o_src, o_dst, o_rank = st["o_src"], st["o_dst"], st["o_rank"]
 
@@ -2301,21 +2099,10 @@ def _nn_descent_delete_local_or_none(
     import numpy as np
 
     st = _maintain_gate_state(base, n, dim, old_edges)
-    if st is None:
+    got = collect_ids(dele, "_del") if st is not None else None
+    if got is None:
         return None
-    if not _integral_id_cols(dele, "_del"):
-        return None
-    drows = dele.collect()
-    if any(r["_del"] is None for r in drows):
-        return None
-    try:
-        dids = np.unique(
-            np.fromiter(
-                (r["_del"] for r in drows), dtype=np.int64, count=len(drows)
-            )
-        )
-    except (TypeError, ValueError):
-        return None
+    dids = np.unique(got[0])
     o_src, o_dst, o_rank = st["o_src"], st["o_dst"], st["o_rank"]
 
     # -- 1. tombstone ------------------------------------------------
@@ -2673,7 +2460,7 @@ def knn_graph_append(
     # function of the pair, so dedup-then-score ≡ score-then-dedup),
     # and ONE Arrow-kernel pass scores the merged relation; above it
     # the vector-carrying joins + hoisted fold run verbatim.
-    scorer = _bounded_matrix_scorer(
+    scorer = _broadcast_matrix_scorer(
         full.select(
             "_id", F.col("_vec").cast("array<double>").alias("_v"), "_n"
         )
@@ -2850,7 +2637,7 @@ def knn_graph_delete(
     # Pair scoring strategy (the knn_graph contract): id-only cell
     # join + broadcast-matrix Arrow kernel under the ceiling, the
     # vector-carrying join + hoisted fold verbatim above it.
-    scorer = _bounded_matrix_scorer(
+    scorer = _broadcast_matrix_scorer(
         base.select(
             "_id", F.col("_vec").cast("array<double>").alias("_v"), "_n"
         )
@@ -2977,80 +2764,24 @@ def _beam_rounds_kernel_or_none(
     entry modes skip their own ``count()``/``min()`` driver jobs) — or
     None (fallback to the join loop).
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_BEAM_KERNEL", "1") == "0":
-        return None
     import numpy as np
-
-    # Schema gates before ANY collect: ids must be integral (the
-    # int64 conversion below would silently truncate doubles —
-    # ADVICE r14), and query_id must already be LongType — the kernel
-    # emits `query_id long`, so any other input dtype would change the
-    # output schema where the join loop preserves it (and a
-    # non-integral query id would cast to NULL and crash int() in the
-    # executor).
     from pyspark.sql import types as T
 
-    if not _integral_id_cols(base, "node"):
-        return None
-    if not _integral_id_cols(edges, "src", "dst"):
-        return None
+    # query_id must already be LongType — the kernel emits
+    # `query_id long`, so any other input dtype would change the output
+    # schema where the join loop preserves it (and a non-integral query
+    # id would cast to NULL and crash int() in the executor).
     if not isinstance(q.schema["query_id"].dataType, T.LongType):
         return None
-
-    ceiling = _pair_score_broadcast_bytes()
-    # Learn the real dim FIRST (one take(1) probe, the
-    # _bounded_matrix_scorer convention) and compute the row cap from
-    # it: the old floor-dim-8 cap admitted ceiling//80 ROWS regardless
-    # of vector width, so a dim-1024 corpus above the ceiling pulled
-    # ~13x the configured byte budget into the driver on every call
-    # before the re-check could reject it (ADVICE r14 — driver OOM
-    # risk on exactly the fallback path).
-    head = base.select("_v").take(1)
-    if not head or head[0]["_v"] is None:
+    got = collect_ids(edges, "src", "dst")
+    # The gate probes the real dim before the bounded collect, so a
+    # wide corpus above the ceiling never pulls more than the byte
+    # budget into the driver (ADVICE r14).
+    st = collect_vectors(base, "node") if got is not None else None
+    if st is None:
         return None
-    dim = len(head[0]["_v"])
-    max_n = ceiling // ((dim + 2) * 8)
-    rows = base.select("node", "_v", "_n").limit(max_n + 1).collect()
-    if len(rows) > max_n or not rows:
-        return None
-    if any(r["_v"] is None or r["_n"] is None for r in rows):
-        return None
-    try:
-        ids = np.fromiter(
-            (r["node"] for r in rows), dtype=np.int64, count=len(rows)
-        )
-    except (TypeError, ValueError):  # non-integral id space
-        return None
-    order = np.argsort(ids, kind="stable")
-    ids = ids[order]
-    if len(ids) > 1 and (ids[1:] == ids[:-1]).any():
-        return None  # duplicate corpus ids: keep the join's semantics
-    try:
-        mat = np.array([rows[i]["_v"] for i in order], dtype=np.float64)
-    except (TypeError, ValueError):  # element-level NULL / ragged dims
-        return None
-    norms = np.fromiter(
-        (rows[order[i]]["_n"] for i in range(len(rows))),
-        dtype=np.float64,
-        count=len(rows),
-    )
-    max_e = ceiling // 16
-    erows = edges.select("src", "dst").limit(max_e + 1).collect()
-    if len(erows) > max_e:
-        return None
-    if any(r["src"] is None or r["dst"] is None for r in erows):
-        return None
-    try:
-        e_src = np.fromiter(
-            (r["src"] for r in erows), dtype=np.int64, count=len(erows)
-        )
-        e_dst = np.fromiter(
-            (r["dst"] for r in erows), dtype=np.int64, count=len(erows)
-        )
-    except (TypeError, ValueError):
-        return None
+    e_src, e_dst = got
+    ids, mat, norms = st["ids"], st["mat"], st["norms"]
     # Undirected CSR keyed on raw src id; dst stays a raw id so the
     # found-mask at scoring reproduces the inner-join drop exactly.
     und_src = np.concatenate([e_src, e_dst])
@@ -4799,7 +4530,7 @@ def _pq_encode_cols(
     codebook state it broadcasts is M·K·sub_dim doubles — small BY
     CONTRACT at any corpus scale, so unlike the pair scorer this path
     needs no size gate; the corpus itself streams through in batches.
-    ``SPARK_GRAFT_PQ_ENCODE_ARROW=0`` restores the interpreted
+    ``SPARK_GRAFT_TWINS=0`` restores the interpreted
     literal-fold projection (kept verbatim below as the fallback and
     the semantics reference)."""
     by_m: dict[int, list[tuple[int, list[float]]]] = {}
@@ -4818,9 +4549,7 @@ def _pq_encode_cols(
             )
         ).cast("array<double>")
     )
-    import os
-
-    if os.environ.get("SPARK_GRAFT_PQ_ENCODE_ARROW", "1") != "0":
+    if twins.enabled():
         return _pq_encode_cols_arrow(
             df, v, by_m, n_sub, sub_dim, keep, cell_crows, keep_slices
         )
@@ -6225,11 +5954,9 @@ def _srp_buckets_kernel_or_none(
       (the ``_j`` equi-join's semantics) — handled per row.
     * MSB-first bit packing per table, identical weights.
 
-    Returns the DataFrame or None (``SPARK_GRAFT_SRP_KERNEL=0``).
+    Returns the DataFrame or None (``SPARK_GRAFT_TWINS=0``).
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SRP_KERNEL", "1") == "0":
+    if not twins.enabled():
         return None
     import numpy as np
 

@@ -20,6 +20,7 @@ from spark_streaming_kafka2elasticsearch_spark.functions.text import (
     token_count,
     tokens,
 )
+from spark_streaming_kafka2elasticsearch_spark.operators import twins
 
 
 def text_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -571,17 +572,11 @@ def _bpe_train_local_or_none(
     Degenerate inputs fall back to the distributed loop (None): NULL
     counts, a round with an empty pair census (whose NULL-poisoned
     merge row the twin does not replicate), or an over-ceiling vocab.
-    Kill switch: ``SPARK_GRAFT_BPE_LOCAL=0``.
+    Off under ``SPARK_GRAFT_TWINS=0`` (:mod:`.twins`).
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_BPE_LOCAL", "1") == "0":
+    if not twins.enabled():
         return None
-    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
-        _pair_score_broadcast_bytes,
-    )
-
-    cap_bytes = _pair_score_broadcast_bytes()
+    cap_bytes = twins._pair_score_broadcast_bytes()
     # generous per-row estimate: token + count + encoding overhead
     cap_rows = max(1, cap_bytes // 64)
     rows = word_freq.select(

@@ -87,16 +87,3 @@ def session_window_agg(
         aggs = [F.count(F.lit(1)).alias("total_events")]
     grouped = df.groupBy(F.session_window(F.col(ts_col), gap), *[F.col(k) for k in keys])
     return grouped.agg(*aggs)
-
-
-def flatten_window(df: DataFrame, window_col: str = "window") -> DataFrame:
-    """Project window struct → ``window_start``/``window_end`` strings.
-
-    Strings (not timestamps) so results are timezone-unambiguous when
-    compared across engines (Spark vs DuckDB oracle).
-    """
-    return df.select(
-        F.date_format(F.col(f"{window_col}.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-        F.date_format(F.col(f"{window_col}.end"), "yyyy-MM-dd HH:mm:ss").alias("window_end"),
-        *[c for c in df.columns if c != window_col],
-    )

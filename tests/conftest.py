@@ -19,4 +19,19 @@ def spark():
     yield spark
 
 
+@pytest.fixture
+def twins(monkeypatch):
+    """Both execution legs of a gated operator: iterating sets
+    ``SPARK_GRAFT_TWINS=1`` (driver twins and Arrow kernels on), then
+    ``SPARK_GRAFT_TWINS=0`` (the distributed leg), and yields the
+    setting as a label for assertion messages."""
+
+    def legs():
+        for flag in ("1", "0"):
+            monkeypatch.setenv("SPARK_GRAFT_TWINS", flag)
+            yield f"SPARK_GRAFT_TWINS={flag}"
+
+    return legs()
+
+
 SF_DIR = "/root/testdata/sf0.001"

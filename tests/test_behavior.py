@@ -235,7 +235,7 @@ def test_semdedup_greedy_prune_on_literal_vectors(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_bfs_hops_chain_graph_exact_distances(spark):
+def test_bfs_hops_chain_graph_exact_distances(spark, twins):
     from spark_streaming_kafka2elasticsearch_spark.operators.dedup import bfs_hops
 
     # chain 1-2-3-4-5-6, plus isolated 99; seed at node 1
@@ -243,12 +243,13 @@ def test_bfs_hops_chain_graph_exact_distances(spark):
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)], "id_a long, id_b long"
     )
     seeds = spark.createDataFrame([(1,)], "_id long")
-    out = {r._n: r.hops for r in bfs_hops(edges, seeds, max_hops=3).collect()}
-    # exact shortest distances, truncated at the hop bound
-    assert out == {1: 0, 2: 1, 3: 2, 4: 3}
+    for leg in twins:
+        out = {r._n: r.hops for r in bfs_hops(edges, seeds, max_hops=3).collect()}
+        # exact shortest distances, truncated at the hop bound
+        assert out == {1: 0, 2: 1, 3: 2, 4: 3}, leg
 
 
-def test_bfs_hops_multi_source_takes_min_distance(spark):
+def test_bfs_hops_multi_source_takes_min_distance(spark, twins):
     from spark_streaming_kafka2elasticsearch_spark.operators.dedup import bfs_hops
 
     # path 1-2-3-4-5 with seeds at both ends: 3 is 2 hops from either
@@ -256,19 +257,25 @@ def test_bfs_hops_multi_source_takes_min_distance(spark):
         [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a long, id_b long"
     )
     seeds = spark.createDataFrame([(1,), (5,)], "_id long")
-    out = {r._n: r.hops for r in bfs_hops(edges, seeds, max_hops=6).collect()}
-    assert out == {1: 0, 5: 0, 2: 1, 4: 1, 3: 2}
+    for leg in twins:
+        out = {r._n: r.hops for r in bfs_hops(edges, seeds, max_hops=6).collect()}
+        assert out == {1: 0, 5: 0, 2: 1, 4: 1, 3: 2}, leg
 
 
-def test_bfs_hops_early_exit_on_empty_frontier(spark):
+def test_bfs_hops_early_exit_on_empty_frontier(spark, twins):
     from spark_streaming_kafka2elasticsearch_spark.operators.dedup import bfs_hops
 
     edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    no_edges = spark.createDataFrame([], "id_a long, id_b long")
     seeds = spark.createDataFrame([(1,)], "_id long")
-    # max_hops far beyond the graph: loop must stop at the empty
-    # frontier, and the result is just the 2-node component
-    out = {r._n: r.hops for r in bfs_hops(edges, seeds, max_hops=50).collect()}
-    assert out == {1: 0, 2: 1}
+    for leg in twins:
+        # max_hops far beyond the graph: loop must stop at the empty
+        # frontier, and the result is just the 2-node component
+        out = {r._n: r.hops for r in bfs_hops(edges, seeds, max_hops=50).collect()}
+        assert out == {1: 0, 2: 1}, leg
+        # an empty graph stops at once: the seeds alone, at hop 0
+        out = {r._n: r.hops for r in bfs_hops(no_edges, seeds).collect()}
+        assert out == {1: 0}, leg
 
 
 # ---------------------------------------------------------------------------
@@ -320,7 +327,7 @@ def test_fuzzy_pairs_plan_is_hash_join(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_triangle_counts_literal_graph(spark):
+def test_triangle_counts_literal_graph(spark, twins):
     from spark_streaming_kafka2elasticsearch_spark.operators.dedup import (
         triangle_counts,
     )
@@ -331,12 +338,13 @@ def test_triangle_counts_literal_graph(spark):
     edges = spark.createDataFrame(
         k4 + [(5, 6), (6, 7), (4, 5)], "id_a long, id_b long"
     )
-    out = {r.node: r.n_triangles for r in triangle_counts(edges).collect()}
-    # chain/bridge nodes are absent (no triangle), K4 nodes count 3 each
-    assert out == {1: 3, 2: 3, 3: 3, 4: 3}
+    for leg in twins:
+        out = {r.node: r.n_triangles for r in triangle_counts(edges).collect()}
+        # chain/bridge nodes are absent (no triangle), K4 nodes count 3 each
+        assert out == {1: 3, 2: 3, 3: 3, 4: 3}, leg
 
 
-def test_triangle_counts_unordered_and_dup_edges_are_canonicalized(spark):
+def test_triangle_counts_unordered_and_dup_edges_are_canonicalized(spark, twins):
     from spark_streaming_kafka2elasticsearch_spark.operators.dedup import (
         triangle_counts,
     )
@@ -346,8 +354,9 @@ def test_triangle_counts_unordered_and_dup_edges_are_canonicalized(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (1, 2), (2, 3)], "id_a long, id_b long"
     )
-    out = {r.node: r.n_triangles for r in triangle_counts(edges).collect()}
-    assert out == {1: 1, 2: 1, 3: 1}
+    for leg in twins:
+        out = {r.node: r.n_triangles for r in triangle_counts(edges).collect()}
+        assert out == {1: 1, 2: 1, 3: 1}, leg
 
 
 def test_triangle_query_plan_no_cartesian(spark):
@@ -552,7 +561,7 @@ def test_image_ahash_perceptual_properties(spark):
     assert hamming(out[1], out[5]) >= 20         # inversion → far away
 
 
-def test_label_propagation_splits_bridged_triangles(spark):
+def test_label_propagation_splits_bridged_triangles(spark, twins):
     """LPA vs CC granularity: two triangles {1,2,3} and {4,5,6}
     joined by one bridge edge 3–4.  Connected components reports ONE
     cluster; label propagation's majority vote dissolves the bridge
@@ -568,13 +577,14 @@ def test_label_propagation_splits_bridged_triangles(spark):
         "id_a long, id_b long",
     )
     nodes = spark.createDataFrame([(i,) for i in range(1, 8)], "_id long")
-    out = {
-        r["_id"]: r["community"]
-        for r in label_propagation(edges, nodes, rounds=4).collect()
-    }
-    assert out[1] == out[2] == out[3] == 1
-    assert out[4] == out[5] == out[6] == 3
-    assert out[7] == 7
+    for leg in twins:
+        out = {
+            r["_id"]: r["community"]
+            for r in label_propagation(edges, nodes, rounds=4).collect()
+        }
+        assert out[1] == out[2] == out[3] == 1, leg
+        assert out[4] == out[5] == out[6] == 3, leg
+        assert out[7] == 7, leg
 
 
 def test_hamming64_band_pairs_generic_bit63(spark):
@@ -709,7 +719,7 @@ def test_transition_matrix_rows_are_distributions(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_pagerank_star_graph_matches_pure_decimal_simulation(spark):
+def test_pagerank_star_graph_matches_pure_decimal_simulation(spark, twins):
     """The operator's documented recurrence, replicated in pure Python
     Decimal, must match the Spark output STRING-exactly — proving the
     decimal staging (14/16-dp rounds, exact ×/+) is what actually runs,
@@ -723,8 +733,6 @@ def test_pagerank_star_graph_matches_pure_decimal_simulation(spark):
         [(1, 2), (1, 3), (1, 4), (1, 5)], "id_a long, id_b long"
     )
     nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 4, 5, 9)], "_id long")
-    out = {r._id: r.pr_score for r in pagerank(edges, nodes, iterations=8).collect()}
-
     q14, q16 = Decimal("1e-14"), Decimal("1e-16")
     n = 6
     base = Decimal(0.15 / n).quantize(q14, ROUND_HALF_UP)
@@ -742,19 +750,22 @@ def test_pagerank_star_graph_matches_pure_decimal_simulation(spark):
             nxt[v] = (base + d * s16).quantize(q16, ROUND_HALF_UP)
         r = nxt
     expected = {v: str(x.quantize(q16)) for v, x in r.items()}
-    assert out == expected
-    # structure: hub outranks leaves; isolated sits on the teleport floor
-    assert Decimal(out[1]) > Decimal(out[2]) > Decimal(out[9])
-    assert Decimal(out[9]) == base
+    for leg in twins:
+        out = {r._id: r.pr_score for r in pagerank(edges, nodes, iterations=8).collect()}
+        assert out == expected, leg
+        # structure: hub outranks leaves; isolated sits on the teleport floor
+        assert Decimal(out[1]) > Decimal(out[2]) > Decimal(out[9]), leg
+        assert Decimal(out[9]) == base, leg
 
 
-def test_pagerank_symmetric_pair_equal_ranks(spark):
+def test_pagerank_symmetric_pair_equal_ranks(spark, twins):
     from spark_streaming_kafka2elasticsearch_spark.operators.dedup import pagerank
 
     edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
     nodes = spark.createDataFrame([(1,), (2,)], "_id long")
-    out = {r._id: r.pr_score for r in pagerank(edges, nodes, iterations=6).collect()}
-    assert out[1] == out[2]
+    for leg in twins:
+        out = {r._id: r.pr_score for r in pagerank(edges, nodes, iterations=6).collect()}
+        assert out[1] == out[2], leg
 
 
 # ---------------------------------------------------------------------------
@@ -762,7 +773,7 @@ def test_pagerank_symmetric_pair_equal_ranks(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_kcore_peels_pendant_chain_keeps_cycle(spark):
+def test_kcore_peels_pendant_chain_keeps_cycle(spark, twins):
     from spark_streaming_kafka2elasticsearch_spark.operators.dedup import kcore
 
     # triangle 1-2-3 with a pendant chain 3-4-5 and an isolated edge 8-9
@@ -770,31 +781,33 @@ def test_kcore_peels_pendant_chain_keeps_cycle(spark):
         [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (8, 9)],
         "id_a long, id_b long",
     )
-    out = {r.node: r.core_degree for r in kcore(edges, k=2).collect()}
-    # 5 peels (deg 1), then 4 (deg drops to 1), 8/9 peel immediately;
-    # the triangle is the 2-core, every member at degree 2
-    assert out == {1: 2, 2: 2, 3: 2}
+    for leg in twins:
+        out = {r.node: r.core_degree for r in kcore(edges, k=2).collect()}
+        # 5 peels (deg 1), then 4 (deg drops to 1), 8/9 peel immediately;
+        # the triangle is the 2-core, every member at degree 2
+        assert out == {1: 2, 2: 2, 3: 2}, leg
 
 
-def test_kcore_k3_requires_dense_blob(spark):
+def test_kcore_k3_requires_dense_blob(spark, twins):
     from spark_streaming_kafka2elasticsearch_spark.operators.dedup import kcore
 
     # K4 minus one edge has two deg-2 nodes -> empty 3-core;
     # full K4 survives with every node at degree 3
     k4_minus = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4)]
-    out = kcore(
-        spark.createDataFrame(k4_minus, "id_a long, id_b long"), k=3
-    ).collect()
-    assert out == []
-    k4 = k4_minus + [(3, 4)]
-    out2 = {
-        r.node: r.core_degree
-        for r in kcore(spark.createDataFrame(k4, "id_a long, id_b long"), k=3).collect()
-    }
-    assert out2 == {1: 3, 2: 3, 3: 3, 4: 3}
+    for leg in twins:
+        out = kcore(
+            spark.createDataFrame(k4_minus, "id_a long, id_b long"), k=3
+        ).collect()
+        assert out == [], leg
+        k4 = k4_minus + [(3, 4)]
+        out2 = {
+            r.node: r.core_degree
+            for r in kcore(spark.createDataFrame(k4, "id_a long, id_b long"), k=3).collect()
+        }
+        assert out2 == {1: 3, 2: 3, 3: 3, 4: 3}, leg
 
 
-def test_bpe_train_learns_sennrich_merges(spark):
+def test_bpe_train_learns_sennrich_merges(spark, twins):
     """Pin the full 6-round merge sequence on the classic Sennrich-
     style corpus low*5 lower*2 newest*6 widest*3, hand-derived:
     r1 (e,s) 9 — ties with (s,t) 9, smaller left wins;
@@ -809,18 +822,19 @@ def test_bpe_train_learns_sennrich_merges(spark):
         [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)],
         "tok string, c long",
     )
-    out = [
-        (r["merge_rank"], r["left_sym"], r["right_sym"], r["pair_count"])
-        for r in bpe_train(wf, rounds=6).orderBy("merge_rank").collect()
-    ]
-    assert out == [
-        (1, "e", "s", 9),
-        (2, "es", "t", 9),
-        (3, "l", "o", 7),
-        (4, "lo", "w", 7),
-        (5, "e", "w", 6),
-        (6, "ew", "est", 6),
-    ]
+    for leg in twins:
+        out = [
+            (r["merge_rank"], r["left_sym"], r["right_sym"], r["pair_count"])
+            for r in bpe_train(wf, rounds=6).orderBy("merge_rank").collect()
+        ]
+        assert out == [
+            (1, "e", "s", 9),
+            (2, "es", "t", 9),
+            (3, "l", "o", 7),
+            (4, "lo", "w", 7),
+            (5, "e", "w", 6),
+            (6, "ew", "est", 6),
+        ], leg
 
 
 def test_bpe_vocab_after_training_sennrich(spark):

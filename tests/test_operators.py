@@ -440,7 +440,7 @@ def test_simhash_empty_doc_zero_signature(spark):
     assert len(sigs) == 3
 
 
-def test_connected_components_transitive(spark):
+def test_connected_components_transitive(spark, twins):
     """Chain a—b—c plus isolated d: one component {a,b,c} labeled by
     its min, singleton d labels itself (diameter 2 → needs >1 round)."""
     from spark_streaming_kafka2elasticsearch_spark.operators.dedup import (
@@ -449,11 +449,12 @@ def test_connected_components_transitive(spark):
 
     edges = spark.createDataFrame([(2, 3), (3, 1)], ["id_a", "id_b"])
     nodes = spark.createDataFrame([(1,), (2,), (3,), (4,)], ["_id"])
-    got = {
-        r["_id"]: r["component"]
-        for r in connected_components(edges, nodes).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 4}
+    for leg in twins:
+        got = {
+            r["_id"]: r["component"]
+            for r in connected_components(edges, nodes).collect()
+        }
+        assert got == {1: 1, 2: 1, 3: 1, 4: 4}, leg
 
 
 def test_shingle_relation_property_matches_array_form(spark):
@@ -543,7 +544,7 @@ def test_simhash_near_dup_pairs_mechanism(spark):
     assert got == {(1, 2): 0, (1, 3): 0, (2, 3): 0}
 
 
-def test_connected_components_path_graph(spark):
+def test_connected_components_path_graph(spark, twins):
     """Diameter ≫ 2 property: a 15-node path needs 14 propagation
     rounds — crossing several localCheckpoint lineage truncations —
     and must still converge to a single min-labeled component."""
@@ -556,16 +557,17 @@ def test_connected_components_path_graph(spark):
         [(i, i + 1) for i in range(n - 1)], ["id_a", "id_b"]
     )
     nodes = spark.createDataFrame([(i,) for i in range(n)], ["_id"])
-    got = {
-        r["_id"]: r["component"]
-        for r in connected_components(
-            edges, nodes, max_iter=20, checkpoint_every=4
-        ).collect()
-    }
-    assert got == {i: 0 for i in range(n)}
+    for leg in twins:
+        got = {
+            r["_id"]: r["component"]
+            for r in connected_components(
+                edges, nodes, max_iter=20, checkpoint_every=4
+            ).collect()
+        }
+        assert got == {i: 0 for i in range(n)}, leg
 
 
-def test_connected_components_raises_on_non_convergence(spark):
+def test_connected_components_raises_on_non_convergence(spark, twins):
     """A graph whose diameter exceeds max_iter must RAISE — silently
     returning truncated labels would split one duplicate group into
     several (ADVICE r2)."""
@@ -579,11 +581,29 @@ def test_connected_components_raises_on_non_convergence(spark):
         [(i, i + 1) for i in range(11)], ["id_a", "id_b"]
     )
     nodes = spark.createDataFrame([(i,) for i in range(12)], ["_id"])
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, nodes, max_iter=4)
+    for leg in twins:
+        with _pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(edges, nodes, max_iter=4)
 
 
-def test_connected_components_star_matches_iterative(spark):
+@pytest.mark.parametrize("flag", ["1", "0"])
+@pytest.mark.parametrize(
+    "op", ["connected_components", "pagerank", "label_propagation"]
+)
+def test_graph_ops_reject_checkpoint_every_below_one(spark, monkeypatch, op, flag):
+    """checkpoint_every < 1 is an input error on both legs: the
+    distributed loops would otherwise label every node its own
+    component or divide by zero."""
+    from spark_streaming_kafka2elasticsearch_spark.operators import dedup
+
+    monkeypatch.setenv("SPARK_GRAFT_TWINS", flag)
+    edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    nodes = spark.createDataFrame([(1,), (2,)], "_id long")
+    with pytest.raises(ValueError, match="checkpoint_every"):
+        getattr(dedup, op)(edges, nodes, checkpoint_every=0)
+
+
+def test_connected_components_star_matches_iterative(spark, twins):
     """Property test: large-star/small-star and min-label propagation
     agree on random sparse graphs (components, labels, isolated
     nodes) — and the star variant crushes a 40-deep path in its
@@ -605,27 +625,27 @@ def test_connected_components_star_matches_iterative(spark):
     )
     edges = spark.createDataFrame(edge_list, ["id_a", "id_b"])
     nodes = spark.createDataFrame([(i,) for i in range(n)], ["_id"])
-    star = {
-        r["_id"]: r["component"]
-        for r in connected_components_star(edges, nodes).collect()
-    }
-    iterative = {
-        r["_id"]: r["component"]
-        for r in connected_components(edges, nodes, max_iter=30).collect()
-    }
-    assert star == iterative
-
     deep = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], ["id_a", "id_b"]
     )
     deep_nodes = spark.createDataFrame([(i,) for i in range(41)], ["_id"])
-    got = {
-        r["_id"]: r["component"]
-        for r in connected_components_star(
-            deep, deep_nodes, max_iter=12
-        ).collect()
-    }
-    assert got == {i: 0 for i in range(41)}
+    for leg in twins:
+        star = {
+            r["_id"]: r["component"]
+            for r in connected_components_star(edges, nodes).collect()
+        }
+        iterative = {
+            r["_id"]: r["component"]
+            for r in connected_components(edges, nodes, max_iter=30).collect()
+        }
+        assert star == iterative, leg
+        got = {
+            r["_id"]: r["component"]
+            for r in connected_components_star(
+                deep, deep_nodes, max_iter=12
+            ).collect()
+        }
+        assert got == {i: 0 for i in range(41)}, leg
 
 
 def test_simhash_max_hamming_validation(spark):

@@ -523,11 +523,11 @@ def main() -> None:
         factors = [
             int(x) for x in sys.argv[sys.argv.index("--factors") + 1].split(",")
         ]
-    # --env K=V[,K=V...]: set kill switches before the session builds —
+    # --env K=V[,K=V...]: set env vars before the session builds —
     # the DISTRIBUTED-leg probe (VERDICT r14 item 3: the driver-side
     # twins removed the distributed iterative-graph path from bench
     # coverage; this leg keeps standing scale evidence for it, e.g.
-    #   --env SPARK_GRAFT_CC_LOCAL=0 --suffix _dist
+    #   --env SPARK_GRAFT_TWINS=0 --suffix _dist
     # probes the real per-round join loops).  --suffix tags the JSON
     # rows so twin-path and distributed-path evidence coexist.
     suffix = ""
