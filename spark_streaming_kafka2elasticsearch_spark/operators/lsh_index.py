@@ -56,8 +56,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -244,17 +242,17 @@ def minhash_lsh_delete(
     The touched parts are computed from the DELETION IDS alone (the
     same ``pmod(xxhash64(id), n_parts)`` the writer used — no index
     scan), so the read is partition-pruned to ``min(|Δ|, n_parts)``
-    directories; each is rewritten without the deleted rows via
-    dynamic partition overwrite, and a partition the rewrite EMPTIED
-    is rmtree'd explicitly (dynamic overwrite writes nothing for an
-    absent partition, so its stale files would keep serving ghosts —
-    the ivf_persisted_delete trap).  Unknown ids are harmless: their
-    part is rewritten without change.  Post-delete derivations equal
+    directories; each is rewritten without the deleted rows by
+    :func:`sources.writer.erase_partitions`, which also removes a
+    partition the rewrite EMPTIED (dynamic overwrite writes nothing
+    for an absent partition, so its stale files would keep serving
+    ghosts — the ivf_persisted_delete trap).  Unknown ids are
+    harmless: their part is rewritten without change.  Post-delete derivations equal
     a rebuild over the survivors — band rows are independent per
     document, so removing a doc's rows is exactly what the rebuild
     never computes."""
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        overwrite_partitions,
+        erase_partitions,
     )
 
     meta = _read_meta(path)
@@ -273,22 +271,14 @@ def minhash_lsh_delete(
         return []
     for sub in (_SIG_DIR, _BAND_DIR):
         subdir = os.path.join(path, sub)
-        scoped = spark.read.parquet(subdir).filter(
-            F.col("part").isin(touched)
+        erase_partitions(
+            spark.read.parquet(subdir),
+            subdir,
+            ["part"],
+            touched,
+            dele.select("doc_id"),
+            "doc_id",
         )
-        remaining = scoped.join(
-            dele.select("doc_id"), "doc_id", "left_anti"
-        ).localCheckpoint(eager=True)
-        if not remaining.isEmpty():
-            overwrite_partitions(remaining, subdir, ["part"])
-        kept = {
-            int(r["part"])
-            for r in remaining.select("part").distinct().collect()
-        }
-        for p in set(touched) - kept:
-            shutil.rmtree(
-                os.path.join(subdir, f"part={p}"), ignore_errors=True
-            )
     if new_fingerprint is not None:
         meta["fingerprint"] = new_fingerprint
         _write_meta(path, meta)

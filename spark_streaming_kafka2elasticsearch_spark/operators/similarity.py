@@ -477,12 +477,13 @@ def _cell_assign_arrow_or_none(
       +inf, cid ASC); the kernel sorts with an explicit
       (isnull, notnan, -sim, cid) lexsort so NaN outranks a true
       +inf instead of tying with it.
-    * degenerate rows — a NULL vector, NULL element, NaN element,
-      zero norm, or length-mismatched vector poisons ALL c sims
-      UNIFORMLY in both engines (every centroid pairing degrades the
-      same way), so the ranking collapses to the cid-ascending
-      tie-break in both; the kernel detects those rows via the Arrow
-      offsets/validity and emits ``sorted(cids)[:n_probe]`` directly.
+    * degenerate rows — in Catalyst a NULL vector, a NULL element or
+      a length-mismatched vector makes every sim NULL, so the ranking
+      collapses to the cid-ascending tie-break; the kernel finds those
+      rows via the Arrow offsets and validity bitmaps and emits
+      ``sorted(cids)[:n_probe]`` for them directly.  A NaN element
+      makes every sim NaN and a zero-norm row every sim NULL, in both
+      engines alike, so the sort itself collapses to the same order.
     """
     if not twins.enabled():
         return None
@@ -552,11 +553,17 @@ def _cell_assign_arrow_or_none(
             good = valid & (lens == cdim)
             # .values (the raw child array) stays aligned with the raw
             # offsets above even for sliced arrays, where .flatten()
-            # would rebase; element-level NULLs surface as NaN, which
-            # poisons a row uniformly exactly like the Catalyst fold's
-            # NULL algebra (see the degenerate-rows contract above).
+            # would rebase.
+            vals = vcol.values
+            if vals.null_count:
+                # a row with a NULL element takes the all-tied fallback
+                # (its Catalyst sims are all NULL)
+                nulls = np.concatenate(
+                    ([0], np.cumsum(vals.is_null().to_numpy(zero_copy_only=False)))
+                )
+                good &= nulls[offs[1:]] == nulls[offs[:-1]]
             flat = (
-                vcol.values.to_numpy(zero_copy_only=False)
+                vals.to_numpy(zero_copy_only=False)
                 .astype(np.float64)  # exact IEEE widening, = the cast
             )
             probe_rows = np.empty((n_rows, take), dtype=np.int64)
@@ -3689,9 +3696,9 @@ def ivf_persisted_delete(
     deleted id (the id→cell lookup is an inner join against the
     index — cost |index ∩ Δ|, and at 100 TB the deleted ids' cells
     are the only directories touched); those cell partitions are
-    atomically rewritten via dynamic partition overwrite with the
-    deleted rows anti-joined out, and a cell whose LAST row is deleted
-    has its directory removed explicitly (dynamic overwrite only
+    rewritten without the deleted rows by
+    :func:`sources.writer.erase_partitions`, which also removes every
+    (sub)partition and cell the delete emptied (dynamic overwrite only
     replaces partitions present in the written data — an emptied
     partition would otherwise silently keep its old files: the
     empty-partition trap).  Untouched cells keep their files
@@ -3712,11 +3719,8 @@ def ivf_persisted_delete(
     siblings and kept serving under the pre-delete fingerprint).
 
     Returns the list of touched cell ids (the compact() convention)."""
-    import os
-    import shutil
-
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        overwrite_partitions,
+        erase_partitions,
     )
 
     ss = spark or deleted_ids.sparkSession
@@ -3734,50 +3738,14 @@ def ivf_persisted_delete(
     if not touched:
         _ivf_meta_restamp(path, new_fingerprint)
         return []
-    two_level = "batch_id" in index.columns
-    remaining = (
-        index.filter(F.col("cell").isin(touched))
-        .join(F.broadcast(dele), "neighbor_id", "left_anti")
-        # Materialize BEFORE the overwrite: the remaining-rows plan
-        # READS the cell files it is about to replace (the
-        # self-overwrite trap).
-        .localCheckpoint(eager=True)
+    erase_partitions(
+        index,
+        path,
+        ["cell", "batch_id"] if "batch_id" in index.columns else ["cell"],
+        touched,
+        F.broadcast(dele),
+        "neighbor_id",
     )
-    # Old partition inventory, captured BEFORE the overwrite mutates
-    # the directory tree (`index` is a lazy plan over `path`).
-    if two_level:
-        old_parts = {
-            (int(r["cell"]), int(r["batch_id"]))
-            for r in index.filter(F.col("cell").isin(touched))
-            .select("cell", "batch_id")
-            .distinct()
-            .collect()
-        }
-    if not remaining.isEmpty():
-        overwrite_partitions(
-            remaining,
-            path,
-            ["cell", "batch_id"] if two_level else ["cell"],
-        )
-    # Empty-partition sweep: a (sub)partition whose last row was
-    # deleted is absent from `remaining`, so the dynamic overwrite
-    # never replaced it — remove its directory explicitly.
-    if two_level:
-        kept = {
-            (int(r["cell"]), int(r["batch_id"]))
-            for r in remaining.select("cell", "batch_id").distinct().collect()
-        }
-        for cell, bid in old_parts - kept:
-            shutil.rmtree(
-                os.path.join(path, f"cell={cell}", f"batch_id={bid}"),
-                ignore_errors=True,
-            )
-    kept_cells = {
-        int(r["cell"]) for r in remaining.select("cell").distinct().collect()
-    }
-    for cell in touched:
-        if cell not in kept_cells:
-            shutil.rmtree(os.path.join(path, f"cell={cell}"), ignore_errors=True)
     _ivf_meta_restamp(path, new_fingerprint)
     return touched
 
@@ -5948,7 +5916,9 @@ def _srp_buckets_kernel_or_none(
       products) — the kernel zeroes exactly the null positions;
       genuine NaN values poison the dot to NaN → bit 0 in both
       (``NaN >= 0`` is false in numpy; Catalyst's ``>=`` on NaN dot
-      is false too).
+      is false too).  A vector whose (dot-range) elements are ALL
+      NULL sums to a NULL dot on every plane, so the fallback's bucket
+      is NULL and joins nothing: the kernel emits no rows for it.
     * a NULL vector emits no rows (posexplode of NULL); a
       length-deviant vector dots over the overlapping component range
       (the ``_j`` equi-join's semantics) — handled per row.
@@ -6004,9 +5974,18 @@ def _srp_buckets_kernel_or_none(
             )
             vals_arr = vcol.values
             flat = vals_arr.to_numpy(zero_copy_only=False).astype(np.float64)
+            # the dot runs over the first min(len, kdim) elements; a
+            # vector whose elements there are all NULL has a NULL dot on
+            # every plane, so like the fallback it emits no rows
+            dot_lens = np.minimum(lens, kdim)
             if vals_arr.null_count:
                 nullpos = vals_arr.is_null().to_numpy(zero_copy_only=False)
                 flat = np.where(nullpos, 0.0, flat)
+                nulls = np.concatenate(([0], np.cumsum(nullpos)))
+                all_null = (
+                    nulls[offs[:-1] + dot_lens] - nulls[offs[:-1]]
+                ) == dot_lens
+                valid = valid & ~all_null
             good = valid & (lens == kdim)
             out_id = []
             out_tb = []
@@ -6031,8 +6010,7 @@ def _srp_buckets_kernel_or_none(
             odd = valid & (lens != kdim) & (lens > 0)
             if odd.any():
                 for i in np.flatnonzero(odd):
-                    L = int(lens[i])
-                    row = flat[offs[i]: offs[i] + min(L, kdim)]
+                    row = flat[offs[i]: offs[i] + dot_lens[i]]
                     dots = row @ signs_t[: len(row)]
                     with np.errstate(invalid="ignore"):
                         bits = dots >= 0.0

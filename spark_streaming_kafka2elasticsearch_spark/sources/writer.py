@@ -18,9 +18,13 @@ DataFrameWriter options; the value is encoding the layout decisions
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import os
+import shutil
+import uuid
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def write_table(
@@ -118,8 +122,6 @@ def compact_partitions(
     preserved — dynamic overwrite only replaces partition dirs.
 
     Returns the list of partition values that were compacted."""
-    import os
-
     prefix = f"{partition_col}="
     oversized = []
     for entry in sorted(os.listdir(path)):
@@ -150,6 +152,122 @@ def compact_partitions(
     return oversized
 
 
+def _aside(path: str) -> str:
+    return f"{path.rstrip('/')}__swap_old"
+
+
+def _settle_swap(path: str) -> None:
+    """Finish or undo a :func:`swap_table` a crash interrupted.  With
+    the old table still aside and no table in place the crash came
+    between the two renames: the old table goes back.  With both in
+    place the new table had landed: the old one is deleted."""
+    aside = _aside(path)
+    if not os.path.exists(aside):
+        return
+    if os.path.exists(path):
+        shutil.rmtree(aside)
+    else:
+        os.rename(aside, path)
+
+
+def read_table(spark, path: str) -> DataFrame | None:
+    """The parquet table at ``path``, or None when there is none —
+    after settling any swap a crash interrupted, so a replayed epoch
+    always reads the last committed table."""
+    _settle_swap(path)
+    if not os.path.exists(path):
+        return None
+    return spark.read.parquet(path)
+
+
+def swap_table(
+    df: DataFrame, path: str, partition_by: Sequence[str] = ()
+) -> None:
+    """Replace the table at ``path`` with ``df``: write to a staging
+    directory, rename the old table aside under one fixed name, rename
+    the staged table in, then delete the old one.  ``df`` may read the
+    table it replaces — the staged write finishes before either rename.
+
+    No instant leaves the data lost: a crash before the first rename
+    keeps the old table, one between the renames leaves it aside, and
+    one after the second rename leaves the new table in place.
+    :func:`read_table` settles the last two cases before it answers.
+    The staging directory of a crashed write is left behind (its name
+    is unique per call)."""
+    _settle_swap(path)
+    tmp = f"{path.rstrip('/')}__tmp_{uuid.uuid4().hex}"
+    write_table(df, tmp, partition_by=partition_by)
+    aside = _aside(path)
+    if os.path.exists(path):
+        os.rename(path, aside)
+    os.rename(tmp, path)
+    if os.path.exists(aside):
+        shutil.rmtree(aside)
+
+
+def erase_partitions(
+    table: DataFrame,
+    path: str,
+    partition_by: Sequence[str],
+    touched: Iterable,
+    deleted: DataFrame,
+    id_col: str,
+) -> None:
+    """Delete the ``deleted`` ids from a hive-partitioned table,
+    rewriting only the partitions under the ``touched`` values of the
+    first partition column — the erasure primitive of every at-rest
+    layout with deletes (IVF cells, LSH parts, landed stream corpora).
+
+    ``table`` is the table read from ``path``; the caller finds
+    ``touched`` its own way (a semi-join against the ids, or a hash of
+    them).  The surviving rows of those partitions are materialized
+    (the rewrite would otherwise read the files it replaces) and
+    written back by dynamic partition overwrite.  Dynamic overwrite
+    writes nothing for a partition that lost its last row, so every
+    partition directory the rewrite emptied is removed explicitly, and
+    so is a parent directory left with no partition under it.
+    Partitions outside ``touched`` keep their files byte-identical.
+    Directory names are ``col=value`` with ``str(value)``, as Spark
+    writes integer partition values."""
+    touched = sorted(touched)
+    if not touched:
+        return
+    top = partition_by[0]
+    remaining = (
+        table.filter(F.col(top).isin(touched))
+        .join(deleted, id_col, "left_anti")
+        .localCheckpoint(eager=True)
+    )
+    if not remaining.isEmpty():
+        overwrite_partitions(remaining, path, partition_by)
+    kept = {
+        os.path.join(*[f"{c}={r[c]}" for c in partition_by])
+        for r in remaining.select(*partition_by).distinct().collect()
+    }
+    for value in touched:
+        _drop_emptied(path, f"{top}={value}", partition_by[1:], kept)
+
+
+def _drop_emptied(
+    root: str, rel: str, rest: Sequence[str], kept: set[str]
+) -> None:
+    """Remove the partition directory ``root/rel`` if no kept
+    partition lies at or under it, recursing level by level."""
+    full = os.path.join(root, rel)
+    if not os.path.isdir(full):
+        return
+    if rest:
+        prefix = f"{rest[0]}="
+        for entry in os.listdir(full):
+            if entry.startswith(prefix):
+                _drop_emptied(root, os.path.join(rel, entry), rest[1:], kept)
+        if any(e.startswith(prefix) for e in os.listdir(full)):
+            return
+    elif rel in kept:
+        return
+    shutil.rmtree(full, ignore_errors=True)
+
+
 def compact_table(
     spark,
     path: str,
@@ -163,21 +281,15 @@ def compact_table(
     scan planning (footer reads, task scheduling) dominates query
     time; periodic compaction is standard hygiene.  Uses a fresh read
     + repartition so the rewrite is one shuffle-free-if-coalescable
-    pass, staged through a temp dir then atomically swapped via
-    rename (a direct overwrite of the path being read would truncate
-    the input mid-scan)."""
-    import shutil
-    import uuid
-
+    pass, landed through :func:`swap_table` (a direct overwrite of the
+    path being read would truncate the input mid-scan)."""
     if target_files < 1:
         raise ValueError("target_files must be >= 1")
-    df = spark.read.parquet(path)
-    tmp = f"{path.rstrip('/')}.__compact_{uuid.uuid4().hex[:8]}"
+    df = read_table(spark, path)
+    if df is None:
+        raise FileNotFoundError(f"no table at {path}")
     if partition_by:
         out = df.repartition(target_files, *[df[c] for c in partition_by])
-        out.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
     else:
         out = df.repartition(target_files)
-        out.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
+    swap_table(out, path, partition_by)

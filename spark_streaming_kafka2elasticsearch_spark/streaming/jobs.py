@@ -25,6 +25,7 @@ from spark_streaming_kafka2elasticsearch_spark.operators.curate import (
 )
 from spark_streaming_kafka2elasticsearch_spark.operators.joins import enrich_stream_static
 from spark_streaming_kafka2elasticsearch_spark.operators.windows import tumbling_window_agg
+from spark_streaming_kafka2elasticsearch_spark.streaming.sinks import start_batches
 
 
 def orders_enrichment_stream(
@@ -81,24 +82,111 @@ def windowed_orders_stats_stream(
     )
 
 
-def _parse_doc_stream(spark: SparkSession, source: Any) -> DataFrame:
-    """Shared front-door parse for the document ingestion gates: the
-    source's ``value`` JSON column → (doc_id, lang, text).  ONE schema
-    definition for all four gates (exact-dup, near-dup, tokenize,
-    DSIR) so a document-envelope change cannot drift between them."""
-    from pyspark.sql import types as T
+#: Envelope schemas (DDL), one per envelope kind, so an envelope
+#: change cannot drift between the jobs that read it.
+DOC_SCHEMA = "doc_id BIGINT, lang STRING, text STRING"
+VEC_SCHEMA = "vec_id BIGINT, embedding ARRAY<DOUBLE>"
 
-    doc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
+
+def _parse_envelope(spark: SparkSession, source: Any, schema: str) -> DataFrame:
+    """The one envelope parse of every job below: the source's
+    ``value`` JSON column (string or binary) → the columns of
+    ``schema``."""
     return (
         source.load_stream(spark)
-        .select(F.from_json(F.col("value").cast("string"), doc_schema).alias("d"))
-        .select("d.*")
+        .select(F.from_json(F.col("value").cast("string"), schema).alias("e"))
+        .select("e.*")
+    )
+
+
+def _first_seen_docs(
+    parsed: DataFrame,
+    min_tokens: int,
+    min_alpha_ratio: float,
+    value_cols: list[str],
+) -> DataFrame:
+    """The exact-dup front-door stage: quality gate → canonical
+    fingerprint → cross-batch first-seen dedup on the fingerprint
+    (``applyInPandasWithState``), keeping ``value_cols``."""
+    from spark_streaming_kafka2elasticsearch_spark.operators.text import (
+        document_fingerprint,
+        text_quality,
+    )
+    from spark_streaming_kafka2elasticsearch_spark.streaming.stateful import (
+        streaming_first_seen,
+    )
+
+    quality = text_quality(parsed).filter(
+        (F.col("n_tokens") >= min_tokens) & (F.col("alpha_ratio") >= min_alpha_ratio)
+    )
+    return streaming_first_seen(
+        document_fingerprint(quality), key_col="fingerprint", value_cols=value_cols
+    )
+
+
+def _near_dup_survivors(
+    batch: DataFrame,
+    corpus: DataFrame,
+    min_jaccard: float,
+    max_doc_freq: int | None,
+) -> DataFrame:
+    """The near-dup screen: ``batch`` documents with NO near-dup in the
+    at-rest ``corpus`` at ``min_jaccard``."""
+    from spark_streaming_kafka2elasticsearch_spark.operators.dedup import (
+        delta_corpus_jaccard_pairs,
+    )
+
+    hits = delta_corpus_jaccard_pairs(
+        batch,
+        corpus,
+        id_col="doc_id",
+        block_cols=["lang"],
+        min_jaccard=min_jaccard,
+        max_doc_freq=max_doc_freq,
+    ).select(F.col("delta_id").alias("doc_id")).distinct()
+    return batch.join(hits, "doc_id", "left_anti")
+
+
+def _dsir_weights(weights: DataFrame, n_buckets: int) -> DataFrame:
+    """Materialize the DSIR weight table once at gate setup and check
+    its row count against ``n_buckets`` (see dsir_gate_stream)."""
+    weights = weights.localCheckpoint(eager=True)
+    n_w = weights.count()
+    if n_w != n_buckets:
+        raise ValueError(
+            f"weight table has {n_w} rows but n_buckets={n_buckets}; "
+            "the fit and the scorer must agree on the bucket count"
+        )
+    return weights
+
+
+def _dsir_keep(
+    batch: DataFrame, weights: DataFrame, n_buckets: int, min_logratio: float
+) -> DataFrame:
+    """The DSIR keep: ``batch`` documents scoring ``dsir_logratio ≥
+    min_logratio``, with ``n_feats`` and ``dsir_logratio`` joined on;
+    featureless documents have no score and never pass."""
+    from spark_streaming_kafka2elasticsearch_spark.operators.text import (
+        dsir_score_with_weights,
+    )
+
+    scored = dsir_score_with_weights(
+        batch, weights, id_col="doc_id", n_buckets=n_buckets
+    )
+    return batch.join(scored.filter(F.col("dsir_logratio") >= min_logratio), "doc_id")
+
+
+def _clean_vec_ids(vecs: DataFrame, evals: DataFrame, threshold: float) -> DataFrame:
+    """The semantic screen: ids of the ``(vec_id, embedding)`` rows no
+    eval vector contaminates at ``threshold`` cosine."""
+    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
+        semantic_contamination_flags,
+    )
+
+    return (
+        semantic_contamination_flags(vecs, evals, threshold=threshold)
+        .filter(~F.col("is_contaminated"))
+        .select("vec_id")
     )
 
 
@@ -121,22 +209,11 @@ def documents_ingest_stream(
     tests).  Downstream: any keyed sink; the fingerprint IS the
     idempotency key.
     """
-
-    from spark_streaming_kafka2elasticsearch_spark.operators.text import (
-        document_fingerprint,
-        text_quality,
-    )
-    from spark_streaming_kafka2elasticsearch_spark.streaming.stateful import (
-        streaming_first_seen,
-    )
-
-    parsed = _parse_doc_stream(spark, source)
-    quality = text_quality(parsed).filter(
-        (F.col("n_tokens") >= min_tokens) & (F.col("alpha_ratio") >= min_alpha_ratio)
-    )
-    printed = document_fingerprint(quality)
-    return streaming_first_seen(
-        printed, key_col="fingerprint", value_cols=["doc_id", "lang", "n_tokens"]
+    return _first_seen_docs(
+        _parse_envelope(spark, source, DOC_SCHEMA),
+        min_tokens,
+        min_alpha_ratio,
+        ["doc_id", "lang", "n_tokens"],
     )
 
 
@@ -172,28 +249,13 @@ def near_dup_gate_stream(
     Returns the started StreamingQuery (caller stops it).
     """
 
-    from spark_streaming_kafka2elasticsearch_spark.operators.dedup import (
-        delta_corpus_jaccard_pairs,
-    )
-
-    parsed = _parse_doc_stream(spark, source)
-
     def screen(batch: DataFrame, batch_id: int) -> None:
-        hits = delta_corpus_jaccard_pairs(
-            batch,
-            corpus,
-            id_col="doc_id",
-            block_cols=["lang"],
-            min_jaccard=min_jaccard,
-            max_doc_freq=max_doc_freq,
-        ).select(F.col("delta_id").alias("doc_id")).distinct()
-        survivors = batch.join(hits, "doc_id", "left_anti")
-        survivors.write.mode("append").parquet(sink_dir)
+        _near_dup_survivors(batch, corpus, min_jaccard, max_doc_freq).write.mode(
+            "append"
+        ).parquet(sink_dir)
 
-    return (
-        parsed.writeStream.foreachBatch(screen)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_batches(
+        _parse_envelope(spark, source, DOC_SCHEMA), screen, checkpoint_dir
     )
 
 
@@ -255,7 +317,6 @@ def lsh_gate_ingest_stream(
         overwrite_partitions,
     )
 
-    parsed = _parse_doc_stream(spark, source)
     corpus_dir = os.path.join(index_path, "corpus")
     sig_dir = os.path.join(index_path, "signatures")
 
@@ -302,10 +363,8 @@ def lsh_gate_ingest_stream(
         )
         minhash_lsh_append(index_path, survivors.select("doc_id", "text"))
 
-    return (
-        parsed.writeStream.foreachBatch(screen)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_batches(
+        _parse_envelope(spark, source, DOC_SCHEMA), screen, checkpoint_dir
     )
 
 
@@ -342,17 +401,13 @@ def tokenize_ingest_stream(
         bpe_encode_with_lexicon,
     )
 
-    parsed = _parse_doc_stream(spark, source)
-
     def encode(batch: DataFrame, batch_id: int) -> None:
         bpe_encode_with_lexicon(batch, lexicon).write.mode("append").parquet(
             sink_dir
         )
 
-    return (
-        parsed.writeStream.foreachBatch(encode)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_batches(
+        _parse_envelope(spark, source, DOC_SCHEMA), encode, checkpoint_dir
     )
 
 
@@ -397,36 +452,15 @@ def dsir_gate_stream(
 
     Returns the started StreamingQuery (caller stops it).
     """
-
-    from spark_streaming_kafka2elasticsearch_spark.operators.text import (
-        dsir_score_with_weights,
-    )
-
-    weights = weights.localCheckpoint(eager=True)
-    n_w = weights.count()
-    if n_w != n_buckets:
-        raise ValueError(
-            f"weight table has {n_w} rows but n_buckets={n_buckets}; "
-            "the fit and the scorer must agree on the bucket count"
-        )
-
-    parsed = _parse_doc_stream(spark, source)
+    weights = _dsir_weights(weights, n_buckets)
 
     def score_and_gate(batch: DataFrame, batch_id: int) -> None:
-        scored = dsir_score_with_weights(
-            batch, weights, id_col="doc_id", n_buckets=n_buckets
-        )
-        kept = batch.join(
-            scored.filter(F.col("dsir_logratio") >= min_logratio), "doc_id"
-        )
-        kept.select(
+        _dsir_keep(batch, weights, n_buckets, min_logratio).select(
             "doc_id", "lang", "text", "n_feats", "dsir_logratio"
         ).write.mode("append").parquet(sink_dir)
 
-    return (
-        parsed.writeStream.foreachBatch(score_and_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_batches(
+        _parse_envelope(spark, source, DOC_SCHEMA), score_and_gate, checkpoint_dir
     )
 
 
@@ -474,8 +508,6 @@ def kn_perplexity_gate_stream(
             "empty KN model — fit kn_bigram_model on a non-trivial corpus"
         )
 
-    parsed = _parse_doc_stream(spark, source)
-
     def score_and_gate(batch: DataFrame, batch_id: int) -> None:
         scored = kn_doc_scores(batch, model, id_col="doc_id")
         kept = batch.join(
@@ -485,30 +517,8 @@ def kn_perplexity_gate_stream(
             "doc_id", "lang", "text", "n_bigrams", "n_oov", "kn_nll"
         ).write.mode("append").parquet(sink_dir)
 
-    return (
-        parsed.writeStream.foreachBatch(score_and_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def _parse_vec_stream(spark: SparkSession, source: Any) -> DataFrame:
-    """Front-door parse for EMBEDDING ingestion gates: the source's
-    ``value`` JSON column → (vec_id, embedding array<double>).  The
-    vector twin of ``_parse_doc_stream`` — one schema definition so an
-    embedding-envelope change cannot drift between gates."""
-    from pyspark.sql import types as T
-
-    vec_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    return (
-        source.load_stream(spark)
-        .select(F.from_json(F.col("value").cast("string"), vec_schema).alias("v"))
-        .select("v.*")
+    return start_batches(
+        _parse_envelope(spark, source, DOC_SCHEMA), score_and_gate, checkpoint_dir
     )
 
 
@@ -544,28 +554,16 @@ def semantic_decon_gate_stream(
 
     Returns the started StreamingQuery (caller stops it).
     """
-
-    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
-        semantic_contamination_flags,
-    )
-
     evals = evals.localCheckpoint(eager=True)
-    parsed = _parse_vec_stream(spark, source)
 
     def screen(batch: DataFrame, batch_id: int) -> None:
-        clean = (
-            semantic_contamination_flags(batch, evals, threshold=threshold)
-            .filter(~F.col("is_contaminated"))
-            .select("vec_id")
-        )
+        clean = _clean_vec_ids(batch, evals, threshold)
         batch.join(clean, "vec_id", "left_semi").write.mode("append").parquet(
             sink_dir
         )
 
-    return (
-        parsed.writeStream.foreachBatch(screen)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_batches(
+        _parse_envelope(spark, source, VEC_SCHEMA), screen, checkpoint_dir
     )
 
 
@@ -608,17 +606,14 @@ def ivf_index_maintenance_stream(
     )
 
     cents = centroids.localCheckpoint(eager=True)
-    parsed = _parse_vec_stream(spark, source)
 
     def append(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
         ivf_persisted_append(batch, cents, index_path, batch_id=batch_id)
 
-    return (
-        parsed.writeStream.foreachBatch(append)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_batches(
+        _parse_envelope(spark, source, VEC_SCHEMA), append, checkpoint_dir
     )
 
 
@@ -671,7 +666,6 @@ def knn_graph_maintenance_stream(
     )
 
     cents = centroids.localCheckpoint(eager=True)
-    parsed = _parse_vec_stream(spark, source)
     corpus_dir = os.path.join(graph_path, "corpus")
     edges_dir = os.path.join(graph_path, "edges")
 
@@ -708,10 +702,8 @@ def knn_graph_maintenance_stream(
             ["batch_id"],
         )
 
-    return (
-        parsed.writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_batches(
+        _parse_envelope(spark, source, VEC_SCHEMA), maintain, checkpoint_dir
     )
 
 
@@ -767,7 +759,6 @@ def descent_graph_maintenance_stream(
         overwrite_partitions,
     )
 
-    parsed = _parse_vec_stream(spark, source)
     corpus_dir = os.path.join(graph_path, "corpus")
     edges_dir = os.path.join(graph_path, "edges")
 
@@ -848,10 +839,8 @@ def descent_graph_maintenance_stream(
             ["batch_id"],
         )
 
-    return (
-        parsed.writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_batches(
+        _parse_envelope(spark, source, VEC_SCHEMA), maintain, checkpoint_dir
     )
 
 
@@ -876,8 +865,8 @@ def descent_graph_erasure_stream(
     ``edges/`` stamped): deleted sources drop, touched sources
     re-rank against survivors, untouched rows carry verbatim — then
     ONLY the corpus partitions containing a deleted id are rewritten
-    (dynamic partition overwrite + the emptied-partition rmtree, the
-    ivf_persisted_delete surgery).
+    (sources/writer.erase_partitions, the surgery ivf_persisted_delete
+    uses too).
 
     Replay idempotency: ids already absent from the corpus are
     dropped by an anti-join (a redelivered or unknown id is a no-op),
@@ -902,25 +891,14 @@ def descent_graph_erasure_stream(
 
     Returns the started StreamingQuery (caller stops it)."""
     import os
-    import shutil
-
-    from pyspark.sql import types as T
 
     from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
         nn_descent_delete,
     )
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        overwrite_partitions,
+        erase_partitions,
     )
 
-    id_schema = T.StructType([T.StructField("vec_id", T.LongType())])
-    parsed = (
-        source.load_stream(spark)
-        .select(
-            F.from_json(F.col("value").cast("string"), id_schema).alias("v")
-        )
-        .select("v.*")
-    )
     corpus_dir = os.path.join(graph_path, "corpus")
     edges_dir = os.path.join(graph_path, "edges")
 
@@ -973,27 +951,10 @@ def descent_graph_erasure_stream(
             .distinct()
             .collect()
         }
-        remaining = (
-            corpus.filter(F.col("batch_id").isin(sorted(touched)))
-            .join(dele, "vec_id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if not remaining.isEmpty():
-            overwrite_partitions(remaining, corpus_dir, ["batch_id"])
-        kept = {
-            int(r["batch_id"])
-            for r in remaining.select("batch_id").distinct().collect()
-        }
-        for bid in touched - kept:
-            shutil.rmtree(
-                os.path.join(corpus_dir, f"batch_id={bid}"),
-                ignore_errors=True,
-            )
+        erase_partitions(corpus, corpus_dir, ["batch_id"], touched, dele, "vec_id")
 
-    return (
-        parsed.writeStream.foreachBatch(erase)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_batches(
+        _parse_envelope(spark, source, "vec_id BIGINT"), erase, checkpoint_dir
     )
 
 
@@ -1033,7 +994,7 @@ def bm25_index_maintenance_stream(
         bm25_index_reconcile,
     )
 
-    parsed = _parse_doc_stream(spark, source)
+    parsed = _parse_envelope(spark, source, DOC_SCHEMA)
     bm25_index_reconcile(spark, index_path)
 
     def fold(batch: DataFrame, batch_id: int) -> None:
@@ -1042,11 +1003,7 @@ def bm25_index_maintenance_stream(
             return
         bm25_index_append(index_path, batch.select("doc_id", "text"))
 
-    return (
-        parsed.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return start_batches(parsed, fold, checkpoint_dir)
 
 
 def bm25_index_erasure_stream(
@@ -1068,21 +1025,12 @@ def bm25_index_erasure_stream(
     squares the counters before new batches flow.
 
     Returns the started StreamingQuery."""
-    from pyspark.sql import types as T
-
     from spark_streaming_kafka2elasticsearch_spark.operators.bm25_index import (
         bm25_index_delete,
         bm25_index_reconcile,
     )
 
-    id_schema = T.StructType([T.StructField("doc_id", T.LongType())])
-    parsed = (
-        source.load_stream(spark)
-        .select(
-            F.from_json(F.col("value").cast("string"), id_schema).alias("v")
-        )
-        .select("v.*")
-    )
+    parsed = _parse_envelope(spark, source, "doc_id BIGINT")
     bm25_index_reconcile(spark, index_path)
 
     def erase(batch: DataFrame, batch_id: int) -> None:
@@ -1091,11 +1039,7 @@ def bm25_index_erasure_stream(
             return
         bm25_index_delete(spark, index_path, batch.select("doc_id"))
 
-    return (
-        parsed.writeStream.foreachBatch(erase)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return start_batches(parsed, erase, checkpoint_dir)
 
 
 def kn_lm_index_maintenance_stream(
@@ -1128,7 +1072,6 @@ def kn_lm_index_maintenance_stream(
         overwrite_partitions,
     )
 
-    parsed = _parse_doc_stream(spark, source)
     corpus_dir = os.path.join(index_path, "corpus")
 
     def fold(batch: DataFrame, batch_id: int) -> None:
@@ -1158,10 +1101,8 @@ def kn_lm_index_maintenance_stream(
             )
         kn_index_append(index_path, batch.select("doc_id", "text"))
 
-    return (
-        parsed.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_batches(
+        _parse_envelope(spark, source, DOC_SCHEMA), fold, checkpoint_dir
     )
 
 
@@ -1181,8 +1122,8 @@ def kn_lm_index_erasure_stream(
     ``static_corpus`` for documents indexed before the stream — then
     :func:`kn_index_delete` appends the negative segment, and LAST
     the landed corpus partitions holding the erased ids are
-    surgically rewritten (dynamic overwrite + emptied-partition
-    rmtree) so the text itself is gone.  That ordering is the GDPR
+    surgically rewritten (sources/writer.erase_partitions) so the
+    text itself is gone.  That ordering is the GDPR
     ordering — read, negate, then destroy — and makes replay safe:
     the removed-table gate turns a redelivered id into a count no-op,
     while the corpus surgery (idempotent by keying) always re-runs to
@@ -1191,25 +1132,14 @@ def kn_lm_index_erasure_stream(
 
     Returns the started StreamingQuery."""
     import os
-    import shutil
-
-    from pyspark.sql import types as T
 
     from spark_streaming_kafka2elasticsearch_spark.operators.lm_index import (
         kn_index_delete,
     )
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        overwrite_partitions,
+        erase_partitions,
     )
 
-    id_schema = T.StructType([T.StructField("doc_id", T.LongType())])
-    parsed = (
-        source.load_stream(spark)
-        .select(
-            F.from_json(F.col("value").cast("string"), id_schema).alias("v")
-        )
-        .select("v.*")
-    )
     corpus_dir = os.path.join(index_path, "corpus")
 
     def erase(batch: DataFrame, batch_id: int) -> None:
@@ -1242,29 +1172,10 @@ def kn_lm_index_erasure_stream(
             .distinct()
             .collect()
         }
-        if not touched:
-            return
-        remaining = (
-            landed.filter(F.col("batch_id").isin(sorted(touched)))
-            .join(batch, "doc_id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if not remaining.isEmpty():
-            overwrite_partitions(remaining, corpus_dir, ["batch_id"])
-        kept = {
-            int(r["batch_id"])
-            for r in remaining.select("batch_id").distinct().collect()
-        }
-        for bid in touched - kept:
-            shutil.rmtree(
-                os.path.join(corpus_dir, f"batch_id={bid}"),
-                ignore_errors=True,
-            )
+        erase_partitions(landed, corpus_dir, ["batch_id"], touched, batch, "doc_id")
 
-    return (
-        parsed.writeStream.foreachBatch(erase)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_batches(
+        _parse_envelope(spark, source, "doc_id BIGINT"), erase, checkpoint_dir
     )
 
 
@@ -1343,32 +1254,14 @@ def front_door_stream(
     """
     import os
 
-    from spark_streaming_kafka2elasticsearch_spark.operators.dedup import (
-        delta_corpus_jaccard_pairs,
-    )
-    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
-        semantic_contamination_flags,
-    )
     from spark_streaming_kafka2elasticsearch_spark.operators.text import (
         bpe_encode_with_lexicon,
-        document_fingerprint,
-        dsir_score_with_weights,
-        text_quality,
-    )
-    from spark_streaming_kafka2elasticsearch_spark.streaming.stateful import (
-        streaming_first_seen,
     )
 
     # Static artifacts materialize ONCE at gate setup (the dsir_gate /
     # semantic_gate discipline): a lazy relation would re-derive them
     # inside every micro-batch.
-    weights = weights.localCheckpoint(eager=True)
-    n_w = weights.count()
-    if n_w != n_buckets:
-        raise ValueError(
-            f"weight table has {n_w} rows but n_buckets={n_buckets}; "
-            "the fit and the scorer must agree on the bucket count"
-        )
+    weights = _dsir_weights(weights, n_buckets)
     evals = evals.localCheckpoint(eager=True)
     doc_embeddings = doc_embeddings.localCheckpoint(eager=True)
     if (ivf_index_path is None) != (ivf_centroids is None):
@@ -1378,50 +1271,22 @@ def front_door_stream(
     if ivf_centroids is not None:
         ivf_centroids = ivf_centroids.localCheckpoint(eager=True)
 
-    parsed = _parse_doc_stream(spark, source)
-    quality = text_quality(parsed).filter(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("alpha_ratio") >= min_alpha_ratio)
-    )
-    deduped = streaming_first_seen(
-        document_fingerprint(quality),
-        key_col="fingerprint",
-        value_cols=["doc_id", "lang", "text", "n_tokens"],
+    deduped = _first_seen_docs(
+        _parse_envelope(spark, source, DOC_SCHEMA),
+        min_tokens,
+        min_alpha_ratio,
+        ["doc_id", "lang", "text", "n_tokens"],
     )
 
     def gates(batch: DataFrame, batch_id: int) -> None:
-        # near-dup vs the at-rest corpus
-        hits = (
-            delta_corpus_jaccard_pairs(
-                batch,
-                corpus,
-                id_col="doc_id",
-                block_cols=["lang"],
-                min_jaccard=min_jaccard,
-                max_doc_freq=max_doc_freq,
-            )
-            .select(F.col("delta_id").alias("doc_id"))
-            .distinct()
-        )
-        survivors = batch.join(hits, "doc_id", "left_anti")
-        # DSIR relevance
-        scored = dsir_score_with_weights(
-            survivors, weights, id_col="doc_id", n_buckets=n_buckets
-        )
-        survivors = survivors.join(
-            scored.filter(F.col("dsir_logratio") >= min_logratio).select(
-                "doc_id", "dsir_logratio"
-            ),
-            "doc_id",
-        )
+        survivors = _near_dup_survivors(batch, corpus, min_jaccard, max_doc_freq)
+        survivors = _dsir_keep(survivors, weights, n_buckets, min_logratio)
         # semantic decontamination (fail closed on missing embedding)
         vecs = survivors.select("doc_id").join(doc_embeddings, "doc_id").select(
             F.col("doc_id").alias("vec_id"), "embedding"
         )
-        clean = (
-            semantic_contamination_flags(vecs, evals, threshold=threshold)
-            .filter(~F.col("is_contaminated"))
-            .select(F.col("vec_id").alias("doc_id"))
+        clean = _clean_vec_ids(vecs, evals, threshold).select(
+            F.col("vec_id").alias("doc_id")
         )
         survivors = survivors.join(clean, "doc_id", "left_semi")
         # land survivors + their tokenization, replay-idempotently:
@@ -1467,12 +1332,7 @@ def front_door_stream(
                 surv_vecs, ivf_centroids, ivf_index_path, batch_id=batch_id
             )
 
-    return (
-        deduped.writeStream.foreachBatch(gates)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return start_batches(deduped, gates, checkpoint_dir)
 
 
 def gated_attribution_stream(
@@ -1519,8 +1379,6 @@ def gated_attribution_stream(
     """
     import os
 
-    from pyspark.sql import types as T
-
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
         overwrite_partitions,
     )
@@ -1528,20 +1386,10 @@ def gated_attribution_stream(
         streaming_first_seen,
     )
 
-    ev_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("ts_us", T.LongType()),
-        ]
-    )
-    parsed = (
-        events_source.load_stream(spark)
-        .select(
-            F.from_json(F.col("value").cast("string"), ev_schema).alias("e")
-        )
-        .select("e.*")
+    parsed = _parse_envelope(
+        spark,
+        events_source,
+        "event_id BIGINT, user_id BIGINT, event_type STRING, ts_us BIGINT",
     )
     valid = parsed.filter(
         F.col("event_id").isNotNull()
@@ -1606,12 +1454,7 @@ def gated_attribution_stream(
             ["batch_id"],
         )
 
-    return (
-        survivors.writeStream.foreachBatch(attribute)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return start_batches(survivors, attribute, checkpoint_dir)
 
 
 _INTERVAL_UNITS_US = {
@@ -1692,25 +1535,10 @@ def attribution_stream(
     user_id, click_id, secs_before) — a pytest pins streaming ≡ batch
     over multi-file replays.
     """
-    from pyspark.sql import types as T
-
-    ev_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-        ]
-    )
-
     def parse(source: Any) -> DataFrame:
-        return (
-            source.load_stream(spark)
-            .select(
-                F.from_json(F.col("value").cast("string"), ev_schema).alias("e")
-            )
-            .select("e.*")
-            .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-        )
+        return _parse_envelope(
+            spark, source, "event_id BIGINT, user_id BIGINT, ts_us BIGINT"
+        ).withColumn("ts", F.timestamp_micros(F.col("ts_us")))
 
     clicks = (
         parse(clicks_source)

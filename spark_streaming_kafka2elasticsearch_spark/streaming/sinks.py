@@ -25,15 +25,18 @@ test double, not the scale path, and says so loudly.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
+    read_table,
+    swap_table,
+)
 
 
 def start_console_sink(
@@ -53,15 +56,57 @@ def start_console_sink(
     )
 
 
+def start_batches(
+    stream: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    query_name: str | None = None,
+) -> StreamingQuery:
+    """K3 — the one micro-batch start every job and sink uses:
+    ``foreachBatch(fn)`` + queryName + start (reference ``:521-531``),
+    with the checkpoint location (K4) on the stream writer where it
+    belongs (the reference quirkily put it inside the batch writer,
+    ``:517``).  Append is the writer's default output mode."""
+    writer = stream.writeStream.foreachBatch(fn).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if query_name is not None:
+        writer = writer.queryName(query_name)
+    return writer.start()
+
+
+class _BatchSink:
+    """The start every foreachBatch sink shares.  ``self.write_batch``
+    is looked up when the query starts, so a ``write_batch`` replaced
+    on the instance (a timing wrapper, say) is the one that runs."""
+
+    QUERY_NAME: str
+
+    def start(
+        self,
+        stream: DataFrame,
+        checkpoint_dir: str,
+        query_name: str | None = None,
+    ) -> StreamingQuery:
+        return start_batches(
+            stream, self.write_batch, checkpoint_dir,
+            query_name or self.QUERY_NAME,
+        )
+
+
 @dataclass
-class KeyedUpsertParquetSink:
+class KeyedUpsertParquetSink(_BatchSink):
     """K2 (test/local impl) — foreachBatch MERGE-by-key into parquet.
 
     Last-write-wins per ``key_col`` within and across batches; replayed
-    epochs converge to the same table (idempotent).  The table swap is
-    write-tmp-then-rename — atomic enough for tests; production should
+    epochs converge to the same table (idempotent).  The table lands
+    through the crash-safe ``swap_table`` (sources/writer.py): a crash
+    anywhere in the swap leaves the previous table readable, so the
+    replayed epoch merges into every earlier key.  Production should
     bind the same ``write_batch`` contract to a transactional store.
     """
+
+    QUERY_NAME = "keyed_upsert"
 
     path: str
     key_col: str = "data_key"
@@ -71,52 +116,29 @@ class KeyedUpsertParquetSink:
             merge_upsert,
         )
 
-        spark = batch_df.sparkSession
         fresh = batch_df.dropDuplicates([self.key_col])
-        if os.path.exists(self.path):
-            # One MERGE definition for the whole engine: the batch
-            # operator IS the per-epoch upsert (anti-join + union).
-            merged = merge_upsert(
-                spark.read.parquet(self.path), fresh, keys=[self.key_col]
-            )
-        else:
-            merged = fresh
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path)
-        os.rename(tmp, self.path)
-
-    def start(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str | None = None,
-        query_name: str = "keyed_upsert",
-    ) -> StreamingQuery:
-        """Wire as the reference does: foreachBatch + queryName + start
-        (reference ``:521-531``), with the checkpoint location (K4) on
-        the stream writer where it belongs (the reference quirkily put
-        it inside the batch writer, ``:517``)."""
-        if checkpoint_dir is None:
-            checkpoint_dir = tempfile.mkdtemp(prefix="chk_")
-        return (
-            stream.writeStream.foreachBatch(self.write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .queryName(query_name)
-            .start()
+        prev = read_table(batch_df.sparkSession, self.path)
+        # One MERGE definition for the whole engine: the batch operator
+        # IS the per-epoch upsert (anti-join + union).
+        merged = (
+            fresh if prev is None
+            else merge_upsert(prev, fresh, keys=[self.key_col])
         )
+        swap_table(merged, self.path)
 
     def read(self, spark: Any) -> DataFrame:
         return spark.read.parquet(self.path)
 
 
 @dataclass
-class KeyedUpsertMemorySink:
+class KeyedUpsertMemorySink(_BatchSink):
     """K2 (unit-test impl) — upsert into a driver-side dict.
 
     Only for small-result assertions (it collects!); the value is that
     idempotency tests can inspect exact key→row state cheaply.
     """
+
+    QUERY_NAME = "keyed_upsert_mem"
 
     key_col: str = "data_key"
     rows: dict[str, Any] = field(default_factory=dict)
@@ -127,24 +149,9 @@ class KeyedUpsertMemorySink:
         for row in batch_df.collect():
             self.rows[row[self.key_col]] = row.asDict()
 
-    def start(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str | None = None,
-        query_name: str = "keyed_upsert_mem",
-    ) -> StreamingQuery:
-        if checkpoint_dir is None:
-            checkpoint_dir = tempfile.mkdtemp(prefix="chk_")
-        return (
-            stream.writeStream.foreachBatch(self.write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .queryName(query_name)
-            .start()
-        )
-
 
 @dataclass
-class ElasticsearchUpsertSink:
+class ElasticsearchUpsertSink(_BatchSink):
     """K2 (prod impl) — option-parity Elasticsearch batch writer.
 
     Builds exactly the reference's writer options (``:506-518``):
@@ -152,6 +159,8 @@ class ElasticsearchUpsertSink:
     resource.  Requires the elasticsearch-hadoop connector at runtime;
     constructing the sink (e.g. for config validation/tests) does not.
     """
+
+    QUERY_NAME = "es_upsert"
 
     nodes: str
     index: str
@@ -185,22 +194,9 @@ class ElasticsearchUpsertSink:
             .save()
         )
 
-    def start(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str,
-        query_name: str = "es_upsert",
-    ) -> StreamingQuery:
-        return (
-            stream.writeStream.foreachBatch(self.write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .queryName(query_name)
-            .start()
-        )
-
 
 @dataclass
-class KeyedUpsertJdbcSink:
+class KeyedUpsertJdbcSink(_BatchSink):
     """K2 (database impl) — foreachBatch MERGE-by-key into a JDBC
     table, the relational twin of the ES ``es.mapping.id`` upsert.
 
@@ -222,6 +218,8 @@ class KeyedUpsertJdbcSink:
     points ``url`` at a server database; the two-phase shape is
     unchanged).
     """
+
+    QUERY_NAME = "jdbc_upsert"
 
     url: str
     table: str
@@ -296,21 +294,6 @@ class KeyedUpsertJdbcSink:
         finally:
             conn.close()
 
-    def start(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str | None = None,
-        query_name: str = "jdbc_upsert",
-    ) -> StreamingQuery:
-        if checkpoint_dir is None:
-            checkpoint_dir = tempfile.mkdtemp(prefix="chk_")
-        return (
-            stream.writeStream.foreachBatch(self.write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .queryName(query_name)
-            .start()
-        )
-
     def read(self, spark: Any) -> DataFrame:
         return (
             spark.read.format("jdbc")
@@ -378,11 +361,9 @@ class RowForeachSink:
     def start(
         self,
         stream: DataFrame,
-        checkpoint_dir: str | None = None,
+        checkpoint_dir: str,
         query_name: str = "row_foreach",
     ) -> StreamingQuery:
-        if checkpoint_dir is None:
-            checkpoint_dir = tempfile.mkdtemp(prefix="chk_")
         return (
             stream.writeStream.foreach(self)
             .option("checkpointLocation", checkpoint_dir)
@@ -391,26 +372,58 @@ class RowForeachSink:
         )
 
 
+class _EpochFoldSink(_BatchSink):
+    """The replay guard of the additive fold sinks, written once.  An
+    upsert replay converges because overwrite is idempotent, but a
+    FOLD is additive — replaying an epoch would double-count.  So the
+    sink keeps an epoch watermark next to the table (scoped by
+    ``lineage``) and silently skips any epoch ≤ the last applied one
+    (exactly-once effect under at-least-once delivery).  The marker is
+    written after the table swap; a crash BETWEEN the two re-folds one
+    epoch on restart — a transactional store (Delta/Iceberg) commits
+    both in one transaction, which is the production binding of this
+    contract and why the two writes sit adjacent here."""
+
+    path: str
+    lineage: str
+
+    def _fold_epoch(
+        self,
+        batch_df: DataFrame,
+        epoch_id: int,
+        fold: Callable[[DataFrame | None], DataFrame],
+    ) -> None:
+        """Swap in ``fold(previous table or None)`` unless ``epoch_id``
+        was already applied, then advance the watermark."""
+        marker = f"{self.path}__epoch_{self.lineage}"
+        last = -1
+        if os.path.exists(marker):
+            with open(marker) as fh:
+                last = int(fh.read().strip() or -1)
+        if epoch_id <= last:
+            return  # replayed epoch: already folded
+        swap_table(
+            fold(read_table(batch_df.sparkSession, self.path)), self.path
+        )
+        with open(marker, "w") as fh:
+            fh.write(str(epoch_id))
+
+    def read(self, spark: Any) -> DataFrame:
+        return spark.read.parquet(self.path)
+
+
 @dataclass
-class IncrementalAggParquetSink:
+class IncrementalAggParquetSink(_EpochFoldSink):
     """Streaming materialized-view maintenance: every micro-batch folds
     into a keyed aggregate table via ``operators.merge.
     incremental_agg_merge`` — the streaming face of the nightly MV
     refresh, and the scale-correct alternative to complete-mode aggs
     (state is the aggregate TABLE, not an in-memory store; history is
-    never rescanned).
-
-    Idempotence differs from the upsert sinks in kind: an upsert
-    replay converges because overwrite is idempotent, but a FOLD is
-    additive — replaying an epoch would double-count.  So this sink
-    keeps an epoch watermark next to the table and silently skips any
-    epoch ≤ the last applied one (exactly-once effect under
-    at-least-once delivery).  The marker is written after the table
-    swap; a crash BETWEEN the two re-folds one epoch on restart — a
-    transactional store (Delta/Iceberg) commits both in one
-    transaction, which is the production binding of this contract and
-    why the two writes sit adjacent here.
+    never rescanned).  Replays are skipped by the epoch watermark of
+    ``_EpochFoldSink``.
     """
+
+    QUERY_NAME = "incremental_agg"
 
     path: str
     keys: tuple[str, ...] = ("k",)
@@ -424,35 +437,21 @@ class IncrementalAggParquetSink:
     #: mistaken for a replay of the old one's.
     lineage: str = "default"
 
-    def _marker(self) -> str:
-        return f"{self.path}__epoch_{self.lineage}"
-
     def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         from spark_streaming_kafka2elasticsearch_spark.operators.merge import (
             incremental_agg_merge,
         )
 
-        last = -1
-        if os.path.exists(self._marker()):
-            with open(self._marker()) as fh:
-                last = int(fh.read().strip() or -1)
-        if epoch_id <= last:
-            return  # replayed epoch: already folded
-        spark = batch_df.sparkSession
-        if os.path.exists(self.path):
-            prev = spark.read.parquet(self.path)
-        else:
-            prev = self._empty_agg(batch_df)
-        out = incremental_agg_merge(
-            prev, batch_df, list(self.keys), list(self.sum_cols), self.count_col
-        )
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex}"
-        out.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path)
-        os.rename(tmp, self.path)
-        with open(self._marker(), "w") as fh:
-            fh.write(str(epoch_id))
+        def fold(prev: DataFrame | None) -> DataFrame:
+            return incremental_agg_merge(
+                self._empty_agg(batch_df) if prev is None else prev,
+                batch_df,
+                list(self.keys),
+                list(self.sum_cols),
+                self.count_col,
+            )
+
+        self._fold_epoch(batch_df, epoch_id, fold)
 
     def _empty_agg(self, batch_df: DataFrame) -> DataFrame:
         dec = "decimal(28,10)"
@@ -462,27 +461,9 @@ class IncrementalAggParquetSink:
             F.lit(0).cast("long").alias(self.count_col),
         )
 
-    def start(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str | None = None,
-        query_name: str = "incremental_agg",
-    ) -> StreamingQuery:
-        if checkpoint_dir is None:
-            checkpoint_dir = tempfile.mkdtemp(prefix="chk_")
-        return (
-            stream.writeStream.foreachBatch(self.write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .queryName(query_name)
-            .start()
-        )
-
-    def read(self, spark: Any) -> DataFrame:
-        return spark.read.parquet(self.path)
-
 
 @dataclass
-class CountMinParquetSink:
+class CountMinParquetSink(_EpochFoldSink):
     """Streaming frequency-sketch maintenance: every micro-batch's
     items fold into a stored Count-Min grid by cell-wise sum
     (operators/sketches.py) — the streaming twin of the HLL rollup
@@ -492,10 +473,13 @@ class CountMinParquetSink:
 
     Mergeability is what makes this exactly-once-able the same way as
     IncrementalAggParquetSink: the fold is additive, so the sink keeps
-    the identical per-lineage epoch watermark and skips replayed
-    epochs.  The stored artifact stays ≤ depth×width rows forever —
-    state size is O(1) in stream length, the whole point of a sketch.
+    the same per-lineage epoch watermark (``_EpochFoldSink``) and skips
+    replayed epochs.  The stored artifact stays ≤ depth×width rows
+    forever — state size is O(1) in stream length, the whole point of
+    a sketch.
     """
+
+    QUERY_NAME = "countmin_sketch"
 
     path: str
     item_col: str = "tok"
@@ -503,52 +487,18 @@ class CountMinParquetSink:
     width: int = 1024
     lineage: str = "default"
 
-    def _marker(self) -> str:
-        return f"{self.path}__epoch_{self.lineage}"
-
     def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         from spark_streaming_kafka2elasticsearch_spark.operators.sketches import (
             countmin_merge,
             countmin_sketch,
         )
 
-        last = -1
-        if os.path.exists(self._marker()):
-            with open(self._marker()) as fh:
-                last = int(fh.read().strip() or -1)
-        if epoch_id <= last:
-            return  # replayed epoch: already folded
-        spark = batch_df.sparkSession
-        batch_sketch = countmin_sketch(
-            batch_df, self.item_col, depth=self.depth, width=self.width
-        )
-        if os.path.exists(self.path):
-            prev = spark.read.parquet(self.path)
-            merged = countmin_merge(prev.unionByName(batch_sketch))
-        else:
-            merged = batch_sketch
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path)
-        os.rename(tmp, self.path)
-        with open(self._marker(), "w") as fh:
-            fh.write(str(epoch_id))
+        def fold(prev: DataFrame | None) -> DataFrame:
+            batch_sketch = countmin_sketch(
+                batch_df, self.item_col, depth=self.depth, width=self.width
+            )
+            if prev is None:
+                return batch_sketch
+            return countmin_merge(prev.unionByName(batch_sketch))
 
-    def start(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str | None = None,
-        query_name: str = "countmin_sketch",
-    ) -> StreamingQuery:
-        if checkpoint_dir is None:
-            checkpoint_dir = tempfile.mkdtemp(prefix="chk_")
-        return (
-            stream.writeStream.foreachBatch(self.write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .queryName(query_name)
-            .start()
-        )
-
-    def read(self, spark: Any) -> DataFrame:
-        return spark.read.parquet(self.path)
+        self._fold_epoch(batch_df, epoch_id, fold)

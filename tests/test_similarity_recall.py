@@ -1396,6 +1396,79 @@ def test_ivf_persisted_delete_rewrites_only_touched_cells(spark, tmp_path):
     assert got == want and got
 
 
+def test_ivf_persisted_delete_two_level_layout(spark, tmp_path):
+    """ivf_persisted_delete on a stream-maintained (cell, batch_id)
+    layout reaches all three outcomes of the partition erasure: a leaf
+    partition emptied inside a surviving cell, a whole cell emptied
+    (leaf and parent directories gone), and a cell untouched (files
+    byte-identical).  The serve afterwards equals a rebuild over the
+    survivors."""
+    import os
+
+    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
+        ivf_persisted_append,
+        ivf_persisted_delete,
+        ivf_persisted_topk,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_embedding"),
+    )
+    cents = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.col("embedding").alias("centroid_vec"),
+    )
+    path = str(tmp_path / "two_level")
+    base = emb.filter(F.col("vec_id") % 3 != 0)
+    ivf_persisted_topk(
+        base, queries.limit(0), cents, path, k=1, rebuild=True,
+        fingerprint="fp", batch_id=-1,
+    )
+    ivf_persisted_append(emb.filter(F.col("vec_id") % 3 == 0), cents, path, batch_id=0)
+    members: dict[tuple[int, int], list[int]] = {}
+    for r in spark.read.parquet(path).select("neighbor_id", "cell", "batch_id").collect():
+        members.setdefault((r.cell, r.batch_id), []).append(r.neighbor_id)
+    cells = sorted({c for c, _ in members})
+    two_leaf = [c for c in cells if (c, -1) in members and (c, 0) in members]
+    assert len(two_leaf) >= 2 and len(cells) >= 3
+    leaf_cell, whole_cell = two_leaf[:2]
+    kept_cell = next(c for c in cells if c not in (leaf_cell, whole_cell))
+    doomed = set(members[(leaf_cell, 0)])
+    doomed |= {i for (c, _), ids in members.items() if c == whole_cell for i in ids}
+
+    def snapshot(d):
+        return {
+            os.path.relpath(os.path.join(root, f), d): open(os.path.join(root, f), "rb").read()
+            for root, _, files in os.walk(d) for f in files
+        }
+
+    kept_dir = os.path.join(path, f"cell={kept_cell}")
+    before = snapshot(kept_dir)
+    dele = emb.filter(F.col("vec_id").isin(sorted(doomed))).select("vec_id")
+    touched = ivf_persisted_delete(dele, path, spark=spark)
+    assert set(touched) == {leaf_cell, whole_cell}
+    assert not os.path.exists(os.path.join(path, f"cell={leaf_cell}", "batch_id=0"))
+    assert os.path.isdir(os.path.join(path, f"cell={leaf_cell}", "batch_id=-1"))
+    assert not os.path.exists(os.path.join(path, f"cell={whole_cell}"))
+    assert snapshot(kept_dir) == before
+    got = {
+        tuple(r)
+        for r in ivf_persisted_topk(
+            emb, queries, None, path, k=10, rebuild=False, fingerprint="fp"
+        ).collect()
+    }
+    want = {
+        tuple(r)
+        for r in ivf_persisted_topk(
+            emb.filter(~F.col("vec_id").isin(sorted(doomed))), queries, cents,
+            str(tmp_path / "rebuilt"), k=10, rebuild=True,
+        ).collect()
+    }
+    assert got == want and got
+
+
 def test_knn_graph_append_idempotent_under_crash_replay(spark):
     """ADVICE r12 (medium): the streaming maintenance job can die
     between the edge-list rewrite and the corpus landing, so the

@@ -106,3 +106,66 @@ def test_switch_off_declines_every_collect(spark, monkeypatch):
     assert not twins.enabled()
     assert collect_ids(ids, "src", "dst") is None
     assert collect_vectors(vecs, "_id") is None
+
+
+def test_srp_kernel_drops_all_null_vectors_like_the_fallback(spark, twins):
+    """An all-NULL vector has a NULL dot on every plane in the
+    distributed leg, so its bucket is NULL and joins nothing.  The
+    kernel must emit no bucket for it either: three such rows in the
+    real pair's bucket would push it past ``max_bucket_size``."""
+    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
+        _plane_signs,
+        srp_near_dup_pairs,
+    )
+
+    dim = 8
+    # s0 + s1 has a non-negative dot with both planes of the one table,
+    # so the pair lands in bucket 0b11 — where zeroed NULLs would land
+    v = [float(a + b) for a, b in zip(_plane_signs(0, dim), _plane_signs(1, dim))]
+    w = [x + 0.01 * (j % 3) for j, x in enumerate(v)]
+    nulls = [None] * dim
+    df = spark.createDataFrame(
+        [(1, v), (2, w), (3, nulls), (4, nulls), (5, nulls)],
+        "vec_id long, embedding array<double>",
+    )
+    got = {}
+    for leg in twins:
+        pairs = srp_near_dup_pairs(
+            df, dim, threshold=0.9, tables=1, planes_per_table=2,
+            max_bucket_size=2,
+        )
+        got[leg] = sorted((r["id_a"], r["id_b"]) for r in pairs.collect())
+    assert list(got.values()) == [[(1, 2)], [(1, 2)]], got
+
+
+def test_cell_assign_kernel_sends_element_null_rows_to_lowest_cids(spark, twins):
+    """A row with a NULL element has all-NULL sims in Catalyst, so it
+    takes the cid-ascending cells — including a zero-norm centroid
+    that holds the smallest cid.  Both legs must choose alike."""
+    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
+        _cell_assign_arrow_or_none,
+        _fixed_cell_expr,
+        _fixed_probe_cells_expr,
+    )
+
+    crows = [(0, [0.0, 0.0, 0.0]), (1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0])]
+    df = spark.createDataFrame(
+        [(1, [0.0, None, 0.9]), (2, [0.1, 0.9, 0.0]), (3, [0.9, 0.1, 0.0]),
+         (4, [None, 0.5, 0.5])],
+        "vec_id long, v array<double>",
+    )
+    got = {}
+    for leg in twins:
+        one = _cell_assign_arrow_or_none(df, crows, ["vec_id"], "v", single=True)
+        two = _cell_assign_arrow_or_none(df, crows, ["vec_id"], "v", n_probe=2)
+        if one is None:
+            one = df.select("vec_id", _fixed_cell_expr(crows, "v").alias("cell"))
+            two = df.select("vec_id", _fixed_probe_cells_expr(crows, "v", 2).alias("cell"))
+        got[leg] = (
+            sorted((r["vec_id"], r["cell"]) for r in one.collect()),
+            sorted((r["vec_id"], list(r["cell"])) for r in two.collect()),
+        )
+    single, probes = list(got.values())[0]
+    assert dict(single) == {1: 0, 2: 2, 3: 1, 4: 0}
+    assert dict(probes)[1] == [0, 1]
+    assert len(set(map(repr, got.values()))) == 1, got
