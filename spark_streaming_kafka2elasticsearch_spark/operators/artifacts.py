@@ -23,6 +23,11 @@ Loading verifies the fingerprint when the caller supplies the expected
 one: a stale artifact (corpus regenerated since training) is treated
 as absent and the caller retrains — closing the silent-stale-codebook
 hazard the session caches had (ADVICE r10).
+
+The at-rest indexes' JSON sidecars (``_bm25_meta.json``,
+``_graph_meta.json``, …) are read and stamped here too, through
+:func:`read_meta` / :func:`write_meta` / :func:`index_meta`, so every
+index family shares one atomic write and one staleness check.
 """
 
 from __future__ import annotations
@@ -30,6 +35,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import uuid
 
 _QUANTIZER_DIR = "_quantizer"
 
@@ -60,6 +66,53 @@ def data_fingerprint(source_path: str) -> str:
         entries.append((os.path.basename(source_path), st.st_size, st.st_mtime_ns))
     entries.sort()
     return hashlib.sha256(json.dumps(entries).encode()).hexdigest()
+
+
+def read_meta(path: str, name: str) -> dict | None:
+    """The JSON sidecar ``name`` under ``path``, or None when absent."""
+    try:
+        with open(os.path.join(path, name)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return None
+
+
+def write_meta(path: str, name: str, meta: dict) -> None:
+    """Stamp the sidecar ``name`` under ``path``: write a temp file
+    beside it, then ``os.replace`` it in, so a crash mid-write leaves
+    the previous sidecar whole.  The temp name keeps the sidecar's
+    leading ``_``, so Spark's file index skips it when the sidecar
+    sits in a table's root (``_bq_meta.json`` in an IVF layout)."""
+    os.makedirs(path, exist_ok=True)
+    tmp = os.path.join(path, f"{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(meta, fh)
+        os.replace(tmp, os.path.join(path, name))
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
+def index_meta(
+    path: str, name: str, expected_fingerprint: str | None = None
+) -> dict:
+    """The sidecar of the at-rest index at ``path``.  Raises
+    FileNotFoundError when there is none, and ValueError when
+    ``expected_fingerprint`` is given and the index was stamped for
+    another corpus — a stale index refuses to serve."""
+    meta = read_meta(path, name)
+    if meta is None:
+        raise FileNotFoundError(f"no index sidecar {name} under {path}")
+    if (
+        expected_fingerprint is not None
+        and meta.get("fingerprint") != expected_fingerprint
+    ):
+        raise ValueError(
+            f"stale index {path}: expected fingerprint "
+            f"{expected_fingerprint!r}, found {meta.get('fingerprint')!r}"
+        )
+    return meta
 
 
 def _artifact_path(index_path: str, name: str) -> str:

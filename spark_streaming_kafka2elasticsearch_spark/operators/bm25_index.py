@@ -52,7 +52,6 @@ exactly this index shape).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -60,25 +59,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_streaming_kafka2elasticsearch_spark.functions.text import tokens
+from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
+    index_meta,
+    write_meta,
+)
 from spark_streaming_kafka2elasticsearch_spark.operators.text import (
     bm25_scores_from_stats,
+)
+from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
+    read_table,
+    swap_table,
+    write_table,
 )
 
 _BM25_META = "_bm25_meta.json"
 _POST_DIR = "postings"
 _DL_DIR = "doclens"
 _TOMB_DIR = "tombstones"
-
-
-def _read_meta(path: str) -> dict:
-    with open(os.path.join(path, _BM25_META)) as fh:
-        return json.load(fh)
-
-
-def _write_meta(path: str, meta: dict) -> None:
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, _BM25_META), "w") as fh:
-        json.dump(meta, fh)
 
 
 def _tf_dl(docs: DataFrame, id_col: str, text_col: str, n_parts: int):
@@ -113,10 +110,13 @@ def bm25_index_persist(
 ) -> None:
     """Build the at-rest inverted index (full overwrite): postings in
     term-hash partitions, doc lengths in id-hash partitions, exact
-    integer corpus counters in the meta sidecar.  ``n_parts`` is 16
+    integer corpus counters in the meta sidecar.  A previous build's
+    tombstones are removed first, so they cannot erase documents of
+    the new build.  ``n_parts`` is 16
     for the local test scale; a 100 TB corpus sets it in the
     thousands so a query touches a constant fraction of directories
     while each stays executor-sized."""
+    shutil.rmtree(os.path.join(path, _TOMB_DIR), ignore_errors=True)
     tf, dl = _tf_dl(docs, id_col, text_col, n_parts)
     dl = dl.persist()
     tf.write.mode("overwrite").partitionBy("part").parquet(
@@ -129,8 +129,9 @@ def bm25_index_persist(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
     ).first()
     dl.unpersist()
-    _write_meta(
+    write_meta(
         path,
+        _BM25_META,
         {
             "k1": k1,
             "b": b,
@@ -142,11 +143,16 @@ def bm25_index_persist(
     )
 
 
+def _table(spark: SparkSession, path: str, sub: str) -> DataFrame | None:
+    """One of the index's tables (``postings``, ``doclens``,
+    ``tombstones``), read through :func:`read_table` so a compaction
+    swap a crash interrupted is settled first; None when absent."""
+    return read_table(spark, os.path.join(path, sub))
+
+
 def _tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    tomb_dir = os.path.join(path, _TOMB_DIR)
-    if not os.path.isdir(tomb_dir):
-        return None
-    return spark.read.parquet(tomb_dir).select("doc_id")
+    tombs = _table(spark, path, _TOMB_DIR)
+    return None if tombs is None else tombs.select("doc_id")
 
 
 def bm25_index_append(
@@ -164,8 +170,8 @@ def bm25_index_append(
     re-admitting it would corrupt the counters).  Returns the number
     of documents actually appended."""
     spark = new_docs.sparkSession
-    meta = _read_meta(path)
-    seen = spark.read.parquet(os.path.join(path, _DL_DIR)).select("doc_id")
+    meta = index_meta(path, _BM25_META)
+    seen = _table(spark, path, _DL_DIR).select("doc_id")
     tombs = _tombstones(spark, path)
     if tombs is not None:
         seen = seen.unionByName(tombs)
@@ -176,12 +182,8 @@ def bm25_index_append(
     if n:
         tf, dl = _tf_dl(delta, id_col, text_col, meta["n_parts"])
         dl = dl.persist()
-        tf.write.mode("append").partitionBy("part").parquet(
-            os.path.join(path, _POST_DIR)
-        )
-        dl.write.mode("append").partitionBy("part").parquet(
-            os.path.join(path, _DL_DIR)
-        )
+        write_table(tf, os.path.join(path, _POST_DIR), ["part"], mode="append")
+        write_table(dl, os.path.join(path, _DL_DIR), ["part"], mode="append")
         row = dl.agg(F.sum("dl").alias("s")).first()
         dl.unpersist()
         meta["n_docs"] += n
@@ -189,7 +191,7 @@ def bm25_index_append(
     if new_fingerprint is not None:
         meta["fingerprint"] = new_fingerprint
     if n or new_fingerprint is not None:
-        _write_meta(path, meta)
+        write_meta(path, _BM25_META, meta)
     return n
 
 
@@ -206,7 +208,7 @@ def bm25_index_delete(
     already tombstoned) are dropped first, so a replayed delete is a
     no-op and the counters can never double-decrement.  Returns the
     number of documents actually erased."""
-    meta = _read_meta(path)
+    meta = index_meta(path, _BM25_META)
     id_col = doc_ids.columns[0]
     dele = (
         doc_ids.select(F.col(id_col).alias("doc_id"))
@@ -223,9 +225,7 @@ def bm25_index_delete(
         .distinct()
         .collect()
     ]
-    doclens = spark.read.parquet(os.path.join(path, _DL_DIR)).filter(
-        F.col("part").isin(dparts)
-    )
+    doclens = _table(spark, path, _DL_DIR).filter(F.col("part").isin(dparts))
     tombs = _tombstones(spark, path)
     if tombs is not None:
         dele = dele.join(tombs, "doc_id", "left_anti")
@@ -243,7 +243,7 @@ def bm25_index_delete(
     if new_fingerprint is not None:
         meta["fingerprint"] = new_fingerprint
     if n or new_fingerprint is not None:
-        _write_meta(path, meta)
+        write_meta(path, _BM25_META, meta)
     return n
 
 
@@ -256,10 +256,8 @@ def bm25_index_reconcile(spark: SparkSession, path: str) -> tuple[int, int]:
     stale; the streaming jobs call this at start (safe to run
     anytime), which squares them.  Returns the reconciled
     ``(n_docs, sum_dl)`` and rewrites the meta only when it drifted."""
-    meta = _read_meta(path)
-    dl = spark.read.parquet(os.path.join(path, _DL_DIR)).select(
-        "doc_id", "dl"
-    )
+    meta = index_meta(path, _BM25_META)
+    dl = _table(spark, path, _DL_DIR).select("doc_id", "dl")
     tombs = _tombstones(spark, path)
     if tombs is not None:
         dl = dl.join(F.broadcast(tombs), "doc_id", "left_anti")
@@ -267,33 +265,32 @@ def bm25_index_reconcile(spark: SparkSession, path: str) -> tuple[int, int]:
     n_docs, sum_dl = int(row["n"] or 0), int(row["s"] or 0)
     if (meta["n_docs"], meta["sum_dl"]) != (n_docs, sum_dl):
         meta["n_docs"], meta["sum_dl"] = n_docs, sum_dl
-        _write_meta(path, meta)
+        write_meta(path, _BM25_META, meta)
     return n_docs, sum_dl
 
 
 def bm25_index_compact(spark: SparkSession, path: str) -> int:
     """Drop tombstoned rows from the layout and clear the tombstone
     table — the segment merge.  Returns the number of ids compacted
-    away.  The rewritten relations read the files they replace, so
-    both are materialized before the overwrite (the self-overwrite
-    trap); the full-tree overwrite leaves no stale emptied partition
-    behind (unlike dynamic partition overwrite, which is why the LSH
-    delete needs its explicit rmtree and this does not)."""
+    away.  Each table is replaced whole through
+    :func:`sources.writer.swap_table`, which lets the rewrite read the
+    table it replaces and leaves no stale emptied partition behind; a
+    crash leaves the old or the new table, and the tombstones are
+    cleared only after both swaps, so a second compact finishes the
+    job."""
     tombs = _tombstones(spark, path)
     if tombs is None:
         return 0
     tombs = tombs.localCheckpoint(eager=True)
     n = tombs.count()
     for sub in (_POST_DIR, _DL_DIR):
-        subdir = os.path.join(path, sub)
-        live = spark.read.parquet(subdir).join(tombs, "doc_id", "left_anti")
+        live = _table(spark, path, sub).join(tombs, "doc_id", "left_anti")
         if sub == _POST_DIR:
             # fold away any replay-window duplicate rows (see the
             # serve-side dedup note) so the compacted layout equals a
             # fresh build exactly
             live = live.dropDuplicates(["doc_id", "tok"])
-        live = live.localCheckpoint(eager=True)
-        live.write.mode("overwrite").partitionBy("part").parquet(subdir)
+        swap_table(live, os.path.join(path, sub), partition_by=["part"])
     shutil.rmtree(os.path.join(path, _TOMB_DIR), ignore_errors=True)
     return n
 
@@ -337,15 +334,7 @@ def bm25_index_topk(
     here)."""
     from pyspark.sql import Window
 
-    meta = _read_meta(path)
-    if (
-        expected_fingerprint is not None
-        and meta.get("fingerprint") != expected_fingerprint
-    ):
-        raise ValueError(
-            "stale BM25 index: expected fingerprint "
-            f"{expected_fingerprint!r}, found {meta.get('fingerprint')!r}"
-        )
+    meta = index_meta(path, _BM25_META, expected_fingerprint)
     n_parts = meta["n_parts"]
     qterms = (
         query_docs.select(
@@ -365,15 +354,13 @@ def bm25_index_topk(
         .distinct()
         .collect()
     ]
-    postings = spark.read.parquet(os.path.join(path, _POST_DIR)).filter(
+    postings = _table(spark, path, _POST_DIR).filter(
         F.col("part").isin(qparts)
     )
     tombs = _tombstones(spark, path)
     if tombs is not None:
         postings = postings.join(F.broadcast(tombs), "doc_id", "left_anti")
-    doclen = spark.read.parquet(os.path.join(path, _DL_DIR)).select(
-        "doc_id", "dl"
-    )
+    doclen = _table(spark, path, _DL_DIR).select("doc_id", "dl")
     if tombs is not None:
         doclen = doclen.join(F.broadcast(tombs), "doc_id", "left_anti")
     tf = postings.select("doc_id", "tok", "tf")

@@ -55,16 +55,24 @@ SURVEY §2 text-analysis family alongside the LSH and BM25 indexes.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
+    index_meta,
+    write_meta,
+)
 from spark_streaming_kafka2elasticsearch_spark.operators.text import (
     bigram_count_relation,
     kn_model_from_counts,
+)
+from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
+    read_table,
+    swap_table,
+    write_table,
 )
 
 _LM_META = "_lm_meta.json"
@@ -73,15 +81,16 @@ _DOCLOG_DIR = "doclog"
 _REMOVED_DIR = "removed"
 
 
-def _read_meta(path: str) -> dict:
-    with open(os.path.join(path, _LM_META)) as fh:
-        return json.load(fh)
+def _table(spark: SparkSession, path: str, sub: str) -> DataFrame | None:
+    """One of the index's tables (``bigrams``, ``doclog``,
+    ``removed``), read through :func:`read_table` so a compaction swap
+    a crash interrupted is settled first; None when absent."""
+    return read_table(spark, os.path.join(path, sub))
 
 
-def _write_meta(path: str, meta: dict) -> None:
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, _LM_META), "w") as fh:
-        json.dump(meta, fh)
+def _gone_ids(spark: SparkSession, path: str) -> DataFrame | None:
+    removed = _table(spark, path, _REMOVED_DIR)
+    return None if removed is None else removed.select("doc_id")
 
 
 def _seg_id(docs: DataFrame, id_col: str, tag: str) -> str:
@@ -124,7 +133,10 @@ def kn_index_persist(
 ) -> None:
     """Lay the base count segment + doc membership down (full
     overwrite).  One corpus scan — the same scan a from-scratch fit
-    pays once, here amortized over every later serve."""
+    pays once, here amortized over every later serve.  A previous
+    build's ``removed`` table goes first, so its ids cannot block
+    the deletes of the new build."""
+    shutil.rmtree(os.path.join(path, _REMOVED_DIR), ignore_errors=True)
     seg = _segment(docs, id_col, text_col, n_parts, "b")
     seg.write.mode("overwrite").partitionBy("part").parquet(
         os.path.join(path, _BG_DIR)
@@ -134,7 +146,7 @@ def kn_index_persist(
     ).write.mode("overwrite").partitionBy("part").parquet(
         os.path.join(path, _DOCLOG_DIR)
     )
-    _write_meta(path, {"n_parts": n_parts, "fingerprint": fingerprint})
+    write_meta(path, _LM_META, {"n_parts": n_parts, "fingerprint": fingerprint})
 
 
 def kn_index_append(
@@ -152,31 +164,33 @@ def kn_index_append(
     identical ``_seg`` whose rows the merge dedups, so counts can
     never double.  Returns the number of documents folded in."""
     spark = new_docs.sparkSession
-    meta = _read_meta(path)
-    seen = spark.read.parquet(os.path.join(path, _DOCLOG_DIR)).select(
-        "doc_id"
-    )
-    removed_dir = os.path.join(path, _REMOVED_DIR)
-    if os.path.isdir(removed_dir):
-        seen = seen.unionByName(
-            spark.read.parquet(removed_dir).select("doc_id")
-        )
+    meta = index_meta(path, _LM_META)
+    seen = _table(spark, path, _DOCLOG_DIR).select("doc_id")
+    gone_ids = _gone_ids(spark, path)
+    if gone_ids is not None:
+        seen = seen.unionByName(gone_ids)
     delta = new_docs.join(
         seen, new_docs[id_col] == seen["doc_id"], "left_anti"
     ).localCheckpoint(eager=True)
     n = delta.count()
     if n:
-        _segment(delta, id_col, text_col, meta["n_parts"], "a").write.mode(
-            "append"
-        ).partitionBy("part").parquet(os.path.join(path, _BG_DIR))
-        delta.select(F.col(id_col).alias("doc_id")).withColumn(
-            "part", F.pmod(F.xxhash64("doc_id"), F.lit(meta["n_parts"]))
-        ).write.mode("append").partitionBy("part").parquet(
-            os.path.join(path, _DOCLOG_DIR)
+        write_table(
+            _segment(delta, id_col, text_col, meta["n_parts"], "a"),
+            os.path.join(path, _BG_DIR),
+            ["part"],
+            mode="append",
+        )
+        write_table(
+            delta.select(F.col(id_col).alias("doc_id")).withColumn(
+                "part", F.pmod(F.xxhash64("doc_id"), F.lit(meta["n_parts"]))
+            ),
+            os.path.join(path, _DOCLOG_DIR),
+            ["part"],
+            mode="append",
         )
     if new_fingerprint is not None:
         meta["fingerprint"] = new_fingerprint
-        _write_meta(path, meta)
+        write_meta(path, _LM_META, meta)
     return n
 
 
@@ -196,31 +210,31 @@ def kn_index_delete(
     into an identical ``_seg`` the merge dedups).  Returns the number
     of documents erased."""
     spark = gone_docs.sparkSession
-    meta = _read_meta(path)
-    logged = spark.read.parquet(os.path.join(path, _DOCLOG_DIR)).select(
-        "doc_id"
-    )
+    meta = index_meta(path, _LM_META)
+    logged = _table(spark, path, _DOCLOG_DIR).select("doc_id")
     dele = gone_docs.join(
         logged, gone_docs[id_col] == logged["doc_id"], "left_semi"
     )
-    removed_dir = os.path.join(path, _REMOVED_DIR)
-    if os.path.isdir(removed_dir):
-        gone_ids = spark.read.parquet(removed_dir).select("doc_id")
+    gone_ids = _gone_ids(spark, path)
+    if gone_ids is not None:
         dele = dele.join(
             gone_ids, dele[id_col] == gone_ids["doc_id"], "left_anti"
         )
     dele = dele.localCheckpoint(eager=True)
     n = dele.count()
     if n:
-        _segment(dele, id_col, text_col, meta["n_parts"], "d").write.mode(
-            "append"
-        ).partitionBy("part").parquet(os.path.join(path, _BG_DIR))
+        write_table(
+            _segment(dele, id_col, text_col, meta["n_parts"], "d"),
+            os.path.join(path, _BG_DIR),
+            ["part"],
+            mode="append",
+        )
         dele.select(F.col(id_col).alias("doc_id")).write.mode(
             "append"
-        ).parquet(removed_dir)
+        ).parquet(os.path.join(path, _REMOVED_DIR))
     if new_fingerprint is not None:
         meta["fingerprint"] = new_fingerprint
-        _write_meta(path, meta)
+        write_meta(path, _LM_META, meta)
     return n
 
 
@@ -242,18 +256,8 @@ def kn_index_counts(
     the merge as one more in-flight segment (delta-only text scan),
     serving what the index looks like after ``kn_index_append``
     lands."""
-    meta = _read_meta(path)
-    if (
-        expected_fingerprint is not None
-        and meta.get("fingerprint") != expected_fingerprint
-    ):
-        raise ValueError(
-            "stale LM index: expected fingerprint "
-            f"{expected_fingerprint!r}, found {meta.get('fingerprint')!r}"
-        )
-    segs = spark.read.parquet(os.path.join(path, _BG_DIR)).select(
-        "_seg", "w1", "w2", "c2"
-    )
+    meta = index_meta(path, _LM_META, expected_fingerprint)
+    segs = _table(spark, path, _BG_DIR).select("_seg", "w1", "w2", "c2")
     if delta_docs is not None:
         segs = segs.unionByName(
             _segment(
@@ -292,11 +296,13 @@ def kn_index_compact(spark: SparkSession, path: str) -> int:
     """Fold every segment into one base segment, dropping zero-total
     keys — the LSM merge.  The removed table is NOT cleared (erased
     ids stay non-countable forever); the doclog keeps only live ids.
+    Both tables are replaced through :func:`sources.writer.swap_table`
+    (the rewrite reads the table it replaces; a crash leaves the old
+    or the new table, and a second compact finishes the job).
     Returns the number of segments folded."""
-    bg_dir = os.path.join(path, _BG_DIR)
-    segs = spark.read.parquet(bg_dir)
+    segs = _table(spark, path, _BG_DIR)
     n_segs = segs.select("_seg").distinct().count()
-    meta = _read_meta(path)
+    meta = index_meta(path, _LM_META)
     merged = (
         segs.select("_seg", "w1", "w2", "c2")
         .dropDuplicates(["_seg", "w1", "w2"])
@@ -310,17 +316,12 @@ def kn_index_compact(spark: SparkSession, path: str) -> int:
             "c2",
             F.pmod(F.xxhash64("w1"), F.lit(meta["n_parts"])).alias("part"),
         )
-        .localCheckpoint(eager=True)
     )
-    merged.write.mode("overwrite").partitionBy("part").parquet(bg_dir)
-    removed_dir = os.path.join(path, _REMOVED_DIR)
-    if os.path.isdir(removed_dir):
-        doclog_dir = os.path.join(path, _DOCLOG_DIR)
-        gone = spark.read.parquet(removed_dir).select("doc_id")
-        live = (
-            spark.read.parquet(doclog_dir)
-            .join(gone, "doc_id", "left_anti")
-            .localCheckpoint(eager=True)
+    swap_table(merged, os.path.join(path, _BG_DIR), partition_by=["part"])
+    gone_ids = _gone_ids(spark, path)
+    if gone_ids is not None:
+        live = _table(spark, path, _DOCLOG_DIR).join(
+            gone_ids, "doc_id", "left_anti"
         )
-        live.write.mode("overwrite").partitionBy("part").parquet(doclog_dir)
+        swap_table(live, os.path.join(path, _DOCLOG_DIR), partition_by=["part"])
     return n_segs

@@ -54,12 +54,15 @@ SURVEY §2 training-data-pipeline families.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
+    index_meta,
+    write_meta,
+)
 from spark_streaming_kafka2elasticsearch_spark.operators.dedup import (
     minhash_signatures_wide,
     shingle_relation,
@@ -68,17 +71,6 @@ from spark_streaming_kafka2elasticsearch_spark.operators.dedup import (
 _LSH_META = "_lsh_meta.json"
 _SIG_DIR = "signatures"
 _BAND_DIR = "bands"
-
-
-def _read_meta(path: str) -> dict:
-    with open(os.path.join(path, _LSH_META)) as fh:
-        return json.load(fh)
-
-
-def _write_meta(path: str, meta: dict) -> None:
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, _LSH_META), "w") as fh:
-        json.dump(meta, fh)
 
 
 def _part_col(id_col: str, n_parts: int):
@@ -181,7 +173,7 @@ def minhash_lsh_persist(
         os.path.join(path, _BAND_DIR)
     )
     staged.unpersist()
-    _write_meta(path, meta)
+    write_meta(path, _LSH_META, meta)
 
 
 def minhash_lsh_append(
@@ -205,7 +197,7 @@ def minhash_lsh_append(
     are per-document deterministic — so maintained index ≡ rebuilt
     index, the property the registered append query's oracle pins."""
     spark = new_docs.sparkSession
-    meta = _read_meta(path)
+    meta = index_meta(path, _LSH_META)
     sig_dir = os.path.join(path, _SIG_DIR)
     existing = spark.read.parquet(sig_dir).select(
         F.col("doc_id").alias(id_col)
@@ -225,7 +217,7 @@ def minhash_lsh_append(
         staged.unpersist()
     if new_fingerprint is not None:
         meta["fingerprint"] = new_fingerprint
-        _write_meta(path, meta)
+        write_meta(path, _LSH_META, meta)
     return n
 
 
@@ -255,7 +247,7 @@ def minhash_lsh_delete(
         erase_partitions,
     )
 
-    meta = _read_meta(path)
+    meta = index_meta(path, _LSH_META)
     n_parts = meta["n_parts"]
     id_col = doc_ids.columns[0]
     dele = (
@@ -281,16 +273,8 @@ def minhash_lsh_delete(
         )
     if new_fingerprint is not None:
         meta["fingerprint"] = new_fingerprint
-        _write_meta(path, meta)
+        write_meta(path, _LSH_META, meta)
     return touched
-
-
-def _check_fingerprint(meta: dict, expected: str | None) -> None:
-    if expected is not None and meta.get("fingerprint") != expected:
-        raise ValueError(
-            "stale LSH index: expected fingerprint "
-            f"{expected!r}, found {meta.get('fingerprint')!r}"
-        )
 
 
 def minhash_lsh_pairs(
@@ -314,8 +298,7 @@ def minhash_lsh_pairs(
     pairs steps 3–5 (same census gate, same expansion, same verify
     algebra — bit-equal output when the band table matches a fresh
     banding, which the maintenance contract guarantees)."""
-    meta = _read_meta(path)
-    _check_fingerprint(meta, expected_fingerprint)
+    meta = index_meta(path, _LSH_META, expected_fingerprint)
     banded = (
         spark.read.parquet(os.path.join(path, _BAND_DIR))
         .select(F.col("doc_id").alias("_id"), "band_id", "band_hash")
@@ -349,8 +332,7 @@ def minhash_lsh_pairs_with_delta(
     only the daily increment pays shingling + hashing.  ``docs`` (the
     post-append corpus, text side) is touched only for candidate
     documents in the pair-restricted exact verify."""
-    meta = _read_meta(path)
-    _check_fingerprint(meta, expected_fingerprint)
+    meta = index_meta(path, _LSH_META, expected_fingerprint)
     at_rest = spark.read.parquet(os.path.join(path, _BAND_DIR)).select(
         F.col("doc_id").alias("_id"), "band_id", "band_hash"
     )
@@ -491,8 +473,7 @@ def minhash_lsh_probe(
     only.  ``corpus_docs`` supplies the matched members' text (at
     rest this is the document store lookup; only candidate-match rows
     are read thanks to the semi-join below)."""
-    meta = _read_meta(path)
-    _check_fingerprint(meta, expected_fingerprint)
+    meta = index_meta(path, _LSH_META, expected_fingerprint)
     qsig = minhash_signatures_wide(
         query_docs,
         id_col,

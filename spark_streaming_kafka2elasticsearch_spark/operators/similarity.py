@@ -1705,11 +1705,18 @@ def knn_graph_persist(
     :func:`graph_beam_topk`).  100 TB note: the edge list should be
     laid out bucketed by ``src`` so the per-round frontier join
     co-locates; at this scale a single directory suffices."""
-    import json as _json
     import os
 
+    from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
+        read_meta,
+        write_meta,
+    )
+    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
+        read_table,
+        write_table,
+    )
+
     graph_dir = os.path.join(path, _GRAPH_DIR)
-    meta_path = os.path.join(path, _GRAPH_META)
     params = dict(
         k=k, k_build=k_build, rounds=rounds, occupancy=occupancy,
         ring=ring, dim=dim, version=1,
@@ -1717,9 +1724,8 @@ def knn_graph_persist(
     ss = spark or (corpus.sparkSession if corpus is not None else None)
     if ss is None:
         raise ValueError("knn_graph_persist needs corpus or spark")
-    if not rebuild and os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            meta = _json.load(fh)
+    meta = None if rebuild else read_meta(path, _GRAPH_META)
+    if meta is not None:
         fp_ok = fingerprint is None or meta.get("fingerprint") == fingerprint
         # Serve path (corpus=None): the FINGERPRINT is the staleness
         # contract; the build params are descriptive metadata read back
@@ -1730,14 +1736,12 @@ def knn_graph_persist(
         # "build the layout this caller actually asked for" and falls
         # through to the rebuild.
         if fp_ok and (corpus is None or meta.get("params") == params):
-            return ss.read.parquet(graph_dir)
+            return read_table(ss, graph_dir)
     if corpus is None:
         raise ValueError(
             f"no (or stale) graph layout under {graph_dir} — "
             "pass the corpus to (re)build"
         )
-    from spark_streaming_kafka2elasticsearch_spark.sources.writer import write_table
-
     edges = nn_descent_graph(
         corpus,
         k=k,
@@ -1750,10 +1754,8 @@ def knn_graph_persist(
         corpus_vec=corpus_vec,
     )
     write_table(edges, graph_dir)
-    os.makedirs(path, exist_ok=True)
-    with open(meta_path, "w") as fh:
-        _json.dump({"fingerprint": fingerprint, "params": params}, fh)
-    return ss.read.parquet(graph_dir)
+    write_meta(path, _GRAPH_META, {"fingerprint": fingerprint, "params": params})
+    return read_table(ss, graph_dir)
 
 
 def _maintain_gate_state(base, n, dim, old_edges):
@@ -6506,52 +6508,52 @@ def bq_persist_codes(
     missing/stale meta (re)builds from ``corpus``.  The encode itself
     is ONE corpus scan through the codegen'd sign fold — no shuffle,
     no UDF."""
-    import json as _json
     import os
 
+    from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
+        read_meta,
+        write_meta,
+    )
+    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
+        read_table,
+        write_table,
+    )
+
     codes_dir = os.path.join(path, _BQ_CODES_SUBDIR)
-    meta_path = os.path.join(path, _BQ_META)
     params = dict(dim=dim, version=1)
     ss = spark or (corpus.sparkSession if corpus is not None else None)
     if ss is None:
         raise ValueError("bq_persist_codes needs corpus or spark")
-    if not rebuild and os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            meta = _json.load(fh)
-        if meta.get("params") == params and (
-            fingerprint is None or meta.get("fingerprint") == fingerprint
-        ):
-            return ss.read.parquet(codes_dir)
+    meta = None if rebuild else read_meta(path, _BQ_META)
+    if meta is not None and meta.get("params") == params and (
+        fingerprint is None or meta.get("fingerprint") == fingerprint
+    ):
+        return read_table(ss, codes_dir)
     if corpus is None:
         raise ValueError(
             f"no (or stale) BQ codes under {codes_dir} — "
             "pass the corpus to (re)build"
         )
-    from spark_streaming_kafka2elasticsearch_spark.sources.writer import write_table
-
     codes = corpus.select(
         F.col(corpus_id).alias("neighbor_id"),
         bq_sign_code(corpus_vec, dim).alias("code"),
     )
     write_table(codes, codes_dir)
-    os.makedirs(path, exist_ok=True)
-    with open(meta_path, "w") as fh:
-        _json.dump({"fingerprint": fingerprint, "params": params}, fh)
-    return ss.read.parquet(codes_dir)
+    write_meta(path, _BQ_META, {"fingerprint": fingerprint, "params": params})
+    return read_table(ss, codes_dir)
 
 
 def _bq_meta_restamp(path: str, new_fingerprint: str | None) -> None:
-    import json as _json
-    import os
+    from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
+        index_meta,
+        write_meta,
+    )
 
     if new_fingerprint is None:
         return
-    meta_path = os.path.join(path, _BQ_META)
-    with open(meta_path) as fh:
-        meta = _json.load(fh)
+    meta = index_meta(path, _BQ_META)
     meta["fingerprint"] = new_fingerprint
-    with open(meta_path, "w") as fh:
-        _json.dump(meta, fh)
+    write_meta(path, _BQ_META, meta)
 
 
 def bq_persist_append(
@@ -6602,30 +6604,33 @@ def bq_persist_delete(
     cell-partitioned IVF delete this IS a full rewrite of the code
     files — of a payload 32× smaller than the vectors; at 100 TB of
     float vectors the code relation is ~1.6 TB and the rewrite is one
-    scan-and-write.  Post-delete serving is bit-equal to re-encoding
+    scan-and-write, landed through :func:`sources.writer.swap_table`
+    (it reads the table it replaces, and a crash leaves the old or
+    the new codes).  Post-delete serving is bit-equal to re-encoding
     the surviving corpus (codes are per-row deterministic)."""
     import os
+
+    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
+        read_table,
+        swap_table,
+    )
 
     ss = spark or deleted_ids.sparkSession
     codes_dir = os.path.join(path, _BQ_CODES_SUBDIR)
     dele = deleted_ids.select(F.col(id_col).alias("neighbor_id")).distinct()
-    remaining = (
-        ss.read.parquet(codes_dir)
-        .join(F.broadcast(dele), "neighbor_id", "left_anti")
-        # the remaining-rows plan READS the files it replaces — the
-        # self-overwrite trap; materialize first
-        .localCheckpoint(eager=True)
+    remaining = read_table(ss, codes_dir).join(
+        F.broadcast(dele), "neighbor_id", "left_anti"
     )
-    remaining.write.mode("overwrite").parquet(codes_dir)
+    swap_table(remaining, codes_dir)
     _bq_meta_restamp(path, new_fingerprint)
 
 
 def _bq_read_dim(path: str) -> int:
-    import json as _json
-    import os
+    from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
+        index_meta,
+    )
 
-    with open(os.path.join(path, _BQ_META)) as fh:
-        return int(_json.load(fh).get("params", {}).get("dim", 64))
+    return int(index_meta(path, _BQ_META).get("params", {}).get("dim", 64))
 
 
 def bq_refine_topk(

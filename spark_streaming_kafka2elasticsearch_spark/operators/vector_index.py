@@ -229,44 +229,27 @@ class VectorIndex:
         the BOUNDED-DELTA refresh (operators/similarity.
         nn_descent_refresh) instead of a rebuild: stored edges are
         read, refreshed (build params come back from the meta
-        sidecar), and atomically rewritten with the meta re-stamped
+        sidecar) and swapped in, then the meta is re-stamped
         (``new_fingerprint`` should describe ``corpus`` AFTER the
         delta, so subsequent serves validate against the refreshed
         state).  ``corpus`` is the FULL updated relation."""
-        import json as _json
-        import os
-
-        meta_path = os.path.join(self.path, _sim._GRAPH_META)
-        graph_dir = os.path.join(self.path, _sim._GRAPH_DIR)
-        with open(meta_path) as fh:
-            meta = _json.load(fh)
-        params = meta.get("params", {})
-        old_edges = _sim.knn_graph_persist(
-            None, self.path, fingerprint=self.fingerprint,
-            spark=corpus.sparkSession,
-        ).select("src", "dst", "rank")
-        refreshed = _sim.nn_descent_refresh(
-            old_edges,
-            corpus,
-            delta,
-            k=params.get("k", 16),
-            k_build=params.get("k_build", 30),
-            dim=params.get("dim", 64),
-            rounds=rounds,
-            occupancy=params.get("occupancy", 32),
-            ring=params.get("ring", 2),
-            corpus_id=self._cols["corpus_id"],
-            corpus_vec=self._cols["corpus_vec"],
-        # the refresh plan READS the edge files it replaces — the
-        # self-overwrite trap; materialize before the rewrite
-        ).localCheckpoint(eager=True)
-        refreshed.write.mode("overwrite").parquet(graph_dir)
-        if new_fingerprint is not None:
-            meta["fingerprint"] = new_fingerprint
-            self.fingerprint = new_fingerprint
-            with open(meta_path, "w") as fh:
-                _json.dump(meta, fh)
-        return corpus.sparkSession.read.parquet(graph_dir)
+        return self._rewrite_graph(
+            corpus.sparkSession,
+            lambda old_edges, params: _sim.nn_descent_refresh(
+                old_edges,
+                corpus,
+                delta,
+                k=params.get("k", 16),
+                k_build=params.get("k_build", 30),
+                dim=params.get("dim", 64),
+                rounds=rounds,
+                occupancy=params.get("occupancy", 32),
+                ring=params.get("ring", 2),
+                corpus_id=self._cols["corpus_id"],
+                corpus_vec=self._cols["corpus_vec"],
+            ),
+            new_fingerprint,
+        )
 
     def delete_graph(
         self,
@@ -282,42 +265,55 @@ class VectorIndex:
         from the meta sidecar), deleted sources tombstoned, touched
         sources re-ranked against their surviving lists ∪ SRP-bucket
         mates with ``rounds`` touched-restricted descent rounds, and
-        the result atomically rewritten with the meta re-stamped.
+        the result swapped in with the meta re-stamped.
         ``corpus_new`` is the corpus AFTER the deletion."""
-        import json as _json
+        return self._rewrite_graph(
+            corpus_new.sparkSession,
+            lambda old_edges, params: _sim.nn_descent_delete(
+                old_edges,
+                corpus_new,
+                deleted_ids,
+                k=params.get("k", 16),
+                k_build=params.get("k_build", 30),
+                dim=params.get("dim", 64),
+                rounds=rounds,
+                occupancy=params.get("occupancy", 32),
+                corpus_id=self._cols["corpus_id"],
+                corpus_vec=self._cols["corpus_vec"],
+                id_col=self._cols["corpus_id"],
+            ),
+            new_fingerprint,
+        )
+
+    def _rewrite_graph(self, spark, maintain, new_fingerprint):
+        """Replace the at-rest edge list with ``maintain(old_edges,
+        build_params)`` through :func:`sources.writer.swap_table` (the
+        new edges may read the old ones; a crash leaves the old or the
+        new edge list, never none), then re-stamp the sidecar.  A
+        crash between the two leaves the new edges under the old
+        fingerprint, so a serve that expects the new one refuses."""
         import os
 
-        meta_path = os.path.join(self.path, _sim._GRAPH_META)
-        graph_dir = os.path.join(self.path, _sim._GRAPH_DIR)
-        with open(meta_path) as fh:
-            meta = _json.load(fh)
-        params = meta.get("params", {})
+        from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
+            index_meta,
+            write_meta,
+        )
+        from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
+            read_table,
+            swap_table,
+        )
+
+        meta = index_meta(self.path, _sim._GRAPH_META)
         old_edges = _sim.knn_graph_persist(
-            None, self.path, fingerprint=self.fingerprint,
-            spark=corpus_new.sparkSession,
+            None, self.path, fingerprint=self.fingerprint, spark=spark
         ).select("src", "dst", "rank")
-        after = _sim.nn_descent_delete(
-            old_edges,
-            corpus_new,
-            deleted_ids,
-            k=params.get("k", 16),
-            k_build=params.get("k_build", 30),
-            dim=params.get("dim", 64),
-            rounds=rounds,
-            occupancy=params.get("occupancy", 32),
-            corpus_id=self._cols["corpus_id"],
-            corpus_vec=self._cols["corpus_vec"],
-            id_col=self._cols["corpus_id"],
-        # the delete plan READS the edge files it replaces — the
-        # self-overwrite trap; materialize before the rewrite
-        ).localCheckpoint(eager=True)
-        after.write.mode("overwrite").parquet(graph_dir)
+        graph_dir = os.path.join(self.path, _sim._GRAPH_DIR)
+        swap_table(maintain(old_edges, meta.get("params", {})), graph_dir)
         if new_fingerprint is not None:
             meta["fingerprint"] = new_fingerprint
             self.fingerprint = new_fingerprint
-            with open(meta_path, "w") as fh:
-                _json.dump(meta, fh)
-        return corpus_new.sparkSession.read.parquet(graph_dir)
+            write_meta(self.path, _sim._GRAPH_META, meta)
+        return read_table(spark, graph_dir)
 
     # -- serving -----------------------------------------------------------
 

@@ -15,30 +15,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_streaming_kafka2elasticsearch_spark.queries import (
+    build_once,
+    index_dir,
     load_table,
     register,
     register_probe_only,
+    table_fingerprint,
 )
-
-
-def _ivf_index_dir(query_name: str, sf_dir: str) -> str:
-    """Scratch directory for a persisted-IVF query's index layout.
-
-    Checkout-relative (or ``$SPARK_GRAFT_TMP_DIR``), never an absolute
-    hard-coded path; each registered query gets its OWN subdirectory so
-    one query's rebuild can never be read through another query's lazy
-    plan, and the sf basename keeps scale factors apart."""
-    import os
-
-    root = os.environ.get("SPARK_GRAFT_TMP_DIR") or os.path.join(
-        os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        ),
-        "tmp_ivf",
-    )
-    return os.path.join(
-        root, query_name, os.path.basename(sf_dir.rstrip("/")) or "sf"
-    )
 
 
 #: Session-level trained-codebook cache (VERDICT r9 item 3): spherical
@@ -61,16 +44,6 @@ def _ivf_index_dir(query_name: str, sf_dir: str) -> str:
 _CODEBOOK_CACHE: dict[tuple, list] = {}
 
 
-def _emb_fingerprint(sf_dir: str) -> str:
-    import os
-
-    from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
-        data_fingerprint,
-    )
-
-    return data_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-
-
 def _trained_codebook_rows(
     spark: SparkSession, sf_dir: str, k: int, iters: int, refresh: bool = False
 ) -> list:
@@ -84,11 +57,11 @@ def _trained_codebook_rows(
         spherical_kmeans_train,
     )
 
-    fp = _emb_fingerprint(sf_dir)
+    fp = table_fingerprint(sf_dir, "embeddings")
     key = (os.path.abspath(sf_dir), k, iters, fp)
     if not refresh and key in _CODEBOOK_CACHE:
         return _CODEBOOK_CACHE[key]
-    art_dir = _ivf_index_dir(f"_quantizers/kmeans_k{k}_it{iters}", sf_dir)
+    art_dir = index_dir(f"_quantizers/kmeans_k{k}_it{iters}", sf_dir)
     rows = None if refresh else load_centroids(art_dir, expected_fingerprint=fp)
     if rows is None:
         emb = load_table(spark, sf_dir, "embeddings")
@@ -409,7 +382,7 @@ def ann_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid_vec")
     )
-    path = _ivf_index_dir("ann_ivf_persisted_topk", sf_dir)
+    path = index_dir("ann_ivf_persisted_topk", sf_dir)
     return ivf_persisted_topk(emb, queries, cents, path, k=10)
 
 
@@ -461,7 +434,7 @@ def ann_ivf_append_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid_vec")
     )
-    path = _ivf_index_dir("ann_ivf_append_serve", sf_dir)
+    path = index_dir("ann_ivf_append_serve", sf_dir)
     base = emb.filter(F.col("vec_id") % 5 != 0)
     delta = emb.filter(F.col("vec_id") % 5 == 0)
     # Build on the base shard only (the index write inside the call is
@@ -526,7 +499,7 @@ def ann_ivf_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid_vec")
     )
-    path = _ivf_index_dir("ann_ivf_compact_serve", sf_dir)
+    path = index_dir("ann_ivf_compact_serve", sf_dir)
     base = emb.filter(F.col("vec_id") % 5 > 1)
     d1 = emb.filter(F.col("vec_id") % 5 == 0)
     d2 = emb.filter(F.col("vec_id") % 5 == 1)
@@ -589,7 +562,7 @@ def ann_ivf_persisted_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataF
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid_vec")
     )
-    path = _ivf_index_dir("ann_ivf_persisted_topk_multiprobe", sf_dir)
+    path = index_dir("ann_ivf_persisted_topk_multiprobe", sf_dir)
     return ivf_persisted_topk(emb, queries, cents, path, k=10, n_probe=2)
 
 
@@ -646,7 +619,7 @@ def ann_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid_vec")
     )
-    path = _ivf_index_dir("ann_ivf_filtered_topk", sf_dir)
+    path = index_dir("ann_ivf_filtered_topk", sf_dir)
     return ivf_filtered_topk(
         emb, queries, cents, path, predicate="label < 4", k=10, n_probe=2,
         attrs=["label"],
@@ -702,7 +675,7 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid_vec")
     )
-    path = _ivf_index_dir("ann_range_search", sf_dir)
+    path = index_dir("ann_range_search", sf_dir)
     return ivf_range_search(
         emb, queries, cents, path, threshold=0.25, n_probe=2
     )
@@ -763,7 +736,7 @@ def ann_ivf_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid_vec")
     )
-    path = _ivf_index_dir("ann_ivf_diverse_topk", sf_dir)
+    path = index_dir("ann_ivf_diverse_topk", sf_dir)
     return ivf_diverse_topk(
         emb, queries, cents, path, k=10, per_cell=3, n_probe=4
     )
@@ -1143,45 +1116,24 @@ def knn_graph_edges_nndescent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _refresh_old_graph_edges(spark, sf_dir: str, emb, thresh: int):
-    """The AT-REST old descent graph the refresh query maintains:
-    built once per (sf, corpus fingerprint) over the ids BELOW the
-    delta threshold and laid down as parquet — the production shape:
-    the thing being incrementally refreshed already exists at rest,
-    so the TIMED path of knn_graph_descent_refresh is the
-    delta-bounded refresh alone (the knn_graph_append_serve doctrine
-    applied to the descent graph).  On the driver testdata the old
-    ids are contiguous 0..m-1 so the build ring's modulo holds; on
-    sparse id spaces (the probe's replica layout) ring candidates
-    miss the corpus join and drop out — the operator's documented
-    contract."""
-    import json as _json
-    import os
-
-    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
-        nn_descent_graph,
-    )
+def _edges_at_rest(spark, query_name: str, sf_dir: str, edges) -> DataFrame:
+    """An untimed at-rest edge-list fixture: ``edges()`` runs and is
+    laid down as parquet once per embeddings fingerprint
+    (queries.build_once).  The graph a maintenance query appends to,
+    deletes from or refreshes already exists at rest in production,
+    so the TIMED path is the maintenance step alone, never the
+    build (the in-query build probed α 1.8 for the exact graph)."""
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
         write_table,
     )
 
-    path = _ivf_index_dir("knn_graph_descent_refresh", sf_dir)
-    edges_dir = os.path.join(path, "old_graph")
-    meta_path = os.path.join(path, "_old_graph_meta.json")
-    fp = _emb_fingerprint(sf_dir)
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            if _json.load(fh).get("fingerprint") == fp:
-                return spark.read.parquet(edges_dir)
-    old = emb.filter(F.col("vec_id") < thresh)
-    edges = nn_descent_graph(
-        old, k=16, k_build=30, dim=64, rounds=3, occupancy=32, ring=2
-    ).select("src", "dst", "rank")
-    write_table(edges, edges_dir)
-    os.makedirs(path, exist_ok=True)
-    with open(meta_path, "w") as fh:
-        _json.dump({"fingerprint": fp}, fh)
-    return spark.read.parquet(edges_dir)
+    path = build_once(
+        query_name,
+        sf_dir,
+        table_fingerprint(sf_dir, "embeddings"),
+        lambda p: write_table(edges(), p),
+    )
+    return spark.read.parquet(path)
 
 
 @register(
@@ -1224,6 +1176,7 @@ def knn_graph_descent_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle replays the OLD build and the refresh end-to-end as
     one CTE chain — both stages fully value-checked."""
     from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
+        nn_descent_graph,
         nn_descent_refresh,
     )
 
@@ -1240,7 +1193,19 @@ def knn_graph_descent_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()[0][0]
     )
     delta = emb.filter(F.col("vec_id") >= thresh)
-    old_edges = _refresh_old_graph_edges(spark, sf_dir, emb, thresh)
+    # the old graph over the ids below the delta; on the generated
+    # testdata they are contiguous 0..m-1, so the build ring's modulo
+    # holds (on sparse id spaces ring candidates drop out — the
+    # operator's documented contract)
+    old_edges = _edges_at_rest(
+        spark,
+        "knn_graph_descent_refresh",
+        sf_dir,
+        lambda: nn_descent_graph(
+            emb.filter(F.col("vec_id") < thresh),
+            k=16, k_build=30, dim=64, rounds=3, occupancy=32, ring=2,
+        ).select("src", "dst", "rank"),
+    )
     return nn_descent_refresh(
         old_edges, emb, delta, k=16, k_build=30, dim=64, rounds=2,
         occupancy=32, ring=2,
@@ -1433,9 +1398,9 @@ def ann_graph_beam_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_embedding"),
     )
-    path = _ivf_index_dir("ann_graph_beam_topk", sf_dir)
+    path = index_dir("ann_graph_beam_topk", sf_dir)
     edges = knn_graph_persist(
-        emb, path, k=16, fingerprint=_emb_fingerprint(sf_dir)
+        emb, path, k=16, fingerprint=table_fingerprint(sf_dir, "embeddings")
     )
     return graph_beam_topk(edges, emb, queries, k=10, beam=8, rounds=3)
 
@@ -1476,9 +1441,9 @@ def ann_graph_beam_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_embedding"),
     )
-    path = _ivf_index_dir("ann_graph_beam_filtered_topk", sf_dir)
+    path = index_dir("ann_graph_beam_filtered_topk", sf_dir)
     edges = knn_graph_persist(
-        emb, path, k=16, fingerprint=_emb_fingerprint(sf_dir)
+        emb, path, k=16, fingerprint=table_fingerprint(sf_dir, "embeddings")
     )
     return graph_beam_topk(
         edges,
@@ -1527,9 +1492,9 @@ def ann_graph_beam_hier_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_embedding"),
     )
-    path = _ivf_index_dir("ann_graph_beam_hier_topk", sf_dir)
+    path = index_dir("ann_graph_beam_hier_topk", sf_dir)
     edges = knn_graph_persist(
-        emb, path, k=16, fingerprint=_emb_fingerprint(sf_dir)
+        emb, path, k=16, fingerprint=table_fingerprint(sf_dir, "embeddings")
     )
     return graph_beam_topk(
         edges, emb, queries, k=10, beam=4, rounds=3,
@@ -1575,9 +1540,9 @@ def ann_graph_beam_ooc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_embedding"
         ),
     )
-    path = _ivf_index_dir("ann_graph_beam_ooc_topk", sf_dir)
+    path = index_dir("ann_graph_beam_ooc_topk", sf_dir)
     edges = knn_graph_persist(
-        emb, path, k=16, fingerprint=_emb_fingerprint(sf_dir)
+        emb, path, k=16, fingerprint=table_fingerprint(sf_dir, "embeddings")
     )
     return graph_beam_topk(
         edges, emb, queries, k=10, beam=8, rounds=3,
@@ -1634,52 +1599,14 @@ def ann_graph_beam_heldout_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_embedding"),
     )
-    path = _ivf_index_dir("ann_graph_beam_heldout_topk", sf_dir)
+    path = index_dir("ann_graph_beam_heldout_topk", sf_dir)
     edges = knn_graph_persist(
-        corpus, path, k=16, fingerprint=_emb_fingerprint(sf_dir)
+        corpus, path, k=16, fingerprint=table_fingerprint(sf_dir, "embeddings")
     )
     return graph_beam_topk(
         edges, corpus, queries, k=10, beam=32, rounds=3,
         entry_mode="bucket_all",
     )
-
-
-def _append_old_graph_edges(spark, sf_dir: str, emb, cents):
-    """The AT-REST old graph the append query maintains: built once
-    per (sf, corpus fingerprint) with operators/similarity.knn_graph
-    over the non-delta 80 % and laid down as parquet — appending to
-    an EXISTING at-rest graph is precisely the production shape
-    (nobody rebuilds the thing they are incrementally maintaining),
-    and it keeps the TIMED path of knn_graph_append_serve
-    Δ-proportional instead of re-paying the n²·n_probe/c old-graph
-    build every call (the r12 probe measured α 1.8 with the build
-    in-query; with the old graph at rest the serve path is the
-    append legs + rescore only)."""
-    import json as _json
-    import os
-
-    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
-        knn_graph,
-    )
-    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        write_table,
-    )
-
-    path = _ivf_index_dir("knn_graph_append_serve", sf_dir)
-    edges_dir = os.path.join(path, "old_graph")
-    meta_path = os.path.join(path, "_old_graph_meta.json")
-    fp = _emb_fingerprint(sf_dir)
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            if _json.load(fh).get("fingerprint") == fp:
-                return spark.read.parquet(edges_dir)
-    old = emb.filter(~((F.col("vec_id") % 5 == 3) & (F.col("vec_id") < 2000)))
-    edges = knn_graph(old, cents, k=5, n_probe=2).select("src", "dst")
-    write_table(edges, edges_dir)
-    os.makedirs(path, exist_ok=True)
-    with open(meta_path, "w") as fh:
-        _json.dump({"fingerprint": fp}, fh)
-    return spark.read.parquet(edges_dir)
 
 
 @register(
@@ -1739,6 +1666,7 @@ def knn_graph_append_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     this entry also keeps the multiprobe fixed-cell graph fully
     oracle-pinned."""
     from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
+        knn_graph,
         knn_graph_append,
     )
 
@@ -1750,43 +1678,15 @@ def knn_graph_append_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta_cond = (F.col("vec_id") % 5 == 3) & (F.col("vec_id") < 2000)
     old = emb.filter(~delta_cond)
     delta = emb.filter(delta_cond)
-    old_edges = _append_old_graph_edges(spark, sf_dir, emb, cents)
+    old_edges = _edges_at_rest(
+        spark,
+        "knn_graph_append_serve",
+        sf_dir,
+        lambda: knn_graph(old, cents, k=5, n_probe=2).select("src", "dst"),
+    )
     return knn_graph_append(
         old, delta, cents, old_edges, k=5, n_probe=2
     )
-
-
-def _full_graph_edges_at_rest(spark, sf_dir: str, emb, cents, query_name: str):
-    """The AT-REST full-corpus kNN graph a DELETE maintains: built once
-    per (sf, corpus fingerprint) with operators/similarity.knn_graph
-    (multiprobe, k=5) and laid down as (src, dst, rank) parquet —
-    deleting from an EXISTING at-rest graph is the production shape,
-    and it keeps knn_graph_delete_serve's TIMED path Δ-proportional
-    (the _append_old_graph_edges doctrine, erasure direction)."""
-    import json as _json
-    import os
-
-    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
-        knn_graph,
-    )
-    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        write_table,
-    )
-
-    path = _ivf_index_dir(query_name, sf_dir)
-    edges_dir = os.path.join(path, "full_graph")
-    meta_path = os.path.join(path, "_full_graph_meta.json")
-    fp = _emb_fingerprint(sf_dir)
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            if _json.load(fh).get("fingerprint") == fp:
-                return spark.read.parquet(edges_dir)
-    edges = knn_graph(emb, cents, k=5, n_probe=2).select("src", "dst", "rank")
-    write_table(edges, edges_dir)
-    os.makedirs(path, exist_ok=True)
-    with open(meta_path, "w") as fh:
-        _json.dump({"fingerprint": fp}, fh)
-    return spark.read.parquet(edges_dir)
 
 
 def _delete_cond():
@@ -1858,6 +1758,7 @@ def knn_graph_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows), which the oracle checks by reading centroids from the full
     relation."""
     from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
+        knn_graph,
         knn_graph_delete,
     )
 
@@ -1868,8 +1769,13 @@ def knn_graph_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus_new = emb.filter(~_delete_cond())
     deleted = emb.filter(_delete_cond()).select("vec_id")
-    old_edges = _full_graph_edges_at_rest(
-        spark, sf_dir, emb, cents, "knn_graph_delete_serve"
+    old_edges = _edges_at_rest(
+        spark,
+        "knn_graph_delete_serve",
+        sf_dir,
+        lambda: knn_graph(emb, cents, k=5, n_probe=2).select(
+            "src", "dst", "rank"
+        ),
     )
     return knn_graph_delete(
         corpus_new, deleted, cents, old_edges, k=5, n_probe=2
@@ -1902,7 +1808,7 @@ def knn_graph_delete_serve_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus_new = emb.filter(~_delete_cond())
     deleted = emb.filter(_delete_cond()).select("vec_id")
-    old_edges = _descent_full_graph_edges(
+    old_edges = _descent_graph_at_rest(
         spark, sf_dir, emb, "knn_graph_delete_serve_probe", k=5
     )
     return knn_graph_delete(
@@ -1910,41 +1816,24 @@ def knn_graph_delete_serve_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _descent_full_graph_edges(spark, sf_dir: str, emb, query_name: str, k: int = 16):
-    """The AT-REST full-corpus NN-DESCENT graph a descent DELETE
-    maintains: built once per (sf, corpus fingerprint) with
-    operators/similarity.nn_descent_graph (k=16, the serving-graph
-    build) and laid down as (src, dst, rank) parquet — the
-    _full_graph_edges_at_rest doctrine with the LINEAR build, so the
+def _descent_graph_at_rest(spark, sf_dir: str, emb, query_name: str, k: int = 16):
+    """The full-corpus NN-Descent graph a descent delete maintains, at
+    rest (:func:`_edges_at_rest`), built with the LINEAR build, so the
     untimed fixture never caps a stretch probe the way the exact
     n²/c construction capped knn_graph_delete_serve's ×30 leg
     (BASELINE.md r13)."""
-    import json as _json
-    import os
-
     from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
         nn_descent_graph,
     )
-    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        write_table,
-    )
 
-    path = _ivf_index_dir(query_name, sf_dir)
-    edges_dir = os.path.join(path, "full_graph")
-    meta_path = os.path.join(path, "_full_graph_meta.json")
-    fp = _emb_fingerprint(sf_dir)
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            if _json.load(fh).get("fingerprint") == fp:
-                return spark.read.parquet(edges_dir)
-    edges = nn_descent_graph(
-        emb, k=k, k_build=30, dim=64, rounds=3, occupancy=32, ring=2
-    ).select("src", "dst", "rank")
-    write_table(edges, edges_dir)
-    os.makedirs(path, exist_ok=True)
-    with open(meta_path, "w") as fh:
-        _json.dump({"fingerprint": fp}, fh)
-    return spark.read.parquet(edges_dir)
+    return _edges_at_rest(
+        spark,
+        query_name,
+        sf_dir,
+        lambda: nn_descent_graph(
+            emb, k=k, k_build=30, dim=64, rounds=3, occupancy=32, ring=2
+        ).select("src", "dst", "rank"),
+    )
 
 
 def _descent_delete_cte(
@@ -2090,7 +1979,7 @@ def knn_graph_descent_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     corpus_new = emb.filter(~_delete_cond())
     deleted = emb.filter(_delete_cond()).select("vec_id")
-    old_edges = _descent_full_graph_edges(
+    old_edges = _descent_graph_at_rest(
         spark, sf_dir, emb, "knn_graph_descent_delete"
     )
     return nn_descent_delete(
@@ -2144,9 +2033,6 @@ def ann_ivf_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids outlive deletions — even the deleted vec_id 7 can still
     ask for neighbors), and the layout delete runs once per corpus
     fingerprint so the TIMED path is the pruned serve."""
-    import json as _json
-    import os
-
     from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
         ivf_persisted_delete,
         ivf_persisted_topk,
@@ -2161,14 +2047,9 @@ def ann_ivf_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("centroid_vec"),
     )
-    path = _ivf_index_dir("ann_ivf_delete_serve", sf_dir)
-    meta_path = os.path.join(path, "_delete_meta.json")
-    fp = _emb_fingerprint(sf_dir)
-    done = False
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            done = _json.load(fh).get("fingerprint") == fp
-    if not done:
+    fp = table_fingerprint(sf_dir, "embeddings")
+
+    def build(path):
         ivf_persisted_topk(
             emb,
             queries.limit(0),
@@ -2181,8 +2062,8 @@ def ann_ivf_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_persisted_delete(
             emb.filter(_delete_cond()).select("vec_id"), path, spark=spark
         )
-        with open(meta_path, "w") as fh:
-            _json.dump({"fingerprint": fp}, fh)
+
+    path = build_once("ann_ivf_delete_serve", sf_dir, fp, build)
     return ivf_persisted_topk(
         emb, queries, None, path, k=10, rebuild=False, fingerprint=fp
     )
@@ -2309,9 +2190,9 @@ def ann_bq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_embedding"),
     )
-    path = _ivf_index_dir("ann_bq_persisted_topk", sf_dir)
+    path = index_dir("ann_bq_persisted_topk", sf_dir)
     codes = bq_persist_codes(
-        emb, path, dim=64, fingerprint=_emb_fingerprint(sf_dir)
+        emb, path, dim=64, fingerprint=table_fingerprint(sf_dir, "embeddings")
     )
     return bq_hamming_topk(emb, queries, k=10, dim=64, corpus_codes=codes)
 
@@ -2352,9 +2233,6 @@ def ann_bq_append_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     for free), which is itself the point on the curve: IVF appends
     need a pinned quantizer, graph appends need the top-k merge
     property, codes just append."""
-    import json as _json
-    import os
-
     from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
         bq_hamming_topk,
         bq_persist_append,
@@ -2362,27 +2240,22 @@ def ann_bq_append_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # delta = the 100 LARGEST ids (threshold form — scale-honest at
-    # any id layout, the knn_graph_descent_refresh lesson)
-    m = (
-        emb.select("vec_id")
-        .orderBy(F.col("vec_id").desc())
-        .limit(100)
-        .agg(F.min("vec_id"))
-        .collect()[0][0]
-    )
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_embedding"),
     )
-    path = _ivf_index_dir("ann_bq_append_serve", sf_dir)
-    meta_path = os.path.join(path, "_append_meta.json")
-    fp = _emb_fingerprint(sf_dir)
-    done = False
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            done = _json.load(fh).get("fingerprint") == fp
-    if not done:
+    fp = table_fingerprint(sf_dir, "embeddings")
+
+    def build(path):
+        # delta = the 100 LARGEST ids (threshold form — scale-honest
+        # at any id layout, the knn_graph_descent_refresh lesson)
+        m = (
+            emb.select("vec_id")
+            .orderBy(F.col("vec_id").desc())
+            .limit(100)
+            .agg(F.min("vec_id"))
+            .collect()[0][0]
+        )
         bq_persist_codes(
             emb.filter(F.col("vec_id") < m), path, dim=64,
             fingerprint=fp + ":base", rebuild=True,
@@ -2390,8 +2263,8 @@ def ann_bq_append_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         bq_persist_append(
             emb.filter(F.col("vec_id") >= m), path, new_fingerprint=fp
         )
-        with open(meta_path, "w") as fh:
-            _json.dump({"fingerprint": fp}, fh)
+
+    path = build_once("ann_bq_append_serve", sf_dir, fp, build)
     codes = bq_persist_codes(None, path, dim=64, fingerprint=fp, spark=spark)
     return bq_hamming_topk(emb, queries, k=10, dim=64, corpus_codes=codes)
 
@@ -2437,9 +2310,6 @@ def ann_bq_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus — per-row determinism makes that byte-exact, and the
     oracle computes it.  Deleted ids may still QUERY (query codes
     encode in-flight from the trained-artifact side of the contract)."""
-    import json as _json
-    import os
-
     from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
         bq_hamming_topk,
         bq_persist_codes,
@@ -2451,14 +2321,9 @@ def ann_bq_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_embedding"),
     )
-    path = _ivf_index_dir("ann_bq_delete_serve", sf_dir)
-    meta_path = os.path.join(path, "_delete_meta.json")
-    fp = _emb_fingerprint(sf_dir)
-    done = False
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            done = _json.load(fh).get("fingerprint") == fp
-    if not done:
+    fp = table_fingerprint(sf_dir, "embeddings")
+
+    def build(path):
         bq_persist_codes(
             emb, path, dim=64, fingerprint=fp + ":full", rebuild=True
         )
@@ -2466,8 +2331,8 @@ def ann_bq_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb.filter(_delete_cond()).select("vec_id"), path,
             spark=spark, new_fingerprint=fp,
         )
-        with open(meta_path, "w") as fh:
-            _json.dump({"fingerprint": fp}, fh)
+
+    path = build_once("ann_bq_delete_serve", sf_dir, fp, build)
     codes = bq_persist_codes(None, path, dim=64, fingerprint=fp, spark=spark)
     return bq_hamming_topk(emb, queries, k=10, dim=64, corpus_codes=codes)
 
@@ -2567,7 +2432,7 @@ def ann_ivf_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("centroid_vec"),
     )
-    path = _ivf_index_dir("ann_ivf_bq_topk", sf_dir)
+    path = index_dir("ann_ivf_bq_topk", sf_dir)
     return ivf_bq_topk(emb, queries, cents, path, k=10, n_probe=2, dim=64)
 
 
@@ -2687,9 +2552,9 @@ def mutual_knn_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the entry that times the build itself)
     g = knn_graph_persist(
         emb,
-        _ivf_index_dir("mutual_knn_components", sf_dir),
+        index_dir("mutual_knn_components", sf_dir),
         k=5,
-        fingerprint=_emb_fingerprint(sf_dir),
+        fingerprint=table_fingerprint(sf_dir, "embeddings"),
     )
     edges = g.filter(F.col("mutual")).select(
         F.col("src").alias("id_a"), F.col("dst").alias("id_b")
@@ -2921,7 +2786,7 @@ def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _centroid_df(
         spark, _trained_codebook_rows(spark, sf_dir, k=8, iters=2)
     )
-    path = _ivf_index_dir("ann_ivf_trained_topk", sf_dir)
+    path = index_dir("ann_ivf_trained_topk", sf_dir)
     return ivf_persisted_topk(emb, queries, cents, path, k=10)
 
 
@@ -3023,11 +2888,11 @@ def _trained_pq_books(
         pq_train_codebooks,
     )
 
-    fp = _emb_fingerprint(sf_dir)
+    fp = table_fingerprint(sf_dir, "embeddings")
     key = (os.path.abspath(sf_dir), n_sub, sub_dim, k, iters, fp)
     if not refresh and key in _PQ_CACHE:
         return _PQ_CACHE[key]
-    art_dir = _ivf_index_dir(
+    art_dir = index_dir(
         f"_quantizers/pq_m{n_sub}_d{sub_dim}_k{k}_it{iters}", sf_dir
     )
     books = (
@@ -3348,7 +3213,7 @@ def ann_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in seed
         for m in range(8)
     ]
-    path = _ivf_index_dir("ann_ivfadc_topk", sf_dir)
+    path = index_dir("ann_ivfadc_topk", sf_dir)
     return ivfadc_topk(emb, queries, cents, codebooks, path, k=10, n_probe=2)
 
 
@@ -3398,7 +3263,7 @@ def ann_ivfadc_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in seed
         for m in range(8)
     ]
-    path = _ivf_index_dir("ann_ivfadc_filtered_topk", sf_dir)
+    path = index_dir("ann_ivfadc_filtered_topk", sf_dir)
     return ivfadc_topk(
         emb, queries, cents, codebooks, path, k=10, n_probe=2,
         attrs=["label"], predicate="label < 4",
@@ -3447,7 +3312,7 @@ def ann_ivfadc_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in seed
         for m in range(8)
     ]
-    path = _ivf_index_dir("ann_ivfadc_refine_topk", sf_dir)
+    path = index_dir("ann_ivfadc_refine_topk", sf_dir)
     return ivfadc_refine_topk(
         emb, queries, cents, codebooks, path, k=10, shortlist=50, n_probe=2
     )
@@ -3564,7 +3429,7 @@ def ann_ivfadc_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _centroid_df(
         spark, _trained_codebook_rows(spark, sf_dir, k=8, iters=2)
     )
-    path = _ivf_index_dir("ann_ivfadc_residual_topk", sf_dir)
+    path = index_dir("ann_ivfadc_residual_topk", sf_dir)
     return ivfadc_residual_topk(
         emb, queries, cents, path, k=10, n_probe=2, n_codes=16
     )
@@ -3648,7 +3513,7 @@ def ann_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _centroid_df(
         spark, _trained_codebook_rows(spark, sf_dir, k=8, iters=2)
     )
-    path = _ivf_index_dir("ann_ivf_sq8_topk", sf_dir)
+    path = index_dir("ann_ivf_sq8_topk", sf_dir)
     return ivf_sq8_topk(emb, queries, cents, path, k=10, n_probe=2)
 
 

@@ -39,9 +39,11 @@ from spark_streaming_kafka2elasticsearch_spark.operators.text import (
     text_quality,
 )
 from spark_streaming_kafka2elasticsearch_spark.queries import (
+    build_once,
     load_table,
     register,
     register_probe_only,
+    table_fingerprint,
 )
 
 # ---------------------------------------------------------------------------
@@ -6118,9 +6120,9 @@ def query_likelihood_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # build + append + delete + serve story.  All three entries share the
 # md5 Kirsch–Mitzenmacher hash family so the ENTIRE lifecycle stays
 # DuckDB-value-checkable (the minhash_near_dup_pairs doctrine), and all
-# fixtures are fingerprint-keyed untimed builds (_ivf_index_dir
-# doctrine): the TIMED paths are the delta append derivation, the
-# post-surgery derivation, and the serve-time probe.
+# fixtures are fingerprint-keyed untimed builds (queries.build_once):
+# the TIMED paths are the delta append derivation, the post-surgery
+# derivation, and the serve-time probe.
 # ---------------------------------------------------------------------------
 
 
@@ -6206,41 +6208,6 @@ _LSH_IDX_PARAMS = dict(
 _LSH_DELETE_COND_SQL = " WHERE NOT (doc_id % 20 = 7 AND doc_id < 2000)"
 
 
-def _lsh_docs_fp(sf_dir: str) -> str:
-    import os
-
-    from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
-        data_fingerprint,
-    )
-
-    return data_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-
-
-def _lsh_fixture(spark, sf_dir, query_name, docs_subset, want_fp):
-    """Fingerprint-keyed untimed index fixture: (re)built only when the
-    meta sidecar is missing or stamped for another corpus."""
-    import json as _json
-    import os
-
-    from spark_streaming_kafka2elasticsearch_spark.operators.lsh_index import (
-        minhash_lsh_persist,
-    )
-    from spark_streaming_kafka2elasticsearch_spark.queries.advanced import (
-        _ivf_index_dir,
-    )
-
-    path = _ivf_index_dir(query_name, sf_dir)
-    meta_path = os.path.join(path, "_lsh_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            if _json.load(fh).get("fingerprint") == want_fp:
-                return path, False
-    minhash_lsh_persist(
-        docs_subset, path, fingerprint=want_fp, **_LSH_IDX_PARAMS
-    )
-    return path, True
-
-
 @register("minhash_lsh_index_append_pairs", oracle=_lsh_pairs_oracle(""))
 def minhash_lsh_index_append_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """APPEND to the at-rest MinHash-LSH dedup index
@@ -6262,15 +6229,21 @@ def minhash_lsh_index_append_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     entry times the repeatable functional twin."""
     from spark_streaming_kafka2elasticsearch_spark.operators.lsh_index import (
         minhash_lsh_pairs_with_delta,
+        minhash_lsh_persist,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     delta_cond = (F.col("doc_id") % 5 == 3) & (F.col("doc_id") < 2000)
     old = docs.filter(~delta_cond)
     delta = docs.filter(delta_cond)
-    fp = _lsh_docs_fp(sf_dir)
-    path, _ = _lsh_fixture(
-        spark, sf_dir, "minhash_lsh_index_append_pairs", old, fp
+    fp = table_fingerprint(sf_dir, "documents")
+    path = build_once(
+        "minhash_lsh_index_append_pairs",
+        sf_dir,
+        fp,
+        lambda p: minhash_lsh_persist(
+            old, p, fingerprint=fp, **_LSH_IDX_PARAMS
+        ),
     )
     return minhash_lsh_pairs_with_delta(
         spark, path, docs, delta, min_jaccard=0.1, expected_fingerprint=fp
@@ -6296,33 +6269,22 @@ def minhash_lsh_index_delete_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     from spark_streaming_kafka2elasticsearch_spark.operators.lsh_index import (
         minhash_lsh_delete,
         minhash_lsh_pairs,
+        minhash_lsh_persist,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     del_cond = (F.col("doc_id") % 20 == 7) & (F.col("doc_id") < 2000)
-    fp = _lsh_docs_fp(sf_dir)
+    fp = table_fingerprint(sf_dir, "documents")
     done_fp = fp + ":deleted"
-    import json as _json
-    import os
 
-    from spark_streaming_kafka2elasticsearch_spark.queries.advanced import (
-        _ivf_index_dir,
-    )
-
-    path = _ivf_index_dir("minhash_lsh_index_delete_pairs", sf_dir)
-    meta_path = os.path.join(path, "_lsh_meta.json")
-    done = False
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            done = _json.load(fh).get("fingerprint") == done_fp
-    if not done:
-        path, _ = _lsh_fixture(
-            spark, sf_dir, "minhash_lsh_index_delete_pairs", docs, fp
-        )
+    def build(path):
+        minhash_lsh_persist(docs, path, fingerprint=fp, **_LSH_IDX_PARAMS)
         minhash_lsh_delete(
             spark, path, docs.filter(del_cond).select("doc_id"),
             new_fingerprint=done_fp,
         )
+
+    path = build_once("minhash_lsh_index_delete_pairs", sf_dir, fp, build)
     survivors = docs.filter(~del_cond)
     return minhash_lsh_pairs(
         spark, path, survivors, min_jaccard=0.1,
@@ -6411,6 +6373,7 @@ def minhash_lsh_probe_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming near-dup gate's (streaming/jobs.near_dup_gate_stream)
     batch twin with the corpus side at rest."""
     from spark_streaming_kafka2elasticsearch_spark.operators.lsh_index import (
+        minhash_lsh_persist,
         minhash_lsh_probe,
     )
 
@@ -6419,9 +6382,14 @@ def minhash_lsh_probe_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = docs.filter(
         (F.col("doc_id") % 3 == 0) & (F.col("doc_id") < 3000)
     )
-    fp = _lsh_docs_fp(sf_dir)
-    path, _ = _lsh_fixture(
-        spark, sf_dir, "minhash_lsh_probe_matches", corpus, fp
+    fp = table_fingerprint(sf_dir, "documents")
+    path = build_once(
+        "minhash_lsh_probe_matches",
+        sf_dir,
+        fp,
+        lambda p: minhash_lsh_persist(
+            corpus, p, fingerprint=fp, **_LSH_IDX_PARAMS
+        ),
     )
     return minhash_lsh_probe(
         spark, path, queries, corpus, min_jaccard=0.1,
@@ -6492,29 +6460,6 @@ QUALIFY rank <= 10
 """
 
 
-def _bm25_fixture(spark, sf_dir, query_name, docs_subset, want_fp):
-    """Fingerprint-keyed untimed BM25 index fixture (the _lsh_fixture
-    doctrine)."""
-    import json as _json
-    import os
-
-    from spark_streaming_kafka2elasticsearch_spark.operators.bm25_index import (
-        bm25_index_persist,
-    )
-    from spark_streaming_kafka2elasticsearch_spark.queries.advanced import (
-        _ivf_index_dir,
-    )
-
-    path = _ivf_index_dir(query_name, sf_dir)
-    meta_path = os.path.join(path, "_bm25_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            if _json.load(fh).get("fingerprint") == want_fp:
-                return path
-    bm25_index_persist(docs_subset, path, n_parts=16, fingerprint=want_fp)
-    return path
-
-
 @register("bm25_index_serve_topk", oracle=_bm25_topk_oracle(""))
 def bm25_index_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-10 served FROM the at-rest inverted index
@@ -6529,13 +6474,19 @@ def bm25_index_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB point: the corpus-sized tokenize/aggregate job runs at
     BUILD time; serving pays Σ matching postings, never the corpus."""
     from spark_streaming_kafka2elasticsearch_spark.operators.bm25_index import (
+        bm25_index_persist,
         bm25_index_topk,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     queries = docs.filter(F.col("doc_id") < 5)
-    fp = _lsh_docs_fp(sf_dir)
-    path = _bm25_fixture(spark, sf_dir, "bm25_index_serve_topk", docs, fp)
+    fp = table_fingerprint(sf_dir, "documents")
+    path = build_once(
+        "bm25_index_serve_topk",
+        sf_dir,
+        fp,
+        lambda p: bm25_index_persist(docs, p, n_parts=16, fingerprint=fp),
+    )
     return bm25_index_topk(
         spark, path, queries, k=10, expected_fingerprint=fp
     )
@@ -6556,6 +6507,7 @@ def bm25_index_append_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     are pinned in tests/test_bm25_index.py; this entry times the
     repeatable functional twin: delta tokenize + pruned serve."""
     from spark_streaming_kafka2elasticsearch_spark.operators.bm25_index import (
+        bm25_index_persist,
         bm25_index_topk,
     )
 
@@ -6568,9 +6520,12 @@ def bm25_index_append_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = docs.filter(~delta_cond)
     delta = docs.filter(delta_cond)
     queries = docs.filter(F.col("doc_id") < 5)
-    fp = _lsh_docs_fp(sf_dir)
-    path = _bm25_fixture(
-        spark, sf_dir, "bm25_index_append_serve_topk", old, fp
+    fp = table_fingerprint(sf_dir, "documents")
+    path = build_once(
+        "bm25_index_append_serve_topk",
+        sf_dir,
+        fp,
+        lambda p: bm25_index_persist(old, p, n_parts=16, fingerprint=fp),
     )
     return bm25_index_topk(
         spark, path, queries, k=10, delta_docs=delta,
@@ -6606,13 +6561,8 @@ def bm25_index_delete_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-set equality is pinned there too."""
     from spark_streaming_kafka2elasticsearch_spark.operators.bm25_index import (
         bm25_index_delete,
+        bm25_index_persist,
         bm25_index_topk,
-    )
-    import json as _json
-    import os
-
-    from spark_streaming_kafka2elasticsearch_spark.queries.advanced import (
-        _ivf_index_dir,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -6622,22 +6572,17 @@ def bm25_index_delete_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("doc_id") < 2000)
     )
     queries = docs.filter(F.col("doc_id") < 5)
-    fp = _lsh_docs_fp(sf_dir)
+    fp = table_fingerprint(sf_dir, "documents")
     done_fp = fp + ":deleted"
-    path = _ivf_index_dir("bm25_index_delete_serve_topk", sf_dir)
-    meta_path = os.path.join(path, "_bm25_meta.json")
-    done = False
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            done = _json.load(fh).get("fingerprint") == done_fp
-    if not done:
-        _bm25_fixture(
-            spark, sf_dir, "bm25_index_delete_serve_topk", docs, fp
-        )
+
+    def build(path):
+        bm25_index_persist(docs, path, n_parts=16, fingerprint=fp)
         bm25_index_delete(
             spark, path, docs.filter(del_cond).select("doc_id"),
             new_fingerprint=done_fp,
         )
+
+    path = build_once("bm25_index_delete_serve_topk", sf_dir, fp, build)
     return bm25_index_topk(
         spark, path, queries, k=10, expected_fingerprint=done_fp
     )
@@ -6692,29 +6637,6 @@ FROM agg
 """
 
 
-def _lm_fixture(spark, sf_dir, query_name, docs_subset, want_fp):
-    """Fingerprint-keyed untimed LM-index fixture (the _lsh_fixture
-    doctrine)."""
-    import json as _json
-    import os
-
-    from spark_streaming_kafka2elasticsearch_spark.operators.lm_index import (
-        kn_index_persist,
-    )
-    from spark_streaming_kafka2elasticsearch_spark.queries.advanced import (
-        _ivf_index_dir,
-    )
-
-    path = _ivf_index_dir(query_name, sf_dir)
-    meta_path = os.path.join(path, "_lm_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            if _json.load(fh).get("fingerprint") == want_fp:
-                return path
-    kn_index_persist(docs_subset, path, n_parts=16, fingerprint=want_fp)
-    return path
-
-
 def _kn_gate_output(scores):
     return scores.select(
         "doc_id",
@@ -6738,14 +6660,20 @@ def kn_lm_index_gate_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly what the oracle computes."""
     from spark_streaming_kafka2elasticsearch_spark.operators.lm_index import (
         kn_index_model,
+        kn_index_persist,
     )
     from spark_streaming_kafka2elasticsearch_spark.operators.text import (
         kn_doc_scores,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    fp = _lsh_docs_fp(sf_dir)
-    path = _lm_fixture(spark, sf_dir, "kn_lm_index_gate_served", docs, fp)
+    fp = table_fingerprint(sf_dir, "documents")
+    path = build_once(
+        "kn_lm_index_gate_served",
+        sf_dir,
+        fp,
+        lambda p: kn_index_persist(docs, p, n_parts=16, fingerprint=fp),
+    )
     model = kn_index_model(spark, path, expected_fingerprint=fp)
     return _kn_gate_output(kn_doc_scores(docs, model))
 
@@ -6765,6 +6693,7 @@ def kn_lm_index_append_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin."""
     from spark_streaming_kafka2elasticsearch_spark.operators.lm_index import (
         kn_index_model,
+        kn_index_persist,
     )
     from spark_streaming_kafka2elasticsearch_spark.operators.text import (
         kn_doc_scores,
@@ -6774,8 +6703,13 @@ def kn_lm_index_append_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta_cond = (F.col("doc_id") % 5 == 3) & (F.col("doc_id") < 2000)
     old = docs.filter(~delta_cond)
     delta = docs.filter(delta_cond)
-    fp = _lsh_docs_fp(sf_dir)
-    path = _lm_fixture(spark, sf_dir, "kn_lm_index_append_gate", old, fp)
+    fp = table_fingerprint(sf_dir, "documents")
+    path = build_once(
+        "kn_lm_index_append_gate",
+        sf_dir,
+        fp,
+        lambda p: kn_index_persist(old, p, n_parts=16, fingerprint=fp),
+    )
     model = kn_index_model(
         spark, path, delta_docs=delta, expected_fingerprint=fp
     )
@@ -6804,32 +6738,22 @@ def kn_lm_index_delete_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_streaming_kafka2elasticsearch_spark.operators.lm_index import (
         kn_index_delete,
         kn_index_model,
+        kn_index_persist,
     )
     from spark_streaming_kafka2elasticsearch_spark.operators.text import (
         kn_doc_scores,
-    )
-    import json as _json
-    import os
-
-    from spark_streaming_kafka2elasticsearch_spark.queries.advanced import (
-        _ivf_index_dir,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     del_cond = (F.col("doc_id") % 20 == 7) & (F.col("doc_id") < 2000)
     survivors = docs.filter(~del_cond)
-    fp = _lsh_docs_fp(sf_dir)
+    fp = table_fingerprint(sf_dir, "documents")
     done_fp = fp + ":deleted"
-    path = _ivf_index_dir("kn_lm_index_delete_gate", sf_dir)
-    meta_path = os.path.join(path, "_lm_meta.json")
-    done = False
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            done = _json.load(fh).get("fingerprint") == done_fp
-    if not done:
-        _lm_fixture(spark, sf_dir, "kn_lm_index_delete_gate", docs, fp)
-        kn_index_delete(
-            path, docs.filter(del_cond), new_fingerprint=done_fp
-        )
+
+    def build(path):
+        kn_index_persist(docs, path, n_parts=16, fingerprint=fp)
+        kn_index_delete(path, docs.filter(del_cond), new_fingerprint=done_fp)
+
+    path = build_once("kn_lm_index_delete_gate", sf_dir, fp, build)
     model = kn_index_model(spark, path, expected_fingerprint=done_fp)
     return _kn_gate_output(kn_doc_scores(survivors, model))

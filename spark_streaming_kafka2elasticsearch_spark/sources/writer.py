@@ -35,7 +35,10 @@ def write_table(
     mode: str = "overwrite",
     fmt: str = "parquet",
 ) -> None:
-    """Partitioned (hive-layout) write."""
+    """Partitioned (hive-layout) write.  A :func:`swap_table` a crash
+    interrupted at ``path`` is settled first, so an append can never
+    land beside a table that is still renamed aside."""
+    _settle_swap(path)
     writer = df.write.mode(mode).format(fmt)
     if partition_by:
         writer = writer.partitionBy(*partition_by)

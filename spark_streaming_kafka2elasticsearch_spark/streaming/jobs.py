@@ -638,8 +638,10 @@ def knn_graph_maintenance_stream(
 
     Layout under ``graph_path``: ``corpus/`` (the ingested vectors,
     ``batch_id``-partitioned, dynamically overwritten) and ``edges/``
-    (the current edge list, atomically rewritten per batch — edges
-    are a DERIVED relation whose rows change on append, unlike the
+    (the current edge list, replaced per batch through
+    sources/writer.swap_table, so a crash leaves the old or the new
+    edge list and the replay reads whichever landed — edges are a
+    DERIVED relation whose rows change on append, unlike the
     append-only IVF cells).  Starts from EMPTY: the first batch's
     graph is a plain :func:`knn_graph` build.
 
@@ -663,6 +665,8 @@ def knn_graph_maintenance_stream(
     )
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
         overwrite_partitions,
+        read_table,
+        swap_table,
     )
 
     cents = centroids.localCheckpoint(eager=True)
@@ -686,16 +690,15 @@ def knn_graph_maintenance_stream(
         if delta.isEmpty():
             return
         if have:
-            old_edges = spark.read.parquet(edges_dir).select("src", "dst")
+            old_edges = read_table(spark, edges_dir).select("src", "dst")
             new_edges = knn_graph_append(
                 corpus, delta, cents, old_edges, k=k, n_probe=n_probe
             )
         else:
             new_edges = knn_graph(delta, cents, k=k, n_probe=n_probe)
-        # Materialize BEFORE the overwrite: the append plan READS the
-        # edge files it is about to replace (the self-overwrite trap).
-        new_edges = new_edges.localCheckpoint(eager=True)
-        new_edges.write.mode("overwrite").parquet(edges_dir)
+        # the append plan reads the edge files it replaces; the swap
+        # stages the new edges before either rename
+        swap_table(new_edges, edges_dir)
         overwrite_partitions(
             delta.withColumn("batch_id", F.lit(batch_id)),
             corpus_dir,
@@ -731,7 +734,7 @@ def descent_graph_maintenance_stream(
 
     Same layout and idempotency story as
     :func:`knn_graph_maintenance_stream` — ``corpus/``
-    batch_id-partitioned, ``edges/`` atomically rewritten, and the
+    batch_id-partitioned, ``edges/`` swapped in whole, and the
     first-seen id ANTI-JOIN making a redelivered batch a no-op — plus
     a ``_batch_id`` stamp ON the edge rows (ADVICE r13): edges land
     BEFORE the corpus partition, so a crash between the two would
@@ -757,6 +760,8 @@ def descent_graph_maintenance_stream(
     )
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
         overwrite_partitions,
+        read_table,
+        swap_table,
     )
 
     corpus_dir = os.path.join(graph_path, "corpus")
@@ -779,7 +784,7 @@ def descent_graph_maintenance_stream(
         if delta.isEmpty():
             return
         if have:
-            old_raw = spark.read.parquet(edges_dir)
+            old_raw = read_table(spark, edges_dir)
             # Replay guard (ADVICE r13): the edge rewrite lands BEFORE
             # the corpus partition, so a crash between the two leaves
             # edges one batch AHEAD of the corpus.  Edges carry the
@@ -822,17 +827,15 @@ def descent_graph_maintenance_stream(
                 occupancy=occupancy,
                 ring=ring,
             )
-        # Materialize BEFORE the overwrite: the refresh plan READS the
-        # edge files it is about to replace (the self-overwrite trap).
         # The _batch_id stamp travels atomically WITH the edge rows —
         # that is what makes the replay guard above crash-safe (a
         # marker file written separately would reopen the window).
-        new_edges = (
-            new_edges.select("src", "dst", "rank")
-            .withColumn("_batch_id", F.lit(int(batch_id)))
-            .localCheckpoint(eager=True)
+        swap_table(
+            new_edges.select("src", "dst", "rank").withColumn(
+                "_batch_id", F.lit(int(batch_id))
+            ),
+            edges_dir,
         )
-        new_edges.write.mode("overwrite").parquet(edges_dir)
         overwrite_partitions(
             delta.withColumn("batch_id", F.lit(batch_id)),
             corpus_dir,
@@ -897,6 +900,8 @@ def descent_graph_erasure_stream(
     )
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
         erase_partitions,
+        read_table,
+        swap_table,
     )
 
     corpus_dir = os.path.join(graph_path, "corpus")
@@ -916,31 +921,29 @@ def descent_graph_erasure_stream(
         survivors = corpus.select("vec_id", "embedding").join(
             dele, "vec_id", "left_anti"
         )
-        old_raw = spark.read.parquet(edges_dir)
+        old_raw = read_table(spark, edges_dir)
         applied = None
         if "_erase_batch_id" in old_raw.columns:
             applied = old_raw.agg(
                 F.max("_erase_batch_id").alias("b")
             ).first()["b"]
         if applied is None or int(applied) < int(batch_id):
-            new_edges = (
-                nn_descent_delete(
-                    old_raw.select("src", "dst", "rank"),
-                    survivors,
-                    dele,
-                    k=k,
-                    k_build=k_build,
-                    dim=dim,
-                    rounds=rounds,
-                    occupancy=occupancy,
-                )
-                .select("src", "dst", "rank")
-                .withColumn("_erase_batch_id", F.lit(int(batch_id)))
-                # the delete plan READS the edge files it replaces —
-                # the self-overwrite trap; materialize first
-                .localCheckpoint(eager=True)
+            new_edges = nn_descent_delete(
+                old_raw.select("src", "dst", "rank"),
+                survivors,
+                dele,
+                k=k,
+                k_build=k_build,
+                dim=dim,
+                rounds=rounds,
+                occupancy=occupancy,
             )
-            new_edges.write.mode("overwrite").parquet(edges_dir)
+            swap_table(
+                new_edges.select("src", "dst", "rank").withColumn(
+                    "_erase_batch_id", F.lit(int(batch_id))
+                ),
+                edges_dir,
+            )
         # corpus surgery AFTER the stamped edge rewrite (the crash
         # window then replays into the stamp-guard above): only the
         # batch_id partitions holding a deleted id are rewritten

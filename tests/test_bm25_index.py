@@ -17,6 +17,7 @@ from spark_streaming_kafka2elasticsearch_spark.operators.bm25_index import (
     bm25_index_compact,
     bm25_index_delete,
     bm25_index_persist,
+    bm25_index_reconcile,
     bm25_index_topk,
 )
 from spark_streaming_kafka2elasticsearch_spark.operators.text import bm25_scores
@@ -111,13 +112,17 @@ def test_bm25_append_functional_and_disk_equal_rebuild(spark, tmp_path):
     )
 
 
-def test_bm25_delete_tombstone_serve_and_compaction(spark, tmp_path):
+def test_bm25_delete_tombstone_serve_and_compaction(
+    spark, tmp_path, monkeypatch
+):
     """Tombstoned deletion: O(delta) id append + exact counter
     decrement, no postings rewrite — serving equals the from-scratch
     operator over the SURVIVORS; a replayed delete is a no-op; an
     erased id cannot be re-appended; compaction drops the dead rows
     (postings row-set == fresh persist over survivors), clears the
-    tombstone table, and serving is unchanged."""
+    tombstone table, and serving is unchanged.  A compaction whose
+    postings swap crashes between its renames still serves the
+    pre-compact answer, and a second compaction finishes the job."""
     docs = _docs(spark)
     queries = docs.filter(F.col("doc_id") < 5)
     del_cond = (F.col("doc_id") % 20 == 7) & (F.col("doc_id") >= 5)
@@ -146,6 +151,23 @@ def test_bm25_delete_tombstone_serve_and_compaction(spark, tmp_path):
     # an erased id stays erased (never reused)
     assert bm25_index_append(path, docs.filter(del_cond)) == 0
 
+    rename = os.rename
+
+    def crash_on_new_postings(src, dst):
+        if os.path.basename(src).startswith("postings__tmp_"):
+            raise OSError("crash while renaming the new postings in")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_new_postings)
+    with pytest.raises(OSError):
+        bm25_index_compact(spark, path)
+    monkeypatch.setattr(os, "rename", rename)
+    assert not os.path.exists(os.path.join(path, "postings"))
+    interrupted = bm25_index_topk(
+        spark, path, queries, k=10, expected_fingerprint="fp1"
+    )
+    assert _rows(interrupted) == want
+
     assert bm25_index_compact(spark, path) == n
     assert not os.path.isdir(os.path.join(path, "tombstones"))
     fresh = str(tmp_path / "fresh")
@@ -165,3 +187,51 @@ def test_bm25_delete_tombstone_serve_and_compaction(spark, tmp_path):
         spark, path, queries, k=10, expected_fingerprint="fp1"
     )
     assert _rows(after) == want
+
+
+def test_bm25_repersist_clears_old_tombstones(spark, tmp_path):
+    """A full persist over an index that has tombstones starts clean:
+    deleting the same ids again erases as many as the first time, and
+    the meta counters agree with the ground truth reconcile derives."""
+    docs = _docs(spark)
+    doomed = docs.filter(F.col("doc_id") % 7 == 3).select("doc_id")
+    path = str(tmp_path / "idx")
+    bm25_index_persist(docs, path, n_parts=16, fingerprint="fp0")
+    first = bm25_index_delete(spark, path, doomed)
+    assert first > 0
+    bm25_index_persist(docs, path, n_parts=16, fingerprint="fp0")
+    meta = json.load(open(os.path.join(path, "_bm25_meta.json")))
+    assert meta["n_docs"] == bm25_index_reconcile(spark, path)[0]
+    assert bm25_index_delete(spark, path, doomed) == first
+
+
+def test_bm25_meta_write_crash_keeps_previous_meta(spark, tmp_path, monkeypatch):
+    """A crash halfway through the meta write of an append leaves the
+    previous meta readable; reconcile then squares the counters with
+    the appended tables, and serving equals the from-scratch operator
+    over the full corpus."""
+    docs = _docs(spark)
+    queries = docs.filter(F.col("doc_id") < 5)
+    delta_cond = (F.col("doc_id") % 5 == 3) & (F.col("doc_id") >= 5)
+    path = str(tmp_path / "idx")
+    bm25_index_persist(docs.filter(~delta_cond), path, n_parts=16)
+    meta_path = os.path.join(path, "_bm25_meta.json")
+    before = json.load(open(meta_path))
+
+    def half_dump(obj, fh, *args, **kwargs):
+        text = json.dumps(obj)
+        fh.write(text[: len(text) // 2])
+        raise OSError("crash while writing the meta")
+
+    monkeypatch.setattr(json, "dump", half_dump)
+    with pytest.raises(OSError):
+        bm25_index_append(path, docs.filter(delta_cond))
+    monkeypatch.undo()
+    assert json.load(open(meta_path)) == before
+
+    n_docs, sum_dl = bm25_index_reconcile(spark, path)
+    assert n_docs == docs.count()
+    after = json.load(open(meta_path))
+    assert (after["n_docs"], after["sum_dl"]) == (n_docs, sum_dl)
+    served = bm25_index_topk(spark, path, queries, k=10)
+    assert _rows(served) == _rows(_scratch_topk(docs, queries))

@@ -118,3 +118,21 @@ def test_lm_index_negative_segment_delete_and_compact(spark, tmp_path):
     # erased ids stay erased across compaction
     assert kn_index_append(path, doomed) == 0
     assert _rows(kn_index_counts(spark, path)) == want_counts
+
+
+def test_lm_index_repersist_clears_old_removed_ids(spark, tmp_path):
+    """A full persist over an index with a ``removed`` table starts
+    clean: deleting the same documents again erases as many as the
+    first time, and the counts equal the survivors' relation."""
+    docs = _docs(spark)
+    doomed = docs.filter(F.col("doc_id") % 7 == 3)
+    path = str(tmp_path / "lm")
+    kn_index_persist(docs, path, n_parts=8)
+    first = kn_index_delete(path, doomed)
+    assert first > 0
+    kn_index_persist(docs, path, n_parts=8)
+    assert kn_index_delete(path, doomed) == first
+    survivors = docs.filter(F.col("doc_id") % 7 != 3)
+    assert _rows(kn_index_counts(spark, path)) == _rows(
+        bigram_count_relation(survivors)
+    )

@@ -165,6 +165,36 @@ def test_upsert_swap_crash_then_replay_keeps_every_key(spark, tmp_path, monkeypa
     assert not os.path.exists(f"{tmp_path / 'table'}__swap_old")
 
 
+def test_append_after_interrupted_swap_keeps_the_old_rows(
+    spark, tmp_path, monkeypatch
+):
+    """An append into a table whose swap crashed between its renames
+    (the old table aside, none in place) lands on the old rows, not
+    beside them: the blind appends of the index maintenance paths go
+    through write_table, which settles the swap first."""
+    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
+        read_table,
+        swap_table,
+        write_table,
+    )
+
+    path = str(tmp_path / "table")
+    write_table(spark.createDataFrame([(1,)], ["k"]), path)
+    rename = os.rename
+
+    def crash_on_new_table(src, dst):
+        if "__tmp_" in os.path.basename(src):
+            raise OSError("crash while renaming the new table in")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_new_table)
+    with pytest.raises(OSError):
+        swap_table(spark.createDataFrame([(2,)], ["k"]), path)
+    monkeypatch.setattr(os, "rename", rename)
+    write_table(spark.createDataFrame([(3,)], ["k"]), path, mode="append")
+    assert sorted(r["k"] for r in read_table(spark, path).collect()) == [1, 3]
+
+
 def test_memory_sink_upsert(spark, tmp_path):
     sink = KeyedUpsertMemorySink(key_col="k")
     sink.write_batch(spark.createDataFrame([("a", 1)], ["k", "v"]), 0)
@@ -2709,12 +2739,17 @@ def test_gated_attribution_stream_matches_batch_join_over_union(
     assert got == {(2, 7, 1, 100), (4, 8, 3, 400), (2, 7, 5, 50)}
 
 
-def test_knn_graph_maintenance_stream_equals_full_rebuild(spark, tmp_path):
+def test_knn_graph_maintenance_stream_equals_full_rebuild(
+    spark, tmp_path, monkeypatch
+):
     """Streaming graph maintenance: after two micro-batches (the
     second containing a redelivered duplicate of a batch-0 vector),
     the at-rest edge list must be BIT-EQUAL to a batch knn_graph
     rebuild over every distinct ingested vector — the
-    ivf_index_maintenance contract lifted to the edge relation."""
+    ivf_index_maintenance contract lifted to the edge relation.
+    Batch 1's edge swap crashes once between its renames (the old
+    edges are aside, the new ones staged); the restart on the same
+    checkpoint replays batch 1 over the restored old edges."""
     from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
         knn_graph,
     )
@@ -2742,15 +2777,30 @@ def test_knn_graph_maintenance_stream_equals_full_rebuild(spark, tmp_path):
     src_dir = tmp_path / "src"
     src_dir.mkdir()
     graph_path = str(tmp_path / "graph")
-    q = knn_graph_maintenance_stream(
-        spark,
-        JsonDirSource(str(src_dir), as_kafka_envelope=True),
-        cents,
-        graph_path,
-        str(tmp_path / "chk"),
-        k=5,
-        n_probe=2,
-    )
+
+    def start():
+        return knn_graph_maintenance_stream(
+            spark,
+            JsonDirSource(str(src_dir), as_kafka_envelope=True),
+            cents,
+            graph_path,
+            str(tmp_path / "chk"),
+            k=5,
+            n_probe=2,
+        )
+
+    rename = os.rename
+    staged = []
+
+    def crash_on_batch1_edges(src, dst):
+        if os.path.basename(src).startswith("edges__tmp_"):
+            staged.append(src)
+            if len(staged) == 2:
+                raise OSError("crash while renaming batch 1's edges in")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_batch1_edges)
+    q = start()
     try:
         write_batch_file(str(src_dir), "b0.json", [vec(i) for i in b0_ids])
         q.processAllAvailable()
@@ -2759,6 +2809,15 @@ def test_knn_graph_maintenance_stream_equals_full_rebuild(spark, tmp_path):
         write_batch_file(
             str(src_dir), "b1.json", [vec(i) for i in b1_ids] + [vec(b0_ids[0])]
         )
+        with pytest.raises(Exception, match="crash while renaming"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert len(staged) == 2
+    assert not os.path.exists(f"{graph_path}/edges")
+    monkeypatch.setattr(os, "rename", rename)
+    q = start()
+    try:
         q.processAllAvailable()
         got = {
             tuple(r)

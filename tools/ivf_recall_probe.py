@@ -30,7 +30,7 @@ import sys
 import time
 
 # Checkout-relative, never a hard-coded absolute path (the same
-# portability rule _ivf_index_dir follows).
+# portability rule queries.index_dir follows).
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
@@ -72,7 +72,7 @@ def main() -> None:
     }
     assert len(exact) == n_queries * K
 
-    # Scratch layout honors $SPARK_GRAFT_TMP_DIR like _ivf_index_dir;
+    # Scratch layout honors $SPARK_GRAFT_TMP_DIR like queries.index_dir;
     # sweep() builds the layout itself, so no pre-build here.
     path = os.path.join(
         os.environ.get("SPARK_GRAFT_TMP_DIR") or os.path.join(_REPO, "tmp_ivf"),
