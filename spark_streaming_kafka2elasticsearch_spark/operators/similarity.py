@@ -635,6 +635,194 @@ def _fixed_probe_cells_expr(
     )
 
 
+# -- the quantizer skeleton ------------------------------------------------
+# Every IVF and kNN-graph operator resolves its coarse quantizer
+# (_quantizer_rows), assigns corpus cells (_assigned_cells), probes and
+# scans (_probed_scan; the graph family's _probe_lists) and flags mutual
+# edges (_with_mutual) through the helpers below, so the families cannot
+# drift in any of those steps.
+
+
+def _quantizer_rows(
+    centroids: DataFrame | None,
+    path: str | None,
+    rebuild: bool,
+    fingerprint: str | None,
+    centroid_id: str,
+    centroid_vec: str,
+    who: str,
+) -> list[tuple]:
+    """The coarse quantizer as cid-ordered ``(centroid_id, vector)``
+    rows (cid-ascending is what makes every argmax tie-break pick the
+    smallest cid): collected from ``centroids`` when given, else —
+    serving only — loaded from the at-rest artifact under
+    ``<path>/_quantizer``, whose ``fingerprint`` must match.  The
+    table is small BY CONTRACT (c·dim doubles), the "collect the small
+    side" rule.  ``who`` names the caller in the empty-table error."""
+    if centroids is None:
+        if rebuild:
+            raise ValueError("rebuild=True requires an explicit centroid table")
+        from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
+            load_centroids,
+        )
+
+        crows = load_centroids(path, expected_fingerprint=fingerprint)
+        if crows is None:
+            raise ValueError(
+                f"no (or stale) centroid artifact under {path}/_quantizer — "
+                "rebuild the index or pass centroids explicitly"
+            )
+    else:
+        crows = [
+            (r[0], r[1])
+            for r in centroids.select(centroid_id, centroid_vec)
+            .orderBy(centroid_id)
+            .collect()
+        ]
+    if not crows:
+        raise ValueError(f"{who} needs >= 1 centroid")
+    return crows
+
+
+def _assigned_cells(
+    df: DataFrame, crows, keep: list[str], vec_col: str, out_col: str = "cell"
+) -> DataFrame:
+    """``df``'s ``keep`` columns plus ``out_col``, each row's home cell
+    under the bit-exact quantizer: the Arrow kernel
+    (:func:`_cell_assign_arrow_or_none`) when the twin gate allows it,
+    else the projection it is bit-equal to — :func:`_fixed_cell_expr`
+    over a norm hoisted once per row for the c codeword folds."""
+    kern = _cell_assign_arrow_or_none(
+        df, crows, keep, vec_col, out_col=out_col, single=True
+    )
+    if kern is not None:
+        return kern
+    carried = keep if vec_col in keep else [*keep, vec_col]
+    return df.select(
+        *carried, l2_norm(F.col(vec_col).cast("array<double>")).alias("_nn")
+    ).select(*keep, _fixed_cell_expr(crows, vec_col, "_nn").alias(out_col))
+
+
+def _probed_scan(
+    queries: DataFrame,
+    crows,
+    path: str,
+    query_vec: str,
+    n_probe: int,
+    qcols: list[Column],
+    single: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """The serve half of the at-rest IVF layout: ``(q_cells, index)``.
+
+    ``q_cells`` is ``queries`` projected to ``qcols`` plus ``cell`` —
+    one row per (query, probed cell): each query's ``n_probe`` nearest
+    cells exploded from :func:`_fixed_probe_cells_expr`, or with
+    ``single`` its one home cell (:func:`_fixed_cell_expr`).  The
+    DISTINCT probed cells are collected (queries are small by
+    contract — the same driver-side reduction a broadcast join
+    performs) and pushed as a static ``cell IN (...)`` predicate on
+    the read of ``path``, so the scan touches only the probed cells'
+    directories (PartitionFilters): cost is |probed cells| / |cells|
+    of the corpus — prune with index metadata before touching data."""
+    probe = (
+        _fixed_cell_expr(crows, query_vec)
+        if single
+        else F.explode(_fixed_probe_cells_expr(crows, query_vec, n_probe))
+    )
+    q_cells = queries.select(*qcols, probe.alias("cell"))
+    probe_cells = sorted(
+        int(r["cell"]) for r in q_cells.select("cell").distinct().collect()
+    )
+    index = queries.sparkSession.read.parquet(path).filter(
+        F.col("cell").isin(probe_cells)
+    )
+    return q_cells, index
+
+
+def _with_mutual(edges: DataFrame) -> DataFrame:
+    """``(src, dst, rank)`` plus the ``mutual`` flag: u→v is mutual
+    iff v→u is also an edge — a left self-join on the reversed pair.
+    The edge list is n·k rows, small by contract, and the self-join
+    reads it twice, so it is MATERIALIZED first (eager
+    localCheckpoint, the semdedup/LSH-banding convention): a bare
+    persist() would pin the cached candidate-join plan for the whole
+    session, while the checkpoint truncates lineage and frees with the
+    RDD (ADVICE r11)."""
+    edges = edges.localCheckpoint(eager=True)
+    rev = edges.select(
+        F.col("dst").alias("_r_src"), F.col("src").alias("_r_dst")
+    )
+    return edges.join(
+        rev,
+        (edges.src == rev._r_src) & (edges.dst == rev._r_dst),
+        "left",
+    ).select(
+        "src", "dst", "rank", F.col("_r_src").isNotNull().alias("mutual")
+    )
+
+
+def _probe_lists(
+    corpus: DataFrame, crows, n_probe: int, corpus_id: str, corpus_vec: str
+) -> DataFrame:
+    """The quantizer-graph family's one common projection of a corpus
+    relation: ``(_id, _vec, _probe, _n)`` — the ranked ``n_probe``
+    probe list (head = the home cell) with the row norm hoisted ONCE,
+    feeding both the c codeword folds and every pair sim (in-place
+    recomputation would run c+2 times per row; measured ~3x on the
+    fixed twin for the pair leg alone)."""
+    base = corpus.select(
+        F.col(corpus_id).alias("_id"),
+        F.col(corpus_vec).alias("_vec"),
+        l2_norm(F.col(corpus_vec).cast("array<double>")).alias("_n"),
+    )
+    return base.select(
+        "_id",
+        "_vec",
+        _fixed_probe_cells_expr(crows, "_vec", n_probe, "_n").alias("_probe"),
+        "_n",
+    )
+
+
+def _homes_of(b: DataFrame) -> DataFrame:
+    """Candidate side of a :func:`_probe_lists` frame: each vector in
+    its home cell, ``(dst, _nvec, cell, _nn)``."""
+    return b.select(
+        F.col("_id").alias("dst"),
+        F.col("_vec").alias("_nvec"),
+        F.element_at("_probe", 1).alias("cell"),
+        F.col("_n").alias("_nn"),
+    )
+
+
+def _probes_of(b: DataFrame) -> DataFrame:
+    """Query side of a :func:`_probe_lists` frame: one row per probed
+    cell, ``(src, _qvec, cell, _qn)``."""
+    return b.select(
+        F.col("_id").alias("src"),
+        F.col("_vec").alias("_qvec"),
+        F.explode("_probe").alias("cell"),
+        F.col("_n").alias("_qn"),
+    )
+
+
+def _hoisted_cosine(a: str, a_norm: str, b: str, b_norm: str) -> Column:
+    """``_sim``: the bit-exact hoisted cosine — the same dot fold, the
+    same norm·norm product and the same zero guard as
+    functions.vectors.cosine_similarity, with the norms computed once
+    per row instead of once per pair."""
+    denom = F.col(a_norm) * F.col(b_norm)
+    return (
+        F.when(denom == 0, F.lit(None))
+        .otherwise(
+            dot_product(
+                F.col(a).cast("array<double>"), F.col(b).cast("array<double>")
+            )
+            / denom
+        )
+        .alias("_sim")
+    )
+
+
 def ivf_topk_fixed(
     corpus: DataFrame,
     queries: DataFrame,
@@ -672,17 +860,10 @@ def ivf_topk_fixed(
     :func:`ivf_topk` (sampled KMeans + vectorized assignment +
     cell-partitioned storage) and this twin pins its semantics.
     """
-    crows = (
-        centroids.select(centroid_id, centroid_vec)
-        .orderBy(centroid_id)
-        .collect()
+    crows = _quantizer_rows(
+        centroids, None, True, None, centroid_id, centroid_vec, "ivf_topk_fixed"
     )
-    if not crows:
-        raise ValueError("ivf_topk_fixed needs >= 1 centroid")
-
-    # Corpus-side assignment: Arrow kernel (guide §4.2) with the
-    # hoisted-norm expression projection as fallback/reference.
-    assigned = _cell_assign_arrow_or_none(
+    assigned = _assigned_cells(
         corpus.select(
             F.col(corpus_id).alias("neighbor_id"),
             F.col(corpus_vec).alias("_nvec"),
@@ -690,19 +871,7 @@ def ivf_topk_fixed(
         crows,
         ["neighbor_id", "_nvec"],
         "_nvec",
-        single=True,
     )
-    if assigned is None:
-        # Corpus-side norm hoisted once per row for the k-centroid folds.
-        assigned = corpus.select(
-            F.col(corpus_id).alias("neighbor_id"),
-            F.col(corpus_vec).alias("_nvec"),
-            l2_norm(F.col(corpus_vec).cast("array<double>")).alias("_nn"),
-        ).select(
-            "neighbor_id",
-            "_nvec",
-            _fixed_cell_expr(crows, "_nvec", "_nn").alias("cell"),
-        )
     q_assigned = queries.select(
         F.col(query_id).alias("query_id"),
         F.col(query_vec).alias("_qvec"),
@@ -762,14 +931,9 @@ def knn_graph(
 
     Output: ``(src, dst, rank, mutual)``.
     """
-    crows = (
-        centroids.select(centroid_id, centroid_vec)
-        .orderBy(centroid_id)
-        .collect()
+    crows = _quantizer_rows(
+        centroids, None, True, None, centroid_id, centroid_vec, "knn_graph"
     )
-    if not crows:
-        raise ValueError("knn_graph needs >= 1 centroid")
-
     # ONE common projection computes each vector's ranked probe list;
     # its head IS the assignment (same argmax + tie-break), so the
     # corpus-side and probe-side frames derive from the same child —
@@ -777,91 +941,11 @@ def knn_graph(
     # boundary (a two-chain select over the same cached scan tripped a
     # Catalyst ATTRIBUTE_NOT_FOUND collapse bug when the relation had
     # been materialized by a prior count()).
-    # row norm hoisted ONCE, feeding BOTH the c-codeword assignment
-    # folds and the pair sims — the pair relation is |cell|·n_probe
-    # per node and the assignment is c folds per row, so in-place
-    # norm recomputation would run c+2 times per row instead of once
-    # (measured ~3x on the fixed twin for the pair leg alone)
-    base = corpus.select(
-        F.col(corpus_id).alias("_id"),
-        F.col(corpus_vec).alias("_vec"),
-        l2_norm(F.col(corpus_vec).cast("array<double>")).alias("_n"),
+    both = _probe_lists(corpus, crows, n_probe, corpus_id, corpus_vec)
+    pairs = _probes_of(both).join(_homes_of(both), "cell")
+    sims = pairs.filter(F.col("src") != F.col("dst")).select(
+        "src", "dst", _hoisted_cosine("_qvec", "_qn", "_nvec", "_nn")
     )
-    both = base.select(
-        "_id",
-        "_vec",
-        _fixed_probe_cells_expr(crows, "_vec", n_probe, "_n").alias("_probe"),
-        "_n",
-    )
-    # Pair scoring strategy (the descent-family contract,
-    # _make_pair_topk): when the corpus fits the broadcast ceiling the
-    # cell join carries ONLY ids (+cell) and the cosine runs through
-    # the bit-exact broadcast-matrix Arrow kernel — shuffle 16 bytes
-    # per candidate pair instead of two full vectors, no interpreted
-    # per-pair HOF fold (guide §2.3 / §4.2).  Above the ceiling the
-    # original vector-carrying join + hoisted fold runs verbatim (the
-    # 100 TB path).
-    scorer = _broadcast_matrix_scorer(
-        base.select(
-            "_id", F.col("_vec").cast("array<double>").alias("_v"), "_n"
-        )
-    )
-    if scorer is not None:
-        # On the id-only path the probe list needs no vector/norm
-        # downstream, so the c interpreted assignment folds also move
-        # into an Arrow kernel (guide §4.2; bit-equality argument on
-        # _cell_assign_arrow_or_none) — the expression projection
-        # stays as the fallback and the above-ceiling path.
-        kern = _cell_assign_arrow_or_none(
-            base, crows, ["_id"], "_vec", n_probe=n_probe, out_col="_probe"
-        )
-        prb = kern if kern is not None else both
-        assigned = prb.select(
-            F.col("_id").alias("dst"),
-            F.element_at("_probe", 1).alias("cell"),
-        )
-        probes = prb.select(
-            F.col("_id").alias("src"),
-            F.explode("_probe").alias("cell"),
-        )
-        pairs = probes.join(assigned, "cell").filter(
-            F.col("src") != F.col("dst")
-        )
-        sims = scorer(pairs.select("src", "dst"))
-    else:
-        assigned = both.select(
-            F.col("_id").alias("dst"),
-            F.col("_vec").alias("_nvec"),
-            F.element_at("_probe", 1).alias("cell"),
-            F.col("_n").alias("_nn"),
-        )
-        probes = both.select(
-            F.col("_id").alias("src"),
-            F.col("_vec").alias("_qvec"),
-            F.explode("_probe").alias("cell"),
-            F.col("_n").alias("_qn"),
-        )
-        pairs = probes.join(assigned, "cell").filter(
-            F.col("src") != F.col("dst")
-        )
-        # bit-exact hoisted cosine: same dot fold, same norm·norm
-        # product, same zero guard as functions.vectors.
-        # cosine_similarity — the norms are just computed once per row
-        # instead of once per pair
-        denom = F.col("_qn") * F.col("_nn")
-        sims = pairs.select(
-            "src",
-            "dst",
-            F.when(denom == 0, F.lit(None))
-            .otherwise(
-                dot_product(
-                    F.col("_qvec").cast("array<double>"),
-                    F.col("_nvec").cast("array<double>"),
-                )
-                / denom
-            )
-            .alias("_sim"),
-        )
     # local pre-rank (the bm25/brute-force discipline): a node's
     # candidates live in at most n_probe cell partitions, so keeping
     # the per-(partition, src) top-k first shrinks the global window's
@@ -873,67 +957,25 @@ def knn_graph(
         F.col("_lr") <= k
     )
     w = Window.partitionBy("src").orderBy(F.desc("_sim"), F.asc("dst"))
-    # n·k rows — small by contract; persisted because the mutual
-    # self-join references the edge list twice (without it the whole
-    # candidate join and ranking execute once per reference).
-    edges = (
+    return _with_mutual(
         local.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("src", "dst", F.col("rank").cast("int").alias("rank"))
-    # n·k rows — small by contract; the mutual self-join references the
-    # edge list twice, so it is MATERIALIZED (eager localCheckpoint —
-    # the semdedup/LSH-banding convention) rather than left as a cached
-    # lazy plan: a bare persist() would pin the cached candidate-join
-    # plan for the whole session (three registered queries build this
-    # graph), while the checkpoint truncates lineage and frees with the
-    # RDD (ADVICE r11).
-    ).localCheckpoint(eager=True)
-    rev = edges.select(
-        F.col("dst").alias("_r_src"), F.col("src").alias("_r_dst")
-    )
-    return edges.join(
-        rev,
-        (edges.src == rev._r_src) & (edges.dst == rev._r_dst),
-        "left",
-    ).select(
-        "src", "dst", "rank", F.col("_r_src").isNotNull().alias("mutual")
     )
 
 
-def _make_pair_topk(base: DataFrame, n: int, dim: int):
+def _make_pair_topk(base: DataFrame):
     """Factory for the descent-family ``_topk(cand, kk, with_rank)``:
     score an id-pair relation ``(src, dst)`` against ``base``
     (``_id``, ``_v`` double vector, ``_n`` hoisted norm) and keep each
     src's top-``kk`` by (sim DESC, dst ASC).
 
-    Two bit-identical scoring strategies (guide §4.2 / §8: shuffle
-    ids, not payloads; hand batches to vectorized native code):
-
-    * **broadcast-matrix Arrow kernel** — when the collected
-      ``(id, vec, norm)`` state fits ``_pair_score_broadcast_bytes()``:
-      ``base`` is collected once, shipped as a numpy matrix broadcast,
-      and a ``mapInArrow`` kernel computes the cosine with the SAME
-      IEEE op sequence as the Catalyst fold (products then a
-      sequential index-order accumulation seeded at 0.0 — numpy
-      element-wise double ops are the same IEEE binary64 ops, applied
-      j = 0..dim−1 exactly like the ``aggregate`` left fold), the SAME
-      hoisted norms (taken verbatim from the collected ``_n`` column —
-      computed by the Catalyst fold itself), the same zero-denominator
-      NULL guard (explicit Arrow null mask, never NaN), and the
-      inner-join drop semantics for pair ids absent from ``base``
-      (found-mask filter — ring candidates outside a sparse id space
-      must vanish exactly like they fall out of the equi-join).
-      Replaces two joins + a per-pair interpreted fold (HOFs are
-      CodegenFallback) with one Python crossing of 16 bytes/pair.
-    * **join + fold** — the original shape, kept verbatim for corpora
-      above the ceiling (the 100 TB path: vectors live in the
-      partitioned base relation and attach by id) and for any base
-      with NULL vectors/norms (the kernel's numeric fast path cannot
-      represent element-level NULLs; the fold's NULL algebra must
-      win).
-
-    The strategy is chosen once per operator invocation; every
-    ``_topk`` call in the build/refresh/delete loops reuses it.
+    Vectors live in the partitioned base relation and attach to the
+    pair by id (two joins), and the cosine is the hoisted fold — the
+    100 TB shape, the fold's NULL algebra included.  The driver-side
+    descent twins (:func:`_nn_descent_kernel_or_none` and the
+    refresh/delete twins) replay exactly this scoring when the corpus
+    fits the twin gate.
     """
     src_side = base.select(
         F.col("_id").alias("src"),
@@ -946,25 +988,12 @@ def _make_pair_topk(base: DataFrame, n: int, dim: int):
         F.col("_n").alias("_dn"),
     )
 
-    scorer = None
-    if n * (dim + 2) * 8 <= _pair_score_broadcast_bytes():
-        scorer = _broadcast_matrix_scorer(base, dim)
-
-    def _score(cand: DataFrame) -> DataFrame:
-        if scorer is not None:
-            return scorer(cand)
-        scored = cand.join(src_side, "src").join(dst_side, "dst")
-        denom = F.col("_sn") * F.col("_dn")
-        return scored.select(
-            "src",
-            "dst",
-            F.when(denom == 0, F.lit(None))
-            .otherwise(dot_product(F.col("_sv"), F.col("_dv")) / denom)
-            .alias("_sim"),
-        )
-
     def _topk(cand: DataFrame, kk: int, with_rank: bool = False) -> DataFrame:
-        sims = _score(cand)
+        sims = (
+            cand.join(src_side, "src")
+            .join(dst_side, "dst")
+            .select("src", "dst", _hoisted_cosine("_sv", "_sn", "_dv", "_dn"))
+        )
         w = Window.partitionBy("src").orderBy(F.desc("_sim"), F.asc("dst"))
         ranked = sims.withColumn("rank", F.row_number().over(w)).filter(
             F.col("rank") <= kk
@@ -976,75 +1005,6 @@ def _make_pair_topk(base: DataFrame, n: int, dim: int):
         return ranked.select("src", "dst")
 
     return _topk
-
-
-def _broadcast_matrix_scorer(base: DataFrame, dim: int | None = None):
-    """Gate + build the broadcast-matrix Arrow scorer over ``base``
-    (``_id``, ``_v``, ``_n``; see :func:`_make_pair_topk` for the
-    bit-equality contract), or None when :func:`collect_vectors`
-    declines the state — NULLs must go through Catalyst's NULL algebra
-    on the join+fold path, and an over-ceiling corpus (the 100 TB
-    path) keeps the vector-carrying join plan.  Callers that do not
-    know ``dim`` (the quantizer-graph family) let the gate probe it."""
-    import numpy as np
-
-    st = collect_vectors(base, "_id", dim=dim)
-    if st is None:
-        return None
-    ids, norms = st["ids"], st["norms"]
-    # Transposed, contiguous layout: the fold gathers matT[j][idx]
-    # (a 16 KB-ish row, cache-resident) instead of striding over
-    # row-major columns — measured 28x on the j-order fold, same
-    # float64 values in the same IEEE order.
-    mat_t = np.ascontiguousarray(st["mat"].T)
-    b_state = base.sparkSession.sparkContext.broadcast((ids, mat_t, norms))
-    n_ids = len(ids)
-
-    def scorer(cand: DataFrame) -> DataFrame:
-        pair = cand.select(
-            F.col("src").cast("long").alias("src"),
-            F.col("dst").cast("long").alias("dst"),
-        )
-
-        def kernel(batches):
-            import pyarrow as pa
-
-            bids, bmat_t, bnorms = b_state.value
-            ndim = bmat_t.shape[0]
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                s = batch.column(0).to_numpy(zero_copy_only=False)
-                d = batch.column(1).to_numpy(zero_copy_only=False)
-                si = np.searchsorted(bids, s)
-                di = np.searchsorted(bids, d)
-                np.clip(si, 0, n_ids - 1, out=si)
-                np.clip(di, 0, n_ids - 1, out=di)
-                found = (bids[si] == s) & (bids[di] == d)
-                if not found.all():
-                    s, d, si, di = s[found], d[found], si[found], di[found]
-                if len(s) == 0:
-                    continue
-                acc = np.zeros(len(s), dtype=np.float64)
-                for j in range(ndim):
-                    acc += bmat_t[j][si] * bmat_t[j][di]
-                den = bnorms[si] * bnorms[di]
-                null_mask = den == 0.0
-                np.divide(acc, den, out=acc, where=~null_mask)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(s, type=pa.int64()),
-                        pa.array(d, type=pa.int64()),
-                        pa.array(acc, type=pa.float64(), mask=null_mask),
-                    ],
-                    names=["src", "dst", "_sim"],
-                )
-
-        return pair.mapInArrow(
-            kernel, schema="src long, dst long, _sim double"
-        )
-
-    return scorer
 
 
 def _collect_corpus_state(base: DataFrame, n: int, dim: int):
@@ -1190,8 +1150,8 @@ def _nn_descent_kernel_or_none(
     [two-hop join + distinct + scoring + window + eager
     localCheckpoint] plan (≥4 exchanges and a driver-blocking job per
     round).  Between rounds the driver collects the n·k_build edge
-    list (Arrow, gate-bounded — the same collect-the-small-side
-    contract as :func:`_broadcast_matrix_scorer`), computes the
+    list (Arrow, gate-bounded — the collect-the-small-side contract
+    of :func:`collect_vectors`), computes the
     undirected set and the Dong et al. new/old split with vectorized
     set algebra, and re-broadcasts the adjacency.  Parallelism is
     preserved — sources partition across tasks, so the ×10/×30 scale
@@ -1200,8 +1160,8 @@ def _nn_descent_kernel_or_none(
     distributed loop verbatim (the 100 TB path).
 
     Bit-equality with the loop, term by term: sims use the identical
-    IEEE sequence as :func:`_make_pair_topk`'s kernel (products then
-    j-order accumulation, hoisted Catalyst norms, den==0 → NULL);
+    IEEE sequence as :func:`_make_pair_topk`'s Catalyst fold (products
+    then j-order accumulation, hoisted Catalyst norms, den==0 → NULL);
     candidate sets replicate seed/two-hop/∪g/distinct exactly (set
     semantics, deduped on (src, dst)); top-k selection orders by
     (_sim DESC NULLS LAST with NaN above +inf, dst ASC) — the
@@ -1566,10 +1526,7 @@ def nn_descent_graph(
         base.unpersist()
         return fast
 
-    # Scoring strategy chosen once per build (broadcast-matrix Arrow
-    # kernel vs join + fold — see _make_pair_topk); the per-round
-    # window/rank logic is identical either way.
-    _topk = _make_pair_topk(base, n, dim)
+    _topk = _make_pair_topk(base)
 
     # -- seed: bucket mates ∪ id ring --------------------------------
     bpair = (
@@ -1642,18 +1599,9 @@ def nn_descent_graph(
 
     # -- final rank + mutual flag: top-k of the converged working
     #    lists --------------------------------------------------------
-    edges = _topk(g, k, with_rank=True).localCheckpoint(eager=True)
+    out = _with_mutual(_topk(g, k, with_rank=True))
     base.unpersist()
-    rev = edges.select(
-        F.col("dst").alias("_r_src"), F.col("src").alias("_r_dst")
-    )
-    return edges.join(
-        rev,
-        (edges.src == rev._r_src) & (edges.dst == rev._r_dst),
-        "left",
-    ).select(
-        "src", "dst", "rank", F.col("_r_src").isNotNull().alias("mutual")
-    )
+    return out
 
 
 #: At-rest kNN-graph layout (graph-ANN serving): the edge list lives
@@ -1998,9 +1946,7 @@ def nn_descent_refresh(
         base.unpersist()
         return fast
 
-    # Shared scoring strategy (broadcast-matrix Arrow kernel vs
-    # join + fold — _make_pair_topk); chosen once per refresh.
-    _topk = _make_pair_topk(base, n, dim)
+    _topk = _make_pair_topk(base)
 
     # -- 1. delta seeding ---------------------------------------------
     dbkt = delta_ids.join(
@@ -2081,22 +2027,9 @@ def nn_descent_refresh(
             eager=True
         )
 
-    edges = (
-        _topk(g, k, with_rank=True)
-        .union(untouched)
-        .localCheckpoint(eager=True)
-    )
+    out = _with_mutual(_topk(g, k, with_rank=True).union(untouched))
     base.unpersist()
-    rev = edges.select(
-        F.col("dst").alias("_r_src"), F.col("src").alias("_r_dst")
-    )
-    return edges.join(
-        rev,
-        (edges.src == rev._r_src) & (edges.dst == rev._r_dst),
-        "left",
-    ).select(
-        "src", "dst", "rank", F.col("_r_src").isNotNull().alias("mutual")
-    )
+    return out
 
 
 def _nn_descent_delete_local_or_none(
@@ -2248,9 +2181,7 @@ def nn_descent_delete(
         base.unpersist()
         return fast
 
-    # Shared scoring strategy (broadcast-matrix Arrow kernel vs
-    # join + fold — _make_pair_topk); chosen once per delete.
-    _topk = _make_pair_topk(base, n, dim)
+    _topk = _make_pair_topk(base)
 
     # -- 1. tombstone: deleted srcs drop; touched = srcs losing an edge
     old_kept = old_edges.select("src", "dst", "rank").join(
@@ -2321,22 +2252,9 @@ def nn_descent_delete(
             eager=True
         )
 
-    edges = (
-        _topk(g, k, with_rank=True)
-        .union(untouched)
-        .localCheckpoint(eager=True)
-    )
+    out = _with_mutual(_topk(g, k, with_rank=True).union(untouched))
     base.unpersist()
-    rev = edges.select(
-        F.col("dst").alias("_r_src"), F.col("src").alias("_r_dst")
-    )
-    return edges.join(
-        rev,
-        (edges.src == rev._r_src) & (edges.dst == rev._r_dst),
-        "left",
-    ).select(
-        "src", "dst", "rank", F.col("_r_src").isNotNull().alias("mutual")
-    )
+    return out
 
 
 def knn_graph_append(
@@ -2382,67 +2300,20 @@ def knn_graph_append(
 
     Output: ``(src, dst, rank, mutual)`` — the :func:`knn_graph`
     schema, bit-identical to the rebuild."""
-    crows = (
-        centroids.select(centroid_id, centroid_vec)
-        .orderBy(centroid_id)
-        .collect()
+    crows = _quantizer_rows(
+        centroids, None, True, None, centroid_id, centroid_vec,
+        "knn_graph_append",
     )
-    if not crows:
-        raise ValueError("knn_graph_append needs >= 1 centroid")
-
-    def _both(df: DataFrame) -> DataFrame:
-        # ONE common projection per input relation: ranked probe list
-        # (head = assignment) + hoisted norm — the knn_graph shape.
-        b = df.select(
-            F.col(corpus_id).alias("_id"),
-            F.col(corpus_vec).alias("_vec"),
-            l2_norm(F.col(corpus_vec).cast("array<double>")).alias("_n"),
-        )
-        return b.select(
-            "_id",
-            "_vec",
-            _fixed_probe_cells_expr(crows, "_vec", n_probe, "_n").alias(
-                "_probe"
-            ),
-            "_n",
-        )
-
-    old_b = _both(corpus_old)
-    new_b = _both(delta)
-
-    def _assigned(b: DataFrame) -> DataFrame:
-        return b.select(
-            F.col("_id").alias("dst"),
-            F.col("_vec").alias("_nvec"),
-            F.element_at("_probe", 1).alias("cell"),
-            F.col("_n").alias("_nn"),
-        )
-
-    def _probes(b: DataFrame) -> DataFrame:
-        return b.select(
-            F.col("_id").alias("src"),
-            F.col("_vec").alias("_qvec"),
-            F.explode("_probe").alias("cell"),
-            F.col("_n").alias("_qn"),
-        )
+    # ONE common projection per input relation — the knn_graph shape.
+    old_b = _probe_lists(corpus_old, crows, n_probe, corpus_id, corpus_vec)
+    new_b = _probe_lists(delta, crows, n_probe, corpus_id, corpus_vec)
 
     def _score(pairs: DataFrame) -> DataFrame:
-        # bit-exact hoisted cosine, vectors CARRIED through the cell
-        # join exactly like knn_graph's own pair leg — no candidate
-        # materialization, no join-back by id.
-        denom = F.col("_qn") * F.col("_nn")
+        # vectors CARRIED through the cell join exactly like
+        # knn_graph's own pair leg — no candidate materialization, no
+        # join-back by id.
         return pairs.filter(F.col("src") != F.col("dst")).select(
-            "src",
-            "dst",
-            F.when(denom == 0, F.lit(None))
-            .otherwise(
-                dot_product(
-                    F.col("_qvec").cast("array<double>"),
-                    F.col("_nvec").cast("array<double>"),
-                )
-                / denom
-            )
-            .alias("_sim"),
+            "src", "dst", _hoisted_cosine("_qvec", "_qn", "_nvec", "_nn")
         )
 
     # old sources meet ONLY the delta members of their probe cells;
@@ -2463,111 +2334,42 @@ def knn_graph_append(
     full = old_b.select("_id", "_vec", "_n").union(
         new_b.select("_id", "_vec", "_n")
     )
-    # Pair scoring strategy (the knn_graph contract): under the
-    # broadcast ceiling the three candidate legs stay id-only, the
-    # dedup runs BEFORE scoring (scores are a pure deterministic
-    # function of the pair, so dedup-then-score ≡ score-then-dedup),
-    # and ONE Arrow-kernel pass scores the merged relation; above it
-    # the vector-carrying joins + hoisted fold run verbatim.
-    scorer = _broadcast_matrix_scorer(
-        full.select(
-            "_id", F.col("_vec").cast("array<double>").alias("_v"), "_n"
+    leg_old_src = _score(_probes_of(old_b).join(_homes_of(new_b), "cell"))
+    leg_new_src = _score(
+        _probes_of(new_b).join(
+            _homes_of(old_b).union(_homes_of(new_b)), "cell"
         )
     )
-    if scorer is not None:
-        # id-only path: the probe assignment needs no vector/norm
-        # downstream — run the c interpreted folds as one Arrow kernel
-        # per input relation (guide §4.2), expression fallback intact.
-        def _probe_rel(df: DataFrame, fallback: DataFrame) -> DataFrame:
-            kern = _cell_assign_arrow_or_none(
-                df.select(
-                    F.col(corpus_id).alias("_id"),
-                    F.col(corpus_vec).alias("_vec"),
-                ),
-                crows,
-                ["_id"],
-                "_vec",
-                n_probe=n_probe,
-                out_col="_probe",
-            )
-            return kern if kern is not None else fallback
-
-        old_pr = _probe_rel(corpus_old, old_b)
-        new_pr = _probe_rel(delta, new_b)
-
-        def _ids_only(b: DataFrame, what: str) -> DataFrame:
-            if what == "assigned":
-                return b.select(
-                    F.col("_id").alias("dst"),
-                    F.element_at("_probe", 1).alias("cell"),
-                )
-            return b.select(
+    # re-score the surviving old edges (n·k pairs), same fold
+    old_scored = _score(
+        old_edges.select("src", "dst")
+        .join(
+            full.select(
                 F.col("_id").alias("src"),
-                F.explode("_probe").alias("cell"),
-            )
-
-        leg1 = _ids_only(old_pr, "probes").join(
-            _ids_only(new_pr, "assigned"), "cell"
+                F.col("_vec").alias("_qvec"),
+                F.col("_n").alias("_qn"),
+            ),
+            "src",
         )
-        leg2 = _ids_only(new_pr, "probes").join(
-            _ids_only(old_pr, "assigned").union(_ids_only(new_pr, "assigned")),
-            "cell",
+        .join(
+            full.select(
+                F.col("_id").alias("dst"),
+                F.col("_vec").alias("_nvec"),
+                F.col("_n").alias("_nn"),
+            ),
+            "dst",
         )
-        pairs = (
-            old_edges.select("src", "dst")
-            .union(leg1.select("src", "dst"))
-            .union(leg2.select("src", "dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .dropDuplicates(["src", "dst"])
-        )
-        sims = scorer(pairs)
-    else:
-        leg_old_src = _score(_probes(old_b).join(_assigned(new_b), "cell"))
-        leg_new_src = _score(
-            _probes(new_b).join(
-                _assigned(old_b).union(_assigned(new_b)), "cell"
-            )
-        )
-        # re-score the surviving old edges (n·k pairs), same fold
-        old_scored = _score(
-            old_edges.select("src", "dst")
-            .join(
-                full.select(
-                    F.col("_id").alias("src"),
-                    F.col("_vec").alias("_qvec"),
-                    F.col("_n").alias("_qn"),
-                ),
-                "src",
-            )
-            .join(
-                full.select(
-                    F.col("_id").alias("dst"),
-                    F.col("_vec").alias("_nvec"),
-                    F.col("_n").alias("_nn"),
-                ),
-                "dst",
-            )
-        )
-        sims = (
-            old_scored.union(leg_old_src)
-            .union(leg_new_src)
-            .dropDuplicates(["src", "dst"])
-        )
+    )
+    sims = (
+        old_scored.union(leg_old_src)
+        .union(leg_new_src)
+        .dropDuplicates(["src", "dst"])
+    )
     w = Window.partitionBy("src").orderBy(F.desc("_sim"), F.asc("dst"))
-    edges = (
+    return _with_mutual(
         sims.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("src", "dst", F.col("rank").cast("int").alias("rank"))
-    ).localCheckpoint(eager=True)
-    rev = edges.select(
-        F.col("dst").alias("_r_src"), F.col("src").alias("_r_dst")
-    )
-    return edges.join(
-        rev,
-        (edges.src == rev._r_src) & (edges.dst == rev._r_dst),
-        "left",
-    ).select(
-        "src", "dst", "rank", F.col("_r_src").isNotNull().alias("mutual")
     )
 
 
@@ -2607,13 +2409,10 @@ def knn_graph_delete(
 
     Output: ``(src, dst, rank, mutual)`` — the :func:`knn_graph`
     schema, bit-identical to the rebuild."""
-    crows = (
-        centroids.select(centroid_id, centroid_vec)
-        .orderBy(centroid_id)
-        .collect()
+    crows = _quantizer_rows(
+        centroids, None, True, None, centroid_id, centroid_vec,
+        "knn_graph_delete",
     )
-    if not crows:
-        raise ValueError("knn_graph_delete needs >= 1 centroid")
     dele = deleted_ids.select(F.col(id_col).alias("_del")).distinct()
 
     old_kept = old_edges.select("src", "dst", "rank")
@@ -2632,94 +2431,20 @@ def knn_graph_delete(
 
     # re-rank the affected sources over their probe cells' post-delete
     # membership — the knn_graph pair leg restricted to |affected| srcs
-    base = corpus_new.select(
-        F.col(corpus_id).alias("_id"),
-        F.col(corpus_vec).alias("_vec"),
-        l2_norm(F.col(corpus_vec).cast("array<double>")).alias("_n"),
+    both = _probe_lists(corpus_new, crows, n_probe, corpus_id, corpus_vec)
+    probes = _probes_of(both.join(affected, both._id == affected.src))
+    sims = (
+        probes.join(_homes_of(both), "cell")
+        .filter(F.col("src") != F.col("dst"))
+        .select("src", "dst", _hoisted_cosine("_qvec", "_qn", "_nvec", "_nn"))
     )
-    both = base.select(
-        "_id",
-        "_vec",
-        _fixed_probe_cells_expr(crows, "_vec", n_probe, "_n").alias("_probe"),
-        "_n",
-    )
-    # Pair scoring strategy (the knn_graph contract): id-only cell
-    # join + broadcast-matrix Arrow kernel under the ceiling, the
-    # vector-carrying join + hoisted fold verbatim above it.
-    scorer = _broadcast_matrix_scorer(
-        base.select(
-            "_id", F.col("_vec").cast("array<double>").alias("_v"), "_n"
-        )
-    )
-    if scorer is not None:
-        # id-only path: Arrow kernel for the probe assignment (guide
-        # §4.2), expression projection as fallback.
-        kern = _cell_assign_arrow_or_none(
-            base, crows, ["_id"], "_vec", n_probe=n_probe, out_col="_probe"
-        )
-        prb = kern if kern is not None else both
-        assigned = prb.select(
-            F.col("_id").alias("dst"),
-            F.element_at("_probe", 1).alias("cell"),
-        )
-        probes = prb.join(affected, prb._id == affected.src).select(
-            F.col("_id").alias("src"),
-            F.explode("_probe").alias("cell"),
-        )
-        pairs = probes.join(assigned, "cell").filter(
-            F.col("src") != F.col("dst")
-        )
-        sims = scorer(pairs.select("src", "dst"))
-    else:
-        assigned = both.select(
-            F.col("_id").alias("dst"),
-            F.col("_vec").alias("_nvec"),
-            F.element_at("_probe", 1).alias("cell"),
-            F.col("_n").alias("_nn"),
-        )
-        probes = (
-            both.join(affected, both._id == affected.src)
-            .select(
-                F.col("_id").alias("src"),
-                F.col("_vec").alias("_qvec"),
-                F.explode("_probe").alias("cell"),
-                F.col("_n").alias("_qn"),
-            )
-        )
-        pairs = probes.join(assigned, "cell").filter(
-            F.col("src") != F.col("dst")
-        )
-        denom = F.col("_qn") * F.col("_nn")
-        sims = pairs.select(
-            "src",
-            "dst",
-            F.when(denom == 0, F.lit(None))
-            .otherwise(
-                dot_product(
-                    F.col("_qvec").cast("array<double>"),
-                    F.col("_nvec").cast("array<double>"),
-                )
-                / denom
-            )
-            .alias("_sim"),
-        )
     w = Window.partitionBy("src").orderBy(F.desc("_sim"), F.asc("dst"))
     recomputed = (
         sims.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("src", "dst", F.col("rank").cast("int").alias("rank"))
     )
-    edges = survivors.union(recomputed).localCheckpoint(eager=True)
-    rev = edges.select(
-        F.col("dst").alias("_r_src"), F.col("src").alias("_r_dst")
-    )
-    return edges.join(
-        rev,
-        (edges.src == rev._r_src) & (edges.dst == rev._r_dst),
-        "left",
-    ).select(
-        "src", "dst", "rank", F.col("_r_src").isNotNull().alias("mutual")
-    )
+    return _with_mutual(survivors.union(recomputed))
 
 
 def _beam_rounds_kernel_or_none(
@@ -2740,7 +2465,7 @@ def _beam_rounds_kernel_or_none(
     ``localCheckpoint`` (4 driver-blocking jobs for 3 rounds) with one
     lazy pipeline.  The QUERY side stays distributed: per-task state is
     its partition's queries × O(beam·degree·rounds) — the broadcast is
-    corpus-bounded exactly like :func:`_make_pair_topk`'s scorer, and
+    corpus-bounded by the same ceiling as the descent twins, and
     above the ceiling (the 100 TB path) the caller keeps the join loop
     verbatim.
 
@@ -3509,39 +3234,16 @@ def ivf_persisted_topk(
     stays single-level.
     """
     from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
-        load_centroids,
         save_centroids,
     )
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import write_table
 
-    if centroids is None:
-        if rebuild:
-            raise ValueError("rebuild=True requires an explicit centroid table")
-        crows = load_centroids(path, expected_fingerprint=fingerprint)
-        if crows is None:
-            raise ValueError(
-                f"no (or stale) centroid artifact under {path}/_quantizer — "
-                "rebuild the index or pass centroids explicitly"
-            )
-    else:
-        crows = [
-            (r[0], r[1])
-            for r in centroids.select(centroid_id, centroid_vec)
-            .orderBy(centroid_id)
-            .collect()
-        ]
-    if not crows:
-        raise ValueError("ivf_persisted_topk needs >= 1 centroid")
-
-    spark = corpus.sparkSession
+    crows = _quantizer_rows(
+        centroids, path, rebuild, fingerprint, centroid_id, centroid_vec,
+        "ivf_persisted_topk",
+    )
     if rebuild:
-        # Corpus-side assignment: the c interpreted folds per row run
-        # as one Arrow kernel (guide §4.2, bit-equality argument on
-        # _cell_assign_arrow_or_none); the expression projection stays
-        # as the fallback/reference.  The codebook broadcast is small
-        # BY CONTRACT (the PQ-encode argument) — no size gate needed,
-        # the corpus streams.
-        assigned = _cell_assign_arrow_or_none(
+        assigned = _assigned_cells(
             corpus.select(
                 F.col(corpus_id).alias("neighbor_id"),
                 F.col(corpus_vec).alias("_nvec"),
@@ -3549,18 +3251,7 @@ def ivf_persisted_topk(
             crows,
             ["neighbor_id", "_nvec"],
             "_nvec",
-            single=True,
         )
-        if assigned is None:
-            assigned = corpus.select(
-                F.col(corpus_id).alias("neighbor_id"),
-                F.col(corpus_vec).alias("_nvec"),
-                l2_norm(F.col(corpus_vec).cast("array<double>")).alias("_nn"),
-            ).select(
-                "neighbor_id",
-                "_nvec",
-                _fixed_cell_expr(crows, "_nvec", "_nn").alias("cell"),
-            )
         if batch_id is not None:
             assigned = assigned.withColumn("batch_id", F.lit(int(batch_id)))
             write_table(assigned, path, partition_by=["cell", "batch_id"])
@@ -3568,26 +3259,15 @@ def ivf_persisted_topk(
             write_table(assigned, path, partition_by=["cell"])
         save_centroids(path, crows, fingerprint=fingerprint)
 
-    if n_probe <= 1:
-        q_assigned = queries.select(
-            F.col(query_id).alias("query_id"),
-            F.col(query_vec).alias("_qvec"),
-            _fixed_cell_expr(crows, query_vec).alias("cell"),
-        )
-    else:
-        q_assigned = queries.select(
-            F.col(query_id).alias("query_id"),
-            F.col(query_vec).alias("_qvec"),
-            F.explode(
-                _fixed_probe_cells_expr(crows, query_vec, n_probe)
-            ).alias("cell"),
-        )
-    probe_cells = sorted(
-        int(r["cell"]) for r in q_assigned.select("cell").distinct().collect()
+    q_assigned, index = _probed_scan(
+        queries,
+        crows,
+        path,
+        query_vec,
+        n_probe,
+        [F.col(query_id).alias("query_id"), F.col(query_vec).alias("_qvec")],
+        single=n_probe <= 1,
     )
-    # Static partition predicate: directory-level pruning at the scan,
-    # visible as PartitionFilters — no full-corpus pass per query.
-    index = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
     pairs = index.join(F.broadcast(q_assigned), "cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
@@ -3646,16 +3326,12 @@ def ivf_persisted_append(
         write_table,
     )
 
-    crows = (
-        centroids.select(centroid_id, centroid_vec)
-        .orderBy(centroid_id)
-        .collect()
+    crows = _quantizer_rows(
+        centroids, None, True, None, centroid_id, centroid_vec,
+        "ivf_persisted_append",
     )
-    if not crows:
-        raise ValueError("ivf_persisted_append needs >= 1 centroid")
-    # Arrow-kernel assignment (same contract as the rebuild path in
-    # ivf_persisted_topk) with the expression projection as fallback.
-    assigned = _cell_assign_arrow_or_none(
+    # the same assignment as the rebuild path in ivf_persisted_topk
+    assigned = _assigned_cells(
         new_corpus.select(
             F.col(corpus_id).alias("neighbor_id"),
             F.col(corpus_vec).alias("_nvec"),
@@ -3663,18 +3339,7 @@ def ivf_persisted_append(
         crows,
         ["neighbor_id", "_nvec"],
         "_nvec",
-        single=True,
     )
-    if assigned is None:
-        assigned = new_corpus.select(
-            F.col(corpus_id).alias("neighbor_id"),
-            F.col(corpus_vec).alias("_nvec"),
-            l2_norm(F.col(corpus_vec).cast("array<double>")).alias("_nn"),
-        ).select(
-            "neighbor_id",
-            "_nvec",
-            _fixed_cell_expr(crows, "_nvec", "_nn").alias("cell"),
-        )
     if batch_id is not None:
         assigned = assigned.withColumn("batch_id", F.lit(int(batch_id)))
         overwrite_partitions(assigned, path, ["cell", "batch_id"])
@@ -3810,64 +3475,42 @@ def ivf_filtered_topk(
     verbatim, so the oracle is that query's with one WHERE added.
     Output: ``(query_id, cell, neighbor_id)``."""
     from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
-        load_centroids,
         save_centroids,
     )
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import write_table
 
-    if centroids is None:
-        if rebuild:
-            raise ValueError("rebuild=True requires an explicit centroid table")
-        crows = load_centroids(path, expected_fingerprint=fingerprint)
-        if crows is None:
-            raise ValueError(
-                f"no (or stale) centroid artifact under {path}/_quantizer"
-            )
-    else:
-        crows = [
-            (r[0], r[1])
-            for r in centroids.select(centroid_id, centroid_vec)
-            .orderBy(centroid_id)
-            .collect()
-        ]
-    if not crows:
-        raise ValueError("ivf_filtered_topk needs >= 1 centroid")
-    spark = corpus.sparkSession
+    crows = _quantizer_rows(
+        centroids, path, rebuild, fingerprint, centroid_id, centroid_vec,
+        "ivf_filtered_topk",
+    )
     attrs = list(attrs or [])
 
     if rebuild:
-        assigned = corpus.select(
-            F.col(corpus_id).alias("neighbor_id"),
-            *attrs,
-            F.col(corpus_vec).alias("_nvec"),
-            l2_norm(F.col(corpus_vec).cast("array<double>")).alias("_nn"),
-        ).select(
-            "neighbor_id",
-            *attrs,
+        assigned = _assigned_cells(
+            corpus.select(
+                F.col(corpus_id).alias("neighbor_id"),
+                *attrs,
+                F.col(corpus_vec).alias("_nvec"),
+            ),
+            crows,
+            ["neighbor_id", *attrs, "_nvec"],
             "_nvec",
-            _fixed_cell_expr(crows, "_nvec", "_nn").alias("cell"),
         )
         write_table(assigned, path, partition_by=["cell"])
         save_centroids(path, crows, fingerprint=fingerprint)
 
-    q_assigned = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(query_vec).alias("_qvec"),
-        F.explode(
-            _fixed_probe_cells_expr(crows, query_vec, n_probe)
-        ).alias("cell"),
-    )
-    probe_cells = sorted(
-        int(r["cell"]) for r in q_assigned.select("cell").distinct().collect()
+    q_assigned, index = _probed_scan(
+        queries,
+        crows,
+        path,
+        query_vec,
+        n_probe,
+        [F.col(query_id).alias("query_id"), F.col(query_vec).alias("_qvec")],
     )
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    index = (
-        spark.read.parquet(path)
-        .filter(F.col("cell").isin(probe_cells))
-        # the metadata predicate rides the SAME scan: partition pruning
-        # above, parquet row-group pushdown here — no side-table join
-        .filter(pred)
-    )
+    # the metadata predicate rides the SAME scan: partition pruning
+    # above, parquet row-group pushdown here — no side-table join
+    index = index.filter(pred)
     pairs = index.join(F.broadcast(q_assigned), "cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
@@ -3920,54 +3563,35 @@ def ivf_diverse_topk(
 
     Output: ``(query_id, cell, neighbor_id, rank)``."""
     from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
-        load_centroids,
         save_centroids,
     )
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import write_table
 
-    if centroids is None:
-        if rebuild:
-            raise ValueError("rebuild=True requires an explicit centroid table")
-        crows = load_centroids(path, expected_fingerprint=fingerprint)
-        if crows is None:
-            raise ValueError(
-                f"no (or stale) centroid artifact under {path}/_quantizer"
-            )
-    else:
-        crows = [
-            (r[0], r[1])
-            for r in centroids.select(centroid_id, centroid_vec)
-            .orderBy(centroid_id)
-            .collect()
-        ]
-    if not crows:
-        raise ValueError("ivf_diverse_topk needs >= 1 centroid")
-    spark = corpus.sparkSession
-
+    crows = _quantizer_rows(
+        centroids, path, rebuild, fingerprint, centroid_id, centroid_vec,
+        "ivf_diverse_topk",
+    )
     if rebuild:
-        assigned = corpus.select(
-            F.col(corpus_id).alias("neighbor_id"),
-            F.col(corpus_vec).alias("_nvec"),
-            l2_norm(F.col(corpus_vec).cast("array<double>")).alias("_nn"),
-        ).select(
-            "neighbor_id",
+        assigned = _assigned_cells(
+            corpus.select(
+                F.col(corpus_id).alias("neighbor_id"),
+                F.col(corpus_vec).alias("_nvec"),
+            ),
+            crows,
+            ["neighbor_id", "_nvec"],
             "_nvec",
-            _fixed_cell_expr(crows, "_nvec", "_nn").alias("cell"),
         )
         write_table(assigned, path, partition_by=["cell"])
         save_centroids(path, crows, fingerprint=fingerprint)
 
-    q_assigned = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(query_vec).alias("_qvec"),
-        F.explode(
-            _fixed_probe_cells_expr(crows, query_vec, n_probe)
-        ).alias("cell"),
+    q_assigned, index = _probed_scan(
+        queries,
+        crows,
+        path,
+        query_vec,
+        n_probe,
+        [F.col(query_id).alias("query_id"), F.col(query_vec).alias("_qvec")],
     )
-    probe_cells = sorted(
-        int(r["cell"]) for r in q_assigned.select("cell").distinct().collect()
-    )
-    index = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
     pairs = index.join(F.broadcast(q_assigned), "cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
@@ -4037,54 +3661,35 @@ def ivf_range_search(
 
     Output: ``(query_id, cell, neighbor_id, sim)``."""
     from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
-        load_centroids,
         save_centroids,
     )
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import write_table
 
-    if centroids is None:
-        if rebuild:
-            raise ValueError("rebuild=True requires an explicit centroid table")
-        crows = load_centroids(path, expected_fingerprint=fingerprint)
-        if crows is None:
-            raise ValueError(
-                f"no (or stale) centroid artifact under {path}/_quantizer"
-            )
-    else:
-        crows = [
-            (r[0], r[1])
-            for r in centroids.select(centroid_id, centroid_vec)
-            .orderBy(centroid_id)
-            .collect()
-        ]
-    if not crows:
-        raise ValueError("ivf_range_search needs >= 1 centroid")
-    spark = corpus.sparkSession
-
+    crows = _quantizer_rows(
+        centroids, path, rebuild, fingerprint, centroid_id, centroid_vec,
+        "ivf_range_search",
+    )
     if rebuild:
-        assigned = corpus.select(
-            F.col(corpus_id).alias("neighbor_id"),
-            F.col(corpus_vec).alias("_nvec"),
-            l2_norm(F.col(corpus_vec).cast("array<double>")).alias("_nn"),
-        ).select(
-            "neighbor_id",
+        assigned = _assigned_cells(
+            corpus.select(
+                F.col(corpus_id).alias("neighbor_id"),
+                F.col(corpus_vec).alias("_nvec"),
+            ),
+            crows,
+            ["neighbor_id", "_nvec"],
             "_nvec",
-            _fixed_cell_expr(crows, "_nvec", "_nn").alias("cell"),
         )
         write_table(assigned, path, partition_by=["cell"])
         save_centroids(path, crows, fingerprint=fingerprint)
 
-    q_assigned = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(query_vec).alias("_qvec"),
-        F.explode(
-            _fixed_probe_cells_expr(crows, query_vec, n_probe)
-        ).alias("cell"),
+    q_assigned, index = _probed_scan(
+        queries,
+        crows,
+        path,
+        query_vec,
+        n_probe,
+        [F.col(query_id).alias("query_id"), F.col(query_vec).alias("_qvec")],
     )
-    probe_cells = sorted(
-        int(r["cell"]) for r in q_assigned.select("cell").distinct().collect()
-    )
-    index = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
     pairs = index.join(F.broadcast(q_assigned), "cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
@@ -4127,22 +3732,9 @@ def spherical_kmeans_train(
         raise ValueError(f"corpus has {len(seed)} vectors, need k={k}")
     crows = [(cid, list(r["_v"])) for cid, r in enumerate(seed)]
     dim = len(crows[0][1])
-    # Row-side norm hoisted once per row; the k per-centroid cosine
-    # folds share it (bit-identical — cosine_similarity_hoisted).
-    normed = base.select("_v", l2_norm(F.col("_v")).alias("_nv"))
-
     for _ in range(iters):
-        # Assignment via the Arrow kernel (guide §4.2) when available;
-        # the hoisted-norm expression projection is the fallback.
-        assigned_iter = _cell_assign_arrow_or_none(
-            base, crows, ["_v"], "_v", single=True, out_col="_cell"
-        )
-        if assigned_iter is None:
-            assigned_iter = normed.select(
-                "_v", _fixed_cell_expr(crows, "_v", "_nv").alias("_cell")
-            )
         means = (
-            assigned_iter
+            _assigned_cells(base, crows, ["_v"], "_v", out_col="_cell")
             .select("_cell", F.posexplode("_v").alias("_i0", "_x"))
             .groupBy("_cell", (F.col("_i0") + 1).alias("i"))
             .agg(
@@ -4213,18 +3805,8 @@ def spherical_kmeans_fit(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
     )
 
-    def assign() -> DataFrame:
-        kern = _cell_assign_arrow_or_none(
-            base, crows, ["_v"], "_v", single=True, out_col="_cell"
-        )
-        if kern is not None:
-            return kern
-        return base.select("_v", l2_norm(F.col("_v")).alias("_nv")).select(
-            "_v", _fixed_cell_expr(crows, "_v", "_nv").alias("_cell")
-        )
-
     counts = (
-        assign()
+        _assigned_cells(base, crows, ["_v"], "_v", out_col="_cell")
         .groupBy(F.col("_cell").alias("centroid_id"))
         .agg(F.count(F.lit(1)).alias("n_members"))
     )
@@ -4498,8 +4080,8 @@ def _pq_encode_cols(
     all-equal sims and therefore the LOWEST code in both engines),
     and the in-plan guard untouched upstream of the kernel.  The
     codebook state it broadcasts is M·K·sub_dim doubles — small BY
-    CONTRACT at any corpus scale, so unlike the pair scorer this path
-    needs no size gate; the corpus itself streams through in batches.
+    CONTRACT at any corpus scale, so unlike the corpus-state twins
+    this path needs no size gate; the corpus itself streams through in batches.
     ``SPARK_GRAFT_TWINS=0`` restores the interpreted
     literal-fold projection (kept verbatim below as the fallback and
     the semantics reference)."""
@@ -4898,7 +4480,6 @@ def ivfadc_topk(
     pre-filter semantics, so every answer qualifies.
     """
     from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
-        load_centroids,
         load_pq_codebooks,
         save_centroids,
         save_pq_codebooks,
@@ -4916,25 +4497,10 @@ def ivfadc_topk(
     n_sub, sub_dim = _pq_validate(
         corpus, queries, codebooks, corpus_vec, query_vec
     )
-    if centroids is None:
-        if rebuild:
-            raise ValueError("rebuild=True requires an explicit centroid table")
-        crows = load_centroids(path, expected_fingerprint=fingerprint)
-        if crows is None:
-            raise ValueError(
-                f"no (or stale) centroid artifact under {path}/_quantizer"
-            )
-    else:
-        crows = [
-            (r[0], r[1])
-            for r in centroids.select(centroid_id, centroid_vec)
-            .orderBy(centroid_id)
-            .collect()
-        ]
-    if not crows:
-        raise ValueError("ivfadc_topk needs >= 1 coarse centroid")
-    spark = corpus.sparkSession
-
+    crows = _quantizer_rows(
+        centroids, path, rebuild, fingerprint, centroid_id, centroid_vec,
+        "ivfadc_topk",
+    )
     if rebuild:
         # The index row is (id, cell, codes ARRAY) — one row per
         # vector, codes unexploded.  Two reasons: it IS the 8-bytes-
@@ -4962,16 +4528,14 @@ def ivfadc_topk(
         save_centroids(path, crows, fingerprint=fingerprint)
         save_pq_codebooks(path, codebooks, fingerprint=fingerprint)
 
-    q_cells = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.explode(
-            _fixed_probe_cells_expr(crows, query_vec, n_probe)
-        ).alias("cell"),
+    q_cells, index = _probed_scan(
+        queries,
+        crows,
+        path,
+        query_vec,
+        n_probe,
+        [F.col(query_id).alias("query_id")],
     )
-    probe_cells = sorted(
-        int(r["cell"]) for r in q_cells.select("cell").distinct().collect()
-    )
-    index = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
     if predicate is not None:
         # the metadata predicate rides the SAME pruned scan (parquet
         # row-group pushdown), BEFORE the code explode
@@ -5171,32 +4735,19 @@ def ivfadc_residual_topk(
     never touches raw corpus floats.
     """
     from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
-        load_centroids,
         load_pq_codebooks,
         save_centroids,
         save_pq_codebooks,
     )
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import write_table
 
-    if centroids is None:
-        if rebuild:
-            raise ValueError("rebuild=True requires an explicit centroid table")
-        crows = load_centroids(path, expected_fingerprint=fingerprint)
-        if crows is None:
-            raise ValueError(
-                f"no (or stale) centroid artifact under {path}/_quantizer"
-            )
-    else:
-        crows = [
-            (r[0], r[1])
-            for r in centroids.select(centroid_id, centroid_vec)
-            .orderBy(centroid_id)
-            .collect()
-        ]
+    crows = _quantizer_rows(
+        centroids, path, rebuild, fingerprint, centroid_id, centroid_vec,
+        "ivfadc_residual_topk",
+    )
     if [int(r[0]) for r in crows] != list(range(len(crows))):
         raise ValueError("ivfadc_residual_topk needs contiguous 0..k-1 centroid ids")
     dim = n_sub * sub_dim
-    spark = corpus.sparkSession
 
     # Literal centroid matrix, indexed by cell id (one py4j call per
     # centroid row — the F.lit(list) rule).
@@ -5274,14 +4825,18 @@ def ivfadc_residual_topk(
         save_centroids(path, crows, fingerprint=fingerprint)
         save_pq_codebooks(path, books, fingerprint=fingerprint)
 
-    qv = F.col(query_vec).cast("array<double>")
-    q_cells = queries.select(
-        F.col(query_id).alias("query_id"),
-        qv.alias("_qv"),
-        F.explode(
-            _fixed_probe_cells_expr(crows, query_vec, n_probe)
-        ).alias("cell"),
-    ).select(
+    q_cells, index = _probed_scan(
+        queries,
+        crows,
+        path,
+        query_vec,
+        n_probe,
+        [
+            F.col(query_id).alias("query_id"),
+            F.col(query_vec).cast("array<double>").alias("_qv"),
+        ],
+    )
+    q_cells = q_cells.select(
         "query_id",
         "cell",
         # ⟨q, c_cell⟩ as a scaled-long integer sum — the same per-term
@@ -5300,15 +4855,8 @@ def ivfadc_residual_topk(
             lambda acc, x: acc + x,
         ).alias("_qcd"),
     )
-    probe_cells = sorted(
-        int(r["cell"]) for r in q_cells.select("cell").distinct().collect()
-    )
-    index = (
-        spark.read.parquet(path)
-        .filter(F.col("cell").isin(probe_cells))
-        .select(
-            "neighbor_id", "cell", F.posexplode("_codes").alias("m", "code")
-        )
+    index = index.select(
+        "neighbor_id", "cell", F.posexplode("_codes").alias("m", "code")
     )
     lut = _pq_lut(queries, books, sub_dim, query_id, query_vec)
 
@@ -5556,30 +5104,16 @@ def ivf_sq8_topk(
     artifacts, and the grid artifact replaces the fit scan on serve
     (VERDICT r10 item 1)."""
     from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
-        load_centroids,
         load_sq8_minmax,
         save_centroids,
         save_sq8_minmax,
     )
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import write_table
 
-    if centroids is None:
-        if rebuild:
-            raise ValueError("rebuild=True requires an explicit centroid table")
-        crows = load_centroids(path, expected_fingerprint=fingerprint)
-        if crows is None:
-            raise ValueError(
-                f"no (or stale) centroid artifact under {path}/_quantizer"
-            )
-    else:
-        crows = [
-            (r[0], r[1])
-            for r in centroids.select(centroid_id, centroid_vec)
-            .orderBy(centroid_id)
-            .collect()
-        ]
-    if not crows:
-        raise ValueError("ivf_sq8_topk needs >= 1 centroid")
+    crows = _quantizer_rows(
+        centroids, path, rebuild, fingerprint, centroid_id, centroid_vec,
+        "ivf_sq8_topk",
+    )
     mm = minmax
     if mm is None and not rebuild:
         # Pure serve: the at-rest grid replaces the full-corpus fit scan.
@@ -5588,17 +5122,16 @@ def ivf_sq8_topk(
         mm = sq8_minmax(corpus, corpus_vec)
     mins = [mn for mn, _ in mm]
     steps = [((mx - mn) / 255.0) if mx > mn else 0.0 for mn, mx in mm]
-    spark = corpus.sparkSession
 
     if rebuild:
-        assigned = corpus.select(
-            F.col(corpus_id).alias("neighbor_id"),
-            F.col(corpus_vec).alias("_nvec"),
-            l2_norm(F.col(corpus_vec).cast("array<double>")).alias("_nn"),
-        ).select(
-            "neighbor_id",
+        assigned = _assigned_cells(
+            corpus.select(
+                F.col(corpus_id).alias("neighbor_id"),
+                F.col(corpus_vec).alias("_nvec"),
+            ),
+            crows,
+            ["neighbor_id", "_nvec"],
             "_nvec",
-            _fixed_cell_expr(crows, "_nvec", "_nn").alias("cell"),
         )
         # cell + codes in one folded projection (a join of separately
         # computed halves would shuffle both sides for nothing); the
@@ -5626,16 +5159,16 @@ def ivf_sq8_topk(
         save_centroids(path, crows, fingerprint=fingerprint)
         save_sq8_minmax(path, mm, fingerprint=fingerprint)
 
-    qv = F.col(query_vec).cast("array<double>")
-    q_cells = queries.select(
-        F.col(query_id).alias("query_id"),
-        qv.alias("_qv"),
-        F.explode(
-            _fixed_probe_cells_expr(crows, query_vec, n_probe)
-        ).alias("cell"),
-    )
-    probe_cells = sorted(
-        int(r["cell"]) for r in q_cells.select("cell").distinct().collect()
+    q_cells, index = _probed_scan(
+        queries,
+        crows,
+        path,
+        query_vec,
+        n_probe,
+        [
+            F.col(query_id).alias("query_id"),
+            F.col(query_vec).cast("array<double>").alias("_qv"),
+        ],
     )
     lit_mins = F.lit(mins)
     lit_steps = F.lit(steps)
@@ -5644,11 +5177,7 @@ def ivf_sq8_topk(
         lambda c, i: F.element_at(lit_mins, i + 1)
         + c.cast("double") * F.element_at(lit_steps, i + 1),
     )
-    index = (
-        spark.read.parquet(path)
-        .filter(F.col("cell").isin(probe_cells))
-        .select("neighbor_id", "cell", dequant.alias("_dq"))
-    )
+    index = index.select("neighbor_id", "cell", dequant.alias("_dq"))
     pairs = index.join(F.broadcast(q_cells), "cell")
     if exclude_self:
         pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
@@ -6298,13 +5827,10 @@ def semdedup_assignments(
         F.col(vec_col).alias("_v"),
         l2_norm(vec_col).alias("_nrm"),
     ).persist()
-    crows = (
-        centroids.select(centroid_id, centroid_vec)
-        .orderBy(centroid_id)  # cid-ascending ⇒ argmax tie-break = min cid
-        .collect()
+    crows = _quantizer_rows(
+        centroids, None, True, None, centroid_id, centroid_vec,
+        "semdedup_assignments",
     )
-    if not crows:
-        raise ValueError("semdedup_assignments needs >= 1 centroid")
     c_ids = np.array([int(r[0]) for r in crows], dtype=np.int64)
     C = np.array([[float(x) for x in r[1]] for r in crows], dtype=np.float64)
     cnorm = np.sqrt((C * C).sum(axis=1))
@@ -6731,54 +6257,38 @@ def ivf_bq_topk(
     ``bit_count(xor)`` sums, local pre-rank.  Output: ``(query_id,
     cell, neighbor_id, hamming, rank)``."""
     from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
-        load_centroids,
         save_centroids,
     )
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import write_table
 
-    if centroids is None:
-        if rebuild:
-            raise ValueError("rebuild=True requires an explicit centroid table")
-        crows = load_centroids(path, expected_fingerprint=fingerprint)
-        if crows is None:
-            raise ValueError(
-                f"no (or stale) centroid artifact under {path}/_quantizer"
-            )
-    else:
-        crows = [
-            (r[0], r[1])
-            for r in centroids.select(centroid_id, centroid_vec)
-            .orderBy(centroid_id)
-            .collect()
-        ]
-    if not crows:
-        raise ValueError("ivf_bq_topk needs >= 1 centroid")
-    spark = corpus.sparkSession
-
+    crows = _quantizer_rows(
+        centroids, path, rebuild, fingerprint, centroid_id, centroid_vec,
+        "ivf_bq_topk",
+    )
     if rebuild:
-        assigned = corpus.select(
-            F.col(corpus_id).alias("neighbor_id"),
-            F.col(corpus_vec).alias("_nvec"),
-            l2_norm(F.col(corpus_vec).cast("array<double>")).alias("_nn"),
-        ).select(
-            "neighbor_id",
-            _fixed_cell_expr(crows, "_nvec", "_nn").alias("cell"),
-            bq_sign_code("_nvec", dim).alias("code"),
-        )
+        assigned = _assigned_cells(
+            corpus.select(
+                F.col(corpus_id).alias("neighbor_id"),
+                F.col(corpus_vec).alias("_nvec"),
+            ),
+            crows,
+            ["neighbor_id", "_nvec"],
+            "_nvec",
+        ).select("neighbor_id", "cell", bq_sign_code("_nvec", dim).alias("code"))
         write_table(assigned, path, partition_by=["cell"])
         save_centroids(path, crows, fingerprint=fingerprint)
 
-    q_cells = queries.select(
-        F.col(query_id).alias("query_id"),
-        bq_sign_code(query_vec, dim).alias("_qcode"),
-        F.explode(
-            _fixed_probe_cells_expr(crows, query_vec, n_probe)
-        ).alias("cell"),
+    q_cells, index = _probed_scan(
+        queries,
+        crows,
+        path,
+        query_vec,
+        n_probe,
+        [
+            F.col(query_id).alias("query_id"),
+            bq_sign_code(query_vec, dim).alias("_qcode"),
+        ],
     )
-    probe_cells = sorted(
-        int(r["cell"]) for r in q_cells.select("cell").distinct().collect()
-    )
-    index = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
     pairs = index.join(F.broadcast(q_cells), "cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     )

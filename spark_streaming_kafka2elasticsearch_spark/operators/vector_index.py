@@ -493,16 +493,11 @@ class VectorIndex:
     def _load_centroids_df(self, spark=None):
         from pyspark.sql import SparkSession
 
-        from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
-            load_centroids,
-        )
-
         spark = spark or SparkSession.getActiveSession()
-        crows = load_centroids(self.path, expected_fingerprint=self.fingerprint)
-        if crows is None:
-            raise ValueError(
-                f"no (or stale) centroid artifact under {self.path}/_quantizer"
-            )
+        crows = _sim._quantizer_rows(
+            None, self.path, False, self.fingerprint,
+            "centroid_id", "centroid_vec", "VectorIndex",
+        )
         df = spark.createDataFrame(
             [(int(c), [float(x) for x in v]) for c, v in crows],
             "centroid_id long, centroid_vec array<double>",

@@ -107,7 +107,8 @@ def _first_seen_docs(
 ) -> DataFrame:
     """The exact-dup front-door stage: quality gate → canonical
     fingerprint → cross-batch first-seen dedup on the fingerprint
-    (``applyInPandasWithState``), keeping ``value_cols``."""
+    (a watermark-free streaming ``dropDuplicates``), keeping
+    ``value_cols``."""
     from spark_streaming_kafka2elasticsearch_spark.operators.text import (
         document_fingerprint,
         text_quality,
@@ -200,9 +201,9 @@ def documents_ingest_stream(
     composed from the SAME batch operators the oracle-checked queries
     use (streaming = batch + state): parse document JSON → quality
     gate → canonical fingerprint → cross-batch first-seen dedup on the
-    fingerprint (applyInPandasWithState), emitting each distinct
-    document exactly once no matter how often the transport redelivers
-    it or how duplicates straddle micro-batches.
+    fingerprint (a watermark-free streaming dropDuplicates), emitting
+    each distinct document exactly once no matter how often the
+    transport redelivers it or how duplicates straddle micro-batches.
 
     Source contract: yields a ``value`` string column of JSON docs
     ``{doc_id, lang, text}`` (Kafka envelope in prod, JsonDirSource in
@@ -1208,7 +1209,7 @@ def front_door_stream(
 
     1. **quality + exact-dup** — the ``documents_ingest_stream`` leg:
        quality gate, canonical fingerprint, cross-batch first-seen
-       dedup (``applyInPandasWithState``; the ONE stateful stage, so
+       dedup (streaming ``dropDuplicates``; the ONE stateful stage, so
        it runs stream-side, before the per-batch gates).
     2. **near-dup** — ``delta_corpus_jaccard_pairs`` against the
        static at-rest ``corpus`` (the ``near_dup_gate_stream`` leg).
@@ -1349,7 +1350,7 @@ def gated_attribution_stream(
     job (VERDICT r11 item 8): a single raw event stream is screened —
     validity (non-null user/timestamp, known event_type) plus
     cross-batch FIRST-SEEN dedup on ``event_id`` (the stateful
-    exact-dup front-door leg, ``applyInPandasWithState``) — and each
+    exact-dup front-door leg, a streaming ``dropDuplicates``) — and each
     micro-batch of survivors is attributed against EVERYTHING that
     survived before it, inside the same ``foreachBatch``.
 

@@ -1,21 +1,23 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState``.
+"""Stateful streaming operators: first-seen dedup on the built-in state
+store, and per-key state machines via ``applyInPandasWithState``.
 
 The reference's streaming surface needs no custom state (its windowed
-agg rides Spark's built-in state store), but a training-data ingest
-pipeline does: **cross-batch streaming dedup** — emit a document the
-first time its key is ever seen, drop every later delivery — is not
-expressible with built-in operators alone (``dropDuplicates`` on a
-stream requires a watermark and only dedups within it;
-``dropDuplicatesWithinWatermark`` likewise bounds memory by bounding
-*time*).  ``applyInPandasWithState`` gives the per-key state cell the
-semantics need: one boolean per key, Arrow-batched, stored in the
-checkpointed state store (RocksDB under the engine's default session
-conf), scaling to |distinct keys| × a few bytes.
+agg rides Spark's built-in state store), and neither does a
+training-data ingest pipeline's **cross-batch streaming dedup** — emit
+a document the first time its key is ever seen, drop every later
+delivery: a streaming ``dropDuplicates`` WITHOUT a watermark keeps
+every key it has seen in the checkpointed state store (RocksDB under
+the engine's default session conf) for the life of the query, which
+is exactly forever-dedup (a watermark only adds eviction of old keys,
+and ``dropDuplicatesWithinWatermark`` trades exactness for bounded
+state).  :func:`streaming_first_seen` is that built-in operator.  The
+per-key state machines below (changelog, z-score, funnel) are what
+built-ins cannot express, so they use ``applyInPandasWithState``.
 
 Delivery composes with the keyed-upsert sink (streaming/sinks.py): the
-sink makes redelivery idempotent by overwrite, this operator makes it
-idempotent by suppression — first-wins vs last-wins, both exactly-once
-effective.
+sink makes redelivery idempotent by overwrite, first-seen dedup makes
+it idempotent by suppression — first-wins vs last-wins, both
+exactly-once effective.
 """
 
 from __future__ import annotations
@@ -30,62 +32,26 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
-#: per-key state: a single "seen" flag.
-_SEEN_STATE_SCHEMA = T.StructType([T.StructField("seen", T.BooleanType(), False)])
-
 
 def streaming_first_seen(
     df: DataFrame,
     key_col: str,
     value_cols: Sequence[str] | None = None,
-    ttl_minutes: int | None = None,
 ) -> DataFrame:
     """First-seen-wins streaming dedup on ``key_col``.
 
-    Emits, per key, exactly the first row ever delivered (ties within
-    one micro-batch resolve to the first row of the group's Arrow
-    batch); every subsequent delivery of the same key — same batch or
-    any later batch — is suppressed via a per-key boolean in the state
-    store.  ``ttl_minutes`` bounds state for unbounded key spaces by
-    expiring idle keys on a processing-time timeout (after expiry a
-    redelivered key is treated as new — the standard memory/exactness
-    trade; leave ``None`` for exact forever-dedup).
+    Emits, per key, exactly the first row ever delivered; every
+    subsequent delivery of the same key — same batch or any later
+    batch — is suppressed.  A streaming ``dropDuplicates`` with no
+    watermark keeps each seen key in the state store for the life of
+    the query, so the dedup is exact forever.
 
     Output schema: ``key_col`` + ``value_cols`` (default: every other
     column of ``df``), in that order; ``append`` output mode.
     """
     if value_cols is None:
         value_cols = [f.name for f in df.schema.fields if f.name != key_col]
-    out_cols = [key_col, *value_cols]
-    out_schema = T.StructType([df.schema[c] for c in out_cols])
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_minutes is not None
-        else GroupStateTimeout.NoTimeout
-    )
-
-    def dedup(
-        key: tuple, pdfs: Iterator["pd.DataFrame"], state: GroupState
-    ) -> Iterator["pd.DataFrame"]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        already_seen = state.exists
-        if ttl_minutes is not None:
-            state.update((True,))
-            state.setTimeoutDuration(ttl_minutes * 60 * 1000)
-        elif not already_seen:
-            state.update((True,))
-        if already_seen:
-            return
-        for pdf in pdfs:
-            if len(pdf):
-                yield pdf.iloc[[0]][out_cols]
-                return
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        dedup, out_schema, _SEEN_STATE_SCHEMA, "append", timeout
-    )
+    return df.dropDuplicates([key_col]).select(key_col, *value_cols)
 
 
 #: per-key changelog state: running total + row count.

@@ -117,6 +117,59 @@ def test_ivf_persisted_serves_from_at_rest_centroids(spark, tmp_path):
         ivf_persisted_topk(emb, _queries(emb), None, path, k=5, rebuild=True)
 
 
+#: The at-rest IVF serves, each called as (emb, queries, centroids,
+#: path, rebuild) with every other argument at a valid value.  The PQ
+#: codebooks only have to pass shape validation: every case below
+#: raises before a code is used.
+_PQ_BOOKS = [(m, 0, [0.0] * 8) for m in range(8)]
+_AT_REST_SERVES = {
+    "ivf_persisted_topk": lambda s, e, q, c, p, r: s.ivf_persisted_topk(
+        e, q, c, p, rebuild=r
+    ),
+    "ivf_filtered_topk": lambda s, e, q, c, p, r: s.ivf_filtered_topk(
+        e, q, c, p, "vec_id >= 0", rebuild=r
+    ),
+    "ivf_diverse_topk": lambda s, e, q, c, p, r: s.ivf_diverse_topk(
+        e, q, c, p, rebuild=r
+    ),
+    "ivf_range_search": lambda s, e, q, c, p, r: s.ivf_range_search(
+        e, q, c, p, 0.5, rebuild=r
+    ),
+    "ivfadc_topk": lambda s, e, q, c, p, r: s.ivfadc_topk(
+        e, q, c, _PQ_BOOKS, p, rebuild=r
+    ),
+    "ivfadc_residual_topk": lambda s, e, q, c, p, r: s.ivfadc_residual_topk(
+        e, q, c, p, rebuild=r
+    ),
+    "ivf_sq8_topk": lambda s, e, q, c, p, r: s.ivf_sq8_topk(
+        e, q, c, p, rebuild=r
+    ),
+    "ivf_bq_topk": lambda s, e, q, c, p, r: s.ivf_bq_topk(
+        e, q, c, p, rebuild=r
+    ),
+}
+
+
+@pytest.mark.parametrize("serve", sorted(_AT_REST_SERVES))
+def test_at_rest_serve_quantizer_contract(spark, tmp_path, serve):
+    """Every at-rest IVF serve resolves its coarse quantizer the same
+    way: a rebuild must be handed its centroids, a serve-only call on a
+    directory with no artifact refuses rather than guessing, and an
+    empty centroid table is an error, not an empty result."""
+    from spark_streaming_kafka2elasticsearch_spark.operators import similarity
+
+    call = _AT_REST_SERVES[serve]
+    emb = _emb(spark)
+    q = _queries(emb)
+    path = str(tmp_path / "idx")
+    with pytest.raises(ValueError, match="explicit centroid"):
+        call(similarity, emb, q, None, path, True)
+    with pytest.raises(ValueError, match=r"\(or stale\)"):
+        call(similarity, emb, q, None, path, False)
+    with pytest.raises(ValueError, match="needs >= 1"):
+        call(similarity, emb, q, _cents(emb).filter(F.lit(False)), path, True)
+
+
 def test_ivfadc_and_residual_serve_from_at_rest_artifacts(spark, tmp_path):
     from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
         ivfadc_residual_topk,

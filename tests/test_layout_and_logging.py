@@ -7,6 +7,7 @@ from __future__ import annotations
 import io
 import json
 import logging
+import os
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -308,10 +309,14 @@ def test_driver_contract_loads_from_foreign_cwd():
     import subprocess
     import sys
 
+    entry = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "__spark_entry__.py",
+    )
     code = (
         "import importlib.util\n"
         "spec = importlib.util.spec_from_file_location("
-        "'__spark_entry__', '/root/repo/__spark_entry__.py')\n"
+        f"'__spark_entry__', {entry!r})\n"
         "mod = importlib.util.module_from_spec(spec)\n"
         "spec.loader.exec_module(mod)\n"
         "from pyspark.sql import SparkSession\n"

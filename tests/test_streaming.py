@@ -419,8 +419,8 @@ def test_session_window_append_mode_emission(spark, tmp_path):
 
 
 def test_streaming_first_seen_dedup(spark, tmp_path):
-    """applyInPandasWithState cross-batch dedup: a key redelivered in a
-    LATER micro-batch (beyond any watermark's reach) is suppressed;
+    """Cross-batch dedup (watermark-free streaming dropDuplicates): a
+    key redelivered in a LATER micro-batch is suppressed;
     first delivery's values win.  This is the custom-stateful
     counterpart of the keyed-upsert sink's last-wins idempotency."""
     from spark_streaming_kafka2elasticsearch_spark.operators.curate import (

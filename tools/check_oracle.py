@@ -11,11 +11,13 @@ strings/None, exact-or-ulp on floats).  Use while iterating:
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",

@@ -14,9 +14,11 @@ here is ~one extra full shuffle of the input there.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from spark_streaming_kafka2elasticsearch_spark.plans.inspect import plan_metrics  # noqa: E402
 from spark_streaming_kafka2elasticsearch_spark.queries import all_queries  # noqa: E402
@@ -77,7 +79,7 @@ def main() -> int:
             m.get("n_sort_merge_joins", 0) for m in out.values()
         ),
     }
-    with open("/root/repo/PLAN_AUDIT.json", "w") as f:
+    with open(os.path.join(REPO, "PLAN_AUDIT.json"), "w") as f:
         json.dump({"summary": summary, "queries": out}, f, indent=1, sort_keys=True)
     print(json.dumps(summary))
     spark.stop()

@@ -25,7 +25,8 @@ import sys
 import time
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 os.environ.setdefault("PYSPARK_SUBMIT_ARGS", "--driver-memory 48g pyspark-shell")
 
 
@@ -55,7 +56,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="*")
     ap.add_argument("--tag", default="before")
-    ap.add_argument("--plans-dir", default="/root/repo/plans/r15")
+    ap.add_argument("--plans-dir", default=os.path.join(REPO, "plans", "r15"))
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--top", type=int, default=0, help="profile top-N from BENCH_LOCAL")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -70,7 +71,7 @@ def main() -> None:
     qmap = all_queries()
     names = list(args.queries)
     if args.top:
-        with open("/root/repo/BENCH_LOCAL.json") as f:
+        with open(os.path.join(REPO, "BENCH_LOCAL.json")) as f:
             prev = json.load(f)["queries"]
         names += [
             n

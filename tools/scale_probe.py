@@ -36,7 +36,8 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # local[32] runs driver+executors in ONE JVM whose heap defaults to
 # 1g — far too small for the 10x corpus.  Must be set before the
@@ -46,7 +47,7 @@ os.environ.setdefault(
 )
 
 BASE = "/root/testdata/sf0.1"
-OUT = "/root/repo/tmp_scale"
+OUT = os.path.join(REPO, "tmp_scale")
 #: default probe ladder; override with --factors 30 (comma-sep) for
 #: e.g. the 30x stretch point (VERDICT r7 item 8) — merged per-query
 #: into the existing JSON, so a 30x run extends earlier 1/3/10 rows.
@@ -581,7 +582,7 @@ def main() -> None:
         # Merge-write: the tpch/events probes own their own sections of
         # this file — clobbering them here would silently drop their
         # evidence between runs.
-        path = "/root/repo/SCALE_PROBE.json"
+        path = os.path.join(REPO, "SCALE_PROBE.json")
         try:
             with open(path) as f:
                 doc = json.load(f)

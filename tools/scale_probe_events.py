@@ -30,12 +30,13 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 os.environ.setdefault("PYSPARK_SUBMIT_ARGS", "--driver-memory 48g pyspark-shell")
 
 BASE = "/root/testdata/sf0.1"
-OUT = "/root/repo/tmp_scale_events"
+OUT = os.path.join(REPO, "tmp_scale_events")
 FACTOR = 10
 
 PROBE_QUERIES = [
@@ -168,7 +169,7 @@ def main() -> None:
                 2,
             )
 
-    path = "/root/repo/SCALE_PROBE.json"
+    path = os.path.join(REPO, "SCALE_PROBE.json")
     try:
         with open(path) as f:
             doc = json.load(f)

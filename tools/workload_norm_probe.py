@@ -35,15 +35,16 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 os.environ.setdefault(
     "PYSPARK_SUBMIT_ARGS", "--driver-memory 48g pyspark-shell"
 )
 
 BASE = "/root/testdata/sf0.1"
-OUT = "/root/repo/tmp_scale"
+OUT = os.path.join(REPO, "tmp_scale")
 
 #: shared shingle CTE — the same 3-gram/lang blocking both operators
 #: and their oracles use (queries/datapipe.py)
@@ -152,7 +153,7 @@ def main() -> None:
             results[q].update(row)
             print(f"x{factor} {q}: {json.dumps(row)}", file=sys.stderr)
 
-    path = "/root/repo/SCALE_PROBE.json"
+    path = os.path.join(REPO, "SCALE_PROBE.json")
     with open(path) as f:
         doc = json.load(f)
     for q, vals in results.items():
