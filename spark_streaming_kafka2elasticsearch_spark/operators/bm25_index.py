@@ -63,6 +63,7 @@ from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
     index_meta,
     write_meta,
 )
+from spark_streaming_kafka2elasticsearch_spark.operators.partitioning import top_k_per
 from spark_streaming_kafka2elasticsearch_spark.operators.text import (
     bm25_scores_from_stats,
 )
@@ -319,9 +320,10 @@ def bm25_index_topk(
     append/delete, so ``float(sum_dl)/float(n_docs)`` is the identical
     IEEE double the from-scratch operator derives.  Scoring runs
     through operators/text.bm25_scores_from_stats — the SAME
-    expression object as bm25_scores — and ranking applies the local
-    pre-rank discipline (only |partitions|·k·|queries| rows reach the
-    global per-query sort; the bm25_doc_topk lesson).
+    expression object as bm25_scores — and ranking is one top-k cut
+    (:func:`~.partitioning.top_k_per`: Catalyst's partial
+    WindowGroupLimit lets only |partitions|·k·|queries| rows reach the
+    global per-query sort).
 
     ``delta_docs`` is the FUNCTIONAL append (the knn_graph_append
     doctrine): the delta's postings/lengths are derived in-flight and
@@ -332,8 +334,6 @@ def bm25_index_topk(
     tokenization.  Caller contract: delta ids are disjoint from the
     index (the disk append's first-seen gate is not re-derived
     here)."""
-    from pyspark.sql import Window
-
     meta = index_meta(path, _BM25_META, expected_fingerprint)
     n_parts = meta["n_parts"]
     qterms = (
@@ -411,25 +411,9 @@ def bm25_index_topk(
     )
     if exclude_self:
         scored = scored.filter(F.col(query_id) != F.col("doc_id"))
-    part_w = Window.partitionBy(F.spark_partition_id(), query_id).orderBy(
-        F.desc("score_dec"), F.asc("doc_id")
-    )
-    local = scored.withColumn("_lr", F.row_number().over(part_w)).filter(
-        F.col("_lr") <= k
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.desc("score_dec"), F.asc("doc_id")
-    )
-    result = (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id,
-            "doc_id",
-            F.col("rank").cast("int").alias("rank"),
-            "score",
-        )
-    )
+    result = top_k_per(
+        scored, [query_id], [F.desc("score_dec"), F.asc("doc_id")], k
+    ).select(query_id, "doc_id", F.col("rank").cast("int").alias("rank"), "score")
     final = result.localCheckpoint(eager=True)
     qterms.unpersist()
     tf.unpersist()

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spark_streaming_kafka2elasticsearch_spark.operators.partitioning import top_k_per
 from spark_streaming_kafka2elasticsearch_spark.schemas import ORDER_EVENT_SCHEMA
 
 # ---------------------------------------------------------------------------
@@ -248,13 +249,12 @@ def weighted_reservoir_sample(
     increasing transforms for w > 0), but ``ln`` is the engine-probed
     ≤ 4.5e-16 cross-engine class while ``pow`` is not; the 9-dp round
     kills the ulp, and residual ties break on the id.  One corpus
-    scan, the same local-pre-rank + per-stratum top-k discipline as
-    every other top-k — no global sort.
+    scan and one per-stratum top-k cut
+    (:func:`~.partitioning.top_k_per`) like every other top-k — no
+    global sort.
 
     Output: the ``strata`` columns + (id, weight, ares_key, rank).
     """
-    from pyspark.sql import Window
-
     strata = list(strata or [])
     h = F.conv(
         F.substring(F.md5(F.col(id_col).cast("string")), 1, 12), 16, 10
@@ -267,15 +267,6 @@ def weighted_reservoir_sample(
         weight.cast("double").alias("weight"),
         key.alias("ares_key"),
     )
-    part_w = Window.partitionBy(F.spark_partition_id(), *strata).orderBy(
-        F.desc("ares_key"), F.asc(id_col)
-    )
-    local = scored.withColumn("_lr", F.row_number().over(part_w)).filter(
-        F.col("_lr") <= k
-    )
-    w = Window.partitionBy(*strata).orderBy(F.desc("ares_key"), F.asc(id_col))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*strata, id_col, "weight", "ares_key", F.col("rank").cast("int").alias("rank"))
-    )
+    return top_k_per(
+        scored, strata, [F.desc("ares_key"), F.asc(id_col)], k
+    ).select(*strata, id_col, "weight", "ares_key", F.col("rank").cast("int").alias("rank"))

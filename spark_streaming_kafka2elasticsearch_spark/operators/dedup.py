@@ -306,6 +306,47 @@ def minhash_signatures_wide(
     )
 
 
+def _capped_bucket_pairs(
+    banded: DataFrame, bucket_cols: list[str], max_bucket_size: int
+) -> DataFrame:
+    """Every ``(id_a < id_b)`` pair sharing a bucket of ``banded``
+    (``_id`` plus the ``bucket_cols`` key), distinct over buckets.
+
+    Pass 1 is a bounded-memory bucket census (partial agg: each task
+    ships one count per local bucket) that keeps buckets of 2 to
+    ``max_bucket_size`` members; pass 2 joins the survivors back on the
+    same key, so both shuffles share it.  Each bucket's sorted member
+    list expands to its pairs in one nested ``transform``/``slice``
+    explode — quadratic only inside the census cap."""
+    ok_buckets = (
+        banded.groupBy(*bucket_cols)
+        .agg(F.count(F.lit(1)).alias("_m"))
+        .filter((F.col("_m") > 1) & (F.col("_m") <= max_bucket_size))
+        .select(*bucket_cols)
+    )
+    members = F.col("members")
+    return (
+        banded.join(ok_buckets, bucket_cols)
+        .groupBy(*bucket_cols)
+        .agg(F.array_sort(F.collect_set("_id")).alias("members"))
+        .select(
+            F.explode(
+                F.flatten(
+                    F.transform(
+                        members,
+                        lambda a, i: F.transform(
+                            F.slice(members, i + 2, F.size(members)),
+                            lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
+                        ),
+                    )
+                )
+            ).alias("p")
+        )
+        .select("p.id_a", "p.id_b")
+        .distinct()
+    )
+
+
 def minhash_lsh_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -391,38 +432,8 @@ def minhash_lsh_candidate_pairs(
         "_id", f"explode(array({band_sql})) AS band"
     ).select("_id", "band.band_id", "band.band_hash").persist()
 
-    # Pass 1 — bounded-memory bucket census (partial agg: each task
-    # ships one count per local bucket).  Pass 2 joins survivors back;
-    # both shuffles share the (band_id, band_hash) key.
-    ok_buckets = (
-        banded.groupBy("band_id", "band_hash")
-        .agg(F.count(F.lit(1)).alias("_m"))
-        .filter((F.col("_m") > 1) & (F.col("_m") <= max_bucket_size))
-        .select("band_id", "band_hash")
-    )
-    buckets = (
-        banded.join(ok_buckets, ["band_id", "band_hash"])
-        .groupBy("band_id", "band_hash")
-        .agg(F.array_sort(F.collect_set("_id")).alias("members"))
-        .filter(F.size("members") > 1)
-    )
-
-    pairs = (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("members"),
-                        lambda a, i: F.transform(
-                            F.slice(F.col("members"), i + 2, F.size(F.col("members"))),
-                            lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .distinct()
+    pairs = _capped_bucket_pairs(
+        banded, ["band_id", "band_hash"], max_bucket_size
     )
 
     # Exact verify, PAIR-restricted.  `pairs` (the whole banding
@@ -930,34 +941,8 @@ def hamming64_band_pairs(
         F.col(id_col).alias("_id"), F.explode(F.array(*band_structs)).alias("band")
     ).select("_id", "band.band_id", "band.band_bits")
 
-    ok_buckets = (
-        banded.groupBy("band_id", "band_bits")
-        .agg(F.count(F.lit(1)).alias("_m"))
-        .filter((F.col("_m") > 1) & (F.col("_m") <= max_bucket_size))
-        .select("band_id", "band_bits")
-    )
-    buckets = (
-        banded.join(ok_buckets, ["band_id", "band_bits"])
-        .groupBy("band_id", "band_bits")
-        .agg(F.array_sort(F.collect_set("_id")).alias("members"))
-        .filter(F.size("members") > 1)
-    )
-    pairs = (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("members"),
-                        lambda a, i: F.transform(
-                            F.slice(F.col("members"), i + 2, F.size(F.col("members"))),
-                            lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .distinct()
+    pairs = _capped_bucket_pairs(
+        banded, ["band_id", "band_bits"], max_bucket_size
     )
     sig_a = sig.select(F.col(id_col).alias("id_a"), F.col("simhash64").alias("_sa"))
     sig_b = sig.select(F.col(id_col).alias("id_b"), F.col("simhash64").alias("_sb"))
@@ -1639,19 +1624,7 @@ def bfs_hops(
     fast = _bfs_local_or_none(edges, seeds, id_a, id_b, seed_col, max_hops)
     if fast is not None:
         return fast
-    e = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(id_a).alias("_src"), F.col(id_b).alias("_dst")),
-                    F.struct(F.col(id_b).alias("_src"), F.col(id_a).alias("_dst")),
-                )
-            ).alias("_e")
-        )
-        .select("_e._src", "_e._dst")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _symmetrize_edges(edges, id_a, id_b)
     frontier = (
         seeds.select(F.col(seed_col).alias("_n"))
         .distinct()
@@ -2295,11 +2268,12 @@ def _symmetrize_edges(edges: DataFrame, id_a: str, id_b: str) -> DataFrame:
     """Undirected pair list → distinct directed ``(_src, _dst)``
     relation, materialized eagerly (one localCheckpoint) — the shared
     pre-loop step of every round-based graph primitive here
-    (:func:`pagerank`, :func:`label_propagation`).  Materializing
-    BEFORE any per-round derivation matters: multiple plan branches
-    reference this relation, and without the boundary the (expensive)
-    upstream pair pipeline re-executes per reference — measured as a
-    whole x10 probe regression before pagerank grew this line.
+    (:func:`bfs_hops`, :func:`pagerank`, :func:`label_propagation`,
+    :func:`kcore`).  Materializing BEFORE any per-round derivation
+    matters: multiple plan branches reference this relation, and
+    without the boundary the (expensive) upstream pair pipeline
+    re-executes per reference — measured as a whole x10 probe
+    regression before pagerank grew this line.
     Callers own the block release (``.unpersist()`` once their own
     successor is materialized)."""
     return (
@@ -2649,7 +2623,6 @@ def kcore(
     id_a: str = "id_a",
     id_b: str = "id_b",
     rounds: int = 8,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Fixed-round k-core peeling over an undirected pair graph:
     (node, core_degree) for every node still alive after ``rounds``
@@ -2684,28 +2657,15 @@ def kcore(
     picks the broadcast automatically from the census's runtime
     size).  The old shape paid two alive-sized shuffle semi-joins per
     round forever, plus a separate eager job per census whose lazy
-    semi-join chain re-executed up to ``checkpoint_every`` prior
-    rounds — measured as the whole α 1.2.
+    semi-join chain re-executed up to three prior rounds — measured
+    as the whole α 1.2.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    del checkpoint_every  # every round materializes exactly once now
     fast = _kcore_local_or_none(edges, k, id_a, id_b, rounds)
     if fast is not None:
         return fast
-    e = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(id_a).alias("_src"), F.col(id_b).alias("_dst")),
-                    F.struct(F.col(id_b).alias("_src"), F.col(id_a).alias("_dst")),
-                )
-            ).alias("_e")
-        )
-        .select("_e._src", "_e._dst")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _symmetrize_edges(edges, id_a, id_b)
     cur = e
     prev = None
     for _ in range(rounds):

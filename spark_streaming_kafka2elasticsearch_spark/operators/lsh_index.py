@@ -64,6 +64,7 @@ from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
     write_meta,
 )
 from spark_streaming_kafka2elasticsearch_spark.operators.dedup import (
+    _capped_bucket_pairs,
     minhash_signatures_wide,
     shingle_relation,
 )
@@ -365,44 +366,9 @@ def _pairs_over_banded(
     at-rest and functional-append derivations.  ``banded`` arrives
     persisted (two consumers: census and member join); released here
     with the other staged boundaries once the final is checkpointed."""
-    ok_buckets = (
-        banded.groupBy("band_id", "band_hash")
-        .agg(F.count(F.lit(1)).alias("_m"))
-        .filter(
-            (F.col("_m") > 1) & (F.col("_m") <= meta["max_bucket_size"])
-        )
-        .select("band_id", "band_hash")
-    )
-    buckets = (
-        banded.join(ok_buckets, ["band_id", "band_hash"])
-        .groupBy("band_id", "band_hash")
-        .agg(F.array_sort(F.collect_set("_id")).alias("members"))
-        .filter(F.size("members") > 1)
-    )
-    pairs = (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("members"),
-                        lambda a, i: F.transform(
-                            F.slice(
-                                F.col("members"),
-                                i + 2,
-                                F.size(F.col("members")),
-                            ),
-                            lambda b: F.struct(
-                                a.alias("id_a"), b.alias("id_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .distinct()
-        .persist()
-    )
+    pairs = _capped_bucket_pairs(
+        banded, ["band_id", "band_hash"], meta["max_bucket_size"]
+    ).persist()
     cand_ids = pairs.select(
         F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias(id_col)
     ).distinct()

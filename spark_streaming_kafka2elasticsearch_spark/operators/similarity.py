@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spark_streaming_kafka2elasticsearch_spark.functions.vectors import (
@@ -26,6 +26,8 @@ from spark_streaming_kafka2elasticsearch_spark.functions.vectors import (
     literal_l2_norm,
 )
 from spark_streaming_kafka2elasticsearch_spark.operators import twins
+from spark_streaming_kafka2elasticsearch_spark.operators.dedup import _capped_bucket_pairs
+from spark_streaming_kafka2elasticsearch_spark.operators.partitioning import top_k_per
 from spark_streaming_kafka2elasticsearch_spark.operators.twins import (
     _csr_gather,
     _in_id_range,
@@ -55,10 +57,9 @@ def brute_force_topk(
 
     The query side is broadcast — the big corpus is scanned exactly
     once with no shuffle; the only exchange is the final per-query
-    rank, whose input is already reduced to |queries|×|corpus| sims…
-    so for large corpora prefer per-partition pre-ranking: we take the
-    top-k within each partition first (cheap, local) and only shuffle
-    |partitions|×k×|queries| rows into the global rank.
+    rank, and :func:`~.partitioning.top_k_per` lets Catalyst cut each
+    partition to its top-k first, so only |partitions|×k×|queries| rows
+    cross it.
 
     ``exclude_same_label=True`` (requires ``corpus_label`` and
     ``query_label``) turns the ranking into HARD-NEGATIVE MINING for
@@ -66,8 +67,8 @@ def brute_force_topk(
     from the query's compete, so the top-k are the most-confusable
     wrong-class neighbors — the negatives a contrastive trainer wants.
     The label predicate lands INSIDE the broadcast-join filter, before
-    any ranking state, so the plan shape (one corpus scan, local
-    pre-rank) is unchanged.  ``corpus_label`` alone just carries the
+    any ranking state, so the plan shape (one corpus scan, one rank
+    exchange) is unchanged.  ``corpus_label`` alone just carries the
     neighbor's label into the output as ``neighbor_label``.
     """
     csel = [
@@ -100,21 +101,9 @@ def brute_force_topk(
         *carry,
         cosine_similarity(F.col("_qvec"), F.col("_cvec")).alias("sim"),
     )
-    # Local pre-rank: cuts the global-rank shuffle to k rows per
-    # (partition, query) — the difference between shuffling the corpus
-    # and shuffling a constant at 100 TB.
-    part_w = Window.partitionBy(F.spark_partition_id(), "query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    local = sims.withColumn("_lr", F.row_number().over(part_w)).filter(
-        F.col("_lr") <= k
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", *carry, "rank", "sim")
-    )
+    return top_k_per(
+        sims, ["query_id"], [F.desc("sim"), F.asc("neighbor_id")], k
+    ).select("query_id", "neighbor_id", *carry, "rank", "sim")
 
 
 def brute_force_topk_pandas(
@@ -212,12 +201,9 @@ def brute_force_topk_pandas(
     partial = corpus.select(corpus_id, corpus_vec).mapInPandas(
         batch_topk, schema=out_schema
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    return top_k_per(
+        partial, ["query_id"], [F.desc("sim"), F.asc("neighbor_id")], k
+    ).select("query_id", "neighbor_id", "rank", "sim")
 
 
 def _plane_signs(plane_id: int, dim: int) -> list[int]:
@@ -370,12 +356,9 @@ def ivf_topk(
         "neighbor_id",
         cosine_similarity(F.col("_qvec"), F.col("_cvec")).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    return top_k_per(
+        sims, ["query_id"], [F.desc("sim"), F.asc("neighbor_id")], k
+    ).select("query_id", "neighbor_id", "rank", "sim")
 
 
 def _codeword_struct_array(
@@ -444,17 +427,11 @@ def _cell_assign_arrow_or_none(
     crows,
     keep: list[str],
     vec_col: str,
-    n_probe: int = 1,
     out_col: str = "cell",
-    single: bool = False,
 ):
     """Coarse-quantizer assignment via ONE ``mapInArrow`` kernel — the
-    vectorized twin of projecting :func:`_fixed_cell_expr`
-    (``single=True`` → a ``long`` ``out_col``) or
-    :func:`_fixed_probe_cells_expr` (``single=False`` → an
-    ``array<long>`` ``out_col``, length ``min(n_probe, c)`` — an
-    n_probe=1 probe list is still an ARRAY) over a corpus relation,
-    with the
+    vectorized twin of projecting :func:`_fixed_cell_expr` (a ``long``
+    ``out_col``, each row's home cell) over a corpus relation, with the
     ``keep`` columns passed through untouched (guide §4.2: the c
     per-centroid ``aggregate`` folds are CodegenFallback and run
     interpreted per row — the PQ-encode-kernel argument, applied to
@@ -472,18 +449,17 @@ def _cell_assign_arrow_or_none(
       exact value a hoisted ``l2_norm`` column would carry (the PQ
       encode kernel's A/B-verified argument); centroid norms are the
       ``literal_l2_norm`` constants the literal tree folds to.
-    * ranking — ``array_max`` / ``reverse(array_sort(...))`` over
-      ``struct(_s, -cid)`` is (sim DESC with NULL last and NaN above
-      +inf, cid ASC); the kernel sorts with an explicit
-      (isnull, notnan, -sim, cid) lexsort so NaN outranks a true
-      +inf instead of tying with it.
+    * ranking — ``array_max`` over ``struct(_s, -cid)`` is (sim DESC
+      with NULL last and NaN above +inf, cid ASC); the kernel sorts
+      with an explicit (isnull, notnan, -sim, cid) lexsort so NaN
+      outranks a true +inf instead of tying with it.
     * degenerate rows — in Catalyst a NULL vector, a NULL element or
       a length-mismatched vector makes every sim NULL, so the ranking
       collapses to the cid-ascending tie-break; the kernel finds those
       rows via the Arrow offsets and validity bitmaps and emits
-      ``sorted(cids)[:n_probe]`` for them directly.  A NaN element
-      makes every sim NaN and a zero-norm row every sim NULL, in both
-      engines alike, so the sort itself collapses to the same order.
+      ``min(cids)`` for them directly.  A NaN element makes every sim
+      NaN and a zero-norm row every sim NULL, in both engines alike,
+      so the sort itself collapses to the same order.
     """
     if not twins.enabled():
         return None
@@ -498,9 +474,8 @@ def _cell_assign_arrow_or_none(
         dtype=np.float64,
     )
     cdim = cmat.shape[1]
-    # ascending-cid order is the all-tied fallback ranking
-    cids_asc = np.sort(cids)
-    take = min(n_probe, len(cids))
+    # the smallest cid is the all-tied fallback cell
+    cid_min = int(cids.min())
 
     # When the vector column is itself carried through, read it in
     # place instead of shipping a second copy across the boundary.
@@ -512,29 +487,20 @@ def _cell_assign_arrow_or_none(
             *[F.col(c) for c in keep], F.col(vec_col).alias("_vprobe")
         )
         vec_idx = len(keep)
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    out_schema = StructType([src.schema[c] for c in keep])
-    if single:
-        out_schema = out_schema.add(StructField(out_col, LongType()))
-    else:
-        out_schema = out_schema.add(
-            StructField(out_col, ArrayType(LongType(), False), False)
-        )
+    out_schema = StructType([src.schema[c] for c in keep]).add(
+        StructField(out_col, LongType())
+    )
     nk = len(keep)
     b_state = base.sparkSession.sparkContext.broadcast(
-        (cids, np.ascontiguousarray(cmat.T), cnorm, cids_asc)
+        (cids, np.ascontiguousarray(cmat.T), cnorm)
     )
 
     def kernel(batches):
         import pyarrow as pa
 
-        kcids, kcmat_t, kcnorm, kasc = b_state.value
+        kcids, kcmat_t, kcnorm = b_state.value
         c = len(kcids)
         for batch in batches:
             n_rows = batch.num_rows
@@ -566,7 +532,7 @@ def _cell_assign_arrow_or_none(
                 vals.to_numpy(zero_copy_only=False)
                 .astype(np.float64)  # exact IEEE widening, = the cast
             )
-            probe_rows = np.empty((n_rows, take), dtype=np.int64)
+            cells = np.full(n_rows, cid_min, dtype=np.int64)
             if good.any():
                 gi = np.flatnonzero(good)
                 starts = offs[:-1][gi]
@@ -586,7 +552,7 @@ def _cell_assign_arrow_or_none(
                     sims = dots / denom
                 isnan = np.isnan(sims) & ~isnull
                 key = np.where(isnan | isnull, 0.0, sims)
-                order = np.lexsort(
+                head = np.lexsort(
                     (
                         np.broadcast_to(kcids[None, :], (g, c)),
                         -key,
@@ -594,25 +560,9 @@ def _cell_assign_arrow_or_none(
                         isnull,
                     ),
                     axis=-1,
-                )[:, :take]
-                probe_rows[gi] = kcids[order]
-            if not good.all():
-                probe_rows[~good] = kasc[:take][None, :]
-            out_cols = list(batch.columns[:nk])
-            if single:
-                out_cols.append(
-                    pa.array(probe_rows[:, 0], type=pa.int64())
-                )
-            else:
-                offsets = pa.array(
-                    np.arange(0, (n_rows + 1) * take, take, dtype=np.int32)
-                )
-                out_cols.append(
-                    pa.ListArray.from_arrays(
-                        offsets,
-                        pa.array(probe_rows.ravel(), type=pa.int64()),
-                    )
-                )
+                )[:, 0]
+                cells[gi] = kcids[head]
+            out_cols = [*batch.columns[:nk], pa.array(cells, type=pa.int64())]
             yield pa.RecordBatch.from_arrays(
                 out_cols, names=[f.name for f in out_schema.fields]
             )
@@ -692,9 +642,7 @@ def _assigned_cells(
     (:func:`_cell_assign_arrow_or_none`) when the twin gate allows it,
     else the projection it is bit-equal to — :func:`_fixed_cell_expr`
     over a norm hoisted once per row for the c codeword folds."""
-    kern = _cell_assign_arrow_or_none(
-        df, crows, keep, vec_col, out_col=out_col, single=True
-    )
+    kern = _cell_assign_arrow_or_none(df, crows, keep, vec_col, out_col=out_col)
     if kern is not None:
         return kern
     carried = keep if vec_col in keep else [*keep, vec_col]
@@ -886,12 +834,9 @@ def ivf_topk_fixed(
         "neighbor_id",
         cosine_similarity(F.col("_qvec"), F.col("_nvec")).alias("_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", "cell", "neighbor_id")
-    )
+    return top_k_per(
+        sims, ["query_id"], [F.desc("_sim"), F.asc("neighbor_id")], k, "_rn"
+    ).select("query_id", "cell", "neighbor_id")
 
 
 def knn_graph(
@@ -946,21 +891,14 @@ def knn_graph(
     sims = pairs.filter(F.col("src") != F.col("dst")).select(
         "src", "dst", _hoisted_cosine("_qvec", "_qn", "_nvec", "_nn")
     )
-    # local pre-rank (the bm25/brute-force discipline): a node's
-    # candidates live in at most n_probe cell partitions, so keeping
-    # the per-(partition, src) top-k first shrinks the global window's
-    # input from the full candidate relation to ≤ n·n_probe·k rows.
-    part_w = Window.partitionBy(F.spark_partition_id(), "src").orderBy(
-        F.desc("_sim"), F.asc("dst")
-    )
-    local = sims.withColumn("_lr", F.row_number().over(part_w)).filter(
-        F.col("_lr") <= k
-    )
-    w = Window.partitionBy("src").orderBy(F.desc("_sim"), F.asc("dst"))
+    # a node's candidates span at most n_probe cells; the top-k cut's
+    # partial WindowGroupLimit keeps each partition's top-k per src
+    # before the shuffle, so the exchange carries ≤ partitions·k rows
+    # per src, not the full candidate relation.
     return _with_mutual(
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("src", "dst", F.col("rank").cast("int").alias("rank"))
+        top_k_per(sims, ["src"], [F.desc("_sim"), F.asc("dst")], k).select(
+            "src", "dst", F.col("rank").cast("int").alias("rank")
+        )
     )
 
 
@@ -994,10 +932,7 @@ def _make_pair_topk(base: DataFrame):
             .join(dst_side, "dst")
             .select("src", "dst", _hoisted_cosine("_sv", "_sn", "_dv", "_dn"))
         )
-        w = Window.partitionBy("src").orderBy(F.desc("_sim"), F.asc("dst"))
-        ranked = sims.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= kk
-        )
+        ranked = top_k_per(sims, ["src"], [F.desc("_sim"), F.asc("dst")], kk)
         if with_rank:
             return ranked.select(
                 "src", "dst", F.col("rank").cast("int").alias("rank")
@@ -2365,11 +2300,10 @@ def knn_graph_append(
         .union(leg_new_src)
         .dropDuplicates(["src", "dst"])
     )
-    w = Window.partitionBy("src").orderBy(F.desc("_sim"), F.asc("dst"))
     return _with_mutual(
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("src", "dst", F.col("rank").cast("int").alias("rank"))
+        top_k_per(sims, ["src"], [F.desc("_sim"), F.asc("dst")], k).select(
+            "src", "dst", F.col("rank").cast("int").alias("rank")
+        )
     )
 
 
@@ -2438,12 +2372,9 @@ def knn_graph_delete(
         .filter(F.col("src") != F.col("dst"))
         .select("src", "dst", _hoisted_cosine("_qvec", "_qn", "_nvec", "_nn"))
     )
-    w = Window.partitionBy("src").orderBy(F.desc("_sim"), F.asc("dst"))
-    recomputed = (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("src", "dst", F.col("rank").cast("int").alias("rank"))
-    )
+    recomputed = top_k_per(
+        sims, ["src"], [F.desc("_sim"), F.asc("dst")], k
+    ).select("src", "dst", F.col("rank").cast("int").alias("rank"))
     return _with_mutual(survivors.union(recomputed))
 
 
@@ -2837,6 +2768,9 @@ def graph_beam_topk(
             *[F.col(a) for a in (attrs or [])],
         )
 
+    # every cut below — entry pick, beam, answer — ranks by this order
+    order = [F.desc("_sim"), F.asc("node")]
+
     # Gate the single-crossing round-loop kernel FIRST: its bounded
     # collect doubles as the corpus count / min-id the entry modes
     # otherwise pay separate driver jobs for.
@@ -2870,15 +2804,9 @@ def graph_beam_topk(
         layer_pairs = layer.crossJoin(
             F.broadcast(q.select("query_id"))
         )
-        lw = Window.partitionBy("query_id").orderBy(
-            F.desc("_sim"), F.asc("node")
-        )
-        entry_df = (
-            _scored(layer_pairs)
-            .withColumn("_er", F.row_number().over(lw))
-            .filter(F.col("_er") == 1)
-            .select("query_id", "node")
-        )
+        entry_df = top_k_per(
+            _scored(layer_pairs), ["query_id"], order, 1, "_er"
+        ).select("query_id", "node")
         if entry_mode == "hybrid":
             # layer argmax ∪ SRP-bucket mate: two seeds per query —
             # the grid buys a global best-of-√n foothold, the bucket
@@ -2948,15 +2876,9 @@ def graph_beam_topk(
         cand = qb.join(mates, "_b", "left").select(
             "query_id", F.coalesce("node", F.lit(gmin)).alias("node")
         )
-        lw = Window.partitionBy("query_id").orderBy(
-            F.desc("_sim"), F.asc("node")
-        )
-        entry_df = (
-            _scored(cand)
-            .withColumn("_er", F.row_number().over(lw))
-            .filter(F.col("_er") == 1)
-            .select("query_id", "node")
-        )
+        entry_df = top_k_per(
+            _scored(cand), ["query_id"], order, 1, "_er"
+        ).select("query_id", "node")
     else:
         entry_df = _bucket_entry(
             corpus, queries, corpus_id, corpus_vec,
@@ -2964,7 +2886,6 @@ def graph_beam_topk(
             n=_n_hint, gmin=_gmin_hint,
         )
 
-    w = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("node"))
     if kernel_fn is not None:
         # One lazy mapInArrow crossing replaces the whole round loop
         # (entry scoring + rounds × [frontier join, distinct, scoring
@@ -2997,11 +2918,9 @@ def graph_beam_topk(
                 .dropDuplicates(["query_id", "node"])
                 .localCheckpoint(eager=True)
             )
-            beam_df = (
-                vis.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= beam)
-                .select("query_id", "node")
-            )
+            beam_df = top_k_per(
+                vis, ["query_id"], order, beam, "_rn"
+            ).select("query_id", "node")
     final = vis.filter(F.col("node") != F.col("query_id"))
     if predicate is not None:
         # score-and-keep: the predicate restricts the ANSWER window
@@ -3010,15 +2929,11 @@ def graph_beam_topk(
         final = final.filter(
             F.expr(predicate) if isinstance(predicate, str) else predicate
         )
-    return (
-        final.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("node").alias("neighbor_id"),
-            F.col("rank").cast("int").alias("rank"),
-            F.col("_sim").alias("sim"),
-        )
+    return top_k_per(final, ["query_id"], order, k).select(
+        "query_id",
+        F.col("node").alias("neighbor_id"),
+        F.col("rank").cast("int").alias("rank"),
+        F.col("_sim").alias("sim"),
     )
 
 
@@ -3050,7 +2965,7 @@ def mmr_rerank(
     runs where sequential-per-group logic belongs: ``applyInPandas``
     over query_id groups.  The distribution story is unchanged — the
     corpus is touched ONLY by the one shortlist scan (broadcast query
-    side, local pre-rank; compose over an IVF serve for billion-row
+    side, one top-k cut; compose over an IVF serve for billion-row
     corpora), then ONE shuffle keyed on query_id moves pool-sized
     groups to the greedy kernel; a million queries = a million
     independent groups.
@@ -3078,8 +2993,8 @@ def mmr_rerank(
     q = queries.select(
         F.col(query_id).alias("query_id"), F.col(query_vec).alias("_qv")
     )
-    # Shortlist: one corpus scan, query side broadcast, local pre-rank
-    # (top-pool within each partition) before the per-query window.
+    # Shortlist: one corpus scan, query side broadcast, one top-pool
+    # cut per query.
     sims = (
         corpus.select(
             F.col(corpus_id).alias("doc_id"), F.col(corpus_vec).alias("_dv")
@@ -3092,10 +3007,6 @@ def mmr_rerank(
             cosine_similarity(F.col("_qv"), F.col("_dv")).alias("simq"),
         )
     )
-    part = Window.partitionBy(F.spark_partition_id(), "query_id").orderBy(
-        F.desc("simq"), F.asc("doc_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("simq"), F.asc("doc_id"))
     # A zero-norm doc (or query) arrives with simq = NULL under
     # cosine_similarity's null contract; inside the greedy kernel a
     # NaN-scored candidate could win selection through the first
@@ -3104,14 +3015,13 @@ def mmr_rerank(
     # candidates BEFORE the kernel — a doc with no defined relevance
     # can never be selected, matching the SQL twin where NULL never
     # survives the shortlist QUALIFY (ADVICE r11).
-    cand = (
-        sims.filter(F.col("simq").isNotNull())
-        .withColumn("_pr", F.row_number().over(part))
-        .filter(F.col("_pr") <= pool)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= pool)
-        .select("query_id", "doc_id", "_dv", "simq")
-    )
+    cand = top_k_per(
+        sims.filter(F.col("simq").isNotNull()),
+        ["query_id"],
+        [F.desc("simq"), F.asc("doc_id")],
+        pool,
+        "_rn",
+    ).select("query_id", "doc_id", "_dv", "simq")
 
     def greedy(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("doc_id").reset_index(drop=True)
@@ -3277,14 +3187,11 @@ def ivf_persisted_topk(
         "neighbor_id",
         cosine_similarity(F.col("_qvec"), F.col("_nvec")).alias("_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        # partition-directory values read back as int; the in-flight
-        # twin (and the oracle) type the cell id long
-        .select("query_id", F.col("cell").cast("long").alias("cell"), "neighbor_id")
-    )
+    # partition-directory values read back as int; the in-flight twin
+    # (and the oracle) type the cell id long
+    return top_k_per(
+        sims, ["query_id"], [F.desc("_sim"), F.asc("neighbor_id")], k, "_rn"
+    ).select("query_id", F.col("cell").cast("long").alias("cell"), "neighbor_id")
 
 
 def ivf_persisted_append(
@@ -3520,12 +3427,9 @@ def ivf_filtered_topk(
         "neighbor_id",
         cosine_similarity(F.col("_qvec"), F.col("_nvec")).alias("_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", F.col("cell").cast("long").alias("cell"), "neighbor_id")
-    )
+    return top_k_per(
+        sims, ["query_id"], [F.desc("_sim"), F.asc("neighbor_id")], k, "_rn"
+    ).select("query_id", F.col("cell").cast("long").alias("cell"), "neighbor_id")
 
 
 def ivf_diverse_topk(
@@ -3601,27 +3505,16 @@ def ivf_diverse_topk(
         "neighbor_id",
         cosine_similarity(F.col("_qvec"), F.col("_nvec")).alias("_sim"),
     )
-    # window 1: the diversity quota — rank within each (query, cell)
-    cw = Window.partitionBy("query_id", "cell").orderBy(
-        F.desc("_sim"), F.asc("neighbor_id")
-    )
-    quota = sims.withColumn("_cr", F.row_number().over(cw)).filter(
-        F.col("_cr") <= per_cell
-    )
-    # window 2: the global top-k over the quota survivors (at most
-    # per_cell * n_probe rows per query — no local pre-rank needed)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("_sim"), F.asc("neighbor_id")
-    )
-    return (
-        quota.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("cell").cast("long").alias("cell"),
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-        )
+    order = [F.desc("_sim"), F.asc("neighbor_id")]
+    # cut 1: the diversity quota — rank within each (query, cell)
+    quota = top_k_per(sims, ["query_id", "cell"], order, per_cell, "_cr")
+    # cut 2: the global top-k over the quota survivors (at most
+    # per_cell * n_probe rows per query)
+    return top_k_per(quota, ["query_id"], order, k).select(
+        "query_id",
+        F.col("cell").cast("long").alias("cell"),
+        "neighbor_id",
+        F.col("rank").cast("int").alias("rank"),
     )
 
 
@@ -4221,11 +4114,11 @@ def pq_adc_topk(
     rule).  Scale shape: the corpus is scanned once to encode (or the
     codes are the at-rest layout), the LUT (|queries|·M·K rows) is
     broadcast, the per-(query, vector) reduce is a partial-agg
-    groupBy, and the final rank pays the local pre-rank discipline —
-    only |partitions|·k·|queries| rows reach the global top-k.  ADC's
-    win at 100 TB is the candidate-side payload: M bytes per vector
-    against 4·d for raw floats (32× here), which is what lets a
-    billion-vector shard stay in executor memory.
+    groupBy, and the final rank is one top-k cut whose partial
+    WindowGroupLimit lets only |partitions|·k·|queries| rows reach the
+    global top-k.  ADC's win at 100 TB is the candidate-side payload:
+    M bytes per vector against 4·d for raw floats (32× here), which is
+    what lets a billion-vector shard stay in executor memory.
 
     Output: ``(query_id, neighbor_id, rank, adc_score_scaled)`` —
     the score stays in its exact scaled-long form (÷1e9 for the
@@ -4248,20 +4141,9 @@ def pq_adc_topk(
     scores = pairs.groupBy("query_id", "neighbor_id").agg(
         F.sum("_d").alias("adc_score_scaled")
     )
-    part_w = Window.partitionBy(F.spark_partition_id(), "query_id").orderBy(
-        F.desc("adc_score_scaled"), F.asc("neighbor_id")
-    )
-    local = scores.withColumn("_lr", F.row_number().over(part_w)).filter(
-        F.col("_lr") <= k
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score_scaled"), F.asc("neighbor_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_score_scaled")
-    )
+    return top_k_per(
+        scores, ["query_id"], [F.desc("adc_score_scaled"), F.asc("neighbor_id")], k
+    ).select("query_id", "neighbor_id", "rank", "adc_score_scaled")
 
 
 def pq_train_codebooks(
@@ -4456,9 +4338,10 @@ def ivfadc_topk(
     (PartitionFilters — only probed directories are scanned), the
     query-side LUT (:func:`_pq_lut`, scaled-long exact) is broadcast,
     and the ADC score is a pure-integer partial-agg reduce followed by
-    the local-pre-rank/global-top-k discipline.  Per query batch the
-    cost is ``n_probe/|cells|`` of an ``M``-bytes-per-vector table —
-    candidate generation AND scoring both sublinear in corpus size.
+    one top-k cut (partial WindowGroupLimit, then the global top-k).
+    Per query batch the cost is ``n_probe/|cells|`` of an
+    ``M``-bytes-per-vector table — candidate generation AND scoring
+    both sublinear in corpus size.
 
     Every stage is oracle-replayable (trained coarse codebooks via the
     k-means CTE chain, encode/LUT/score via the PQ chain), so the
@@ -4554,25 +4437,14 @@ def ivfadc_topk(
         .groupBy("query_id", "cell", "neighbor_id")
         .agg(F.sum("_d").alias("adc_score_scaled"))
     )
-    part_w = Window.partitionBy(F.spark_partition_id(), "query_id").orderBy(
-        F.desc("adc_score_scaled"), F.asc("neighbor_id")
-    )
-    local = scores.withColumn("_lr", F.row_number().over(part_w)).filter(
-        F.col("_lr") <= k
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score_scaled"), F.asc("neighbor_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("cell").cast("long").alias("cell"),
-            "neighbor_id",
-            "rank",
-            "adc_score_scaled",
-        )
+    return top_k_per(
+        scores, ["query_id"], [F.desc("adc_score_scaled"), F.asc("neighbor_id")], k
+    ).select(
+        "query_id",
+        F.col("cell").cast("long").alias("cell"),
+        "neighbor_id",
+        "rank",
+        "adc_score_scaled",
     )
 
 
@@ -4654,14 +4526,9 @@ def ivfadc_refine_topk(
         "neighbor_id",
         cosine_similarity(F.col("_qvec"), F.col("_nvec")).alias("_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("_sim"), F.asc("neighbor_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
-    )
+    return top_k_per(
+        sims, ["query_id"], [F.desc("_sim"), F.asc("neighbor_id")], k
+    ).select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
 
 
 def ivfadc_residual_topk(
@@ -4719,7 +4586,7 @@ def ivfadc_residual_topk(
     **Serve**: probe set via :func:`_fixed_probe_cells_expr`, probed
     directories only (PartitionFilters), broadcast residual LUT
     (:func:`_pq_lut`), broadcast per-(query, cell) centroid dot —
-    integer partial-agg reduce, local pre-rank, global top-k.
+    integer partial-agg reduce, one top-k cut.
 
     Centroid ids must be contiguous 0..k−1 (the ``element_at``
     residual lookup indexes the literal centroid array by cell id) —
@@ -4875,25 +4742,14 @@ def ivfadc_residual_topk(
             (F.col("_qcd") + F.col("_rsum")).alias("adc_score_scaled"),
         )
     )
-    part_w = Window.partitionBy(F.spark_partition_id(), "query_id").orderBy(
-        F.desc("adc_score_scaled"), F.asc("neighbor_id")
-    )
-    local = scores.withColumn("_lr", F.row_number().over(part_w)).filter(
-        F.col("_lr") <= k
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score_scaled"), F.asc("neighbor_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("cell").cast("long").alias("cell"),
-            "neighbor_id",
-            "rank",
-            "adc_score_scaled",
-        )
+    return top_k_per(
+        scores, ["query_id"], [F.desc("adc_score_scaled"), F.asc("neighbor_id")], k
+    ).select(
+        "query_id",
+        F.col("cell").cast("long").alias("cell"),
+        "neighbor_id",
+        "rank",
+        "adc_score_scaled",
     )
 
 
@@ -5012,7 +4868,7 @@ def sq8_adc_topk(
     Scale shape: fit is one constant-exchange min/max scan
     (:func:`sq8_minmax`, skippable by passing ``minmax``), then ONE
     corpus scan quantizes + scores against the BROADCAST query side —
-    same single-scan/broadcast/local-pre-rank shape as
+    same single-scan/broadcast/one-top-k-cut shape as
     :func:`brute_force_topk`, but the candidate payload the scan
     carries at rest is codes (d bytes) instead of float32 (4d): the
     4× rung of the quantization ladder, no codebook, recall far above
@@ -5041,20 +4897,9 @@ def sq8_adc_topk(
             lambda acc, x: acc + x,
         ).alias("adc_score_scaled"),
     )
-    part_w = Window.partitionBy(F.spark_partition_id(), "query_id").orderBy(
-        F.desc("adc_score_scaled"), F.asc("neighbor_id")
-    )
-    local = scores.withColumn("_lr", F.row_number().over(part_w)).filter(
-        F.col("_lr") <= k
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score_scaled"), F.asc("neighbor_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_score_scaled")
-    )
+    return top_k_per(
+        scores, ["query_id"], [F.desc("adc_score_scaled"), F.asc("neighbor_id")], k
+    ).select("query_id", "neighbor_id", "rank", "adc_score_scaled")
 
 
 def ivf_sq8_topk(
@@ -5194,25 +5039,14 @@ def ivf_sq8_topk(
             lambda acc, x: acc + x,
         ).alias("adc_score_scaled"),
     )
-    part_w = Window.partitionBy(F.spark_partition_id(), "query_id").orderBy(
-        F.desc("adc_score_scaled"), F.asc("neighbor_id")
-    )
-    local = scores.withColumn("_lr", F.row_number().over(part_w)).filter(
-        F.col("_lr") <= k
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score_scaled"), F.asc("neighbor_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("cell").cast("long").alias("cell"),
-            "neighbor_id",
-            "rank",
-            "adc_score_scaled",
-        )
+    return top_k_per(
+        scores, ["query_id"], [F.desc("adc_score_scaled"), F.asc("neighbor_id")], k
+    ).select(
+        "query_id",
+        F.col("cell").cast("long").alias("cell"),
+        "neighbor_id",
+        "rank",
+        "adc_score_scaled",
     )
 
 
@@ -5328,12 +5162,9 @@ def lsh_bucketed_topk(
         "neighbor_id",
         cosine_similarity(F.col("_qvec"), F.col("_cvec")).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    return top_k_per(
+        sims, ["query_id"], [F.desc("sim"), F.asc("neighbor_id")], k
+    ).select("query_id", "neighbor_id", "rank", "sim")
 
 
 def blocked_cosine_pairs_fast(
@@ -5693,32 +5524,7 @@ def srp_near_dup_pairs(
             .persist()
         )
 
-    ok_buckets = (
-        banded.groupBy("table_id", "bucket")
-        .agg(F.count(F.lit(1)).alias("_m"))
-        .filter((F.col("_m") > 1) & (F.col("_m") <= max_bucket_size))
-        .select("table_id", "bucket")
-    )
-    pairs = (
-        banded.join(ok_buckets, ["table_id", "bucket"])
-        .groupBy("table_id", "bucket")
-        .agg(F.array_sort(F.collect_set("_id")).alias("members"))
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("members"),
-                        lambda a, i: F.transform(
-                            F.slice(F.col("members"), i + 2, F.size(F.col("members"))),
-                            lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    pairs = _capped_bucket_pairs(banded, ["table_id", "bucket"], max_bucket_size)
     a = base.select(
         F.col("_id").alias("id_a"), F.col("_v").alias("_va"), F.col("_nrm").alias("_na")
     )
@@ -5954,8 +5760,9 @@ def bq_hamming_topk(
     Scale shape: the query codes broadcast (small by contract), ONE
     corpus scan encodes and scores — at rest the codes column is
     d/8 bytes/vector and the scan reads nothing else (store it
-    alongside an IVF cell key to add pruning).  Local pre-rank keeps
-    the global window input at |partitions|·k·|queries| rows.
+    alongside an IVF cell key to add pruning).  The top-k cut's partial
+    WindowGroupLimit keeps the global window input at
+    |partitions|·k·|queries| rows.
 
     Output: ``(query_id, neighbor_id, hamming, rank)``.
 
@@ -5985,23 +5792,13 @@ def bq_hamming_topk(
             bq_hamming_expr("_qcode", "_ccode").alias("hamming"),
         )
     )
-    part_w = Window.partitionBy(F.spark_partition_id(), "query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("_lr", F.row_number().over(part_w))
-        .filter(F.col("_lr") <= k)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("hamming").cast("int").alias("hamming"),
-            F.col("rank").cast("int").alias("rank"),
-        )
+    return top_k_per(
+        scored, ["query_id"], [F.asc("hamming"), F.asc("neighbor_id")], k
+    ).select(
+        "query_id",
+        "neighbor_id",
+        F.col("hamming").cast("int").alias("hamming"),
+        F.col("rank").cast("int").alias("rank"),
     )
 
 
@@ -6214,14 +6011,9 @@ def bq_refine_topk(
             cosine_similarity(F.col("_qvec"), F.col("_cvec")).alias("_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("_sim"), F.asc("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
-    )
+    return top_k_per(
+        rescored, ["query_id"], [F.desc("_sim"), F.asc("neighbor_id")], k
+    ).select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
 
 
 def ivf_bq_topk(
@@ -6254,7 +6046,7 @@ def ivf_bq_topk(
     projection; (id, cell, code) lands ``partitionBy(cell)`` with the
     centroid artifact at rest.  **Serve**: ranked probe cells,
     PartitionFilters-pruned read, broadcast query codes, per-word
-    ``bit_count(xor)`` sums, local pre-rank.  Output: ``(query_id,
+    ``bit_count(xor)`` sums, one top-k cut.  Output: ``(query_id,
     cell, neighbor_id, hamming, rank)``."""
     from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
         save_centroids,
@@ -6298,23 +6090,12 @@ def ivf_bq_topk(
         "neighbor_id",
         bq_hamming_expr("_qcode", "code").alias("hamming"),
     )
-    part_w = Window.partitionBy(F.spark_partition_id(), "query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    local = scored.withColumn("_lr", F.row_number().over(part_w)).filter(
-        F.col("_lr") <= k
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("cell").cast("long").alias("cell"),
-            "neighbor_id",
-            F.col("hamming").cast("int").alias("hamming"),
-            F.col("rank").cast("int").alias("rank"),
-        )
+    return top_k_per(
+        scored, ["query_id"], [F.asc("hamming"), F.asc("neighbor_id")], k
+    ).select(
+        "query_id",
+        F.col("cell").cast("long").alias("cell"),
+        "neighbor_id",
+        F.col("hamming").cast("int").alias("hamming"),
+        F.col("rank").cast("int").alias("rank"),
     )

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_streaming_kafka2elasticsearch_spark.operators.joins import anti_join, semi_join
+from spark_streaming_kafka2elasticsearch_spark.operators.partitioning import top_k_per
 from spark_streaming_kafka2elasticsearch_spark.queries import load_table, register
 
 _DEC = T.DecimalType(28, 10)
@@ -173,14 +174,9 @@ def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """row_number + rank filter — one shuffle on the partition key; the
     tie-break on o_orderkey makes the result deterministic."""
     o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-    )
+    return top_k_per(
+        o, ["o_custkey"], [F.desc("o_totalprice"), F.asc("o_orderkey")], 3, "rn"
+    ).select("o_custkey", "o_orderkey", "o_totalprice", "rn")
 
 
 # ---------------------------------------------------------------------------

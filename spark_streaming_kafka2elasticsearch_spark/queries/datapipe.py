@@ -25,6 +25,7 @@ from spark_streaming_kafka2elasticsearch_spark.operators.multimodal import (
     decode_image_features,
     synth_media_table,
 )
+from spark_streaming_kafka2elasticsearch_spark.operators.partitioning import top_k_per
 from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
     brute_force_topk,
     lsh_bucketed_topk,
@@ -1012,19 +1013,17 @@ def deduped_corpus_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     j = clusters.join(q, "doc_id")
     w = Window.partitionBy("component")
-    rn = Window.partitionBy("component").orderBy(
-        F.desc("n_tokens"), F.asc("doc_id")
-    )
-    return (
-        j.withColumn("n_merged", F.count(F.lit(1)).over(w))
-        .withColumn("rn", F.row_number().over(rn))
-        .filter(F.col("rn") == 1)
-        .select(
-            "component",
-            F.col("doc_id").alias("kept_doc_id"),
-            F.col("n_tokens").cast("long").alias("kept_n_tokens"),
-            F.col("n_merged").cast("long").alias("n_merged"),
-        )
+    return top_k_per(
+        j.withColumn("n_merged", F.count(F.lit(1)).over(w)),
+        ["component"],
+        [F.desc("n_tokens"), F.asc("doc_id")],
+        1,
+        "rn",
+    ).select(
+        "component",
+        F.col("doc_id").alias("kept_doc_id"),
+        F.col("n_tokens").cast("long").alias("kept_n_tokens"),
+        F.col("n_merged").cast("long").alias("n_merged"),
     )
 
 
@@ -1830,13 +1829,13 @@ def passage_retrieval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: chunking + featurization are pure codegen (zero
     shuffles to the aggregate); the 5-row query matrix is broadcast;
-    the passage corpus is scanned ONCE with the local-pre-rank idiom
-    of brute_force_topk (top-5 per partition before the per-query
-    global rank), so the only corpus-sized exchange is the hashed-BoW
-    count aggregate.  Cross-engine exactness: BoW vectors are
-    integer-valued, so dot/norm² are EXACT in any summation order;
-    both engines then compute dot/(√q·√p) in the same three-op shape,
-    making sims bit-identical and the deterministic (sim DESC,
+    the passage corpus is scanned ONCE and cut by top_k_per like
+    brute_force_topk (Catalyst keeps the top-5 per partition before
+    the per-query global rank), so the only corpus-sized exchange is
+    the hashed-BoW count aggregate.  Cross-engine exactness: BoW
+    vectors are integer-valued, so dot/norm² are EXACT in any summation
+    order; both engines then compute dot/(√q·√p) in the same three-op
+    shape, making sims bit-identical and the deterministic (sim DESC,
     passage_id) rank oracle-stable."""
     from spark_streaming_kafka2elasticsearch_spark.functions.vectors import (
         cosine_similarity,
@@ -1875,24 +1874,13 @@ def passage_retrieval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine_similarity(F.col("_qe"), F.col("emb")).alias("sim"),
         )
     )
-    part_w = Window.partitionBy(
-        F.spark_partition_id(), "query_doc_id"
-    ).orderBy(F.desc("sim"), F.asc("passage_id"))
-    local = sims.withColumn("_lr", F.row_number().over(part_w)).filter(
-        F.col("_lr") <= 5
-    )
-    w = Window.partitionBy("query_doc_id").orderBy(
-        F.desc("sim"), F.asc("passage_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_doc_id",
-            F.expr("passage_id div 100000").alias("doc_id"),
-            F.expr("CAST(passage_id % 100000 AS INT)").alias("chunk_id"),
-            "rank",
-        )
+    return top_k_per(
+        sims, ["query_doc_id"], [F.desc("sim"), F.asc("passage_id")], 5
+    ).select(
+        "query_doc_id",
+        F.expr("passage_id div 100000").alias("doc_id"),
+        F.expr("CAST(passage_id % 100000 AS INT)").alias("chunk_id"),
+        "rank",
     )
 
 
@@ -5628,28 +5616,17 @@ def bm25_doc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = bm25_scores(docs, docs.filter(F.col("doc_id") < 5)).filter(
         F.col("query_doc_id") != F.col("doc_id")
     )
-    # local pre-rank (the brute_force_topk discipline): only
-    # |partitions|·k·|queries| rows reach the global per-query sort —
-    # without it the final window sorted |docs| rows per query in ONE
-    # task and went super-linear at the 30x probe point (α 1.58)
-    part_w = Window.partitionBy(
-        F.spark_partition_id(), "query_doc_id"
-    ).orderBy(F.desc("score_dec"), F.asc("doc_id"))
-    local = scored.withColumn("_lr", F.row_number().over(part_w)).filter(
-        F.col("_lr") <= 10
-    )
-    w = Window.partitionBy("query_doc_id").orderBy(
-        F.desc("score_dec"), F.asc("doc_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select(
-            "query_doc_id",
-            "doc_id",
-            F.col("rank").cast("int").alias("rank"),
-            "score",
-        )
+    # the top-k cut's partial WindowGroupLimit keeps only
+    # |partitions|·k·|queries| rows for the global per-query sort —
+    # an uncut final window sorted |docs| rows per query in ONE task
+    # and went super-linear at the 30x probe point (α 1.58)
+    return top_k_per(
+        scored, ["query_doc_id"], [F.desc("score_dec"), F.asc("doc_id")], 10
+    ).select(
+        "query_doc_id",
+        "doc_id",
+        F.col("rank").cast("int").alias("rank"),
+        "score",
     )
 
 
@@ -5718,7 +5695,7 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     what makes it fully oracle-replayable (each RRF term is one
     integer-denominator division; the sum has a fixed two-term
     order).  Scale: both legs are the established sub-linear shapes
-    (inverted-index join; broadcast-query scan with local pre-rank);
+    (inverted-index join; broadcast-query scan with one top-k cut);
     fusion itself touches 2·20 rows per query."""
     from spark_streaming_kafka2elasticsearch_spark.functions.vectors import (
         cosine_similarity,
@@ -5735,20 +5712,9 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bm = bm25_scores(docs, queries).filter(
         F.col("query_doc_id") != F.col("doc_id")
     )
-    # both legs pay the local pre-rank discipline (see bm25_doc_topk)
-    pb = Window.partitionBy(F.spark_partition_id(), "query_doc_id").orderBy(
-        F.desc("score_dec"), F.asc("doc_id")
-    )
-    wb = Window.partitionBy("query_doc_id").orderBy(
-        F.desc("score_dec"), F.asc("doc_id")
-    )
-    btop = (
-        bm.withColumn("_lr", F.row_number().over(pb))
-        .filter(F.col("_lr") <= 20)
-        .withColumn("rb", F.row_number().over(wb))
-        .filter(F.col("rb") <= 20)
-        .select("query_doc_id", "doc_id", "rb")
-    )
+    btop = top_k_per(
+        bm, ["query_doc_id"], [F.desc("score_dec"), F.asc("doc_id")], 20, "rb"
+    ).select("query_doc_id", "doc_id", "rb")
 
     dv = hashed_bow_embedding(docs, "doc_id", dim=16)
     qv = (
@@ -5766,22 +5732,12 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine_similarity(F.col("_qe"), F.col("emb")).alias("sim"),
         )
     )
-    pv = Window.partitionBy(F.spark_partition_id(), "query_doc_id").orderBy(
-        F.desc("sim"), F.asc("doc_id")
-    )
-    wv = Window.partitionBy("query_doc_id").orderBy(
-        F.desc("sim"), F.asc("doc_id")
-    )
-    vtop = (
-        vsim.withColumn("_lr", F.row_number().over(pv))
-        .filter(F.col("_lr") <= 20)
-        .withColumn("rv", F.row_number().over(wv))
-        .filter(F.col("rv") <= 20)
-        .select(
-            F.col("query_doc_id").alias("v_qid"),
-            F.col("doc_id").alias("v_did"),
-            "rv",
-        )
+    vtop = top_k_per(
+        vsim, ["query_doc_id"], [F.desc("sim"), F.asc("doc_id")], 20, "rv"
+    ).select(
+        F.col("query_doc_id").alias("v_qid"),
+        F.col("doc_id").alias("v_did"),
+        "rv",
     )
 
     fused = btop.join(
@@ -5803,18 +5759,13 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("rrf_score"),
     )
-    wf = Window.partitionBy("query_doc_id").orderBy(
-        F.desc("rrf_score"), F.asc("doc_id")
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(wf))
-        .filter(F.col("rank") <= 10)
-        .select(
-            "query_doc_id",
-            "doc_id",
-            F.col("rank").cast("int").alias("rank"),
-            "rrf_score",
-        )
+    return top_k_per(
+        fused, ["query_doc_id"], [F.desc("rrf_score"), F.asc("doc_id")], 10
+    ).select(
+        "query_doc_id",
+        "doc_id",
+        F.col("rank").cast("int").alias("rank"),
+        "rrf_score",
     )
 
 
@@ -6085,32 +6036,21 @@ def query_likelihood_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     unmatched mass folds into one per-doc constant.  Per-term and
     constant contributions are 9-dp-rounded decimals summed exactly,
     so ranking and emitted scores replay bit-for-bit.  Same
-    inverted-index scale silhouette (and the same local pre-rank
-    discipline) as bm25_doc_topk."""
+    inverted-index scale silhouette (and the same top-k cut) as
+    bm25_doc_topk."""
     from spark_streaming_kafka2elasticsearch_spark.operators.text import (
         query_likelihood_scores,
     )
 
     docs = load_table(spark, sf_dir, "documents")
     scored = query_likelihood_scores(docs, docs.filter(F.col("doc_id") < 5))
-    part_w = Window.partitionBy(
-        F.spark_partition_id(), "query_doc_id"
-    ).orderBy(F.desc("score_dec"), F.asc("doc_id"))
-    local = scored.withColumn("_lr", F.row_number().over(part_w)).filter(
-        F.col("_lr") <= 10
-    )
-    w = Window.partitionBy("query_doc_id").orderBy(
-        F.desc("score_dec"), F.asc("doc_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select(
-            "query_doc_id",
-            "doc_id",
-            F.col("rank").cast("int").alias("rank"),
-            "score",
-        )
+    return top_k_per(
+        scored, ["query_doc_id"], [F.desc("score_dec"), F.asc("doc_id")], 10
+    ).select(
+        "query_doc_id",
+        "doc_id",
+        F.col("rank").cast("int").alias("rank"),
+        "score",
     )
 
 

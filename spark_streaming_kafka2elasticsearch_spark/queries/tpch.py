@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_streaming_kafka2elasticsearch_spark.operators.joins import anti_join, semi_join
+from spark_streaming_kafka2elasticsearch_spark.operators.partitioning import top_k_per
 from spark_streaming_kafka2elasticsearch_spark.queries import load_table, register
 from spark_streaming_kafka2elasticsearch_spark.queries.analytics import _DEC, _dsum
 
@@ -863,22 +864,15 @@ def top_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part").filter(F.col("p_size") == 15)
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
-    from pyspark.sql import Window
-
     grouped = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
         .groupBy("p_partkey", "p_name", "s_name", "s_suppkey")
         .agg(_dsum(_revenue(), "revenue"))
     )
-    w = Window.partitionBy("p_partkey").orderBy(
-        F.desc("revenue"), F.asc("s_suppkey")
-    )
-    return (
-        grouped.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("p_partkey", "p_name", "s_name", "revenue")
-    )
+    return top_k_per(
+        grouped, ["p_partkey"], [F.desc("revenue"), F.asc("s_suppkey")], 1, "rk"
+    ).select("p_partkey", "p_name", "s_name", "revenue")
 
 
 # ---------------------------------------------------------------------------

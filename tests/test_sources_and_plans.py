@@ -615,6 +615,45 @@ def test_trailing_revenue_window_is_partitioned_by_nation(spark):
     )
 
 
+def test_top_k_cut_is_one_exchange_with_partial_group_limit(spark):
+    """A per-group top-k is ONE row_number window under a literal
+    ``<= k``: Catalyst plants the local cut (WindowGroupLimit Partial)
+    before the single hash exchange, so no hand-written
+    spark_partition_id pre-rank (and its second shuffle) is needed."""
+    from pyspark.sql import functions as F
+
+    from spark_streaming_kafka2elasticsearch_spark.operators.curate import (
+        weighted_reservoir_sample,
+    )
+    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
+        brute_force_topk,
+    )
+
+    vecs = [(i, [float(i % 7), float(i % 3) + 1.0, 1.0]) for i in range(40)]
+    corpus = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    queries = spark.createDataFrame(
+        vecs[:4], "query_id long, query_embedding array<double>"
+    )
+    docs = spark.createDataFrame(
+        [(i, "en" if i % 2 else "de", 1.0 + i % 5) for i in range(60)],
+        "doc_id long, lang string, w double",
+    )
+    for name, df in (
+        ("brute_force_topk", brute_force_topk(corpus, queries, k=3)),
+        (
+            "weighted_reservoir_sample",
+            weighted_reservoir_sample(docs, weight=F.col("w"), k=5, strata=["lang"]),
+        ),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange hashpartitioning") == 1, (name, plan)
+        assert any(
+            "WindowGroupLimit" in line and line.endswith("Partial")
+            for line in plan.splitlines()
+        ), (name, plan)
+        assert "SPARK_PARTITION_ID" not in plan.upper(), (name, plan)
+
+
 def test_bigram_counts_shuffles_only_reductions(spark):
     """Bigram extraction is a codegen'd positional transform feeding a
     partial-aggregated count — no join, no cartesian; only (bigram,

@@ -156,11 +156,10 @@ def test_cell_assign_kernel_sends_element_null_rows_to_lowest_cids(spark, twins)
     )
     got = {}
     for leg in twins:
-        one = _cell_assign_arrow_or_none(df, crows, ["vec_id"], "v", single=True)
-        two = _cell_assign_arrow_or_none(df, crows, ["vec_id"], "v", n_probe=2)
+        one = _cell_assign_arrow_or_none(df, crows, ["vec_id"], "v")
         if one is None:
             one = df.select("vec_id", _fixed_cell_expr(crows, "v").alias("cell"))
-            two = df.select("vec_id", _fixed_probe_cells_expr(crows, "v", 2).alias("cell"))
+        two = df.select("vec_id", _fixed_probe_cells_expr(crows, "v", 2).alias("cell"))
         got[leg] = (
             sorted((r["vec_id"], r["cell"]) for r in one.collect()),
             sorted((r["vec_id"], list(r["cell"])) for r in two.collect()),

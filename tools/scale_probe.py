@@ -132,7 +132,7 @@ PROBE_QUERIES = [
     # inverted-index join under the df-cap, like the jaccard family
     "winnowing_overlap_pairs",
     # r8: composed RAG pipeline (chunk → hashed-BoW → broadcast-query
-    # cosine top-5 with local pre-rank) — one corpus scan, must hold
+    # cosine top-5, one top-k cut) — one corpus scan, must hold
     # alpha ~ 1
     "passage_retrieval_topk",
     # r8: image dedup end-to-end (mapInPandas decode+aHash, banded
@@ -166,7 +166,7 @@ PROBE_QUERIES = [
     # semantic decontamination (one corpus scan x FIXED eval suite —
     # the id<500 pin is what keeps this linear; without it the
     # replicated plant rule would grow both sides), hard-negative
-    # mining (broadcast 16-query scan, local pre-rank), temperature
+    # mining (broadcast 16-query scan, one top-k cut), temperature
     # mix (per-source census, scan-bound)
     "dsir_importance_weights",
     "semantic_decontamination",
@@ -211,7 +211,7 @@ PROBE_QUERIES = [
     # quantize projection; alpha ~ 1
     "sq8_embedding_codes",
     # r10: SQ8 ADC top-k — fit + one broadcast-query corpus scan with
-    # local pre-rank; alpha ~ 1
+    # one top-k cut; alpha ~ 1
     "ann_sq8_adc_topk",
     # r10: CCNet end-to-end selection (buckets -> keep/sample/drop per
     # language) — must track ccnet_perplexity_buckets' alpha
@@ -239,7 +239,7 @@ PROBE_QUERIES = [
     # ivf_persisted_topk plus one bounded window; alpha must match
     "ann_ivf_diverse_topk",
     # r11: A-Res weighted sampling — one scan + per-stratum top-k
-    # under local pre-rank; alpha ~ 1 (scan-bound)
+    # cut (partial WindowGroupLimit); alpha ~ 1 (scan-bound)
     "weighted_reservoir_sample",
     # r11: filtered quantized search — cell pruning x predicate
     # pushdown x 8-byte payload; alpha must track ann_ivfadc_topk
@@ -376,7 +376,7 @@ PROBE_QUERIES = [
     # r14: at-rest BM25 inverted index (operators/bm25_index).  All
     # three time a term-hash-pruned serve over a FIXED 5-query batch:
     # matched-postings volume grows with corpus df of the query terms
-    # (linear in n on the replica corpus), the local pre-rank bounds
+    # (linear in n on the replica corpus), the top-k cut bounds
     # the sort legs ⇒ alpha ≲ 1, postings-scan-bound.  Append adds a
     # fixed-delta tokenize; delete adds a broadcast tombstone
     # anti-join (|tombs| fixed) — neither changes the slope.
