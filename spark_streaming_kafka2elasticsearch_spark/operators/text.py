@@ -17,10 +17,12 @@ from pyspark.sql import functions as F
 from spark_streaming_kafka2elasticsearch_spark.functions.text import (
     alpha_ratio,
     punct_count,
-    token_count,
     tokens,
 )
 from spark_streaming_kafka2elasticsearch_spark.operators import twins
+from spark_streaming_kafka2elasticsearch_spark.operators.partitioning import (
+    fan_out_small_scan,
+)
 
 
 def text_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -1526,13 +1528,34 @@ def kn_bigram_model(docs: DataFrame, text_col: str = "text") -> DataFrame:
     exact integer-valued doubles, so downstream probability
     expressions are cross-engine exact given identical shape.
 
-    100 TB shape: ONE corpus scan builds the (w1, w2, c2) relation;
-    fw/bw/|types| derive from IT by partial aggregation
-    (vocabulary-sized), and AQE broadcasts them back — the
-    tfidf/bigram_logprob silhouette.  The result is a maintained
-    model artifact: fit on a curation cadence, served to batch and
-    streaming scorers alike (the dsir_fit_weights doctrine)."""
+    100 TB shape: ONE corpus scan builds the (w1, w2, c2) relation and
+    :func:`kn_model_from_counts` derives fw/bw/|types| from that one
+    evaluation (vocabulary-sized windows, no join back).  The result
+    is a maintained model artifact: fit on a curation cadence, served
+    to batch and streaming scorers alike (the dsir_fit_weights
+    doctrine)."""
     return kn_model_from_counts(bigram_count_relation(docs, text_col))
+
+
+def _bigram_pairs(joined: bool = False) -> Column:
+    """The adjacent-token pairs of the ``tokens`` array column, one
+    element per bigram INSTANCE (position): ``struct(w1, w2)``, or
+    with ``joined`` the string ``'w1 w2'``.  A positional ``transform``
+    over the sliced array — pure codegen, no UDF, no self-join of the
+    token stream.  ``slice(t, 1, -1)`` throws on a negative length, so
+    a document with fewer than 2 tokens gets an empty array explicitly
+    (explode then drops it, like the oracles' ``len >= 2`` guard)."""
+    if joined:
+        pair, empty = "concat(x, ' ', tokens[i + 1])", "array<string>"
+    else:
+        pair = "struct(x AS w1, tokens[i + 1] AS w2)"
+        empty = "array<struct<w1:string,w2:string>>"
+    return F.when(
+        F.size(F.col("tokens")) >= 2,
+        F.expr(
+            f"transform(slice(tokens, 1, size(tokens) - 1), (x, i) -> {pair})"
+        ),
+    ).otherwise(F.array().cast(empty))
 
 
 def bigram_count_relation(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -1540,16 +1563,9 @@ def bigram_count_relation(docs: DataFrame, text_col: str = "text") -> DataFrame:
     scan every bigram-LM artifact derives from, factored out so the
     at-rest LM index (operators/lm_index) computes delta segments
     with the identical expression shapes."""
-    bigrams = F.when(
-        F.size(F.col("tokens")) >= 2,
-        F.expr(
-            "transform(slice(tokens, 1, size(tokens) - 1),"
-            " (x, i) -> struct(x AS w1, tokens[i + 1] AS w2))"
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
     rel = (
         docs.select(tokens(F.col(text_col)).alias("tokens"))
-        .select(F.explode(bigrams).alias("bg"))
+        .select(F.explode(_bigram_pairs()).alias("bg"))
         .select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
     )
     return rel.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
@@ -1560,19 +1576,36 @@ def kn_model_from_counts(bgf: DataFrame) -> DataFrame:
     the derivation half of :func:`kn_bigram_model`, shared with the
     at-rest LM index so a model served from maintained count segments
     is bit-equal to one fit from scratch (fw/bw/|types| are pure
-    functions of the merged counts)."""
-    fw = bgf.groupBy("w1").agg(
-        F.sum("c2").cast("double").alias("c1"),
-        F.count(F.lit(1)).cast("double").alias("n1f"),
+    functions of the merged counts).
+
+    ``bgf`` is evaluated ONCE: c1 and n1f are window aggregates over
+    ``w1``, n1b over ``w2`` and n_types over the whole relation, where
+    joining three aggregates back would re-run ``bgf`` (and the scan
+    under it) per aggregate.  Every statistic is an exact integer sum,
+    so window and grouped forms agree bit for bit.  The unpartitioned
+    window puts every bigram TYPE in one task; that is within the
+    model's size contract, since the whole model is broadcast to the
+    scorer anyway."""
+    by_w1 = Window.partitionBy("w1")
+    one = F.count(F.lit(1))
+    return bgf.select(
+        "w1",
+        "w2",
+        "c2",
+        F.sum("c2").over(by_w1).cast("double").alias("c1"),
+        one.over(by_w1).cast("double").alias("n1f"),
+        one.over(Window.partitionBy("w2")).cast("double").alias("n1b"),
+        one.over(Window.partitionBy()).cast("double").alias("n_types"),
     )
-    bw = bgf.groupBy("w2").agg(F.count(F.lit(1)).cast("double").alias("n1b"))
-    n_types = bgf.agg(F.count(F.lit(1)).cast("double").alias("n_types"))
-    return (
-        bgf.join(fw, "w1")
-        .join(bw, "w2")
-        .crossJoin(F.broadcast(n_types))
-        .select("w1", "w2", "c2", "c1", "n1f", "n1b", "n_types")
-    )
+
+
+def kn_probability() -> Column:
+    """``P_KN(w2|w1)`` over a :func:`kn_bigram_model` row, in the one
+    operand order both engines evaluate identically (left to right:
+    one subtract, three divides, two multiplies, one add)."""
+    return (F.col("c2").cast("double") - 0.75) / F.col("c1") + (
+        0.75 * F.col("n1f") / F.col("c1")
+    ) * (F.col("n1b") / F.col("n_types"))
 
 
 def kn_doc_scores(
@@ -1603,34 +1636,27 @@ def kn_doc_scores(
     by fabricated score.
 
     Output: ``(doc_id, n_bigrams, n_oov, kn_nll)``.  One doc-side
-    scan; the model joins in vocabulary-sized (broadcast under AQE).
+    scan, fanned out over the task slots before tokenizing
+    (partitioning.fan_out_small_scan); the model joins in
+    vocabulary-sized (broadcast under AQE).
     """
-    bigrams = F.when(
-        F.size(F.col("tokens")) >= 2,
-        F.expr(
-            "transform(slice(tokens, 1, size(tokens) - 1),"
-            " (x, i) -> struct(x AS w1, tokens[i + 1] AS w2))"
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
     inst = (
-        docs.select(F.col(id_col), tokens(F.col(text_col)).alias("tokens"))
-        .select(F.col(id_col), F.explode(bigrams).alias("bg"))
+        fan_out_small_scan(docs.select(id_col, text_col))
+        .select(F.col(id_col), tokens(F.col(text_col)).alias("tokens"))
+        .select(F.col(id_col), F.explode(_bigram_pairs()).alias("bg"))
         .select(
             F.col(id_col),
             F.col("bg.w1").alias("w1"),
             F.col("bg.w2").alias("w2"),
         )
     )
-    kn = (F.col("c2").cast("double") - 0.75) / F.col("c1") + (
-        0.75 * F.col("n1f") / F.col("c1")
-    ) * (F.col("n1b") / F.col("n_types"))
     joined = inst.join(model, ["w1", "w2"], "left")
     terms = joined.select(
         F.col(id_col),
         F.col("c2").isNull().cast("int").alias("_oov"),
         F.when(
             F.col("c2").isNotNull(),
-            F.round(F.ln(kn), 9).cast("decimal(28,10)"),
+            F.round(F.ln(kn_probability()), 9).cast("decimal(28,10)"),
         ).alias("_term"),
     )
     agg = terms.groupBy(id_col).agg(

@@ -19,7 +19,6 @@ from spark_streaming_kafka2elasticsearch_spark.operators.dedup import (
     blocked_ngram_jaccard_pairs,
     exact_dedup_groups,
     minhash_lsh_candidate_pairs,
-    simhash,
 )
 from spark_streaming_kafka2elasticsearch_spark.operators.multimodal import (
     decode_image_features,
@@ -31,6 +30,7 @@ from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
     lsh_bucketed_topk,
 )
 from spark_streaming_kafka2elasticsearch_spark.operators.text import (
+    _bigram_pairs,
     document_fingerprint,
     dsir_logratio_scores,
     dsir_oracle_sql,
@@ -1002,8 +1002,6 @@ def deduped_corpus_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped_corpus; the survivor pick is a per-component window over
     cluster-sized groups (bounded by the census cap, never corpus-
     scale partitions)."""
-    from pyspark.sql import Window
-
     from spark_streaming_kafka2elasticsearch_spark.functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1383,8 +1381,6 @@ def tokenizer_vocab_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     the window sorts |vocabulary| rows, not the corpus — the one
     pattern where an unpartitioned window is correct by construction
     (a vocabulary that doesn't fit one task isn't a vocabulary)."""
-    from pyspark.sql import Window
-
     from spark_streaming_kafka2elasticsearch_spark.functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1449,8 +1445,6 @@ def documents_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     never the reverse), and per-doc assembly is one partial-agg
     groupBy whose order is restored by array_sort on the carried
     position, not a global sort."""
-    from pyspark.sql import Window
-
     from spark_streaming_kafka2elasticsearch_spark.functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2767,8 +2761,6 @@ def sequence_packing_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     PER-SHARD (one shuffle on shard_id, then a sorted running sum
     per partition), never a global single-partition window, so the
     plan parallelizes across shards at any corpus size."""
-    from pyspark.sql import Window
-
     from spark_streaming_kafka2elasticsearch_spark.functions.text import token_count
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2813,8 +2805,6 @@ def training_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-to-engine (md5, not a seeded RNG), which is what epoch
     resumability needs.  One shuffle on shard_id; the per-shard sort
     is the partition-local kind every distributed sort does."""
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     h = F.md5(F.col("text"))
     nib = (F.instr(F.lit("0123456789abcdef"), F.substring(h, 1, 1)) - 1) % 4
@@ -3277,16 +3267,9 @@ def bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_streaming_kafka2elasticsearch_spark.functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    bigrams = F.when(
-        F.size(F.col("tokens")) >= 2,
-        F.expr(
-            "transform(slice(tokens, 1, size(tokens) - 1),"
-            " (x, i) -> concat(x, ' ', tokens[i + 1]))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     rel = (
         docs.select("doc_id", tokens(F.col("text")).alias("tokens"))
-        .select("doc_id", F.explode(bigrams).alias("bg"))
+        .select("doc_id", F.explode(_bigram_pairs(joined=True)).alias("bg"))
     )
     bgf = rel.groupBy("bg").agg(F.count(F.lit(1)).cast("double").alias("c2"))
     w1f = (
@@ -3519,20 +3502,9 @@ def bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_streaming_kafka2elasticsearch_spark.functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    # slice(t, 1, -1) throws on negative length, so short docs get an
-    # empty array explicitly (explode then drops them, like the
-    # oracle's len >= 2 guard).  The guard reads the projected
-    # ``tokens`` column — the raw text is already pruned away.
-    bigrams = F.when(
-        F.size(F.col("tokens")) >= 2,
-        F.expr(
-            "transform(slice(tokens, 1, size(tokens) - 1),"
-            " (x, i) -> concat(x, ' ', tokens[i + 1]))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return (
         docs.select(tokens(F.col("text")).alias("tokens"))
-        .select(F.explode(bigrams).alias("bigram"))
+        .select(F.explode(_bigram_pairs(joined=True)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= 5)
@@ -5867,43 +5839,19 @@ def kneser_ney_bigram_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     divides, two multiplies, one add), and the single rounded value is
     never re-aggregated — so no DECIMAL staging is needed.
 
-    100 TB note: all four statistics tables are vocabulary-sized after
-    partial aggregation (the corpus is scanned once to build the
-    (w1, w2, c2) relation; fw/bw/|types| derive from IT, not from a
-    re-scan), AQE broadcasts them back onto the bigram relation, and
-    the count-≥5 gate bounds the output — the same silhouette as
-    tfidf/bigram_logprob, no new shuffle class."""
-    from spark_streaming_kafka2elasticsearch_spark.functions.text import tokens
+    100 TB note: the corpus is scanned once to build the (w1, w2, c2)
+    relation, and fw/bw/|types| derive from that one evaluation as
+    vocabulary-sized windows (operators/text.kn_bigram_model); the
+    count-≥5 gate bounds the output."""
+    from spark_streaming_kafka2elasticsearch_spark.operators.text import (
+        kn_bigram_model,
+        kn_probability,
+    )
 
-    docs = load_table(spark, sf_dir, "documents")
-    bigrams = F.when(
-        F.size(F.col("tokens")) >= 2,
-        F.expr(
-            "transform(slice(tokens, 1, size(tokens) - 1),"
-            " (x, i) -> struct(x AS w1, tokens[i + 1] AS w2))"
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
-    rel = (
-        docs.select(tokens(F.col("text")).alias("tokens"))
-        .select(F.explode(bigrams).alias("bg"))
-        .select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    )
-    bgf = rel.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
-    fw = bgf.groupBy("w1").agg(
-        F.sum("c2").cast("double").alias("c1"),
-        F.count(F.lit(1)).cast("double").alias("n1f"),
-    )
-    bw = bgf.groupBy("w2").agg(F.count(F.lit(1)).cast("double").alias("n1b"))
-    n_types = bgf.agg(F.count(F.lit(1)).cast("double").alias("n_types"))
-    kn = (F.col("c2").cast("double") - 0.75) / F.col("c1") + (
-        0.75 * F.col("n1f") / F.col("c1")
-    ) * (F.col("n1b") / F.col("n_types"))
     return (
-        bgf.join(fw, "w1")
-        .join(bw, "w2")
-        .crossJoin(F.broadcast(n_types))
+        kn_bigram_model(load_table(spark, sf_dir, "documents"))
         .filter(F.col("c2") >= 5)
-        .select("w1", "w2", "c2", F.round(kn, 9).alias("kn_prob"))
+        .select("w1", "w2", "c2", F.round(kn_probability(), 9).alias("kn_prob"))
     )
 
 
@@ -5961,8 +5909,9 @@ def kn_perplexity_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Self-scoring ⇒ ``n_oov = 0`` by construction here; the streaming
     twin (streaming/jobs.kn_perplexity_gate_stream) scores arriving
     docs against this model as a static artifact, where OOV bigrams
-    are excluded and counted.  One doc-side scan; all model tables
-    vocabulary-sized partial aggregates broadcast back under AQE."""
+    are excluded and counted.  Two doc-side scans, the fit and the
+    scoring; the model is one vocabulary-sized relation broadcast to
+    the scorer."""
     from spark_streaming_kafka2elasticsearch_spark.operators.text import (
         kn_bigram_model,
         kn_doc_scores,

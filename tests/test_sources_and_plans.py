@@ -671,6 +671,40 @@ def test_bigram_counts_shuffles_only_reductions(spark):
     assert "HashAggregate" in plan
 
 
+def test_kn_plans_evaluate_the_count_relation_once(spark, tmp_path, monkeypatch):
+    """The KN model derives c1/n1f/n1b/|types| from ONE evaluation of
+    the ``(w1, w2, c2)`` relation, so a plan reads each input once per
+    use: ``documents`` once for the fit and once for the scoring (the
+    two read different columns, so no exchange is shared), the
+    append gate ``documents`` for the delta and the scoring and its
+    bigram segments once.  Aggregates joined back onto the relation
+    would re-run it per aggregate: column pruning makes their
+    exchanges differ, so Spark cannot reuse them."""
+    monkeypatch.setenv("SPARK_GRAFT_TMP_DIR", str(tmp_path))
+    queries = all_queries()
+
+    def scans(name: str) -> tuple[int, int]:
+        plan = (
+            queries[name](spark, "/root/testdata/sf0.01")
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        reads = [
+            line.split("ReadSchema: ")[-1]
+            for line in plan.splitlines()
+            if "FileScan" in line
+        ]
+        docs = sum(1 for r in reads if "text:string" in r)
+        segments = sum(1 for r in reads if "w1:string" in r)
+        return docs, segments
+
+    assert scans("kneser_ney_bigram_scores") == (1, 0)
+    assert scans("kn_perplexity_quality_gate") == (2, 0)
+    docs, segments = scans("kn_lm_index_append_gate")
+    assert docs <= 2 and segments == 1, (docs, segments)
+
+
 def test_csv_dir_source_batch_and_stream(spark, tmp_path):
     """CSV landing-zone source: header + declared schema batch read,
     malformed-row handling under DROPMALFORMED, and a schema-required
