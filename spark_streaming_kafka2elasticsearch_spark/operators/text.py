@@ -20,9 +20,6 @@ from spark_streaming_kafka2elasticsearch_spark.functions.text import (
     tokens,
 )
 from spark_streaming_kafka2elasticsearch_spark.operators import twins
-from spark_streaming_kafka2elasticsearch_spark.operators.partitioning import (
-    fan_out_small_scan,
-)
 
 
 def text_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -1530,32 +1527,28 @@ def kn_bigram_model(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     100 TB shape: ONE corpus scan builds the (w1, w2, c2) relation and
     :func:`kn_model_from_counts` derives fw/bw/|types| from that one
-    evaluation (vocabulary-sized windows, no join back).  The result
+    evaluation (vocabulary-sized windows and a one-row aggregate).  The result
     is a maintained model artifact: fit on a curation cadence, served
     to batch and streaming scorers alike (the dsir_fit_weights
     doctrine)."""
     return kn_model_from_counts(bigram_count_relation(docs, text_col))
 
 
-def _bigram_pairs(joined: bool = False) -> Column:
-    """The adjacent-token pairs of the ``tokens`` array column, one
-    element per bigram INSTANCE (position): ``struct(w1, w2)``, or
-    with ``joined`` the string ``'w1 w2'``.  A positional ``transform``
-    over the sliced array — pure codegen, no UDF, no self-join of the
-    token stream.  ``slice(t, 1, -1)`` throws on a negative length, so
-    a document with fewer than 2 tokens gets an empty array explicitly
-    (explode then drops it, like the oracles' ``len >= 2`` guard)."""
-    if joined:
-        pair, empty = "concat(x, ' ', tokens[i + 1])", "array<string>"
-    else:
-        pair = "struct(x AS w1, tokens[i + 1] AS w2)"
-        empty = "array<struct<w1:string,w2:string>>"
+def bigram_pairs() -> Column:
+    """The adjacent-token pairs of the ``tokens`` array column as
+    ``struct(w1, w2)``, one element per bigram INSTANCE (position).
+    A positional ``transform`` over the sliced array — pure codegen,
+    no UDF, no self-join of the token stream.  ``slice(t, 1, -1)``
+    throws on a negative length, so a document with fewer than 2
+    tokens gets an empty array explicitly (explode then drops it, like
+    the oracles' ``len >= 2`` guard)."""
     return F.when(
         F.size(F.col("tokens")) >= 2,
         F.expr(
-            f"transform(slice(tokens, 1, size(tokens) - 1), (x, i) -> {pair})"
+            "transform(slice(tokens, 1, size(tokens) - 1),"
+            " (x, i) -> struct(x AS w1, tokens[i + 1] AS w2))"
         ),
-    ).otherwise(F.array().cast(empty))
+    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
 
 
 def bigram_count_relation(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -1565,7 +1558,7 @@ def bigram_count_relation(docs: DataFrame, text_col: str = "text") -> DataFrame:
     with the identical expression shapes."""
     rel = (
         docs.select(tokens(F.col(text_col)).alias("tokens"))
-        .select(F.explode(_bigram_pairs()).alias("bg"))
+        .select(F.explode(bigram_pairs()).alias("bg"))
         .select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
     )
     return rel.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
@@ -1578,16 +1571,24 @@ def kn_model_from_counts(bgf: DataFrame) -> DataFrame:
     is bit-equal to one fit from scratch (fw/bw/|types| are pure
     functions of the merged counts).
 
-    ``bgf`` is evaluated ONCE: c1 and n1f are window aggregates over
-    ``w1``, n1b over ``w2`` and n_types over the whole relation, where
-    joining three aggregates back would re-run ``bgf`` (and the scan
-    under it) per aggregate.  Every statistic is an exact integer sum,
-    so window and grouped forms agree bit for bit.  The unpartitioned
-    window puts every bigram TYPE in one task; that is within the
-    model's size contract, since the whole model is broadcast to the
-    scorer anyway."""
+    ``bgf`` is evaluated ONCE.  c1 and n1f are window aggregates over
+    ``w1`` and n1b one over ``w2``, each a hash-partitioned,
+    vocabulary-sized stage; joining grouped aggregates back would
+    re-run ``bgf`` (and the scan under it) per aggregate, because the
+    join's inferred ``isnotnull`` filters and column pruning make
+    their exchanges differ.  n_types is a one-row aggregate over
+    ``bgf``, broadcast back: it counts the types with ``c2 > 0``
+    (every type of a count relation), and reading ``c2`` keeps
+    ``bgf``'s own aggregate from being pruned, so the exchange under
+    it is the model's and Spark reuses it — a partial count per
+    partition, never every bigram type in one task.  Every statistic
+    is an exact integer sum, so window and grouped forms agree bit
+    for bit."""
     by_w1 = Window.partitionBy("w1")
     one = F.count(F.lit(1))
+    n_types = bgf.agg(
+        F.count_if(F.col("c2") > 0).cast("double").alias("n_types")
+    )
     return bgf.select(
         "w1",
         "w2",
@@ -1595,8 +1596,7 @@ def kn_model_from_counts(bgf: DataFrame) -> DataFrame:
         F.sum("c2").over(by_w1).cast("double").alias("c1"),
         one.over(by_w1).cast("double").alias("n1f"),
         one.over(Window.partitionBy("w2")).cast("double").alias("n1b"),
-        one.over(Window.partitionBy()).cast("double").alias("n_types"),
-    )
+    ).crossJoin(F.broadcast(n_types))
 
 
 def kn_probability() -> Column:
@@ -1636,14 +1636,12 @@ def kn_doc_scores(
     by fabricated score.
 
     Output: ``(doc_id, n_bigrams, n_oov, kn_nll)``.  One doc-side
-    scan, fanned out over the task slots before tokenizing
-    (partitioning.fan_out_small_scan); the model joins in
-    vocabulary-sized (broadcast under AQE).
+    scan; the model joins in vocabulary-sized (broadcast when AQE
+    finds it under the broadcast threshold, a shuffle join otherwise).
     """
     inst = (
-        fan_out_small_scan(docs.select(id_col, text_col))
-        .select(F.col(id_col), tokens(F.col(text_col)).alias("tokens"))
-        .select(F.col(id_col), F.explode(_bigram_pairs()).alias("bg"))
+        docs.select(F.col(id_col), tokens(F.col(text_col)).alias("tokens"))
+        .select(F.col(id_col), F.explode(bigram_pairs()).alias("bg"))
         .select(
             F.col(id_col),
             F.col("bg.w1").alias("w1"),

@@ -30,7 +30,7 @@ from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
     lsh_bucketed_topk,
 )
 from spark_streaming_kafka2elasticsearch_spark.operators.text import (
-    _bigram_pairs,
+    bigram_pairs,
     document_fingerprint,
     dsir_logratio_scores,
     dsir_oracle_sql,
@@ -3269,7 +3269,8 @@ def bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     rel = (
         docs.select("doc_id", tokens(F.col("text")).alias("tokens"))
-        .select("doc_id", F.explode(_bigram_pairs(joined=True)).alias("bg"))
+        .select("doc_id", F.explode(bigram_pairs()).alias("bg"))
+        .select("doc_id", F.concat_ws(" ", "bg.w1", "bg.w2").alias("bg"))
     )
     bgf = rel.groupBy("bg").agg(F.count(F.lit(1)).cast("double").alias("c2"))
     w1f = (
@@ -3504,7 +3505,8 @@ def bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(tokens(F.col("text")).alias("tokens"))
-        .select(F.explode(_bigram_pairs(joined=True)).alias("bigram"))
+        .select(F.explode(bigram_pairs()).alias("bg"))
+        .select(F.concat_ws(" ", "bg.w1", "bg.w2").alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= 5)
@@ -5840,9 +5842,10 @@ def kneser_ney_bigram_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     never re-aggregated — so no DECIMAL staging is needed.
 
     100 TB note: the corpus is scanned once to build the (w1, w2, c2)
-    relation, and fw/bw/|types| derive from that one evaluation as
-    vocabulary-sized windows (operators/text.kn_bigram_model); the
-    count-≥5 gate bounds the output."""
+    relation, and fw/bw derive from that one evaluation as
+    vocabulary-sized windows, |types| as a one-row aggregate
+    (operators/text.kn_bigram_model); the count-≥5 gate bounds the
+    output."""
     from spark_streaming_kafka2elasticsearch_spark.operators.text import (
         kn_bigram_model,
         kn_probability,
@@ -5910,8 +5913,8 @@ def kn_perplexity_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin (streaming/jobs.kn_perplexity_gate_stream) scores arriving
     docs against this model as a static artifact, where OOV bigrams
     are excluded and counted.  Two doc-side scans, the fit and the
-    scoring; the model is one vocabulary-sized relation broadcast to
-    the scorer."""
+    scoring; the model is one vocabulary-sized relation joined to the
+    scorer (broadcast while under the threshold)."""
     from spark_streaming_kafka2elasticsearch_spark.operators.text import (
         kn_bigram_model,
         kn_doc_scores,

@@ -2,8 +2,9 @@
 
 For every registered query, summarize the physical plan with
 ``plans.inspect.plan_metrics`` (exchanges, join strategies, scans with
-pushed filters, cartesian detection).  No query's result is executed,
-only the jobs a query runs while it is built — this audits SHAPE, the
+pushed filters, cartesian detection), and of every plan the query
+checkpoints while it is built.  No query's result is executed, only
+the jobs a query runs while it is built — this audits SHAPE, the
 thing that predicts 100 TB behavior: a query whose plan shows 0
 cartesians, pushed filters at every scan, and broadcast joins where
 dims are small is a query that scales; one extra Exchange here is ~one
@@ -24,51 +25,81 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from spark_streaming_kafka2elasticsearch_spark.plans.inspect import plan_metrics  # noqa: E402
-from spark_streaming_kafka2elasticsearch_spark.queries import all_queries  # noqa: E402
+from spark_streaming_kafka2elasticsearch_spark.queries import (  # noqa: E402
+    all_queries,
+    build_once,
+)
 from spark_streaming_kafka2elasticsearch_spark.session import (  # noqa: E402
     build_session,
     release_cached_state,
 )
 
 
-def audit_query(fn, spark, sf_dir: str) -> dict:
-    """``plan_metrics`` of the query's result, plus, under
-    ``"checkpointed"``, those of every DataFrame the query passed to
-    ``localCheckpoint`` while it was built: a checkpointed result
-    plans as a scan of its RDD, so its own work shows only there.
-    The query is built twice and the second build is recorded, so an
-    at-rest fixture that the first build lays down (build_once) is
-    not audited with the query."""
-    fn(spark, sf_dir)
-    release_cached_state(spark)
-    checkpointed: list[dict] = []
-    local_checkpoint = DataFrame.localCheckpoint
+#: plan_metrics of the DataFrames passed to ``localCheckpoint`` while
+#: the current query is built, filled by :func:`record_checkpoints`.
+CHECKPOINTED: list[dict] = []
+
+
+def record_checkpoints() -> None:
+    """Wrap ``DataFrame.localCheckpoint``, inside this tool only, so each
+    call first appends ``plan_metrics`` of its input to CHECKPOINTED: a
+    checkpointed result plans as a scan of its RDD, so its own work
+    shows only there.  Calls made while a ``build_once`` fixture is
+    built are not recorded; the fixture is the query's untimed setup,
+    not its plan."""
+    local_checkpoint, fixture_build = DataFrame.localCheckpoint, build_once
+    in_fixture = [False]
 
     def recording(df, *args, **kwargs):
-        checkpointed.append(plan_metrics(df))
+        if not in_fixture[0]:
+            CHECKPOINTED.append(plan_metrics(df))
         return local_checkpoint(df, *args, **kwargs)
 
+    def unrecorded_build_once(*args, **kwargs):
+        outer, in_fixture[0] = in_fixture[0], True
+        try:
+            return fixture_build(*args, **kwargs)
+        finally:
+            in_fixture[0] = outer
+
     DataFrame.localCheckpoint = recording
-    try:
-        metrics = plan_metrics(fn(spark, sf_dir))
-    finally:
-        DataFrame.localCheckpoint = local_checkpoint
-    if checkpointed:
-        metrics["checkpointed"] = checkpointed
+    for module in list(sys.modules.values()):
+        if getattr(module, "build_once", None) is fixture_build:
+            module.build_once = unrecorded_build_once
+
+
+def audit_query(fn, spark, sf_dir: str) -> dict:
+    """``plan_metrics`` of the query's result, plus, under
+    ``"checkpointed"``, those of every DataFrame it checkpointed while
+    it was built."""
+    CHECKPOINTED.clear()
+    metrics = plan_metrics(fn(spark, sf_dir))
+    if CHECKPOINTED:
+        metrics["checkpointed"] = list(CHECKPOINTED)
     return metrics
+
+
+def plans(metrics: dict) -> list[dict]:
+    """The query's own plan and every plan it checkpointed."""
+    return [metrics, *metrics.get("checkpointed", [])]
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = build_session(app_name="plan-audit")
     out: dict[str, dict] = {}
-    for name, fn in all_queries().items():
+    registry = all_queries()
+    record_checkpoints()
+    for name, fn in registry.items():
         try:
             out[name] = audit_query(fn, spark, sf_dir)
         except Exception as exc:  # pragma: no cover - audit tool resilience
             out[name] = {"error": str(exc)[:200]}
         release_cached_state(spark)
-    n_cart = [n for n, m in out.items() if m.get("has_cartesian")]
+    # Every total and list below counts the checkpointed plans too.
+    n_cart = [
+        n for n, m in out.items() if any(p.get("has_cartesian") for p in plans(m))
+    ]
     # Intentional cartesians, each documented small-by-contract: the
     # PQ-ADC lookup table IS a cross product by construction —
     # |queries| × (M·K codewords), both sides driver-literal or
@@ -89,6 +120,10 @@ def main() -> int:
         "ann_ivfadc_filtered_topk",
     }
     unexpected = [n for n in n_cart if n not in allowed_cart]
+
+    def total(key: str) -> int:
+        return sum(p.get(key, 0) for m in out.values() for p in plans(m))
+
     summary = {
         "n_queries": len(out),
         "n_with_cartesian": len(n_cart),
@@ -101,13 +136,9 @@ def main() -> int:
         ),
         "n_with_unexpected_cartesian": len(unexpected),
         "unexpected_cartesian_queries": unexpected,
-        "total_exchanges": sum(m.get("n_exchanges", 0) for m in out.values()),
-        "total_broadcast_joins": sum(
-            m.get("n_broadcast_joins", 0) for m in out.values()
-        ),
-        "total_sort_merge_joins": sum(
-            m.get("n_sort_merge_joins", 0) for m in out.values()
-        ),
+        "total_exchanges": total("n_exchanges"),
+        "total_broadcast_joins": total("n_broadcast_joins"),
+        "total_sort_merge_joins": total("n_sort_merge_joins"),
     }
     with open(os.path.join(REPO, "PLAN_AUDIT.json"), "w") as f:
         json.dump({"summary": summary, "queries": out}, f, indent=1, sort_keys=True)
