@@ -36,6 +36,10 @@ import hashlib
 import json
 import os
 import uuid
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 _QUANTIZER_DIR = "_quantizer"
 
@@ -113,6 +117,24 @@ def index_meta(
             f"{expected_fingerprint!r}, found {meta.get('fingerprint')!r}"
         )
     return meta
+
+
+def first_seen(
+    new_docs: DataFrame, id_col: str, *seen: DataFrame | None
+) -> tuple[DataFrame, int]:
+    """The first-seen admission gate of an index append: the rows of
+    ``new_docs`` whose ``id_col`` is in none of the single-column
+    ``seen`` id relations (``None`` entries are skipped), eagerly
+    checkpointed, and their count.  A redelivered batch admits nothing,
+    and an id listed as erased is never admitted again."""
+    known = None
+    for ids in seen:
+        if ids is not None:
+            known = ids if known is None else known.union(ids)
+    delta = new_docs.join(
+        known, new_docs[id_col] == known[known.columns[0]], "left_anti"
+    ).localCheckpoint(eager=True)
+    return delta, delta.count()
 
 
 def _artifact_path(index_path: str, name: str) -> str:

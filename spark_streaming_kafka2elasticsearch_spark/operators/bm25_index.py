@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 
 from spark_streaming_kafka2elasticsearch_spark.functions.text import tokens
 from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
+    first_seen,
     index_meta,
     write_meta,
 )
@@ -172,14 +173,12 @@ def bm25_index_append(
     of documents actually appended."""
     spark = new_docs.sparkSession
     meta = index_meta(path, _BM25_META)
-    seen = _table(spark, path, _DL_DIR).select("doc_id")
-    tombs = _tombstones(spark, path)
-    if tombs is not None:
-        seen = seen.unionByName(tombs)
-    delta = new_docs.join(
-        seen, new_docs[id_col] == seen["doc_id"], "left_anti"
-    ).localCheckpoint(eager=True)
-    n = delta.count()
+    delta, n = first_seen(
+        new_docs,
+        id_col,
+        _table(spark, path, _DL_DIR).select("doc_id"),
+        _tombstones(spark, path),
+    )
     if n:
         tf, dl = _tf_dl(delta, id_col, text_col, meta["n_parts"])
         dl = dl.persist()
@@ -394,9 +393,12 @@ def bm25_index_topk(
     )
     if n_docs <= 0:
         raise ValueError("BM25 index serves an empty corpus (n_docs == 0)")
-    stats = spark.createDataFrame(
-        [(float(n_docs), float(sum_dl) / float(n_docs))],
-        "n_docs double, avgdl double",
+    # A grouping-less aggregate over a one-partition range: the plan
+    # then provably holds one row (plans.inspect), where a
+    # createDataFrame row plans as an opaque RDD scan.
+    stats = spark.range(1, numPartitions=1).agg(
+        F.max(F.lit(float(n_docs))).alias("n_docs"),
+        F.max(F.lit(float(sum_dl) / float(n_docs))).alias("avgdl"),
     )
     scored = bm25_scores_from_stats(
         tf,

@@ -347,6 +347,128 @@ def _capped_bucket_pairs(
     )
 
 
+# ---------------------------------------------------------------------------
+# the set-overlap core shared by the near-dup pair operators
+# ---------------------------------------------------------------------------
+
+
+def _blocked_shingles(df, id_col, block_cols, text_col, k_shingle) -> DataFrame:
+    """(``_id``, ``_block``, ``_sh``): shingles carrying the
+    concatenated ``block_cols`` as the ``_block`` key."""
+    blocked = df.withColumn("_block", F.concat_ws("", *map(F.col, block_cols)))
+    return shingle_relation(blocked, id_col, text_col, k_shingle, ("_block",))
+
+
+def _jaccard(inter: Column, sz_a: Column, sz_b: Column) -> Column:
+    """Exact set Jaccard |A∩B| / (|A| + |B| − |A∩B|), as a double."""
+    return inter.cast("double") / (sz_a + sz_b - inter).cast("double")
+
+
+def _set_sizes(rel: DataFrame) -> DataFrame:
+    """(``_id``, ``_sz``): the size of each ``_id``'s set."""
+    return rel.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz"))
+
+
+def _with_size(pairs: DataFrame, sizes: DataFrame, id_col: str, sz_col: str):
+    """``pairs`` plus its ``id_col`` side's :func:`_set_sizes` as ``sz_col``."""
+    sized = sizes.select(F.col("_id").alias(id_col), F.col("_sz").alias(sz_col))
+    return pairs.join(sized, id_col)
+
+
+def _jaccard_pairs(inter, sizes_a, sizes_b, a: str, b: str) -> DataFrame:
+    """(``a``, ``b``, ``jaccard``) from an (``a``, ``b``, ``_inter``)
+    count and each side's :func:`_set_sizes`."""
+    sized = _with_size(_with_size(inter, sizes_a, a, "_sz_a"), sizes_b, b, "_sz_b")
+    return sized.select(
+        a, b, _jaccard(F.col("_inter"), F.col("_sz_a"), F.col("_sz_b")).alias("jaccard")
+    )
+
+
+def _candidate_overlap(pairs, rel_a, rel_b, a: str, b: str, keys=()) -> DataFrame:
+    """|A∩B| as ``_inter`` per row of ``pairs``, grouped by its columns
+    other than the join-only ``keys``.  ``rel_a``/``rel_b`` are
+    (*keys, ``_id``, ``_sh``) sets whose ``_id`` is ``pairs``' ``a``/``b``.
+    Each pair expands by A's shingles, then B's set is equi-joined on the
+    shingle: only intersection rows materialize, at a cost of Σ |A| over
+    the pairs however common a shingle is, so no stop-shingle cap."""
+    keys = list(keys)
+    return (
+        pairs.join(rel_a.select(*keys, F.col("_id").alias(a), "_sh"), [*keys, a])
+        .join(rel_b.select(*keys, F.col("_id").alias(b), "_sh"), [*keys, b, "_sh"])
+        .groupBy(*[c for c in pairs.columns if c not in keys])
+        .agg(F.count(F.lit(1)).alias("_inter"))
+    )
+
+
+def _shared_key_overlap(rel_a, rel_b, keys, a: str, b: str, max_doc_freq):
+    """Inverted-index overlap of two (*keys, ``_id``) sets: (``a``,
+    ``b``, ``_inter``) shared-key counts, plus each side's
+    :func:`_set_sizes`.  A self-join passes one relation twice and keeps
+    ``a < b`` of the result (Catalyst pushes that filter on the grouping
+    columns into the join).  Keys held by more than ``max_doc_freq``
+    ``rel_b`` documents leave both sides (anti-join: keys ``rel_b`` never
+    saw stay) before the sizes are counted; ``None`` disables the cap."""
+    keys = list(keys)
+    if max_doc_freq is not None:
+        stop = (
+            rel_b.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("_df"))
+            .filter(F.col("_df") > max_doc_freq)
+            .select(*keys)
+        )
+        rel_a, rel_b = (r.join(stop, keys, "left_anti") for r in (rel_a, rel_b))
+    inter = (
+        rel_a.select(*keys, F.col("_id").alias(a))
+        .join(rel_b.select(*keys, F.col("_id").alias(b)), keys)
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).alias("_inter"))
+    )
+    return inter, _set_sizes(rel_a), _set_sizes(rel_b)
+
+
+def _band_relation(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(``_id``, ``band_id``, ``band_hash``) from a wide signature
+    relation: step 2 of :func:`minhash_lsh_candidate_pairs`."""
+    rows_per_band = num_hashes // bands
+    # One parse for the whole band array (the Column-API struct build
+    # cost ~10 py4j round-trips per band).
+    band_sql = ", ".join(
+        "struct({b} AS band_id, xxhash64({cols}) AS band_hash)".format(
+            b=b,
+            cols=", ".join(
+                f"mh_{b * rows_per_band + r}" for r in range(rows_per_band)
+            ),
+        )
+        for b in range(bands)
+    )
+    return sig.selectExpr(
+        "_id", f"explode(array({band_sql})) AS band"
+    ).select("_id", "band.band_id", "band.band_hash")
+
+
+def _banded_pair_jaccard(
+    banded, docs, id_col, text_col, k_shingle, max_bucket_size
+) -> tuple[DataFrame, tuple[DataFrame, DataFrame]]:
+    """Steps 3–5 of :func:`minhash_lsh_candidate_pairs` over a (``_id``,
+    ``band_id``, ``band_hash``) relation: the lazy (``id_a``, ``id_b``,
+    ``jaccard``) result and the two persisted boundaries it reads (the
+    candidate pairs and the candidate documents' shingles), which the
+    caller unpersists once it has materialized the result."""
+    pairs = _capped_bucket_pairs(
+        banded, ["band_id", "band_hash"], max_bucket_size
+    ).persist()
+    cand_ids = pairs.select(
+        F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias(id_col)
+    ).distinct()
+    # semi-join BEFORE the shingle explode: shingles of candidates only
+    relc = shingle_relation(
+        docs.join(cand_ids, id_col, "left_semi"), id_col, text_col, k_shingle
+    ).persist()
+    sizes = _set_sizes(relc)
+    inter = _candidate_overlap(pairs, relc, relc, "id_a", "id_b")
+    return _jaccard_pairs(inter, sizes, sizes, "id_a", "id_b"), (pairs, relc)
+
+
 def minhash_lsh_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -412,75 +534,12 @@ def minhash_lsh_candidate_pairs(
     checkpoint table a 100 TB dedup run would write between the
     candidate and verify phases.
     """
-    rows_per_band = num_hashes // bands
     sig = minhash_signatures_wide(
         df, id_col, text_col, k_shingle, num_hashes, hash_family
     )
-
-    # One parse for the whole band array (the Column-API struct build
-    # cost ~10 py4j round-trips per band).
-    band_sql = ", ".join(
-        "struct({b} AS band_id, xxhash64({cols}) AS band_hash)".format(
-            b=b,
-            cols=", ".join(
-                f"mh_{b * rows_per_band + r}" for r in range(rows_per_band)
-            ),
-        )
-        for b in range(bands)
-    )
-    banded = sig.selectExpr(
-        "_id", f"explode(array({band_sql})) AS band"
-    ).select("_id", "band.band_id", "band.band_hash").persist()
-
-    pairs = _capped_bucket_pairs(
-        banded, ["band_id", "band_hash"], max_bucket_size
-    )
-
-    # Exact verify, PAIR-restricted.  `pairs` (the whole banding
-    # pipeline) now has two consumers — the candidate-id semi-join and
-    # the pair expansion — so it's persist()-ed (it is tiny:
-    # census-bounded fixed-width id pairs); without the boundary each
-    # consumer would re-execute the signature job.  Shingles are built
-    # only for candidate documents (semi-join BEFORE the shingle
-    # explode, so the shingle shuffle is over the candidate set, not
-    # the corpus).  No stop-shingle df-cap is needed here: the old
-    # doc-superset verify paid Σ df² over candidate-doc shingle
-    # frequencies (hence the cap); the pair expansion pays |A| per
-    # pair no matter how common a shingle is, so the output is the
-    # TRUE Jaccard of the full shingle sets.
-    pairs = pairs.persist()
-    cand_ids = (
-        pairs.select(
-            F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias(id_col)
-        ).distinct()
-    )
-    docs_c = df.join(cand_ids, id_col, "left_semi")
-    relc = shingle_relation(docs_c, id_col, text_col, k_shingle).persist()
-    sizes = relc.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz"))
-    a_sh = pairs.join(
-        relc.select(F.col("_id").alias("id_a"), "_sh"), "id_a"
-    )
-    inter = (
-        a_sh.join(
-            relc.select(F.col("_id").alias("id_b"), "_sh"),
-            ["id_b", "_sh"],
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("_inter"))
-    )
-    sz_a = sizes.select(F.col("_id").alias("id_a"), F.col("_sz").alias("_sz_a"))
-    sz_b = sizes.select(F.col("_id").alias("id_b"), F.col("_sz").alias("_sz_b"))
-    result = (
-        inter.join(sz_a, "id_a")
-        .join(sz_b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("_inter").cast("double")
-                / (F.col("_sz_a") + F.col("_sz_b") - F.col("_inter")).cast("double")
-            ).alias("jaccard"),
-        )
+    banded = _band_relation(sig, num_hashes, bands).persist()
+    result, staged = _banded_pair_jaccard(
+        banded, df, id_col, text_col, k_shingle, max_bucket_size
     )
     # Materialize the (census-bounded, fixed-width) pair result and
     # release the three staged intermediates — library callers that
@@ -491,8 +550,8 @@ def minhash_lsh_candidate_pairs(
     if not materialize:
         return result
     final = result.localCheckpoint(eager=True)
-    for staged in (banded, pairs, relc):
-        staged.unpersist()
+    for boundary in (banded, *staged):
+        boundary.unpersist()
     return final
 
 
@@ -536,41 +595,13 @@ def blocked_ngram_jaccard_pairs(
     """
     if min_jaccard <= 0:
         raise ValueError("min_jaccard must be > 0 (zero-overlap pairs never materialize)")
-    blocked = df.withColumn(
-        "_block", F.concat_ws("", *[F.col(c) for c in block_cols])
+    tok = _blocked_shingles(df, id_col, block_cols, text_col, k_shingle)
+    inter, sizes, _ = _shared_key_overlap(
+        tok, tok, ["_block", "_sh"], "id_a", "id_b", max_doc_freq
     )
-    tok = shingle_relation(
-        blocked, id_col, text_col, k_shingle, extra_cols=("_block",)
-    )
-    if max_doc_freq is not None:
-        ok = (
-            tok.groupBy("_block", "_sh")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_doc_freq)
-            .select("_block", "_sh")
-        )
-        tok = tok.join(ok, ["_block", "_sh"])
-    sizes = tok.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz"))
-    a = tok.select(F.col("_block"), F.col("_sh"), F.col("_id").alias("id_a"))
-    b = tok.select(F.col("_block"), F.col("_sh"), F.col("_id").alias("id_b"))
-    inter = (
-        a.join(b, ["_block", "_sh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("_inter"))
-    )
-    sz_a = sizes.select(F.col("_id").alias("id_a"), F.col("_sz").alias("_sz_a"))
-    sz_b = sizes.select(F.col("_id").alias("id_b"), F.col("_sz").alias("_sz_b"))
     return (
-        inter.join(sz_a, "id_a")
-        .join(sz_b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("_inter").cast("double")
-                / (F.col("_sz_a") + F.col("_sz_b") - F.col("_inter")).cast("double")
-            ).alias("jaccard"),
+        _jaccard_pairs(
+            inter.filter(F.col("id_a") < F.col("id_b")), sizes, sizes, "id_a", "id_b"
         )
         .filter(F.col("jaccard") >= min_jaccard)
     )
@@ -626,12 +657,7 @@ def prefix_filter_jaccard_pairs(
     # A/B-measured LOSING here — 2.55 -> 2.91 s — shingle assembly is
     # cheap string work and the checkpoint boundary already bounds it;
     # left on the scan deliberately.)
-    blocked = df.withColumn(
-        "_block", F.concat_ws("", *[F.col(c) for c in block_cols])
-    )
-    tok = shingle_relation(
-        blocked, id_col, text_col, k_shingle, extra_cols=("_block",)
-    )
+    tok = _blocked_shingles(df, id_col, block_cols, text_col, k_shingle)
     if materialize:
         tok = tok.localCheckpoint(eager=True)
     dfreq = tok.groupBy("_block", "_sh").agg(
@@ -709,28 +735,15 @@ def prefix_filter_jaccard_pairs(
         )
         .select("_block", "id_a", "id_b", "_n_a", "_n_b")
     )
-    fa = tok.select("_block", F.col("_id").alias("id_a"), "_sh")
-    fb = tok.select("_block", F.col("_id").alias("id_b"), "_sh")
     result = (
-        # Expand candidates by a's shingles, then equi-join b's set ON
-        # the shingle — only intersection rows materialize (hash join),
-        # never the |a|x|b| cross of the two sets.
-        cand.join(fa, ["_block", "id_a"])
-        .join(fb, ["_block", "id_b", "_sh"])
-        .groupBy("id_a", "id_b", "_n_a", "_n_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
+        _candidate_overlap(cand, tok, tok, "id_a", "id_b", keys=["_block"])
         .select(
             "id_a",
             "id_b",
-            "n_common",
+            F.col("_inter").alias("n_common"),
             F.col("_n_a").alias("n_a"),
             F.col("_n_b").alias("n_b"),
-            (
-                F.col("n_common").cast("double")
-                / (F.col("_n_a") + F.col("_n_b") - F.col("n_common")).cast(
-                    "double"
-                )
-            ).alias("jaccard"),
+            _jaccard(F.col("_inter"), F.col("_n_a"), F.col("_n_b")).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= min_jaccard)
     )
@@ -1796,8 +1809,7 @@ def delta_corpus_jaccard_pairs(
       Σ df², so a 1-in-10⁶ delta costs ~10⁻⁶ of a full re-dedup;
     * the ``max_doc_freq`` stop-shingle cap is computed on the CORPUS
       side alone (at scale those document frequencies are maintained
-      statistics, not a per-batch scan).  The corpus side keeps only
-      shingles with df ≤ cap (inner join); the delta side drops only
+      statistics, not a per-batch scan).  Both sides drop only the
       shingles the corpus marks OVER-frequent (anti-join against the
       df > cap set) — delta shingles the corpus has never seen are
       KEPT, so a mostly-novel delta document retains its novel mass in
@@ -1814,59 +1826,17 @@ def delta_corpus_jaccard_pairs(
     if min_jaccard <= 0:
         raise ValueError("min_jaccard must be > 0 (zero-overlap pairs never materialize)")
 
-    def _shingled(df: DataFrame) -> DataFrame:
-        blocked = df.withColumn(
-            "_block", F.concat_ws("", *[F.col(c) for c in block_cols])
-        )
-        return shingle_relation(
-            blocked, id_col, text_col, k_shingle, extra_cols=("_block",)
-        )
-
-    new_tok = _shingled(delta)
-    old_tok = _shingled(corpus)
-    if max_doc_freq is not None:
-        dfreq = old_tok.groupBy("_block", "_sh").agg(
-            F.count(F.lit(1)).alias("_df")
-        )
-        old_tok = old_tok.join(
-            dfreq.filter(F.col("_df") <= max_doc_freq).select("_block", "_sh"),
-            ["_block", "_sh"],
-        )
-        # Delta keeps corpus-novel shingles: only the OVER-frequent
-        # corpus set is removed (left_anti), never the unseen ones.
-        new_tok = new_tok.join(
-            dfreq.filter(F.col("_df") > max_doc_freq).select("_block", "_sh"),
-            ["_block", "_sh"],
-            "left_anti",
-        )
-    new_sizes = new_tok.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz_new"))
-    old_sizes = old_tok.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz_old"))
-    inter = (
-        new_tok.select("_block", "_sh", F.col("_id").alias("delta_id"))
-        .join(
-            old_tok.select("_block", "_sh", F.col("_id").alias("corpus_id")),
-            ["_block", "_sh"],
-        )
-        .groupBy("delta_id", "corpus_id")
-        .agg(F.count(F.lit(1)).alias("_inter"))
+    inter, new_sizes, old_sizes = _shared_key_overlap(
+        _blocked_shingles(delta, id_col, block_cols, text_col, k_shingle),
+        _blocked_shingles(corpus, id_col, block_cols, text_col, k_shingle),
+        ["_block", "_sh"],
+        "delta_id",
+        "corpus_id",
+        max_doc_freq,
     )
-    return (
-        inter.join(
-            new_sizes.select(F.col("_id").alias("delta_id"), "_sz_new"), "delta_id"
-        )
-        .join(
-            old_sizes.select(F.col("_id").alias("corpus_id"), "_sz_old"), "corpus_id"
-        )
-        .select(
-            "delta_id",
-            "corpus_id",
-            (
-                F.col("_inter")
-                / (F.col("_sz_new") + F.col("_sz_old") - F.col("_inter"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-    )
+    return _jaccard_pairs(
+        inter, new_sizes, old_sizes, "delta_id", "corpus_id"
+    ).filter(F.col("jaccard") >= min_jaccard)
 
 
 def substring_window_relation(
@@ -2029,35 +1999,20 @@ def winnowing_overlap_pairs(
     fps = winnowing_fingerprints(df, id_col, text_col, k=k, window=window).select(
         F.col(id_col).alias("_id"), "fingerprint"
     ).distinct()
-    if max_doc_freq is not None:
-        ok = (
-            fps.groupBy("fingerprint")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_doc_freq)
-            .select("fingerprint")
-        )
-        fps = fps.join(ok, "fingerprint")
-    sizes = fps.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz"))
-    a = fps.select("fingerprint", F.col("_id").alias("id_a"))
-    b = fps.select("fingerprint", F.col("_id").alias("id_b"))
-    inter = (
-        a.join(b, "fingerprint")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+    inter, sizes, _ = _shared_key_overlap(
+        fps, fps, ["fingerprint"], "id_a", "id_b", max_doc_freq
     )
-    sz_a = sizes.select(F.col("_id").alias("id_a"), F.col("_sz").alias("_sz_a"))
-    sz_b = sizes.select(F.col("_id").alias("id_b"), F.col("_sz").alias("_sz_b"))
+    shared = inter.filter(
+        (F.col("id_a") < F.col("id_b")) & (F.col("_inter") >= min_shared)
+    )
     return (
-        inter.join(sz_a, "id_a")
-        .join(sz_b, "id_b")
+        _with_size(_with_size(shared, sizes, "id_a", "_sz_a"), sizes, "id_b", "_sz_b")
         .select(
             "id_a",
             "id_b",
-            "n_shared",
+            F.col("_inter").alias("n_shared"),
             (
-                F.col("n_shared").cast("double")
+                F.col("_inter").cast("double")
                 / F.least("_sz_a", "_sz_b").cast("double")
             ).alias("containment"),
         )

@@ -62,6 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
+    first_seen,
     index_meta,
     write_meta,
 )
@@ -165,14 +166,12 @@ def kn_index_append(
     never double.  Returns the number of documents folded in."""
     spark = new_docs.sparkSession
     meta = index_meta(path, _LM_META)
-    seen = _table(spark, path, _DOCLOG_DIR).select("doc_id")
-    gone_ids = _gone_ids(spark, path)
-    if gone_ids is not None:
-        seen = seen.unionByName(gone_ids)
-    delta = new_docs.join(
-        seen, new_docs[id_col] == seen["doc_id"], "left_anti"
-    ).localCheckpoint(eager=True)
-    n = delta.count()
+    delta, n = first_seen(
+        new_docs,
+        id_col,
+        _table(spark, path, _DOCLOG_DIR).select("doc_id"),
+        _gone_ids(spark, path),
+    )
     if n:
         write_table(
             _segment(delta, id_col, text_col, meta["n_parts"], "a"),

@@ -60,11 +60,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
+    first_seen,
     index_meta,
     write_meta,
 )
 from spark_streaming_kafka2elasticsearch_spark.operators.dedup import (
-    _capped_bucket_pairs,
+    _band_relation,
+    _banded_pair_jaccard,
+    _candidate_overlap,
+    _jaccard_pairs,
+    _set_sizes,
     minhash_signatures_wide,
     shingle_relation,
 )
@@ -76,31 +81,6 @@ _BAND_DIR = "bands"
 
 def _part_col(id_col: str, n_parts: int):
     return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_parts)).alias("part")
-
-
-def _band_relation(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(_id, band_id, band_hash) from a wide signature relation.
-
-    ``band_hash`` is xxhash64 over the band's signature slice — a
-    fixed-width key for slice EQUALITY (an external oracle reproduces
-    buckets by grouping on the slice values; operators/dedup.py:318
-    doctrine), so the per-shingle hash family never constrains it."""
-    rows_per_band = num_hashes // bands
-    # One parse for the whole band array (the Column-API struct build
-    # costs ~10 py4j round-trips per band; operators/dedup.py:362
-    # doctrine) — identical struct/xxhash64 trees.
-    band_sql = ", ".join(
-        "struct({b} AS band_id, xxhash64({cols}) AS band_hash)".format(
-            b=b,
-            cols=", ".join(
-                f"mh_{b * rows_per_band + r}" for r in range(rows_per_band)
-            ),
-        )
-        for b in range(bands)
-    )
-    return sig.selectExpr(
-        "_id", f"explode(array({band_sql})) AS band"
-    ).select("_id", "band.band_id", "band.band_hash")
 
 
 def _sig_and_bands(
@@ -200,13 +180,9 @@ def minhash_lsh_append(
     spark = new_docs.sparkSession
     meta = index_meta(path, _LSH_META)
     sig_dir = os.path.join(path, _SIG_DIR)
-    existing = spark.read.parquet(sig_dir).select(
-        F.col("doc_id").alias(id_col)
+    delta, n = first_seen(
+        new_docs, id_col, spark.read.parquet(sig_dir).select("doc_id")
     )
-    delta = new_docs.join(existing, id_col, "left_anti").localCheckpoint(
-        eager=True
-    )
-    n = delta.count()
     if n:
         staged, sig_out, bands_out = _sig_and_bands(
             delta, meta, id_col, text_col
@@ -360,58 +336,20 @@ def _pairs_over_banded(
     text_col: str,
     min_jaccard: float,
 ) -> DataFrame:
-    """Census gate + bucket pair expansion + pair-restricted exact
-    Jaccard over a ``(_id, band_id, band_hash)`` relation — steps 3–5
-    of operators/dedup.minhash_lsh_candidate_pairs, shared by the
-    at-rest and functional-append derivations.  ``banded`` arrives
+    """operators/dedup._banded_pair_jaccard (steps 3–5 of
+    minhash_lsh_candidate_pairs) over a ``(_id, band_id, band_hash)``
+    relation, cut at ``min_jaccard`` — shared by the at-rest and
+    functional-append derivations.  ``banded`` arrives
     persisted (two consumers: census and member join); released here
     with the other staged boundaries once the final is checkpointed."""
-    pairs = _capped_bucket_pairs(
-        banded, ["band_id", "band_hash"], meta["max_bucket_size"]
-    ).persist()
-    cand_ids = pairs.select(
-        F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias(id_col)
-    ).distinct()
-    docs_c = docs.join(cand_ids, id_col, "left_semi")
-    relc = shingle_relation(
-        docs_c, id_col, text_col, meta["k_shingle"]
-    ).persist()
-    sizes = relc.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz"))
-    a_sh = pairs.join(
-        relc.select(F.col("_id").alias("id_a"), "_sh"), "id_a"
+    result, staged = _banded_pair_jaccard(
+        banded, docs, id_col, text_col, meta["k_shingle"], meta["max_bucket_size"]
     )
-    inter = (
-        a_sh.join(
-            relc.select(F.col("_id").alias("id_b"), "_sh"),
-            ["id_b", "_sh"],
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("_inter"))
+    final = result.filter(F.col("jaccard") >= min_jaccard).localCheckpoint(
+        eager=True
     )
-    sz_a = sizes.select(
-        F.col("_id").alias("id_a"), F.col("_sz").alias("_sz_a")
-    )
-    sz_b = sizes.select(
-        F.col("_id").alias("id_b"), F.col("_sz").alias("_sz_b")
-    )
-    result = (
-        inter.join(sz_a, "id_a")
-        .join(sz_b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("_inter").cast("double")
-                / (
-                    F.col("_sz_a") + F.col("_sz_b") - F.col("_inter")
-                ).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-    )
-    final = result.localCheckpoint(eager=True)
-    for staged in (banded, pairs, relc):
-        staged.unpersist()
+    for boundary in (banded, *staged):
+        boundary.unpersist()
     return final
 
 
@@ -490,38 +428,10 @@ def minhash_lsh_probe(
         text_col,
         meta["k_shingle"],
     ).persist()
-    q_sz = qrel.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz_q"))
-    m_sz = mrel.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz_m"))
-    inter = (
-        cand.join(
-            qrel.select(F.col("_id").alias("query_id"), "_sh"), "query_id"
-        )
-        .join(
-            mrel.select(F.col("_id").alias("match_id"), "_sh"),
-            ["match_id", "_sh"],
-        )
-        .groupBy("query_id", "match_id")
-        .agg(F.count(F.lit(1)).alias("_inter"))
-    )
-    result = (
-        inter.join(
-            q_sz.select(F.col("_id").alias("query_id"), "_sz_q"), "query_id"
-        )
-        .join(
-            m_sz.select(F.col("_id").alias("match_id"), "_sz_m"), "match_id"
-        )
-        .select(
-            "query_id",
-            "match_id",
-            (
-                F.col("_inter").cast("double")
-                / (
-                    F.col("_sz_q") + F.col("_sz_m") - F.col("_inter")
-                ).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-    )
+    inter = _candidate_overlap(cand, qrel, mrel, "query_id", "match_id")
+    result = _jaccard_pairs(
+        inter, _set_sizes(qrel), _set_sizes(mrel), "query_id", "match_id"
+    ).filter(F.col("jaccard") >= min_jaccard)
     final = result.localCheckpoint(eager=True)
     for staged in (banded, cand, qrel, mrel):
         staged.unpersist()

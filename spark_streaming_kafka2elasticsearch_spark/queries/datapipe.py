@@ -4393,29 +4393,18 @@ def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~linear under the df-cap; the cap's worst case stays
     O(#shingles · 50²) regardless."""
     from spark_streaming_kafka2elasticsearch_spark.operators.dedup import (
+        _shared_key_overlap,
+        _with_size,
         shingle_relation,
     )
 
     docs = load_table(spark, sf_dir, "documents")
     blocked = docs.withColumn("_block", F.col("lang"))
     tok = shingle_relation(blocked, "doc_id", "text", 3, extra_cols=("_block",))
-    ok = (
-        tok.groupBy("_block", "_sh")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") <= 50)
-        .select("_block", "_sh")
+    inter_half, sizes, _ = _shared_key_overlap(
+        tok, tok, ["_block", "_sh"], "id_lo", "id_hi", 50
     )
-    tok = tok.join(ok, ["_block", "_sh"])
-    sizes = tok.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz"))
-    a = tok.select("_block", "_sh", F.col("_id").alias("id_lo"))
-    b = tok.select("_block", "_sh", F.col("_id").alias("id_hi"))
-    inter_half = (
-        a.join(b, ["_block", "_sh"])
-        .filter(F.col("id_lo") < F.col("id_hi"))
-        .groupBy("id_lo", "id_hi")
-        .agg(F.count(F.lit(1)).alias("_inter"))
-    )
-    inter = inter_half.select(
+    inter = inter_half.filter(F.col("id_lo") < F.col("id_hi")).select(
         F.explode(
             F.array(
                 F.struct(
@@ -4432,9 +4421,7 @@ def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("_p")
     ).select("_p.sub_id", "_p.super_id", "_p._inter")
     return (
-        inter.join(
-            sizes.select(F.col("_id").alias("sub_id"), "_sz"), "sub_id"
-        )
+        _with_size(inter, sizes, "sub_id", "_sz")
         .select(
             "sub_id",
             "super_id",

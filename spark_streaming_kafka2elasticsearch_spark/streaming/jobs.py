@@ -191,6 +191,42 @@ def _clean_vec_ids(vecs: DataFrame, evals: DataFrame, threshold: float) -> DataF
     )
 
 
+def _doc_texts(
+    spark: SparkSession, static_corpus: DataFrame | None, corpus_dir: str
+) -> tuple[DataFrame | None, DataFrame | None]:
+    """The text store of a doc-id index stream: ``(doc_id, text)`` of
+    ``static_corpus`` (the pre-stream text, or None) unioned with the
+    landed ``corpus_dir`` zone, and that landed table itself.  Either
+    is None when it does not exist."""
+    import os
+
+    landed = spark.read.parquet(corpus_dir) if os.path.isdir(corpus_dir) else None
+    texts = static_corpus
+    if landed is not None:
+        landed_texts = landed.select("doc_id", "text")
+        texts = landed_texts if texts is None else texts.unionByName(landed_texts)
+    return texts, landed
+
+
+def _erase_landed(
+    landed: DataFrame, corpus_dir: str, doomed: DataFrame, id_col: str
+) -> None:
+    """Rewrite only the ``batch_id`` partitions of the landed corpus
+    that hold a ``doomed`` id, without those ids."""
+    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
+        erase_partitions,
+    )
+
+    touched = {
+        int(r["batch_id"])
+        for r in landed.join(doomed, id_col, "left_semi")
+        .select("batch_id")
+        .distinct()
+        .collect()
+    }
+    erase_partitions(landed, corpus_dir, ["batch_id"], touched, doomed, id_col)
+
+
 def documents_ingest_stream(
     spark: SparkSession,
     source: Any,
@@ -331,15 +367,8 @@ def lsh_gate_ingest_stream(
         )
         if fresh.isEmpty():
             return
-        texts = [static_corpus] if static_corpus is not None else []
-        if os.path.isdir(corpus_dir):
-            texts.append(
-                spark.read.parquet(corpus_dir).select("doc_id", "text")
-            )
-        if texts:
-            corpus_texts = texts[0]
-            for t in texts[1:]:
-                corpus_texts = corpus_texts.unionByName(t)
+        corpus_texts, _ = _doc_texts(spark, static_corpus, corpus_dir)
+        if corpus_texts is not None:
             hits = (
                 minhash_lsh_probe(
                     spark,
@@ -900,7 +929,6 @@ def descent_graph_erasure_stream(
         nn_descent_delete,
     )
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        erase_partitions,
         read_table,
         swap_table,
     )
@@ -948,14 +976,7 @@ def descent_graph_erasure_stream(
         # corpus surgery AFTER the stamped edge rewrite (the crash
         # window then replays into the stamp-guard above): only the
         # batch_id partitions holding a deleted id are rewritten
-        touched = {
-            int(r["batch_id"])
-            for r in corpus.join(dele, "vec_id", "left_semi")
-            .select("batch_id")
-            .distinct()
-            .collect()
-        }
-        erase_partitions(corpus, corpus_dir, ["batch_id"], touched, dele, "vec_id")
+        _erase_landed(corpus, corpus_dir, dele, "vec_id")
 
     return start_batches(
         _parse_envelope(spark, source, "vec_id BIGINT"), erase, checkpoint_dir
@@ -1140,9 +1161,6 @@ def kn_lm_index_erasure_stream(
     from spark_streaming_kafka2elasticsearch_spark.operators.lm_index import (
         kn_index_delete,
     )
-    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        erase_partitions,
-    )
 
     corpus_dir = os.path.join(index_path, "corpus")
 
@@ -1150,16 +1168,9 @@ def kn_lm_index_erasure_stream(
         batch = batch.dropDuplicates(["doc_id"]).localCheckpoint(eager=True)
         if batch.isEmpty():
             return
-        texts = [static_corpus] if static_corpus is not None else []
-        landed = None
-        if os.path.isdir(corpus_dir):
-            landed = spark.read.parquet(corpus_dir)
-            texts.append(landed.select("doc_id", "text"))
-        if not texts:
+        corpus_texts, landed = _doc_texts(spark, static_corpus, corpus_dir)
+        if corpus_texts is None:
             return
-        corpus_texts = texts[0]
-        for t in texts[1:]:
-            corpus_texts = corpus_texts.unionByName(t)
         # dropDuplicates: a doc present in more than one text store
         # (static + landed, or any landed duplication) must negate its
         # counts exactly once
@@ -1169,14 +1180,7 @@ def kn_lm_index_erasure_stream(
         kn_index_delete(index_path, gone)
         if landed is None:
             return
-        touched = {
-            int(r["batch_id"])
-            for r in landed.join(batch, "doc_id", "left_semi")
-            .select("batch_id")
-            .distinct()
-            .collect()
-        }
-        erase_partitions(landed, corpus_dir, ["batch_id"], touched, batch, "doc_id")
+        _erase_landed(landed, corpus_dir, batch, "doc_id")
 
     return start_batches(
         _parse_envelope(spark, source, "doc_id BIGINT"), erase, checkpoint_dir

@@ -267,3 +267,104 @@ def test_logistic_scores_match_python_model(spark, texts):
     for i, text in enumerate(texts):
         expect = py_model(text)
         assert got[i] == (expect, expect >= 0.0), (i, text, got[i], expect)
+
+
+near_dup_corpora = st.lists(
+    st.tuples(
+        st.sampled_from(["x", "y"]),
+        st.lists(st.sampled_from(["a", "b", "c"]), min_size=0, max_size=7),
+        st.booleans(),
+    ),
+    min_size=2,
+    max_size=8,
+)
+
+
+@settings(max_examples=4, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    near_dup_corpora,
+    st.lists(st.sampled_from(["a", "b", "c"]), min_size=1, max_size=7),
+    st.sampled_from([0.1, 0.3, 0.6]),
+)
+def test_near_dup_pairs_match_python_set_jaccard(spark, drawn, shared, t):
+    """The near-dup family against a pure-Python set Jaccard over the
+    same k=3 shingles, on small two-block corpora with empty texts and
+    documents shorter than k.  The blocked, prefix-filtered and
+    delta-vs-corpus pairs are each exactly the same-block pairs at
+    Jaccard ≥ ``t``; every MinHash candidate (unblocked) carries the
+    exact value of its pair.  About 30 s with a warm session.  The
+    ``shared`` text is in both blocks, once in the delta and once in the
+    corpus, so a pair join that lost the block key would pair across
+    blocks and fail."""
+    from spark_streaming_kafka2elasticsearch_spark.operators.dedup import (
+        blocked_ngram_jaccard_pairs,
+        delta_corpus_jaccard_pairs,
+        minhash_lsh_candidate_pairs,
+        prefix_filter_jaccard_pairs,
+    )
+
+    k = 3
+    drawn = [*drawn, ("x", shared, True), ("y", shared, False)]
+    rows = [(i, b, " ".join(w)) for i, (b, w, _) in enumerate(drawn)]
+    delta_ids = {i for i, (_, _, d) in enumerate(drawn) if d}
+
+    def shingle_set(text: str) -> set[str]:
+        toks = text.split()
+        if len(toks) < k:
+            return {" ".join(toks)} if toks else set()
+        return {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
+
+    sets = {i: shingle_set(text) for i, _, text in rows}
+    lang = {i: b for i, b, _ in rows}
+
+    def jaccard(i: int, j: int) -> float:
+        inter = len(sets[i] & sets[j])
+        return inter / len(sets[i] | sets[j]) if inter else 0.0
+
+    def want(pairs) -> dict:
+        return {
+            (i, j): jaccard(i, j)
+            for i, j in pairs
+            if lang[i] == lang[j] and jaccard(i, j) >= t
+        }
+
+    ids = sorted(sets)
+    docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
+    got = lambda df, a, b: {(r[a], r[b]): r["jaccard"] for r in df.collect()}
+    self_pairs = want((i, j) for i in ids for j in ids if i < j)
+    assert got(
+        blocked_ngram_jaccard_pairs(
+            docs, "doc_id", ["lang"], k_shingle=k, min_jaccard=t, max_doc_freq=None
+        ),
+        "id_a",
+        "id_b",
+    ) == self_pairs
+    assert got(
+        prefix_filter_jaccard_pairs(
+            docs, "doc_id", ["lang"], k_shingle=k, min_jaccard=t
+        ),
+        "id_a",
+        "id_b",
+    ) == self_pairs
+    is_delta = F.col("doc_id").isin(sorted(delta_ids))
+    assert got(
+        delta_corpus_jaccard_pairs(
+            docs.filter(is_delta),
+            docs.filter(~is_delta),
+            "doc_id",
+            ["lang"],
+            k_shingle=k,
+            min_jaccard=t,
+            max_doc_freq=None,
+        ),
+        "delta_id",
+        "corpus_id",
+    ) == want((i, j) for i in delta_ids for j in ids if j not in delta_ids)
+    candidates = got(
+        # 2-row bands: a loose filter, so most overlapping pairs are checked
+        minhash_lsh_candidate_pairs(docs, "doc_id", k_shingle=k, num_hashes=8, bands=4),
+        "id_a",
+        "id_b",
+    )
+    assert candidates == {p: jaccard(*p) for p in candidates}
+    assert all(v > 0 for v in candidates.values())

@@ -10,7 +10,11 @@ cartesians, pushed filters at every scan, and broadcast joins where
 dims are small is a query that scales; one extra Exchange here is ~one
 extra full shuffle of the input there.
 
-    python tools/plan_audit.py [sf_dir]
+    python tools/plan_audit.py [sf_dir] [query ...]
+
+With query names, only those queries are audited and their entries are
+printed to stdout; ``PLAN_AUDIT.json`` is left alone (a before/after
+check of a few plans without a full registry run).
 """
 
 from __future__ import annotations
@@ -86,16 +90,26 @@ def plans(metrics: dict) -> list[dict]:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = sys.argv[2:]
+    registry = all_queries()
+    unknown = [n for n in only if n not in registry]
+    if unknown:
+        print(f"unknown queries: {unknown}", file=sys.stderr)
+        return 2
     spark = build_session(app_name="plan-audit")
     out: dict[str, dict] = {}
-    registry = all_queries()
     record_checkpoints()
-    for name, fn in registry.items():
+    for name in only or registry:
+        fn = registry[name]
         try:
             out[name] = audit_query(fn, spark, sf_dir)
         except Exception as exc:  # pragma: no cover - audit tool resilience
             out[name] = {"error": str(exc)[:200]}
         release_cached_state(spark)
+    if only:
+        print(json.dumps(out, indent=1, sort_keys=True))
+        spark.stop()
+        return 0
     # Every total and list below counts the checkpointed plans too.
     n_cart = [
         n for n, m in out.items() if any(p.get("has_cartesian") for p in plans(m))
