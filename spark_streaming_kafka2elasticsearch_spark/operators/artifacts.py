@@ -18,7 +18,8 @@ written and read driver-side with pyarrow: no Spark job, one file,
 deterministic bytes.
 
 Every artifact carries a **data fingerprint** of the corpus it was
-trained on (file listing + sizes + mtimes of the source parquet).
+trained on (file listing + sizes + mtimes of the source parquet;
+:func:`~spark_streaming_kafka2elasticsearch_spark.sources.writer.data_fingerprint`).
 Loading verifies the fingerprint when the caller supplies the expected
 one: a stale artifact (corpus regenerated since training) is treated
 as absent and the caller retrains — closing the silent-stale-codebook
@@ -32,7 +33,6 @@ index family shares one atomic write and one staleness check.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import uuid
@@ -46,30 +46,6 @@ _QUANTIZER_DIR = "_quantizer"
 #: Artifact schema version — bump on any layout change so an old
 #: serving binary never misreads a new artifact (or vice versa).
 _VERSION = 1
-
-
-def data_fingerprint(source_path: str) -> str:
-    """Cheap, deterministic fingerprint of a data file or directory:
-    sha256 over the sorted (relative name, size, mtime_ns) listing.
-    No data bytes are read — at 100 TB a content hash would cost a
-    full scan; the listing catches regeneration, append, and
-    compaction, which is the invalidation this guards."""
-    entries = []
-    if os.path.isdir(source_path):
-        for root, _dirs, files in os.walk(source_path):
-            for fn in sorted(files):
-                if fn.startswith((".", "_")):
-                    continue
-                p = os.path.join(root, fn)
-                st = os.stat(p)
-                entries.append(
-                    (os.path.relpath(p, source_path), st.st_size, st.st_mtime_ns)
-                )
-    else:
-        st = os.stat(source_path)
-        entries.append((os.path.basename(source_path), st.st_size, st.st_mtime_ns))
-    entries.sort()
-    return hashlib.sha256(json.dumps(entries).encode()).hexdigest()
 
 
 def read_meta(path: str, name: str) -> dict | None:

@@ -237,6 +237,24 @@ def kn_index_delete(
     return n
 
 
+def _merged(segs: DataFrame) -> DataFrame:
+    """The merge-on-read of ``(_seg, w1, w2, c2)`` segment rows:
+    segment dedup (the crashed-double-write armor), per-key integer
+    sum, zero-total keys dropped.  The rows are hash-partitioned on
+    ``w1`` once, up front: that one exchange satisfies the dedup, the
+    ``(w1, w2)`` sum and :func:`kn_model_from_counts`' ``w1`` windows,
+    which would otherwise each shuffle the relation again.  It adds no
+    skew a KN model does not already have — the ``w1`` window puts
+    every row of a ``w1`` into one task either way."""
+    return (
+        segs.repartition("w1")
+        .dropDuplicates(["_seg", "w1", "w2"])
+        .groupBy("w1", "w2")
+        .agg(F.sum("c2").alias("c2"))
+        .filter(F.col("c2") > 0)
+    )
+
+
 def kn_index_counts(
     spark: SparkSession,
     path: str,
@@ -245,10 +263,9 @@ def kn_index_counts(
     text_col: str = "text",
     expected_fingerprint: str | None = None,
 ) -> DataFrame:
-    """The MERGED live count relation ``(w1, w2, c2)``: segment-dedup
-    (the crashed-double-write armor), per-key integer sum, zero-total
-    keys dropped — bit-equal to bigram_count_relation over exactly
-    the live documents.  Vocabulary-sized work: the corpus text is
+    """The MERGED live count relation ``(w1, w2, c2)`` (:func:`_merged`)
+    — bit-equal to bigram_count_relation over exactly the live
+    documents.  Vocabulary-sized work: the corpus text is
     never touched.
 
     ``delta_docs`` is the FUNCTIONAL append — the delta's counts join
@@ -263,12 +280,7 @@ def kn_index_counts(
                 delta_docs, id_col, text_col, meta["n_parts"], "a"
             ).select("_seg", "w1", "w2", "c2")
         )
-    return (
-        segs.dropDuplicates(["_seg", "w1", "w2"])
-        .groupBy("w1", "w2")
-        .agg(F.sum("c2").alias("c2"))
-        .filter(F.col("c2") > 0)
-    )
+    return _merged(segs)
 
 
 def kn_index_model(
@@ -302,19 +314,12 @@ def kn_index_compact(spark: SparkSession, path: str) -> int:
     segs = _table(spark, path, _BG_DIR)
     n_segs = segs.select("_seg").distinct().count()
     meta = index_meta(path, _LM_META)
-    merged = (
-        segs.select("_seg", "w1", "w2", "c2")
-        .dropDuplicates(["_seg", "w1", "w2"])
-        .groupBy("w1", "w2")
-        .agg(F.sum("c2").alias("c2"))
-        .filter(F.col("c2") > 0)
-        .select(
-            F.lit("b").alias("_seg"),
-            "w1",
-            "w2",
-            "c2",
-            F.pmod(F.xxhash64("w1"), F.lit(meta["n_parts"])).alias("part"),
-        )
+    merged = _merged(segs.select("_seg", "w1", "w2", "c2")).select(
+        F.lit("b").alias("_seg"),
+        "w1",
+        "w2",
+        "c2",
+        F.pmod(F.xxhash64("w1"), F.lit(meta["n_parts"])).alias("part"),
     )
     swap_table(merged, os.path.join(path, _BG_DIR), partition_by=["part"])
     gone_ids = _gone_ids(spark, path)

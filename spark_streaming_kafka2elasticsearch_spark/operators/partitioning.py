@@ -20,6 +20,19 @@ stays on), and every consumer below it is a set-semantics aggregation
 or deterministically tie-broken window, so results are
 partitioning-independent (pinned by the oracle gate).
 
+Fan-out sites include the four batch callers of
+``operators/text.kn_doc_scores`` in ``queries/datapipe.py``
+(``kn_perplexity_quality_gate``, ``kn_lm_index_gate_served``,
+``kn_lm_index_append_gate``, ``kn_lm_index_delete_gate``): without it
+their scoring stage (tokenize, explode, model join, per-doc decimal
+sum) over the one-split ``documents`` scan runs as one task.  On the
+5 000-document benchmark table (4 cores, 11 interleaved rounds) the
+append gate measured 2.13 s off / 1.63 s on (1.31×, 10 of 11 rounds
+won), the ``getNumPartitions`` check included.  ``kn_doc_scores``
+itself does not fan out: the streaming gate
+(``streaming/jobs.kn_perplexity_gate_stream``) keeps its per-batch
+plan.
+
 **Top-k cut.**  :func:`top_k_per` is the one spelling of "keep each
 group's best k rows"; see its docstring for the plan it relies on.
 """

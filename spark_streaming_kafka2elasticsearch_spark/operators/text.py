@@ -571,7 +571,9 @@ def _bpe_train_local_or_none(
     Degenerate inputs fall back to the distributed loop (None): NULL
     counts, a round with an empty pair census (whose NULL-poisoned
     merge row the twin does not replicate), or an over-ceiling vocab.
-    Off under ``SPARK_GRAFT_TWINS=0`` (:mod:`.twins`).
+    Off under ``SPARK_GRAFT_TWINS=0`` (:mod:`.twins`).  The answer is
+    built from an Arrow table in the distributed leg's column types, so
+    Spark reads it as a local relation, with no Python worker.
     """
     if not twins.enabled():
         return None
@@ -615,25 +617,37 @@ def _bpe_train_local_or_none(
         rep = f"<{a}{b}>"
         for w in words:
             w[2] = w[2].replace(pat, rep)
-    spark = word_freq.sparkSession
+    import pyarrow as pa
+
     if emit == "vocab":
         vocab: dict = {}
         for _tok, c, enc in words:
             for s in enc[1:-1].split("><"):
                 vocab[s] = vocab.get(s, 0) + c
-        return spark.createDataFrame(
-            [(s, int(c)) for s, c in vocab.items()],
-            "symbol string, corpus_count long",
+        out = pa.table(
+            {
+                "symbol": pa.array(list(vocab), pa.string()),
+                "corpus_count": pa.array(list(vocab.values()), pa.int64()),
+            }
         )
-    if emit == "lexicon":
-        return spark.createDataFrame(
-            [(w[0], w[2]) for w in words],
-            "token string, encoding string",
+    elif emit == "lexicon":
+        out = pa.table(
+            {
+                "token": pa.array([w[0] for w in words], pa.string()),
+                "encoding": pa.array([w[2] for w in words], pa.string()),
+            }
         )
-    return spark.createDataFrame(
-        [(int(k), a, b, int(c)) for k, a, b, c in merges],
-        "merge_rank int, left_sym string, right_sym string, pair_count long",
-    )
+    else:
+        k, a, b, c = zip(*merges) if merges else ((), (), (), ())
+        out = pa.table(
+            {
+                "merge_rank": pa.array(k, pa.int32()),
+                "left_sym": pa.array(a, pa.string()),
+                "right_sym": pa.array(b, pa.string()),
+                "pair_count": pa.array(c, pa.int64()),
+            }
+        )
+    return word_freq.sparkSession.createDataFrame(out)
 
 
 def bpe_train(

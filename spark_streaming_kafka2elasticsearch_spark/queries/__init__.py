@@ -24,9 +24,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
-    data_fingerprint,
     read_meta,
     write_meta,
+)
+from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
+    data_fingerprint,
+    read_parquet,
 )
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -87,7 +90,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # hide o_orderdate / l_shipdate / ts predicates from the parquet
     # reader (PushedFilters would go empty; test_tpch.py pins this).
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     dtypes = dict(df.dtypes)
     if name == "events" and dtypes.get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

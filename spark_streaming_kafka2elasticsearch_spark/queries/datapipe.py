@@ -24,7 +24,10 @@ from spark_streaming_kafka2elasticsearch_spark.operators.multimodal import (
     decode_image_features,
     synth_media_table,
 )
-from spark_streaming_kafka2elasticsearch_spark.operators.partitioning import top_k_per
+from spark_streaming_kafka2elasticsearch_spark.operators.partitioning import (
+    fan_out_small_scan,
+    top_k_per,
+)
 from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
     brute_force_topk,
     lsh_bucketed_topk,
@@ -1654,24 +1657,25 @@ def bpe_vocab_after_training(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: Session cache for the trained BPE lexicon — the codebook-cache
 #: pattern (queries/advanced._CODEBOOK_CACHE): training is RNG-free,
-#: so caching the vocab-sized (token, encoding) rows driver-side
-#: changes cost, never results.  The training entries
+#: so caching the vocab-sized (token, encoding) Arrow table
+#: driver-side changes cost, never results.  The training entries
 #: (bpe_train_merges / bpe_vocab_after_training) always retrain; the
 #: encode SERVING entry consumes the cache, so its bench number
 #: measures the corpus pass, not 6 re-trained merge rounds.
-_BPE_LEX_CACHE: dict[tuple, list] = {}
+_BPE_LEX_CACHE: dict[tuple, object] = {}
 
 
-def _bpe_lexicon_rows(
-    spark: SparkSession, sf_dir: str, rounds: int = 6
-) -> list[tuple[str, str]]:
+def _bpe_lexicon_table(spark: SparkSession, sf_dir: str, rounds: int = 6):
+    """The trained ``(token, encoding)`` lexicon as a ``pyarrow.Table``
+    (from the session cache), so the frame built on it is a local
+    relation that no Python worker has to produce."""
     import os
 
     from spark_streaming_kafka2elasticsearch_spark.functions.text import tokens
-    from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
+    from spark_streaming_kafka2elasticsearch_spark.operators.text import bpe_train
+    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
         data_fingerprint,
     )
-    from spark_streaming_kafka2elasticsearch_spark.operators.text import bpe_train
 
     # Fingerprint of the source parquet in the key (ADVICE r10): if the
     # corpus under sf_dir is regenerated mid-session, the stale lexicon
@@ -1687,9 +1691,7 @@ def _bpe_lexicon_rows(
             .agg(F.count(F.lit(1)).alias("c"))
         )
         lex = bpe_train(wf, rounds=rounds, emit="lexicon")
-        _BPE_LEX_CACHE[key] = [
-            (r["token"], r["encoding"]) for r in lex.collect()
-        ]
+        _BPE_LEX_CACHE[key] = lex.toArrow()
     return _BPE_LEX_CACHE[key]
 
 
@@ -1717,10 +1719,7 @@ def bpe_encode_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    lex = spark.createDataFrame(
-        _bpe_lexicon_rows(spark, sf_dir, rounds=6),
-        "token string, encoding string",
-    )
+    lex = spark.createDataFrame(_bpe_lexicon_table(spark, sf_dir, rounds=6))
     return bpe_encode_with_lexicon(docs, lex)
 
 
@@ -5909,7 +5908,7 @@ def kn_perplexity_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     model = kn_bigram_model(docs)
-    scores = kn_doc_scores(docs, model)
+    scores = kn_doc_scores(fan_out_small_scan(docs), model)
     return scores.select(
         "doc_id",
         "n_bigrams",
@@ -6554,7 +6553,7 @@ def kn_lm_index_gate_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda p: kn_index_persist(docs, p, n_parts=16, fingerprint=fp),
     )
     model = kn_index_model(spark, path, expected_fingerprint=fp)
-    return _kn_gate_output(kn_doc_scores(docs, model))
+    return _kn_gate_output(kn_doc_scores(fan_out_small_scan(docs), model))
 
 
 @register("kn_lm_index_append_gate", oracle=_kn_gate_oracle(""))
@@ -6592,7 +6591,7 @@ def kn_lm_index_append_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = kn_index_model(
         spark, path, delta_docs=delta, expected_fingerprint=fp
     )
-    return _kn_gate_output(kn_doc_scores(docs, model))
+    return _kn_gate_output(kn_doc_scores(fan_out_small_scan(docs), model))
 
 
 _KN_DELETE_WHERE = " WHERE NOT (doc_id % 20 = 7 AND doc_id < 2000)"
@@ -6635,4 +6634,6 @@ def kn_lm_index_delete_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = build_once("kn_lm_index_delete_gate", sf_dir, fp, build)
     model = kn_index_model(spark, path, expected_fingerprint=done_fp)
-    return _kn_gate_output(kn_doc_scores(survivors, model))
+    return _kn_gate_output(
+        kn_doc_scores(fan_out_small_scan(survivors), model)
+    )

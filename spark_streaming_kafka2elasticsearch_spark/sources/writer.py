@@ -14,10 +14,16 @@ At 100 TB, how a table is laid down decides every later query's cost:
 DataFrameWriter options; the value is encoding the layout decisions
 (and their rationale) as one reviewed code path instead of scattered
 ``.write`` calls.
+
+The read half is :func:`read_parquet`: a table re-read unchanged in a
+session reuses the schema Spark inferred the first time, so only the
+first read pays the schema-inference job.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import shutil
 import uuid
@@ -173,6 +179,72 @@ def _settle_swap(path: str) -> None:
         os.rename(aside, path)
 
 
+def data_fingerprint(source_path: str) -> str:
+    """Cheap, deterministic fingerprint of a data file or directory:
+    sha256 over the sorted (relative name, size, mtime_ns) listing.
+    No data bytes are read — at 100 TB a content hash would cost a
+    full scan; the listing catches regeneration, append, and
+    compaction, which is the invalidation this guards."""
+    entries = []
+    if os.path.isdir(source_path):
+        for root, _dirs, files in os.walk(source_path):
+            for fn in sorted(files):
+                if fn.startswith((".", "_")):
+                    continue
+                p = os.path.join(root, fn)
+                st = os.stat(p)
+                entries.append(
+                    (os.path.relpath(p, source_path), st.st_size, st.st_mtime_ns)
+                )
+    else:
+        st = os.stat(source_path)
+        entries.append((os.path.basename(source_path), st.st_size, st.st_mtime_ns))
+    entries.sort()
+    return hashlib.sha256(json.dumps(entries).encode()).hexdigest()
+
+
+#: Session confs that change the schema Spark infers for a parquet
+#: table (type mapping, timestamp flavour, partition-value typing,
+#: name resolution); a memoized schema is reused only while they hold.
+_SCHEMA_CONFS = (
+    "spark.sql.caseSensitive",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.session.timeZone",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+#: path -> ((listing fingerprint, schema confs), inferred schema)
+_SCHEMAS: dict = {}
+
+
+def read_parquet(spark, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that pays the schema-inference job
+    once per table version: the schema Spark inferred is kept per path
+    and handed back to the reader while the table's listing
+    (:func:`data_fingerprint`) and the schema-inference confs are the
+    ones it was inferred under.  Any change to either — a rewrite, an
+    append, a swap, a flipped conf — infers again and replaces the
+    path's entry.  A path the local file system cannot list (a remote
+    URI, a missing table) is read as is, with Spark's own errors."""
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    key = (
+        data_fingerprint(path),
+        tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS),
+    )
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (key, df.schema)
+    return df
+
+
 def read_table(spark, path: str) -> DataFrame | None:
     """The parquet table at ``path``, or None when there is none —
     after settling any swap a crash interrupted, so a replayed epoch
@@ -180,7 +252,7 @@ def read_table(spark, path: str) -> DataFrame | None:
     _settle_swap(path)
     if not os.path.exists(path):
         return None
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def swap_table(

@@ -48,13 +48,15 @@ def _rows(df):
 
 def test_artifact_roundtrip_and_fingerprint_staleness(tmp_path):
     from spark_streaming_kafka2elasticsearch_spark.operators.artifacts import (
-        data_fingerprint,
         load_centroids,
         load_pq_codebooks,
         load_sq8_minmax,
         save_centroids,
         save_pq_codebooks,
         save_sq8_minmax,
+    )
+    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
+        data_fingerprint,
     )
 
     src = tmp_path / "corpus.parquet"

@@ -837,22 +837,44 @@ def test_bpe_train_learns_sennrich_merges(spark, twins):
         ], leg
 
 
-def test_bpe_vocab_after_training_sennrich(spark):
-    """The trained tokenizer applied: after the 6 pinned merges, the
-    final encodings are low→[low], lower→[low,e,r], newest→[n,ewest],
-    widest→[w,i,d,est]; the vocab inventory weighted by word freq is
-    hand-derived from those."""
+def _bpe_legs(spark, twins, emits):
+    """``bpe_train`` over the pinned 4-word table on both legs: per
+    leg, ``emit`` → (dtypes, sorted rows).  Asserts the driver twin's
+    Arrow-built output equals the distributed leg's, types included."""
     from spark_streaming_kafka2elasticsearch_spark.operators.text import bpe_train
 
     wf = spark.createDataFrame(
         [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)],
         "tok string, c long",
     )
-    out = {
-        r["symbol"]: r["corpus_count"]
-        for r in bpe_train(wf, rounds=6, emit="vocab").collect()
-    }
-    assert out == {
+    legs = {}
+    for leg in twins:
+        legs[leg] = {}
+        for emit in emits:
+            df = bpe_train(wf, rounds=6, emit=emit)
+            legs[leg][emit] = (df.dtypes, sorted(tuple(r) for r in df.collect()))
+    twin, distributed = legs.values()
+    for emit in emits:
+        assert twin[emit] == distributed[emit], emit
+    return twin
+
+
+def test_bpe_vocab_after_training_sennrich(spark, twins):
+    """The trained tokenizer applied: after the 6 pinned merges, the
+    final encodings are low→[low], lower→[low,e,r], newest→[n,ewest],
+    widest→[w,i,d,est]; the vocab inventory weighted by word freq is
+    hand-derived from those.  Both legs give the same merges and vocab,
+    rows and column types."""
+    out = _bpe_legs(spark, twins, ("merges", "vocab"))
+    assert out["merges"][0] == [
+        ("merge_rank", "int"),
+        ("left_sym", "string"),
+        ("right_sym", "string"),
+        ("pair_count", "bigint"),
+    ]
+    assert len(out["merges"][1]) == 6
+    assert out["vocab"][0] == [("symbol", "string"), ("corpus_count", "bigint")]
+    assert dict(out["vocab"][1]) == {
         "low": 7, "e": 2, "r": 2, "n": 6, "ewest": 6,
         "w": 3, "i": 3, "d": 3, "est": 3,
     }
@@ -1106,21 +1128,14 @@ def test_prefix_filter_float_ceil_boundary(spark):
     assert abs(got[0]["jaccard"] - 0.68) < 1e-12
 
 
-def test_bpe_lexicon_final_segmentations(spark):
+def test_bpe_lexicon_final_segmentations(spark, twins):
     """emit="lexicon": the per-word serving artifact after the 6
     pinned merges — low→[low], lower→[low,e,r], newest→[n,ewest],
-    widest→[w,i,d,est] (bracket-encoded)."""
-    from spark_streaming_kafka2elasticsearch_spark.operators.text import bpe_train
-
-    wf = spark.createDataFrame(
-        [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)],
-        "tok string, c long",
-    )
-    out = {
-        r["token"]: r["encoding"]
-        for r in bpe_train(wf, rounds=6, emit="lexicon").collect()
-    }
-    assert out == {
+    widest→[w,i,d,est] (bracket-encoded) — the same rows and column
+    types on both legs."""
+    dtypes, rows = _bpe_legs(spark, twins, ("lexicon",))["lexicon"]
+    assert dtypes == [("token", "string"), ("encoding", "string")]
+    assert dict(rows) == {
         "low": "<low>",
         "lower": "<low><e><r>",
         "newest": "<n><ewest>",

@@ -4,6 +4,7 @@ assertions (pushdown / broadcast — the .explain contract)."""
 from __future__ import annotations
 
 import json
+import re
 
 import pytest
 
@@ -683,27 +684,128 @@ def test_kn_plans_evaluate_the_count_relation_once(spark, tmp_path, monkeypatch)
     |types| aggregate does read the relation's exchange a second
     time, which adaptive execution turns into a reused stage, so the
     counts are taken from the final plan of an executed query.  They
-    are plan shape, not data, so the smallest fixture shows them."""
+    are plan shape, not data, so the smallest fixture shows them.
+
+    The append gate's merge shuffles its segment rows once, on ``w1``,
+    for the segment dedup, the per-key sum and the ``w1`` windows, and
+    its scoring side reads ``documents`` through a round-robin fan-out
+    (the table is one scan split, which would score in one task)."""
     monkeypatch.setenv("SPARK_GRAFT_TMP_DIR", str(tmp_path))
     queries = all_queries()
 
-    def scans(name: str) -> tuple[int, int]:
+    def final_plan(name: str) -> list[str]:
         df = queries[name](spark, SF_DIR)
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+        return plan.splitlines()
+
+    def scans(lines: list[str]) -> tuple[int, int]:
         reads = [
-            line.split("ReadSchema: ")[-1]
-            for line in plan.splitlines()
-            if "FileScan" in line
+            line.split("ReadSchema: ")[-1] for line in lines if "FileScan" in line
         ]
         docs = sum(1 for r in reads if "text:string" in r)
         segments = sum(1 for r in reads if "w1:string" in r)
         return docs, segments
 
-    assert scans("kneser_ney_bigram_scores") == (1, 0)
-    assert scans("kn_perplexity_quality_gate") == (2, 0)
-    docs, segments = scans("kn_lm_index_append_gate")
+    assert scans(final_plan("kneser_ney_bigram_scores")) == (1, 0)
+    assert scans(final_plan("kn_perplexity_quality_gate")) == (2, 0)
+    lines = final_plan("kn_lm_index_append_gate")
+    docs, segments = scans(lines)
     assert docs <= 2 and segments == 1, (docs, segments)
+
+    # The merge hash-partitions the segment rows on w1 once: that one
+    # exchange feeds the (_seg, w1, w2) dedup, the (w1, w2) sum and the
+    # w1 windows, with no exchange between them.
+    plan = "\n".join(lines)
+    on_w1 = [
+        i
+        for i, line in enumerate(lines)
+        if re.search(r"[-:] Exchange hashpartitioning\(w1#\d+, \d+\)", line)
+    ]
+    assert len(on_w1) == 1, plan
+    assert "hashpartitioning(_seg#" not in plan, plan
+    window = next(
+        i for i, line in enumerate(lines) if re.search(r"Window .*\[w1#\d+\]$", line)
+    )
+    between = lines[window + 1 : on_w1[0]]
+    assert not any("Exchange" in line for line in between), plan
+    assert any("HashAggregate(keys=[_seg#" in line for line in between), plan
+    assert any(re.search(r"HashAggregate\(keys=\[w1#\d+, w2#\d+\], functions=\[sum", line)
+               for line in between), plan
+    # The scoring side's documents scan fans out across the task slots.
+    rr = [i for i, line in enumerate(lines) if "Exchange RoundRobinPartitioning" in line]
+    assert any(
+        "documents.parquet" in next(line for line in lines[i:] if "FileScan" in line)
+        for i in rr
+    ), plan
+
+
+def test_read_parquet_infers_a_schema_once_per_table_version(spark, tmp_path):
+    """``read_parquet`` (under ``load_table`` and ``read_table``) reuses
+    the schema Spark inferred for a table while the table's listing
+    and the schema-inference confs are unchanged, so a second read of
+    an unchanged table runs no Spark job.  A swap to a new schema, an
+    append and a flipped ``nanosAsLong`` each read what a fresh
+    ``spark.read.parquet`` reads."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spark_streaming_kafka2elasticsearch_spark.queries import load_table
+    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
+        read_parquet,
+        read_table,
+        swap_table,
+        write_table,
+    )
+
+    sc = spark.sparkContext
+
+    def n_jobs(group: str, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    first = load_table(spark, SF_DIR, "documents")
+    again, jobs = n_jobs(
+        "read_parquet_memo_hit", lambda: load_table(spark, SF_DIR, "documents")
+    )
+    assert jobs == 0
+    assert again.schema == first.schema
+
+    path = str(tmp_path / "t")
+    write_table(spark.createDataFrame([(1, "a")], "k long, v string"), path)
+    assert [tuple(r) for r in read_table(spark, path).collect()] == [(1, "a")]
+    swap_table(spark.createDataFrame([(2, 2.5)], "k long, x double"), path)
+    swapped = read_table(spark, path)
+    assert swapped.dtypes == [("k", "bigint"), ("x", "double")]
+    assert [tuple(r) for r in swapped.collect()] == [(2, 2.5)]
+    write_table(
+        spark.createDataFrame([(3, 0.5)], "k long, x double"), path, mode="append"
+    )
+    assert sorted(tuple(r) for r in read_table(spark, path).collect()) == [
+        (2, 2.5),
+        (3, 0.5),
+    ]
+
+    events = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.table({"ts": pa.array([1_000_000_123], pa.timestamp("ns", tz="UTC"))}),
+        events,
+    )
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    try:
+        spark.conf.set(conf, "true")
+        assert read_parquet(spark, events).dtypes == [("ts", "bigint")]
+        spark.conf.set(conf, "false")
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            read_parquet(spark, events)
+    finally:
+        spark.conf.set(conf, "true")
+    assert read_parquet(spark, events).collect()[0]["ts"] == 1_000_000_123
 
 
 def test_csv_dir_source_batch_and_stream(spark, tmp_path):

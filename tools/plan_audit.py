@@ -28,6 +28,8 @@ from pyspark.sql.classic.dataframe import DataFrame
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from __spark_entry__ import _ensure_workers_can_import  # noqa: E402
+
 from spark_streaming_kafka2elasticsearch_spark.plans.inspect import plan_metrics  # noqa: E402
 from spark_streaming_kafka2elasticsearch_spark.queries import (  # noqa: E402
     all_queries,
@@ -97,6 +99,10 @@ def main() -> int:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
     spark = build_session(app_name="plan-audit")
+    # Ship the package to the Python workers, as the driver contract
+    # does: run from outside the checkout, the queries whose kernels
+    # pickle by module reference would otherwise fail to import it.
+    _ensure_workers_can_import(spark)
     out: dict[str, dict] = {}
     record_checkpoints()
     for name in only or registry:
