@@ -240,15 +240,9 @@ def kn_index_delete(
 def _merged(segs: DataFrame) -> DataFrame:
     """The merge-on-read of ``(_seg, w1, w2, c2)`` segment rows:
     segment dedup (the crashed-double-write armor), per-key integer
-    sum, zero-total keys dropped.  The rows are hash-partitioned on
-    ``w1`` once, up front: that one exchange satisfies the dedup, the
-    ``(w1, w2)`` sum and :func:`kn_model_from_counts`' ``w1`` windows,
-    which would otherwise each shuffle the relation again.  It adds no
-    skew a KN model does not already have — the ``w1`` window puts
-    every row of a ``w1`` into one task either way."""
+    sum, zero-total keys dropped."""
     return (
-        segs.repartition("w1")
-        .dropDuplicates(["_seg", "w1", "w2"])
+        segs.dropDuplicates(["_seg", "w1", "w2"])
         .groupBy("w1", "w2")
         .agg(F.sum("c2").alias("c2"))
         .filter(F.col("c2") > 0)
@@ -271,7 +265,14 @@ def kn_index_counts(
     ``delta_docs`` is the FUNCTIONAL append — the delta's counts join
     the merge as one more in-flight segment (delta-only text scan),
     serving what the index looks like after ``kn_index_append``
-    lands."""
+    lands.
+
+    The segment rows are hash-partitioned on ``w1`` once, up front:
+    that one exchange satisfies the dedup, the ``(w1, w2)`` sum and
+    :func:`kn_model_from_counts`' ``w1`` windows, which would otherwise
+    each shuffle the relation again.  For the model it adds no skew
+    the ``w1`` window does not already have; :func:`kn_index_compact`,
+    which has no ``w1`` window, merges without it."""
     meta = index_meta(path, _LM_META, expected_fingerprint)
     segs = _table(spark, path, _BG_DIR).select("_seg", "w1", "w2", "c2")
     if delta_docs is not None:
@@ -280,7 +281,7 @@ def kn_index_counts(
                 delta_docs, id_col, text_col, meta["n_parts"], "a"
             ).select("_seg", "w1", "w2", "c2")
         )
-    return _merged(segs)
+    return _merged(segs.repartition("w1"))
 
 
 def kn_index_model(

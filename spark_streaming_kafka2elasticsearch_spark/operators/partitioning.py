@@ -26,10 +26,12 @@ Fan-out sites include the four batch callers of
 ``kn_lm_index_append_gate``, ``kn_lm_index_delete_gate``): without it
 their scoring stage (tokenize, explode, model join, per-doc decimal
 sum) over the one-split ``documents`` scan runs as one task.  On the
-5 000-document benchmark table (4 cores, 11 interleaved rounds) the
-append gate measured 2.13 s off / 1.63 s on (1.31×, 10 of 11 rounds
-won), the ``getNumPartitions`` check included.  ``kn_doc_scores``
-itself does not fan out: the streaming gate
+5 000-document benchmark table (4 cores, 11 interleaved rounds each,
+the ``getNumPartitions`` check included), off / on medians: the
+append gate 2.13 / 1.63 s (1.31×, 10 of 11 rounds won), the quality
+gate 2.26 / 1.77 s (1.28×, 11 of 11), the served gate 1.70 / 1.20 s
+(1.41×, 11 of 11), the delete gate 1.57 / 1.11 s (1.41×, 11 of 11).
+``kn_doc_scores`` itself does not fan out: the streaming gate
 (``streaming/jobs.kn_perplexity_gate_stream``) keeps its per-batch
 plan.
 

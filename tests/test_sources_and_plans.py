@@ -797,15 +797,20 @@ def test_read_parquet_infers_a_schema_once_per_table_version(spark, tmp_path):
         events,
     )
     conf = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(conf, None)
     try:
         spark.conf.set(conf, "true")
         assert read_parquet(spark, events).dtypes == [("ts", "bigint")]
         spark.conf.set(conf, "false")
         with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
             read_parquet(spark, events)
-    finally:
         spark.conf.set(conf, "true")
-    assert read_parquet(spark, events).collect()[0]["ts"] == 1_000_000_123
+        assert read_parquet(spark, events).collect()[0]["ts"] == 1_000_000_123
+    finally:
+        if before is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, before)
 
 
 def test_csv_dir_source_batch_and_stream(spark, tmp_path):
