@@ -39,6 +39,13 @@ def main() -> None:
     )
 
     spark = build_session(master=f"local[{cpus}]", app_name="bench")
+    # The host this run measured on: numbers from different core counts
+    # are never compared (the regressions block below checks it).
+    host = {
+        "cpus": int(cpus) if cpus.isdigit() else cpus,
+        "nproc": len(os.sched_getaffinity(0)),
+        "spark_version": spark.version,
+    }
 
     # Untimed JVM/session warm-up (standard bench hygiene): the first
     # timed query otherwise absorbs session startup — measured ~4s on
@@ -146,18 +153,20 @@ def main() -> None:
         # ref is a real slowdown (or a contended session, which the
         # spread column then shows), decided here instead of by the
         # next judge.
-        regressions = {}
-        for name, xs in ok_runs.items():
-            r = ref.get(name)
-            if not r or not xs:
-                continue
-            best = min(xs)
-            if best / r > 1.5:
-                regressions[name] = {
-                    "min_sec": best,
-                    "ref_sec": r,
-                    "ratio": round(best / r, 2),
-                }
+        regressions: dict | str = "not comparable"
+        if ref_cpus == host["cpus"]:
+            regressions = {}
+            for name, xs in ok_runs.items():
+                r = ref.get(name)
+                if not r or not xs:
+                    continue
+                best = min(xs)
+                if best / r > 1.5:
+                    regressions[name] = {
+                        "min_sec": best,
+                        "ref_sec": r,
+                        "ratio": round(best / r, 2),
+                    }
         # Key order matters for the driver artifact: it keeps only the
         # LAST ~2000 chars of stdout, so the big per-query dicts go
         # FIRST and the headline scalars (value!) go LAST — r5 lost its
@@ -172,6 +181,8 @@ def main() -> None:
                 "n_runs": n_runs,
                 "regressions": regressions,
                 "regression_ref": ref_name,
+                "regression_ref_cpus": ref_cpus,
+                **host,
                 "sf": sf,
                 "passes": passes_done,
                 "unit": "sec",
@@ -196,21 +207,25 @@ def main() -> None:
     # runs can never move it.  BENCH_LOCAL remains the fallback for a
     # repo whose reference has not been sealed yet; the suspicion
     # ranking below reads the same pinned reference.
-    def _load_ref(path: str) -> dict[str, float]:
+    # A reference whose core count differs from this run's, or that
+    # records none, gives "not comparable" in place of the regressions
+    # (as ``perfbench/spread.py compare`` refuses such a pair).
+    def _load_ref(path: str) -> tuple[dict[str, float], object]:
         try:
             with open(path) as f:
-                return {
-                    k: float(v)
-                    for k, v in json.load(f).get("queries", {}).items()
-                    if isinstance(v, (int, float)) and v > 0
-                }
+                doc = json.load(f)
+            return {
+                k: float(v)
+                for k, v in doc.get("queries", {}).items()
+                if isinstance(v, (int, float)) and v > 0
+            }, doc.get("cpus")
         except (FileNotFoundError, json.JSONDecodeError, AttributeError):
-            return {}
+            return {}, None
 
-    ref = _load_ref(bench_ref)
+    ref, ref_cpus = _load_ref(bench_ref)
     ref_name = "BENCH_REF.json" if ref else None
     if not ref:
-        ref = _load_ref(bench_local)
+        ref, ref_cpus = _load_ref(bench_local)
         ref_name = "BENCH_LOCAL.json" if ref else None
     print(f"regression reference: {ref_name}", file=sys.stderr)
     qmap = all_queries()

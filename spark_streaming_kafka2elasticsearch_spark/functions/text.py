@@ -18,9 +18,18 @@ def _as_col(c: Column | str) -> Column:
 
 
 def tokens(text: Column | str) -> Column:
-    """Whitespace tokens with empties removed (array<string>)."""
-    t = _as_col(text)
-    return F.filter(F.split(t, r"\s+"), lambda x: x != "")
+    """Whitespace tokens with empties removed (array<string>).
+    ``array_remove``, not a ``filter`` lambda: the same array (``split``
+    yields no NULL element), in generated code where a lambda is
+    interpreted per element — about a fifth of a one-task word census
+    over 5 000 documents."""
+    return F.array_remove(F.split(_as_col(text), r"\s+"), "")
+
+
+def tokens_sql(name: str) -> str:
+    """:func:`tokens` of the column ``name``, as a SQL expression for
+    builders written as one SQL string."""
+    return rf"array_remove(split(`{name}`, '\\s+'), '')"
 
 
 def md5_hash64(c: Column | str) -> Column:

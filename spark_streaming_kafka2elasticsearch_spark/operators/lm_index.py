@@ -99,9 +99,8 @@ def _seg_id(docs: DataFrame, id_col: str, tag: str) -> str:
     member ids' xxhash64 (order-free), hex, tag-prefixed ('a' append /
     'd' delete).  A replayed identical delta reproduces the id, which
     is what lets the merge dedup crashed double-writes."""
-    row = docs.select(
-        F.bit_xor(F.xxhash64(F.col(id_col))).alias("h"),
-        F.count(F.lit(1)).alias("n"),
+    row = docs.selectExpr(
+        f"bit_xor(xxhash64(`{id_col}`)) AS h", "count(1) AS n"
     ).first()
     return f"{tag}{int(row['n'])}x{(int(row['h'] or 0)) & 0xFFFFFFFFFFFFFFFF:016x}"
 
@@ -109,18 +108,15 @@ def _seg_id(docs: DataFrame, id_col: str, tag: str) -> str:
 def _segment(
     docs: DataFrame, id_col: str, text_col: str, n_parts: int, tag: str
 ) -> DataFrame:
+    """``docs``' bigram counts as one segment ``(_seg, w1, w2, c2,
+    part)``; a deletion segment (tag 'd') carries negated counts."""
     seg = _seg_id(docs, id_col, tag)
-    bgf = bigram_count_relation(
-        docs.select(F.col(text_col).alias("text")), "text"
-    )
-    if tag == "d":
-        bgf = bgf.select("w1", "w2", (-F.col("c2")).alias("c2"))
-    return bgf.select(
-        F.lit(seg).alias("_seg"),
+    return bigram_count_relation(docs, text_col).selectExpr(
+        f"'{seg}' AS _seg",
         "w1",
         "w2",
-        "c2",
-        F.pmod(F.xxhash64("w1"), F.lit(n_parts)).alias("part"),
+        "-c2 AS c2" if tag == "d" else "c2",
+        f"pmod(xxhash64(w1), {n_parts}) AS part",
     )
 
 
@@ -245,7 +241,7 @@ def _merged(segs: DataFrame) -> DataFrame:
         segs.dropDuplicates(["_seg", "w1", "w2"])
         .groupBy("w1", "w2")
         .agg(F.sum("c2").alias("c2"))
-        .filter(F.col("c2") > 0)
+        .filter("c2 > 0")
     )
 
 
@@ -274,12 +270,12 @@ def kn_index_counts(
     the ``w1`` window does not already have; :func:`kn_index_compact`,
     which has no ``w1`` window, merges without it."""
     meta = index_meta(path, _LM_META, expected_fingerprint)
-    segs = _table(spark, path, _BG_DIR).select("_seg", "w1", "w2", "c2")
+    # Both sides keep their ``part`` column, which nothing above reads:
+    # the optimizer prunes it, and the union needs no select per side.
+    segs = _table(spark, path, _BG_DIR)
     if delta_docs is not None:
         segs = segs.unionByName(
-            _segment(
-                delta_docs, id_col, text_col, meta["n_parts"], "a"
-            ).select("_seg", "w1", "w2", "c2")
+            _segment(delta_docs, id_col, text_col, meta["n_parts"], "a")
         )
     return _merged(segs.repartition("w1"))
 

@@ -51,9 +51,9 @@ def fan_out_small_scan(df: DataFrame) -> DataFrame:
     """Repartition ``df`` to ``defaultParallelism`` iff it currently
     has fewer partitions — the narrow-input fan-out for CPU-bound
     stages.  See the module docstring for the contract."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    # The executed plan's RDD, not ``df.rdd``: no Python RDD is built.
+    if df._jdf.queryExecution().toRdd().getNumPartitions() >= target:
         return df
     return df.repartition(target)
 

@@ -139,11 +139,14 @@ def brute_force_topk_pandas(
     """
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     qrows = queries.select(query_id, query_vec).collect()
     out_schema = "query_id bigint, neighbor_id bigint, sim double"
     if not qrows:
-        return corpus.sparkSession.createDataFrame([], out_schema)
+        return corpus.sparkSession.createDataFrame(
+            pa.table({"query_id": [], "neighbor_id": [], "sim": []}), out_schema
+        )
     q_ids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
     Q = np.array([[float(x) for x in r[1]] for r in qrows], dtype=np.float64)
     dim = Q.shape[1]
@@ -3688,6 +3691,8 @@ def spherical_kmeans_fit(
     flat (cell, 1-based dim, coordinate) relation joined with the
     final member census.
     """
+    import pyarrow as pa
+
     # ``codebook`` short-circuits training with already-trained rows
     # (the session-cache path) — identical by determinism.
     crows = codebook or spherical_kmeans_train(
@@ -3704,11 +3709,13 @@ def spherical_kmeans_fit(
         .agg(F.count(F.lit(1)).alias("n_members"))
     )
     coords = spark.createDataFrame(
-        [
-            (cid, i + 1, float(x))
-            for cid, vec in crows
-            for i, x in enumerate(vec)
-        ],
+        pa.table(
+            {
+                "centroid_id": [cid for cid, vec in crows for _ in vec],
+                "i": [i + 1 for _, vec in crows for i in range(len(vec))],
+                "coord": [float(x) for _, vec in crows for x in vec],
+            }
+        ),
         "centroid_id int, i int, coord double",
     )
     return coords.join(F.broadcast(counts), "centroid_id", "left").select(
@@ -4046,9 +4053,17 @@ def _pq_lut(
     arithmetic after the per-term product, so downstream ADC sums have
     no float accumulation order anywhere.  |queries|·M·K rows: small by
     contract, built for broadcast."""
+    import pyarrow as pa
+
     spark = queries.sparkSession
     cb_df = spark.createDataFrame(
-        [(m, c, [float(x) for x in cw]) for m, c, cw in codebooks],
+        pa.table(
+            {
+                "m": [m for m, _, _ in codebooks],
+                "code": [c for _, c, _ in codebooks],
+                "codeword": [[float(x) for x in cw] for _, _, cw in codebooks],
+            }
+        ),
         "m int, code int, codeword array<double>",
     )
     qv = F.col(query_vec).cast("array<double>")
@@ -4269,6 +4284,8 @@ def pq_codebook_fit(
     codebook.  ``codebooks`` short-circuits training with
     already-trained rows (the session-cache path) — identical by
     determinism."""
+    import pyarrow as pa
+
     books = codebooks or pq_train_codebooks(
         corpus, n_sub, sub_dim, k, iters, id_col, vec_col
     )
@@ -4281,11 +4298,14 @@ def pq_codebook_fit(
         .agg(F.count(F.lit(1)).alias("n_members"))
     )
     coords = spark.createDataFrame(
-        [
-            (m, code, i + 1, float(x))
-            for m, code, cw in books
-            for i, x in enumerate(cw)
-        ],
+        pa.table(
+            {
+                "m": [m for m, _, cw in books for _ in cw],
+                "code": [code for _, code, cw in books for _ in cw],
+                "i": [i + 1 for _, _, cw in books for i in range(len(cw))],
+                "coord": [float(x) for _, _, cw in books for x in cw],
+            }
+        ),
         "m int, code int, i int, coord double",
     )
     return coords.join(F.broadcast(counts), ["m", "code"], "left").select(
@@ -5450,6 +5470,8 @@ def srp_near_dup_pairs(
     oracle-pinned registry query, or a bucket id reused as a storage
     partition key).
     """
+    import pyarrow as pa
+
     from spark_streaming_kafka2elasticsearch_spark.functions.vectors import (
         dot_product,
         l2_norm,
@@ -5491,12 +5513,17 @@ def srp_near_dup_pairs(
     else:
         total_planes = tables * planes_per_table
         spark = df.sparkSession
-        plane_rows = [
-            (p, j, float(s))
-            for p in range(total_planes)
-            for j, s in enumerate(_plane_signs(p, dim))
-        ]
-        planes = spark.createDataFrame(plane_rows, ["_p", "_j", "_sign"])
+        signs = [_plane_signs(p, dim) for p in range(total_planes)]
+        planes = spark.createDataFrame(
+            pa.table(
+                {
+                    "_p": [p for p, ps in enumerate(signs) for _ in ps],
+                    "_j": [j for ps in signs for j in range(len(ps))],
+                    "_sign": [float(s) for ps in signs for s in ps],
+                }
+            ),
+            "_p bigint, _j bigint, _sign double",
+        )
         comps = base.select(
             "_id",
             F.posexplode(F.col("_v").cast("array<double>")).alias("_j", "_x"),

@@ -491,6 +491,7 @@ class VectorIndex:
         return self._load_centroids_df(like.sparkSession)
 
     def _load_centroids_df(self, spark=None):
+        import pyarrow as pa
         from pyspark.sql import SparkSession
 
         spark = spark or SparkSession.getActiveSession()
@@ -499,7 +500,12 @@ class VectorIndex:
             "centroid_id", "centroid_vec", "VectorIndex",
         )
         df = spark.createDataFrame(
-            [(int(c), [float(x) for x in v]) for c, v in crows],
+            pa.table(
+                {
+                    "centroid_id": [int(c) for c, _ in crows],
+                    "centroid_vec": [[float(x) for x in v] for _, v in crows],
+                }
+            ),
             "centroid_id long, centroid_vec array<double>",
         )
         self._centroids = df

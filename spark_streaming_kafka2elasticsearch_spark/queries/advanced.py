@@ -11,6 +11,7 @@ formula over doubles); event timestamps are unique per table so
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -75,7 +76,12 @@ def _centroid_df(spark: SparkSession, crows: list) -> DataFrame:
     """Driver-side codebook rows -> the (centroid_id, centroid_vec)
     table the IVF serving operators take."""
     return spark.createDataFrame(
-        [(int(cid), [float(x) for x in vec]) for cid, vec in crows],
+        pa.table(
+            {
+                "centroid_id": [int(cid) for cid, _ in crows],
+                "centroid_vec": [[float(x) for x in vec] for _, vec in crows],
+            }
+        ),
         "centroid_id long, centroid_vec array<double>",
     )
 

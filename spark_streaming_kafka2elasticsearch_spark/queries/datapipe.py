@@ -33,11 +33,13 @@ from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
     lsh_bucketed_topk,
 )
 from spark_streaming_kafka2elasticsearch_spark.operators.text import (
+    KN_NLL,
     bigram_pairs,
     document_fingerprint,
     dsir_logratio_scores,
     dsir_oracle_sql,
     gopher_quality,
+    kn_doc_sums,
     language_id,
     language_id_oracle_sql,
     text_quality,
@@ -1384,6 +1386,8 @@ def tokenizer_vocab_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     the window sorts |vocabulary| rows, not the corpus — the one
     pattern where an unpartitioned window is correct by construction
     (a vocabulary that doesn't fit one task isn't a vocabulary)."""
+    import pyarrow as pa
+
     from spark_streaming_kafka2elasticsearch_spark.functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1396,7 +1400,13 @@ def tokenizer_vocab_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.row_number().over(w) + 3).alias("token_id"),
     )
     specials = spark.createDataFrame(
-        [("<pad>", 0, 0), ("<unk>", 0, 1), ("<bos>", 0, 2), ("<eos>", 0, 3)],
+        pa.table(
+            {
+                "token": ["<pad>", "<unk>", "<bos>", "<eos>"],
+                "n": [0, 0, 0, 0],
+                "token_id": [0, 1, 2, 3],
+            }
+        ),
         "token string, n bigint, token_id int",
     )
     return specials.unionByName(ranked)
@@ -5903,19 +5913,10 @@ def kn_perplexity_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     scorer (broadcast while under the threshold)."""
     from spark_streaming_kafka2elasticsearch_spark.operators.text import (
         kn_bigram_model,
-        kn_doc_scores,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    model = kn_bigram_model(docs)
-    scores = kn_doc_scores(fan_out_small_scan(docs), model)
-    return scores.select(
-        "doc_id",
-        "n_bigrams",
-        "n_oov",
-        "kn_nll",
-        (F.col("kn_nll") <= 3.4).alias("keep"),
-    )
+    return _kn_gate_output(docs, kn_bigram_model(docs))
 
 
 # ---------------------------------------------------------------------------
@@ -6515,13 +6516,16 @@ FROM agg
 """
 
 
-def _kn_gate_output(scores):
-    return scores.select(
+def _kn_gate_output(docs: DataFrame, model: DataFrame) -> DataFrame:
+    """The KN perplexity gate over ``docs`` under ``model``:
+    operators/text.kn_doc_scores with the ``keep`` decision, in one
+    projection.  ``docs`` fans out first (operators/partitioning)."""
+    return kn_doc_sums(fan_out_small_scan(docs), model).selectExpr(
         "doc_id",
         "n_bigrams",
         "n_oov",
-        "kn_nll",
-        (F.col("kn_nll") <= 3.4).alias("keep"),
+        f"{KN_NLL} AS kn_nll",
+        f"{KN_NLL} <= 3.4D AS keep",
     )
 
 
@@ -6540,10 +6544,6 @@ def kn_lm_index_gate_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         kn_index_model,
         kn_index_persist,
     )
-    from spark_streaming_kafka2elasticsearch_spark.operators.text import (
-        kn_doc_scores,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     fp = table_fingerprint(sf_dir, "documents")
     path = build_once(
@@ -6553,7 +6553,7 @@ def kn_lm_index_gate_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda p: kn_index_persist(docs, p, n_parts=16, fingerprint=fp),
     )
     model = kn_index_model(spark, path, expected_fingerprint=fp)
-    return _kn_gate_output(kn_doc_scores(fan_out_small_scan(docs), model))
+    return _kn_gate_output(docs, model)
 
 
 @register("kn_lm_index_append_gate", oracle=_kn_gate_oracle(""))
@@ -6573,25 +6573,22 @@ def kn_lm_index_append_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         kn_index_model,
         kn_index_persist,
     )
-    from spark_streaming_kafka2elasticsearch_spark.operators.text import (
-        kn_doc_scores,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    delta_cond = (F.col("doc_id") % 5 == 3) & (F.col("doc_id") < 2000)
-    old = docs.filter(~delta_cond)
+    delta_cond = "doc_id % 5 = 3 AND doc_id < 2000"
     delta = docs.filter(delta_cond)
     fp = table_fingerprint(sf_dir, "documents")
     path = build_once(
         "kn_lm_index_append_gate",
         sf_dir,
         fp,
-        lambda p: kn_index_persist(old, p, n_parts=16, fingerprint=fp),
+        lambda p: kn_index_persist(
+            docs.filter(f"NOT ({delta_cond})"), p, n_parts=16, fingerprint=fp
+        ),
     )
     model = kn_index_model(
         spark, path, delta_docs=delta, expected_fingerprint=fp
     )
-    return _kn_gate_output(kn_doc_scores(fan_out_small_scan(docs), model))
+    return _kn_gate_output(docs, model)
 
 
 _KN_DELETE_WHERE = " WHERE NOT (doc_id % 20 = 7 AND doc_id < 2000)"
@@ -6618,10 +6615,6 @@ def kn_lm_index_delete_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         kn_index_model,
         kn_index_persist,
     )
-    from spark_streaming_kafka2elasticsearch_spark.operators.text import (
-        kn_doc_scores,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     del_cond = (F.col("doc_id") % 20 == 7) & (F.col("doc_id") < 2000)
     survivors = docs.filter(~del_cond)
@@ -6634,6 +6627,4 @@ def kn_lm_index_delete_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = build_once("kn_lm_index_delete_gate", sf_dir, fp, build)
     model = kn_index_model(spark, path, expected_fingerprint=done_fp)
-    return _kn_gate_output(
-        kn_doc_scores(fan_out_small_scan(survivors), model)
-    )
+    return _kn_gate_output(survivors, model)

@@ -859,3 +859,275 @@ def test_csv_dir_source_batch_and_stream(spark, tmp_path):
         q.stop()
     rows = spark.sql("SELECT * FROM csv_stream_t").collect()
     assert {r["k"] for r in rows} >= {"a", "b"}
+
+
+def test_kn_gate_construction_round_trip_budget(spark, tmp_path, monkeypatch):
+    """Building a plan is py4j round trips: one per JVM call the Python
+    side makes.  ``build_session`` turns PySpark's call-site capture
+    off (on, it adds four round trips and a Python stack walk to every
+    ``F.*`` and DataFrame call), and the KN expressions are one SQL
+    string each, so a warm build of the KN append gate stays under a
+    budget: 315 round trips on this fixture, where the Column-built
+    expressions with the capture on made 1 734.  The count is of the
+    calling thread only: py4j's finalizer thread releases dead Java
+    references whenever Python's garbage collector runs."""
+    import threading
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    monkeypatch.setenv("SPARK_GRAFT_TMP_DIR", str(tmp_path))
+    build = all_queries()["kn_lm_index_append_gate"]
+    build(spark, SF_DIR)  # the at-rest index and the schema memo
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    caller = threading.get_ident()
+    sent = []
+
+    def counted(*args, **kwargs):
+        if threading.get_ident() == caller:
+            sent.append(args[0])
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    build(spark, SF_DIR)
+    monkeypatch.delattr(client, "send_command")
+    assert len(sent) <= 350, len(sent)
+
+
+def test_sql_string_builders_match_their_column_forms(spark, monkeypatch):
+    """The bigram and KN expressions are built as one SQL string each,
+    and the bigram rows as two selects with ``inline``.  The Column
+    forms they replaced are written out here: the KN expressions have
+    the same optimized plan as their old forms, and so does the query
+    that calls ``kn_probability``; where the plan changed (the tokens
+    and the bigram pairs were ``filter`` and ``transform`` lambdas,
+    the row chain was explode and two field reads, and the term was
+    taken per bigram instance after the model join), the rows are the
+    same,
+    every double bit for bit — which is what the oracles' 9-decimal
+    comparison needs.
+    The streaming KN gate scores through ``kn_doc_scores``, checked
+    here against a model fit on half the corpus, so OOV bigrams occur."""
+    from pyspark.sql import functions as F
+
+    from spark_streaming_kafka2elasticsearch_spark.functions import text as ftext
+    from spark_streaming_kafka2elasticsearch_spark.functions.text import (
+        tokens,
+        tokens_sql,
+    )
+    from spark_streaming_kafka2elasticsearch_spark.operators import text
+    from spark_streaming_kafka2elasticsearch_spark.operators.partitioning import (
+        fan_out_small_scan,
+    )
+    from spark_streaming_kafka2elasticsearch_spark.queries import datapipe, load_table
+
+    def old_tokens(c):
+        return F.filter(F.split(c, r"\s+"), lambda x: x != "")
+
+    def old_pairs():
+        return F.when(
+            F.size(F.col("tokens")) >= 2,
+            F.expr(
+                "transform(slice(tokens, 1, size(tokens) - 1),"
+                " (x, i) -> struct(x AS w1, tokens[i + 1] AS w2))"
+            ),
+        ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+
+    def old_probability():
+        return (F.col("c2").cast("double") - 0.75) / F.col("c1") + (
+            0.75 * F.col("n1f") / F.col("c1")
+        ) * (F.col("n1b") / F.col("n_types"))
+
+    def old_term():
+        return F.when(
+            F.col("c2").isNotNull(),
+            F.round(F.ln(old_probability()), 9).cast("decimal(28,10)"),
+        )
+
+    def old_rows(docs, *keep):
+        return (
+            docs.select(*keep, old_tokens(F.col("text")).alias("tokens"))
+            .select(*keep, F.explode(old_pairs()).alias("bg"))
+            .select(*keep, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+        )
+
+    def old_model(docs):
+        counts = old_rows(docs).groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
+        return text.kn_model_from_counts(counts)
+
+    def old_scores(docs, model):
+        terms = old_rows(docs, "doc_id").join(model, ["w1", "w2"], "left").select(
+            F.col("doc_id"),
+            F.col("c2").isNull().cast("int").alias("_oov"),
+            old_term().alias("_term"),
+        )
+        agg = terms.groupBy("doc_id").agg(
+            F.count("_term").alias("n_bigrams"),
+            F.sum("_oov").cast("long").alias("n_oov"),
+            F.sum("_term").alias("_s"),
+        )
+        return agg.filter(F.col("n_bigrams") > 0).select(
+            F.col("doc_id"),
+            F.col("n_bigrams"),
+            F.col("n_oov"),
+            F.round(
+                (-F.col("_s").cast("double")) / F.col("n_bigrams").cast("double"), 9
+            ).alias("kn_nll"),
+        )
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan()
+
+    def same_rows(got, want):
+        assert got.dtypes == want.dtypes
+        assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    toks = docs.select(tokens(F.col("text")).alias("tokens"))
+    assert plan(toks).sameResult(plan(docs.selectExpr(f"{tokens_sql('text')} AS tokens")))
+    same_rows(toks, docs.select(old_tokens(F.col("text")).alias("tokens")))
+    same_rows(toks.select(text.bigram_pairs().alias("bg")), toks.select(old_pairs().alias("bg")))
+    model = old_model(docs)
+    assert plan(model.select(old_probability())).sameResult(
+        plan(model.select(text.kn_probability()))
+    )
+    joined = old_rows(docs, "doc_id").join(model, ["w1", "w2"], "left")
+    assert plan(joined.select(old_term())).sameResult(
+        plan(joined.selectExpr(f"CASE WHEN c2 IS NOT NULL THEN {text._KN_TERM} END"))
+    )
+    same_rows(text._bigram_rows(docs, "text", "doc_id"), old_rows(docs, "doc_id"))
+    same_rows(text.kn_bigram_model(docs), model)
+
+    # The streaming gate's scorer, with OOV bigrams.
+    half = old_model(docs.filter("doc_id % 2 = 0"))
+    same_rows(text.kn_doc_scores(docs, half), old_scores(docs, half))
+    # The batch gate: fused score and keep projection over the new sums.
+    gate = all_queries()["kn_perplexity_quality_gate"](spark, SF_DIR)
+    want = old_scores(fan_out_small_scan(docs), model)
+    same_rows(gate, want.select("*", (F.col("kn_nll") <= 3.4).alias("keep")))
+
+    callers = ("bigram_logprob_scores", "bigram_counts", "kneser_ney_bigram_scores")
+    new = {name: all_queries()[name](spark, SF_DIR) for name in callers}
+    monkeypatch.setattr(ftext, "tokens", old_tokens)
+    monkeypatch.setattr(datapipe, "bigram_pairs", old_pairs)
+    monkeypatch.setattr(text, "kn_probability", old_probability)
+    old = {name: all_queries()[name](spark, SF_DIR) for name in callers}
+    assert plan(old["kneser_ney_bigram_scores"]).sameResult(plan(new["kneser_ney_bigram_scores"]))
+    for name in callers:
+        same_rows(new[name], old[name])
+
+
+def _site_empty_topk(spark, emb, tmp_path):
+    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
+        brute_force_topk_pandas,
+    )
+
+    queries = emb.filter("vec_id < 0").selectExpr(
+        "vec_id AS query_id", "embedding AS query_embedding"
+    )
+    return lambda: brute_force_topk_pandas(emb, queries)
+
+
+def _site_kmeans_coords(spark, emb, tmp_path):
+    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
+        spherical_kmeans_fit,
+    )
+
+    return lambda: spherical_kmeans_fit(emb, k=2, iters=1)
+
+
+def _site_pq_lut(spark, emb, tmp_path):
+    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import _pq_lut
+
+    queries = emb.filter("vec_id < 2").selectExpr(
+        "vec_id AS query_id", "embedding AS query_embedding"
+    )
+    books = [(m, c, [0.5 * c] * 32) for m in range(2) for c in range(2)]
+    return lambda: _pq_lut(queries, books, 32, "query_id", "query_embedding")
+
+
+def _site_pq_coords(spark, emb, tmp_path):
+    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
+        pq_codebook_fit,
+    )
+
+    books = [(m, c, [0.5 * c] * 32) for m in range(2) for c in range(2)]
+    return lambda: pq_codebook_fit(emb, n_sub=2, sub_dim=32, k=2, codebooks=books)
+
+
+def _site_srp_planes(spark, emb, tmp_path):
+    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
+        srp_near_dup_pairs,
+    )
+
+    return lambda: srp_near_dup_pairs(emb, dim=64, tables=2, materialize=False)
+
+
+def _site_vector_index_centroids(spark, emb, tmp_path):
+    from spark_streaming_kafka2elasticsearch_spark.operators.vector_index import (
+        VectorIndex,
+    )
+
+    cents = emb.filter("vec_id < 4").selectExpr(
+        "vec_id AS centroid_id", "embedding AS centroid_vec"
+    )
+    path = str(tmp_path / "vidx")
+    VectorIndex(path).build(emb, cents)
+    return lambda: VectorIndex(path)._load_centroids_df(spark)
+
+
+def _site_advanced_centroids(spark, emb, tmp_path):
+    from spark_streaming_kafka2elasticsearch_spark.queries.advanced import _centroid_df
+
+    return lambda: _centroid_df(spark, [(0, [1.0, 0.0]), (1, [0.0, 1.0])])
+
+
+def _site_tokenizer_specials(spark, emb, tmp_path):
+    return lambda: all_queries()["tokenizer_vocab_ids"](spark, SF_DIR)
+
+
+_ARROW_SITES = {
+    "similarity.brute_force_topk_pandas empty answer": _site_empty_topk,
+    "similarity.spherical_kmeans_fit coords": _site_kmeans_coords,
+    "similarity._pq_lut codebooks": _site_pq_lut,
+    "similarity.pq_codebook_fit coords": _site_pq_coords,
+    "similarity.srp_near_dup_pairs planes": _site_srp_planes,
+    "vector_index.VectorIndex centroids": _site_vector_index_centroids,
+    "advanced._centroid_df": _site_advanced_centroids,
+    "datapipe.tokenizer_vocab_ids specials": _site_tokenizer_specials,
+}
+
+
+@pytest.mark.parametrize("site", sorted(_ARROW_SITES))
+def test_small_driver_frames_come_from_arrow_tables(spark, tmp_path, monkeypatch, site):
+    """Small frames an operator builds on the driver come from
+    ``pa.table(...)`` (README design rule 8): Spark reads an Arrow
+    table as a local relation, where a Python row list costs a job of
+    Python-worker tasks.  Each frame has the column types the row list
+    gave it under the same schema."""
+    import pyarrow as pa
+    from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
+
+    monkeypatch.setenv("SPARK_GRAFT_TWINS", "0")  # SRP: the planes leg
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    run = _ARROW_SITES[site](spark, emb, tmp_path)
+
+    create = SparkSession.createDataFrame
+    made = []
+
+    def recorded(self, data, schema=None, *args, **kwargs):
+        df = create(self, data, schema, *args, **kwargs)
+        made.append((data, schema, df))
+        return df
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", recorded)
+    run()
+    monkeypatch.setattr(SparkSession, "createDataFrame", create)
+    assert made, site
+    for data, schema, df in made:
+        assert isinstance(data, pa.Table), (site, type(data))
+        rows = [tuple(r.values()) for r in data.to_pylist()]
+        assert df.dtypes == spark.createDataFrame(rows, schema).dtypes, site

@@ -6,6 +6,9 @@ For each named query (default: the N most expensive in BENCH_LOCAL):
   includes any driver-side actions the query performs — k-means
   training collects, fixture builds, counts);
 * times the noop-sink execution (guide §1.4) over --runs passes;
+* counts, per warm construction, the py4j round trips the Python side
+  sends to the JVM and the Spark jobs that run while the plan is
+  built, and reports the median of each over the --runs passes;
 * writes ``plans/r14/<name>_<tag>.txt`` with ``explain('formatted')``
   plus a one-line plan-shape summary (Exchange / join-strategy /
   Python-eval node counts).
@@ -21,7 +24,9 @@ import io
 import json
 import os
 import re
+import statistics
 import sys
+import threading
 import time
 from contextlib import redirect_stdout
 
@@ -50,6 +55,44 @@ def plan_shape(text: str) -> dict:
         "Sort": len(re.findall(r"\bSort \b", text)),
         "Scans": len(re.findall(r"Scan parquet", text)),
     }
+
+
+class RoundTrips:
+    """Counts the py4j commands the calling thread sends to the JVM:
+    the gateway client's ``send_command`` is wrapped once, and every
+    ``JavaObject`` and ``JavaMember`` sends through that client.  The
+    releases of dead Java references, which py4j's finalizer thread
+    sends whenever Python's garbage collector runs, are not counted,
+    so a count repeats from run to run."""
+
+    def __init__(self, spark) -> None:
+        self.n = 0
+        caller = threading.get_ident()
+        client = spark.sparkContext._gateway._gateway_client
+        send = client.send_command
+
+        def counted(*args, **kwargs):
+            if threading.get_ident() == caller:
+                self.n += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counted
+
+
+def counted_construction(spark, trips: RoundTrips, group: str, build):
+    """``build()`` under its own job group: returns its result, its
+    wall time, the py4j round trips it made and the Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        n0, t0 = trips.n, time.time()
+        out = build()
+        seconds, n_trips = time.time() - t0, trips.n - n0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, seconds, n_trips, jobs
 
 
 def main() -> None:
@@ -81,6 +124,7 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = build_session(master=f"local[{cpus}]", app_name="profile")
     os.makedirs(args.plans_dir, exist_ok=True)
+    trips = RoundTrips(spark)
 
     # generic warm-up (mirrors bench.py)
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
@@ -97,11 +141,13 @@ def main() -> None:
         with open(f"{args.plans_dir}/{name}_{args.tag}.txt", "w") as f:
             f.write(text)
         release_cached_state(spark)
-        exec_times = []
-        for _ in range(args.runs):
-            t0 = time.time()
-            df2 = fn(spark, args.sf_dir)
-            t_con = time.time() - t0
+        exec_times, n_trips, n_jobs = [], [], []
+        for run in range(args.runs):
+            df2, t_con, trips_run, jobs_run = counted_construction(
+                spark, trips, f"profile-{name}-{run}", lambda: fn(spark, args.sf_dir)
+            )
+            n_trips.append(trips_run)
+            n_jobs.append(jobs_run)
             t1 = time.time()
             df2.write.format("noop").mode("overwrite").save()
             exec_times.append((round(t_con, 3), round(time.time() - t1, 3)))
@@ -109,9 +155,15 @@ def main() -> None:
         results[name] = {
             "first_build_sec": round(t_build, 3),
             "runs(construct,exec)": exec_times,
+            "construct_round_trips": statistics.median(n_trips),
+            "construct_jobs": statistics.median(n_jobs),
             "shape": shape,
         }
-        print(f"{name}: build {t_build:.2f}s runs {exec_times} {shape}", flush=True)
+        print(
+            f"{name}: build {t_build:.2f}s runs {exec_times}"
+            f" round trips {n_trips} construct jobs {n_jobs} {shape}",
+            flush=True,
+        )
         spark.sparkContext.setJobDescription(None)
 
     print(json.dumps(results, indent=1))
