@@ -1643,8 +1643,8 @@ def kn_probability() -> Column:
     return F.expr(_KN_PROBABILITY)
 
 
-#: a model row's ``round(ln(P_KN), 9)`` as DECIMAL(28,10): the term
-#: every instance of that bigram adds to its document's sum
+#: ``round(ln(P_KN), 9)`` as DECIMAL(28,10) over a joined model row:
+#: the term a bigram instance adds to its document's sum
 _KN_TERM = f"CAST(round(ln({_KN_PROBABILITY}), 9) AS DECIMAL(28,10))"
 
 #: ``kn_nll`` over :func:`kn_doc_sums`' columns
@@ -1664,10 +1664,10 @@ def kn_doc_scores(
     same gate, and staying in log space keeps every operand in the
     engine-probed cross-exact class: ln yes, exp no).
 
-    Each model row's interpolated KN probability ``p`` gives the term
-    ``round(ln(p), 9)``, staged as ``DECIMAL(28,10)``; every bigram
-    INSTANCE (position) in the doc adds its row's term, so the per-doc
-    sum is order-independent (the query_likelihood decimal
+    Per bigram INSTANCE (position) in the doc, the interpolated KN
+    probability is evaluated from the joined model row, then
+    ``round(ln(p), 9)`` is staged as ``DECIMAL(28,10)`` so the
+    per-doc sum is order-independent (the query_likelihood decimal
     discipline); ``kn_nll = round(−sum/n_matched, 9)``.
 
     OOV contract: bigram instances with no model row (impossible when
@@ -1696,17 +1696,22 @@ def kn_doc_sums(
     """:func:`kn_doc_scores` before its last projection:
     ``(doc_id, n_bigrams, n_oov, _s)``, where :data:`KN_NLL` turns the
     decimal sum ``_s`` into ``kn_nll``.  A caller that adds columns
-    over the score projects once, not twice.  The term is computed per
-    model row, before the join, so each bigram type's logarithm is
-    taken once, not once per instance; an unmatched instance joins a
-    NULL ``c2`` and a NULL term."""
-    terms = model.selectExpr("w1", "w2", "c2", f"{_KN_TERM} AS _term")
-    joined = _bigram_rows(docs, text_col, id_col).join(
-        terms, ["w1", "w2"], "left"
+    over the score projects once, not twice.  The term is taken per
+    instance, after the join: the streaming gate joins each small
+    micro-batch to a corpus-sized model, where a term per model row
+    would cost more than one per instance."""
+    terms = (
+        _bigram_rows(docs, text_col, id_col)
+        .join(model, ["w1", "w2"], "left")
+        .selectExpr(
+            f"`{id_col}`",
+            "CAST(c2 IS NULL AS INT) AS _oov",
+            f"CASE WHEN c2 IS NOT NULL THEN {_KN_TERM} END AS _term",
+        )
     )
-    agg = joined.groupBy(id_col).agg(
+    agg = terms.groupBy(id_col).agg(
         F.expr("count(_term) AS n_bigrams"),
-        F.expr("CAST(sum(CAST(c2 IS NULL AS INT)) AS BIGINT) AS n_oov"),
+        F.expr("CAST(sum(_oov) AS BIGINT) AS n_oov"),
         F.expr("sum(_term) AS _s"),
     )
     return agg.filter("n_bigrams > 0")

@@ -70,15 +70,6 @@ BASE_CONF: dict[str, str] = {
     # set at session build, not later.
     "spark.sql.codegen.cache.maxEntries": "2000",
     "spark.ui.enabled": "false",
-    # PySpark's call-site capture: when on (Spark's default), every
-    # ``F.*`` and DataFrame call walks the Python stack and makes four
-    # more py4j round trips to record its file and line — 1 000 of the
-    # 1 734 round trips that build the KN append gate.  Off, an
-    # AnalysisException's DataFrame context no longer names the Python
-    # file and line; the message and the JVM stack are unchanged.
-    # PySpark reads this once per process, at the first ``F.*`` call
-    # after a session exists, so it must be set at session build.
-    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 #: S3A conf mirroring the reference's cloud deployment surface

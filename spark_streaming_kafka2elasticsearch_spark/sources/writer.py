@@ -222,17 +222,6 @@ _SCHEMA_CONFS = (
 _SCHEMAS: dict = {}
 
 
-def _schema_confs(spark) -> tuple:
-    """The session's values of :data:`_SCHEMA_CONFS`, None where the
-    session has not set one (its default applies), from one string of
-    all its settings: three py4j round trips where a ``get`` per conf
-    makes two each.  A memo key only has to change when a value does,
-    and setting or unsetting a conf changes this tuple."""
-    lines = spark._jsparkSession.conf().getAll().mkString("\n").split("\n")
-    settings = dict(line.split(" -> ", 1) for line in lines if " -> " in line)
-    return tuple(settings.get(c) for c in _SCHEMA_CONFS)
-
-
 def read_parquet(spark, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` that pays the schema-inference job
     once per table version: the schema Spark inferred is kept per path
@@ -244,7 +233,10 @@ def read_parquet(spark, path: str) -> DataFrame:
     URI, a missing table) is read as is, with Spark's own errors."""
     if not os.path.exists(path):
         return spark.read.parquet(path)
-    key = (data_fingerprint(path), _schema_confs(spark))
+    key = (
+        data_fingerprint(path),
+        tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS),
+    )
     hit = _SCHEMAS.get(path)
     if hit is not None and hit[0] == key:
         return spark.read.schema(hit[1]).parquet(path)

@@ -863,17 +863,15 @@ def test_csv_dir_source_batch_and_stream(spark, tmp_path):
 
 def test_kn_gate_construction_round_trip_budget(spark, tmp_path, monkeypatch):
     """Building a plan is py4j round trips: one per JVM call the Python
-    side makes.  ``build_session`` turns PySpark's call-site capture
-    off (on, it adds four round trips and a Python stack walk to every
-    ``F.*`` and DataFrame call), and the KN expressions are one SQL
-    string each, so a warm build of the KN append gate stays under a
-    budget: 315 round trips on this fixture, where the Column-built
-    expressions with the capture on made 1 734.  The count is of the
+    side makes, and PySpark's call-site capture adds four to every
+    ``F.*`` and DataFrame call.  The KN expressions are one SQL string
+    each and adjacent ops are fused, so a warm build of the KN append
+    gate stays under a budget: 476 round trips on this fixture, where
+    the Column-built expressions made 1 734.  The count is of the
     calling thread only: py4j's finalizer thread releases dead Java
     references whenever Python's garbage collector runs."""
     import threading
 
-    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     monkeypatch.setenv("SPARK_GRAFT_TMP_DIR", str(tmp_path))
     build = all_queries()["kn_lm_index_append_gate"]
     build(spark, SF_DIR)  # the at-rest index and the schema memo
@@ -891,7 +889,7 @@ def test_kn_gate_construction_round_trip_budget(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(client, "send_command", counted)
     build(spark, SF_DIR)
     monkeypatch.delattr(client, "send_command")
-    assert len(sent) <= 350, len(sent)
+    assert len(sent) <= 500, len(sent)
 
 
 def test_sql_string_builders_match_their_column_forms(spark, monkeypatch):
@@ -901,11 +899,9 @@ def test_sql_string_builders_match_their_column_forms(spark, monkeypatch):
     the same optimized plan as their old forms, and so does the query
     that calls ``kn_probability``; where the plan changed (the tokens
     and the bigram pairs were ``filter`` and ``transform`` lambdas,
-    the row chain was explode and two field reads, and the term was
-    taken per bigram instance after the model join), the rows are the
-    same,
-    every double bit for bit — which is what the oracles' 9-decimal
-    comparison needs.
+    and the row chain was explode and two field reads), the rows are
+    the same, every double bit for bit — which is what the oracles'
+    9-decimal comparison needs.
     The streaming KN gate scores through ``kn_doc_scores``, checked
     here against a model fit on half the corpus, so OOV bigrams occur."""
     from pyspark.sql import functions as F
@@ -1130,4 +1126,6 @@ def test_small_driver_frames_come_from_arrow_tables(spark, tmp_path, monkeypatch
     for data, schema, df in made:
         assert isinstance(data, pa.Table), (site, type(data))
         rows = [tuple(r.values()) for r in data.to_pylist()]
-        assert df.dtypes == spark.createDataFrame(rows, schema).dtypes, site
+        want = spark.createDataFrame(rows, schema)
+        assert df.dtypes == want.dtypes, site
+        assert df.collect() == want.collect(), site
