@@ -1643,8 +1643,8 @@ def kn_probability() -> Column:
     return F.expr(_KN_PROBABILITY)
 
 
-#: ``round(ln(P_KN), 9)`` as DECIMAL(28,10) over a joined model row:
-#: the term a bigram instance adds to its document's sum
+#: ``round(ln(P_KN), 9)`` as DECIMAL(28,10) over a model row: the term
+#: each instance of that bigram adds to its document's sum
 _KN_TERM = f"CAST(round(ln({_KN_PROBABILITY}), 9) AS DECIMAL(28,10))"
 
 #: ``kn_nll`` over :func:`kn_doc_sums`' columns
@@ -1699,19 +1699,50 @@ def kn_doc_sums(
     over the score projects once, not twice.  The term is taken per
     instance, after the join: the streaming gate joins each small
     micro-batch to a corpus-sized model, where a term per model row
-    would cost more than one per instance."""
+    costs more (a 40-document batch against a 780k-row model, 4
+    cores: 1.14 s with the term per model row, 0.95 s per instance).
+    For a model fit on the documents it scores, use
+    :func:`kn_fitted_doc_sums`."""
     terms = (
         _bigram_rows(docs, text_col, id_col)
         .join(model, ["w1", "w2"], "left")
         .selectExpr(
             f"`{id_col}`",
-            "CAST(c2 IS NULL AS INT) AS _oov",
+            "c2",
             f"CASE WHEN c2 IS NOT NULL THEN {_KN_TERM} END AS _term",
         )
     )
+    return _kn_sums(terms, id_col)
+
+
+def kn_fitted_doc_sums(
+    docs: DataFrame,
+    model: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """:func:`kn_doc_sums` for a model fit on ``docs`` themselves (the
+    batch KN gates), with the same result.  Such a model has no more
+    rows than ``docs`` have bigram instances, so the term is taken once
+    per model row, before the join: the KN append gate on the
+    benchmark's 5 000-document table, 4 cores, ran in 0.62 s this way
+    and 0.67 s with the term per instance.  An unmatched instance joins
+    a NULL ``c2`` and a NULL term."""
+    terms = model.selectExpr("w1", "w2", "c2", f"{_KN_TERM} AS _term")
+    joined = _bigram_rows(docs, text_col, id_col).join(
+        terms, ["w1", "w2"], "left"
+    )
+    return _kn_sums(joined, id_col)
+
+
+def _kn_sums(terms: DataFrame, id_col: str) -> DataFrame:
+    """Per document of ``terms`` (one row per bigram instance, with the
+    model's ``c2`` and the instance's ``_term``, both NULL when OOV):
+    matched and OOV counts and the term sum, documents with a match
+    only."""
     agg = terms.groupBy(id_col).agg(
         F.expr("count(_term) AS n_bigrams"),
-        F.expr("CAST(sum(_oov) AS BIGINT) AS n_oov"),
+        F.expr("CAST(sum(CAST(c2 IS NULL AS INT)) AS BIGINT) AS n_oov"),
         F.expr("sum(_term) AS _s"),
     )
     return agg.filter("n_bigrams > 0")

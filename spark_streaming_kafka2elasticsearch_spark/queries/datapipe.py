@@ -39,7 +39,7 @@ from spark_streaming_kafka2elasticsearch_spark.operators.text import (
     dsir_logratio_scores,
     dsir_oracle_sql,
     gopher_quality,
-    kn_doc_sums,
+    kn_fitted_doc_sums,
     language_id,
     language_id_oracle_sql,
     text_quality,
@@ -6517,10 +6517,11 @@ FROM agg
 
 
 def _kn_gate_output(docs: DataFrame, model: DataFrame) -> DataFrame:
-    """The KN perplexity gate over ``docs`` under ``model``:
-    operators/text.kn_doc_scores with the ``keep`` decision, in one
-    projection.  ``docs`` fans out first (operators/partitioning)."""
-    return kn_doc_sums(fan_out_small_scan(docs), model).selectExpr(
+    """The KN perplexity gate over ``docs`` under ``model``, a model
+    fit on ``docs``: operators/text.kn_doc_scores with the ``keep``
+    decision, in one projection.  ``docs`` fans out first
+    (operators/partitioning)."""
+    return kn_fitted_doc_sums(fan_out_small_scan(docs), model).selectExpr(
         "doc_id",
         "n_bigrams",
         "n_oov",

@@ -866,7 +866,7 @@ def test_kn_gate_construction_round_trip_budget(spark, tmp_path, monkeypatch):
     side makes, and PySpark's call-site capture adds four to every
     ``F.*`` and DataFrame call.  The KN expressions are one SQL string
     each and adjacent ops are fused, so a warm build of the KN append
-    gate stays under a budget: 476 round trips on this fixture, where
+    gate stays under a budget: 477 round trips on this fixture, where
     the Column-built expressions made 1 734.  The count is of the
     calling thread only: py4j's finalizer thread releases dead Java
     references whenever Python's garbage collector runs."""
@@ -903,7 +903,8 @@ def test_sql_string_builders_match_their_column_forms(spark, monkeypatch):
     the same, every double bit for bit — which is what the oracles'
     9-decimal comparison needs.
     The streaming KN gate scores through ``kn_doc_scores``, checked
-    here against a model fit on half the corpus, so OOV bigrams occur."""
+    here against a model fit on half the corpus, so OOV bigrams occur;
+    the batch gates' ``kn_fitted_doc_sums`` gives the same sums there."""
     from pyspark.sql import functions as F
 
     from spark_streaming_kafka2elasticsearch_spark.functions import text as ftext
@@ -997,6 +998,8 @@ def test_sql_string_builders_match_their_column_forms(spark, monkeypatch):
     # The streaming gate's scorer, with OOV bigrams.
     half = old_model(docs.filter("doc_id % 2 = 0"))
     same_rows(text.kn_doc_scores(docs, half), old_scores(docs, half))
+    # The batch gates' sums, the term per model row: the same sums.
+    same_rows(text.kn_fitted_doc_sums(docs, half), text.kn_doc_sums(docs, half))
     # The batch gate: fused score and keep projection over the new sums.
     gate = all_queries()["kn_perplexity_quality_gate"](spark, SF_DIR)
     want = old_scores(fan_out_small_scan(docs), model)
