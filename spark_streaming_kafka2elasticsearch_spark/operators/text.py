@@ -1647,7 +1647,7 @@ def kn_probability() -> Column:
 #: each instance of that bigram adds to its document's sum
 _KN_TERM = f"CAST(round(ln({_KN_PROBABILITY}), 9) AS DECIMAL(28,10))"
 
-#: ``kn_nll`` over :func:`kn_doc_sums`' columns
+#: ``kn_nll`` over :func:`kn_fitted_doc_sums`' columns
 KN_NLL = "round(-CAST(_s AS DOUBLE) / CAST(n_bigrams AS DOUBLE), 9)"
 
 
@@ -1681,28 +1681,13 @@ def kn_doc_scores(
     Output: ``(doc_id, n_bigrams, n_oov, kn_nll)``.  One doc-side
     scan; the model joins in vocabulary-sized (broadcast when AQE
     finds it under the broadcast threshold, a shuffle join otherwise).
+    The term is taken per instance, after the join: the streaming gate
+    joins each small micro-batch to a corpus-sized model, where a term
+    per model row costs more (a 40-document batch against a 780k-row
+    model, 4 cores: 1.14 s with the term per model row, 0.95 s per
+    instance).  For a model fit on the documents it scores,
+    :func:`kn_fitted_doc_sums` is cheaper.
     """
-    return kn_doc_sums(docs, model, id_col, text_col).selectExpr(
-        f"`{id_col}`", "n_bigrams", "n_oov", f"{KN_NLL} AS kn_nll"
-    )
-
-
-def kn_doc_sums(
-    docs: DataFrame,
-    model: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """:func:`kn_doc_scores` before its last projection:
-    ``(doc_id, n_bigrams, n_oov, _s)``, where :data:`KN_NLL` turns the
-    decimal sum ``_s`` into ``kn_nll``.  A caller that adds columns
-    over the score projects once, not twice.  The term is taken per
-    instance, after the join: the streaming gate joins each small
-    micro-batch to a corpus-sized model, where a term per model row
-    costs more (a 40-document batch against a 780k-row model, 4
-    cores: 1.14 s with the term per model row, 0.95 s per instance).
-    For a model fit on the documents it scores, use
-    :func:`kn_fitted_doc_sums`."""
     terms = (
         _bigram_rows(docs, text_col, id_col)
         .join(model, ["w1", "w2"], "left")
@@ -1712,7 +1697,9 @@ def kn_doc_sums(
             f"CASE WHEN c2 IS NOT NULL THEN {_KN_TERM} END AS _term",
         )
     )
-    return _kn_sums(terms, id_col)
+    return _kn_sums(terms, id_col).selectExpr(
+        f"`{id_col}`", "n_bigrams", "n_oov", f"{KN_NLL} AS kn_nll"
+    )
 
 
 def kn_fitted_doc_sums(
@@ -1721,8 +1708,11 @@ def kn_fitted_doc_sums(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """:func:`kn_doc_sums` for a model fit on ``docs`` themselves (the
-    batch KN gates), with the same result.  Such a model has no more
+    """:func:`kn_doc_scores` before its last projection, for a model
+    fit on ``docs`` themselves (the batch KN gates):
+    ``(doc_id, n_bigrams, n_oov, _s)``, where :data:`KN_NLL` turns the
+    decimal sum ``_s`` into ``kn_nll``, so a caller that adds columns
+    over the score projects once, not twice.  Such a model has no more
     rows than ``docs`` have bigram instances, so the term is taken once
     per model row, before the join: the KN append gate on the
     benchmark's 5 000-document table, 4 cores, ran in 0.62 s this way

@@ -904,7 +904,7 @@ def test_sql_string_builders_match_their_column_forms(spark, monkeypatch):
     9-decimal comparison needs.
     The streaming KN gate scores through ``kn_doc_scores``, checked
     here against a model fit on half the corpus, so OOV bigrams occur;
-    the batch gates' ``kn_fitted_doc_sums`` gives the same sums there."""
+    the batch gates' ``kn_fitted_doc_sums`` gives the same scores there."""
     from pyspark.sql import functions as F
 
     from spark_streaming_kafka2elasticsearch_spark.functions import text as ftext
@@ -998,8 +998,11 @@ def test_sql_string_builders_match_their_column_forms(spark, monkeypatch):
     # The streaming gate's scorer, with OOV bigrams.
     half = old_model(docs.filter("doc_id % 2 = 0"))
     same_rows(text.kn_doc_scores(docs, half), old_scores(docs, half))
-    # The batch gates' sums, the term per model row: the same sums.
-    same_rows(text.kn_fitted_doc_sums(docs, half), text.kn_doc_sums(docs, half))
+    # The batch gates' sums, the term per model row: the same scores.
+    fitted = text.kn_fitted_doc_sums(docs, half).selectExpr(
+        "doc_id", "n_bigrams", "n_oov", f"{text.KN_NLL} AS kn_nll"
+    )
+    same_rows(fitted, old_scores(docs, half))
     # The batch gate: fused score and keep projection over the new sums.
     gate = all_queries()["kn_perplexity_quality_gate"](spark, SF_DIR)
     want = old_scores(fan_out_small_scan(docs), model)
